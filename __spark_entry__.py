@@ -2299,6 +2299,15 @@ GROUP BY n_name
     # c4), after which the search phase is the knn_ivf oracle verbatim
     # with the learned centroids as `c`.
     _KM_K, _KM_ITERS, _KM_DIM, _KM_PROBE, _KM_TOPK = 8, 4, 64, 3, 5
+
+    def _km_sim(a: str, mv: str) -> str:
+        """Rounded cosine against a centroid, NULL (sorted last) when a
+        norm is zero — the guard ops/simsearch.cosine_pre applies, so a
+        centroid that rounds to all zeros ranks the same on both
+        engines whatever DuckDB's float-division semantics."""
+        den = f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({mv}, {mv})))"
+        return f"CASE WHEN {den} > 0 THEN round(list_dot_product({a}, {mv}) / {den}, 6) END"
+
     _km = [
         f"""
 , vf AS (SELECT vec_id, ev FROM (
@@ -2324,8 +2333,7 @@ a{_i} AS (
     SELECT c.centroid_id, vf.ev,
            row_number() OVER (
              PARTITION BY vf.vec_id
-             ORDER BY round(list_dot_product(ev, mv)
-                 / (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(mv, mv))), 6) DESC,
+             ORDER BY {_km_sim("ev", "mv")} DESC,
                c.centroid_id) AS rnk
     FROM vf, c{_i - 1} c
   ) WHERE rnk = 1),
@@ -2344,8 +2352,7 @@ assigned AS (
     SELECT v.vec_id, c.centroid_id,
            row_number() OVER (
              PARTITION BY v.vec_id
-             ORDER BY round(list_dot_product(ev, mv)
-                 / (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(mv, mv))), 6) DESC,
+             ORDER BY {_km_sim("ev", "mv")} DESC,
                c.centroid_id) AS rnk
     FROM v, c
   ) WHERE rnk = 1
@@ -2359,8 +2366,7 @@ probes AS (
     SELECT q.query_id, c.centroid_id, q.qv,
            row_number() OVER (
              PARTITION BY q.query_id
-             ORDER BY round(list_dot_product(qv, mv)
-                 / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(mv, mv))), 6) DESC,
+             ORDER BY {_km_sim("qv", "mv")} DESC,
                c.centroid_id) AS rnk
     FROM q, c
   ) WHERE rnk <= {_KM_PROBE}

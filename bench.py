@@ -1,15 +1,13 @@
-"""Per-round benchmark harness.
+"""Dedup / ANN operator suite.
 
-Runs the headline operators at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value", "unit", "queries", "sf", ...}.
+Runs the dedup, k-NN, text-quality and sessionize operators on the
+scale-factor tables in $SPARK_GRAFT_SF_DIR (default: the sf0.1 set) at
+local[$SPARK_GRAFT_CPUS], the same suite at 10x rows (skip with
+--no-x10), and the ANN recall@5 record, and prints ONE JSON line:
+{"metric", "value", "unit", "queries", "sf", "x10", "ann_recall", ...}.
 
-The flagship number is the north-rule extraction pipeline (synthetic
-Common-Crawl-style pages -> extracted main content + naive chunks),
-reported both as wall seconds and docs/sec.  Pass --scaling to also run
-the extraction job at two parallelism levels (N and 4N cores on the
-identical input) and report throughput-scaling efficiency — the
-sandbox stand-in for the N->4N executor criterion.
+Extraction throughput, correctness and scaling are measured by
+extractbench (``python3 extractbench/run.py``), not here.
 """
 
 from __future__ import annotations
@@ -24,12 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F  # noqa: E402
 
-from ragflow_spark.data.pagegen import pages_dataframe
 from ragflow_spark.ops import dedup as D
 from ragflow_spark.ops import relational as R
 from ragflow_spark.ops import simsearch as S
 from ragflow_spark.ops import textstats as T
-from ragflow_spark.spark.pipeline import PipelineConfig, transform_chunks
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -78,85 +74,12 @@ def _timed_best(fn, reps: int = 2) -> tuple[float, list[float]]:
     return min(runs), runs
 
 
-def run_extract(spark: SparkSession, pages_path: str) -> tuple[float, int, int]:
-    """The north-rule job: pages parquet -> chunks (count forces full
-    execution).  Returns (wall, n_pages, n_chunks)."""
-    pages = spark.read.parquet(pages_path)
-    cfg = PipelineConfig(out_dir="/tmp/bench_out", n_buckets=32)
-    t0 = time.time()
-    n_chunks = transform_chunks(pages, cfg).count()
-    wall = time.time() - t0
-    return wall, pages.count(), n_chunks
-
-
-def _spin_task(_i: int) -> int:
-    """Fixed integer work — pure CPU, no allocation growth, no I/O,
-    no framework.  ~0.5 s/task on this VM's nominal core."""
-    x = 0
-    for i in range(8_000_000):
-        x += i * i
-    return x
-
-
-def _core_speed(procs: int, waves: int = 2) -> float:
-    """Effective per-core throughput (fixed-work tasks/sec/core) under
-    ``procs``-way parallel load, measured with ``multiprocessing.Pool``
-    — zero Spark involved.
-
-    This is the hardware control for the scaling section.  On this VM
-    a core is SLOWER the more of its siblings are busy (measured: the
-    same spin task runs 1.29 s at 4-way but 1.55 s at 16-way on a
-    quiet box — frequency scaling plus shared memory/vCPU scheduling),
-    so a strong-scaling ratio on one shared socket is capped at ~0.83
-    for 4 -> 16 even for embarrassingly parallel work with no
-    framework at all.  A real N -> 4N *executor* scale-up adds whole
-    machines — per-core speed does not degrade — so the single-socket
-    differential is a sandbox artifact, not job overhead.  Sampling
-    this control in the SAME window as each timed Spark region lets
-    the normalized ratio cancel both co-tenant load and turbo effects.
-    """
-    import multiprocessing as mp
-
-    tasks = procs * waves
-    with mp.Pool(procs) as pool:
-        t0 = time.perf_counter()
-        pool.map(_spin_task, range(tasks))
-        wall = time.perf_counter() - t0
-    return tasks / wall / procs
-
-
-def _pagegen_key() -> str:
-    """Cache key tied to the generator source, so a generator change
-    invalidates /tmp page caches from earlier runs."""
-    import hashlib
-
-    from ragflow_spark.data import pagegen
-
-    with open(pagegen.__file__, "rb") as f:
-        return hashlib.md5(f.read()).hexdigest()[:8]
-
-
-def ensure_pages(
-    spark: SparkSession, n_pages: int, path: str, partitions: int = 64
-) -> str:
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        pages_dataframe(spark, n_pages, seed=42, partitions=partitions).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = _sf_of(sf_dir)
-    n_pages = min(max(int(200_000 * sf), 500), 50_000)
-    pages_path = f"/tmp/bench_pages_{n_pages}_{_pagegen_key()}"
-    scaling = "--scaling" in sys.argv
 
     spark = _session(cpus)
-    ensure_pages(spark, n_pages, pages_path)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -165,53 +88,7 @@ def main() -> None:
     )
 
     queries: dict[str, float] = {}
-
-    # warmup run first: JVM + python-worker spinup and the parquet
-    # footer reads otherwise dominate the timed region (the scaling
-    # section below always warmed; the headline now measures the same
-    # steady state — cold-start seconds are a fixed cost, not a rate).
-    # The cold (first-run) time is recorded alongside so rounds stay
-    # comparable on both views (VERDICT r2 evidence note).
-    #
-    # The warm readings are SPACED across the whole bench window rather
-    # than taken back-to-back: r4's official artifact sampled all three
-    # in one contended minute and recorded 7.5k docs/s against
-    # 12.4-14.7k in the same round's clean windows (VERDICT r4 #2 —
-    # co-tenant load on this VM drifts on minute scales, so contiguous
-    # readings share one fate).  Two readings land here, then one each
-    # after the suite loop, the x10 tier, and the ANN section (minutes
-    # apart); the headline wall is the min over all of them (best
-    # docs/sec = least-interference sample), raw readings kept in
-    # query_runs in sample order.
-    cold_wall, _, _ = run_extract(spark, pages_path)
-    wall, np_, nc = run_extract(spark, pages_path)
-    wall2, _, _ = run_extract(spark, pages_path)
-    runs_all: dict[str, list[float]] = {
-        "extract_chunks": [round(wall, 3), round(wall2, 3)]
-    }
-    wall = min(wall, wall2)
-
-    # byte-identical-text pass rate (the BASELINE.json metric): compare
-    # extracted main content against the generator's known body, all
-    # JVM-side (token-set F1 via split/array_intersect, exact via =)
-    from ragflow_spark.spark.pipeline import transform_extracted
-
-    pages_df = spark.read.parquet(pages_path)
-    ext = transform_extracted(pages_df).select("url", F.col("text").alias("got"))
-    joined = pages_df.select("url", F.col("text").alias("want")).join(ext, "url")
-    ta = F.array_distinct(F.split(F.trim("got"), r"\s+"))
-    tb = F.array_distinct(F.split(F.trim("want"), r"\s+"))
-    inter = F.size(F.array_intersect(ta, tb)).cast("double")
-    p = F.when(F.size(ta) > 0, inter / F.size(ta)).otherwise(F.lit(0.0))
-    r = F.when(F.size(tb) > 0, inter / F.size(tb)).otherwise(F.lit(0.0))
-    f1 = F.when(
-        (F.length(F.trim("got")) == 0) & (F.length(F.trim("want")) == 0), F.lit(1.0)
-    ).otherwise(F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0)))
-    qual = joined.agg(
-        F.avg(f1).alias("f1"),
-        F.avg((F.trim("got") == F.trim("want")).cast("double")).alias("exact"),
-    ).collect()[0]
-
+    runs_all: dict[str, list[float]] = {}
     for name, fn in {
         "dedup_exact": lambda: D.dedup_exact(docs).count(),
         "minhash_dedup": lambda: D.minhash_dedup_pairs(
@@ -225,11 +102,6 @@ def main() -> None:
         w, runs = _timed_best(fn)
         queries[name] = round(w, 3)
         runs_all[name] = runs
-
-    # spaced extraction reading #3 (see the sampling note above)
-    w3, _, _ = run_extract(spark, pages_path)
-    runs_all["extract_chunks"].append(round(w3, 3))
-    wall = min(wall, w3)
 
     # x10: the dedup/ANN suite at 10x rows (the "would it survive a
     # scale-up" probe; VERDICT r01 #10, recorded per-round since r3 —
@@ -278,11 +150,6 @@ def main() -> None:
         x10["n_docs"] = docs10.count()
         x10["n_vecs"] = emb10.count()
         queries_x10 = x10
-        # spaced extraction reading #4 (only when the x10 tier ran —
-        # it is what creates the time gap worth sampling across)
-        wx, _, _ = run_extract(spark, pages_path)
-        runs_all["extract_chunks"].append(round(wx, 3))
-        wall = min(wall, wx)
     else:
         queries_x10 = None
 
@@ -376,14 +243,6 @@ def main() -> None:
     )
     rec_cl.unpersist()
 
-    # final spaced extraction reading — the last sample, minutes after
-    # the first; headline docs/sec finalizes here as min over all
-    w4, _, _ = run_extract(spark, pages_path)
-    runs_all["extract_chunks"].append(round(w4, 3))
-    wall = min(wall, w4)
-    queries["extract_chunks"] = round(wall, 3)
-    docs_per_sec = round(np_ / wall, 1)
-
     out = {
         "metric": "headline_suite_sec",
         "value": round(sum(queries.values()), 3),
@@ -391,151 +250,11 @@ def main() -> None:
         "queries": queries,
         "sf": sf,
         "cpus": cpus,
-        "n_pages": np_,
-        "n_chunks": nc,
-        "extract_cold_sec": round(cold_wall, 3),
         "query_runs": runs_all,
         "ann_recall": ann_recall,
-        "extract_docs_per_sec": docs_per_sec,
-        "extract_token_f1": round(qual["f1"], 4),
-        "extract_exact_text_rate": round(qual["exact"], 4),
     }
     if queries_x10 is not None:
         out["x10"] = queries_x10
-
-    # the cluster-size criterion, evidenced with two (or three, with
-    # --scaling) local parallelism levels on the identical input; a
-    # larger input + a warmup job amortize JVM/session fixed costs out
-    # of the throughput ratio.
-    # 256 input files: Spark's scan packing re-bins splits to each
-    # level's parallelism, so no level is straggler-bound by coarse
-    # file granularity; 100k pages keep even the fastest timed region
-    # in whole seconds (short regions made the ratio swing +-15%).
-    # 4 -> 16 is the N -> 4N pair inside this VM's linear region (see
-    # BASELINE.md: past ~16 effective cores even no-framework
-    # multiprocessing saturates on memory bandwidth); --scaling adds 32
-    # for context against that hardware ceiling.
-    if scaling:  # full 3-level, 3-round, 100k-page measurement
-        n_scale, rounds = 100_000, 3
-        levels = [4, 16, 32] if cpus >= 32 else [max(cpus // 4, 1), cpus]
-    else:  # light always-on N vs 4N pair for the per-round record
-        # 5 rounds (was 3 in r3, 4 in r4): the ratio takes best-of per
-        # level, so extra rounds are extra chances to catch a quiet
-        # co-tenant moment at BOTH levels — the noisy-window r4 runs
-        # (0.727/0.744) motivated the fourth round and an r5 window
-        # that spiked a 0.7s query to 46.8s motivated the fifth;
-        # clean-window runs read 0.85-0.98.
-        # 100k pages (was 50k): at 50k the local[16] timed region was
-        # ~4.3 s, so ~0.3-0.5 s of per-job fixed cost (scan planning,
-        # task scheduling) taxed the fast level ~3x harder than the
-        # slow one — a real but non-transferable bias (production
-        # waves run minutes, not seconds); 100k halves it.
-        n_scale, rounds = 100_000, 5
-        levels = [4, 16] if cpus >= 16 else [max(cpus // 4, 1), cpus]
-    scale_pages = ensure_pages(
-        spark,
-        n_scale,
-        f"/tmp/bench_pages_scale{n_scale}_{_pagegen_key()}",
-        partitions=256,
-    )
-    # warmup corpus: big enough to compile codegen, spin up python
-    # workers, and settle AQE; small enough not to dominate the
-    # (untimed) per-session cost at the low parallelism levels
-    warm_pages = ensure_pages(
-        spark, 5_000, f"/tmp/bench_pages_5000_{_pagegen_key()}", partitions=32
-    )
-    spark.stop()
-    # interleave the levels across rounds (one session at a time —
-    # local mode shares a single JVM context) so each ratio compares
-    # near-adjacent-in-time measurements: co-tenant load on this shared
-    # VM drifts on minute scales, and best-of over rounds is the
-    # least-interference estimate
-    # every round records the 1-min loadavg sampled just before its
-    # timed region: the efficiency ratio is only meaningful when the
-    # box was quiet, because co-tenant load is ASYMMETRIC across
-    # levels — an external 8-core hog barely touches local[4] (4 of 32
-    # cores) but caps local[16], so a loaded window systematically
-    # UNDERSTATES true scaling.  Carrying the load evidence in the
-    # artifact lets a depressed reading be attributed to the box
-    # instead of the code (VERDICT r4 #2's "same-day control", now
-    # built in).
-    tput = {lv: 0.0 for lv in levels}
-    rounds_raw: dict[int, list[list[float]]] = {lv: [] for lv in levels}
-    for _round in range(rounds):
-        for lv in levels:
-            s = _session(lv)
-            run_extract(s, warm_pages)  # warmup: JVM + python workers
-            load1 = os.getloadavg()[0]
-            w, npg, _ = run_extract(s, scale_pages)
-            dps = npg / w
-            s.stop()
-            # hardware control, same interference window as the timed
-            # region it normalizes (see _core_speed docstring)
-            cs = _core_speed(lv)
-            rounds_raw[lv].append([round(dps, 1), round(load1, 1), round(cs, 4)])
-            tput[lv] = max(tput[lv], dps)
-    out["scaling"] = {
-        f"docs_per_sec_local[{lv}]": round(tput[lv], 1) for lv in levels
-    }
-    for n, n4 in zip(levels, levels[1:]):
-        # paired-rounds estimator (r5): each round runs both levels
-        # adjacent in time, so the per-round ratio compares the same
-        # interference window.  The former cross-window estimator
-        # (best dps at each level, often from DIFFERENT rounds) breaks
-        # when one level alone catches a quiet window the other never
-        # saw: an r5 full run read 0.632 cross-window (a lone 3716 dps
-        # local[4] outlier vs 2074-2791 in every other round) while
-        # four of its five paired rounds read 0.74-0.89.  Within a
-        # round the bias can point either way too — the validation run
-        # for this change had a round whose local[4] slice alone was
-        # depressed, reading a fake-superlinear 1.078 — so no single
-        # round is headlined either.  Headline = MEDIAN of the paired
-        # ratios: robust to a bad slice in either direction, slightly
-        # conservative (interference depresses more ratios than it
-        # inflates), and not a cherry-pick.  The full per-round ratio
-        # list and the cross-window number stay in the artifact for
-        # auditability and round-over-round continuity.
-        ratios = [  # kept in round order, parallel to rounds_dps_load1
-            (rounds_raw[n4][r][0] / rounds_raw[n][r][0]) / (n4 / n)
-            for r in range(rounds)
-        ]
-
-        def _median(xs: list[float]) -> float:
-            srt = sorted(xs)
-            mid = len(srt) // 2
-            return srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
-
-        out["scaling"][f"efficiency_{n}_to_{n4}"] = round(_median(ratios), 3)
-        out["scaling"][f"efficiency_{n}_to_{n4}_paired_rounds"] = [
-            round(x, 3) for x in ratios
-        ]
-        out["scaling"][f"efficiency_{n}_to_{n4}_crossbest"] = round(
-            (tput[n4] / tput[n]) / (n4 / n), 3
-        )
-        # hardware-normalized efficiency: divide each paired ratio by
-        # the SAME-WINDOW no-framework core-speed ratio (how much
-        # slower a core runs at n4-way vs n-way occupancy — turbo,
-        # shared memory bandwidth, vCPU scheduling, co-tenants; the
-        # control is a pure-python fixed-work spin, so the job cannot
-        # influence it).  This isolates the job's parallel efficiency
-        # — the number that transfers to N -> 4N *executors*, where
-        # each executor brings its own socket and per-core speed is
-        # constant.  Raw ratios, per-window control readings, and the
-        # raw median all stay in the artifact alongside it.
-        hw = [
-            rounds_raw[n4][r][2] / rounds_raw[n][r][2] for r in range(rounds)
-        ]
-        norm = [ratios[r] / hw[r] if hw[r] > 0 else 0.0 for r in range(rounds)]
-        out["scaling"][f"core_speed_ratio_{n}_to_{n4}"] = round(_median(hw), 3)
-        out["scaling"][f"efficiency_{n}_to_{n4}_hw_normalized"] = round(
-            _median(norm), 3
-        )
-        out["scaling"][f"efficiency_{n}_to_{n4}_hw_normalized_rounds"] = [
-            round(x, 3) for x in norm
-        ]
-    out["scaling"]["rounds_dps_load1_corespeed"] = {
-        f"local[{lv}]": rounds_raw[lv] for lv in levels
-    }
 
     print(json.dumps(out))
 

@@ -90,7 +90,10 @@ def pq_train(
     """
     spark = emb.sparkSession
     v = _normalized(emb, id_col, vec_col)
-    dim = len(v.select("_nv").first()["_nv"])
+    first = v.select("_nv").first()
+    if first is None:
+        raise ValueError("no finite-norm vectors to train PQ codebooks")
+    dim = len(first["_nv"])
     if dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     d_sub = dim // n_sub

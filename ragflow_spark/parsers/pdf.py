@@ -177,7 +177,13 @@ def _chars_to_lines_compat(chars):
 
 def _extract_pdf_text_scan(pdf: bytes) -> str:
     """Legacy regex scanner (no positions): kept as the fallback for
-    streams the interpreter yields nothing from."""
+    streams the interpreter yields nothing from.  It earns its place on
+    damaged files: of 2,400 byte-mutated generator PDFs (span deletions
+    and byte flips), 121 got text only from this scanner (350 under a
+    harsher mix: deletions of up to 40 bytes or 1-8 flipped bytes per
+    file), while none of the well-formed test PDFs reach it
+    (tests/test_pdf_parser.py pins one rescue, a page dict whose
+    /Contents key is misspelled)."""
     if not pdf.startswith(b"%PDF-"):
         return ""
     lines: list[str] = []

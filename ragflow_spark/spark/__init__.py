@@ -1,1 +1,1 @@
-from .udfs import EXTRACTED_SCHEMA, CHUNKS_SCHEMA, extract_batches, chunk_batches  # noqa: F401
+from .udfs import EXTRACTED_SCHEMA, CHUNKS_SCHEMA, extract_batches  # noqa: F401

@@ -25,7 +25,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 from .udfs import CHUNKS_SCHEMA, EXTRACTED_SCHEMA, extract_batches, make_chunk_batches
 
 MAX_HTML_BYTES = 128 * 1024 * 1024  # parity: rag/settings.py:58
+# parquet codec for the chunk output, the staged input and the
+# manifest: zstd writes 27% fewer bytes than snappy at equal wall time
+# on this corpus (A/B at 100k pages, BENCH.md r4) — at 10^12 rows
+# output bytes are the write cost
+CODEC = "zstd"
 
 
 class _ModeStatsParam(AccumulatorParam):
@@ -69,23 +74,11 @@ class PipelineConfig:
     budget: int = 128
     delimiters: str = "\n!?。；！？"
     n_buckets: int = 8
-    tokenize: bool = True
     buckets_per_commit: int = 4  # group buckets per write to bound job count
     # bound the number of commit groups per run: each group is one full
     # pass over the (staged) input, so unbounded group counts turn a
     # 4096-bucket corpus into thousands of jobs.  0 disables the bound.
     max_commit_groups: int = 8
-    # stage the input once, partitioned by url-hash bucket, so every
-    # group's read partition-prunes to exactly its buckets instead of
-    # re-scanning the whole table (the bucket column is computed, so an
-    # unpartitioned source can never prune it)
-    stage_input: bool = True
-    # parquet codec for the chunk output (and the staged input): zstd
-    # writes 27% fewer bytes than snappy at equal wall time on this
-    # corpus (A/B at 100k pages, BENCH.md r4) — at 10^12 rows output
-    # bytes are the write cost.  None = session default.
-    codec: str | None = "zstd"
-    extra: dict = field(default_factory=dict)
 
     @property
     def chunks_dir(self) -> str:
@@ -174,12 +167,9 @@ def _append_manifest(
     )
     df = spark.createDataFrame(rows, schema=schema).coalesce(1)
     if catalog is not None:
-        catalog.append(df, cfg.manifest_dir, codec=cfg.codec)
+        catalog.append(df, cfg.manifest_dir, codec=CODEC)
     else:
-        w = df.write.mode("append")
-        if cfg.codec:
-            w = w.option("compression", cfg.codec)
-        w.parquet(cfg.manifest_dir)
+        df.write.mode("append").option("compression", CODEC).parquet(cfg.manifest_dir)
 
 
 def _prune_for_udf(pages: DataFrame, keep_cols: tuple = ()) -> DataFrame:
@@ -187,7 +177,7 @@ def _prune_for_udf(pages: DataFrame, keep_cols: tuple = ()) -> DataFrame:
 
     The ``text`` column is only ever consulted when ``html`` is absent
     or is a PDF whose text extraction may fail (spark/udfs.py,
-    ``extract_document``), so for ordinary HTML rows it is nulled out
+    ``extract_document_ex``), so for ordinary HTML rows it is nulled out
     before crossing Arrow — roughly halving UDF input bytes at corpus
     scale.  The html byte cap mirrors the reference's 128 MB doc limit.
     ``keep_cols`` carries extra columns (e.g. ``bucket``) through.
@@ -311,13 +301,18 @@ def _delete_path(spark: SparkSession, path: str) -> None:
         pass
 
 
-def transform_chunks(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The logical plan: pages -> chunk rows (+ deterministic chunk id,
-    computed JVM-side: parity with id = xxhash64(content + doc_id),
-    rag/svr/task_executor.py:287)."""
-    fn = make_chunk_batches(cfg.template, cfg.budget, cfg.delimiters, cfg.tokenize)
-    chunks = _prune_for_udf(pages).mapInPandas(fn, schema=CHUNKS_SCHEMA)
+def _chunk_plan(pruned: DataFrame, cfg: PipelineConfig, mode_acc=None) -> DataFrame:
+    """The one place the chunk UDF is built: pruned page rows -> chunk
+    rows (+ deterministic chunk id, computed JVM-side: parity with
+    id = xxhash64(content + doc_id), rag/svr/task_executor.py:287)."""
+    fn = make_chunk_batches(cfg.template, cfg.budget, cfg.delimiters, mode_acc=mode_acc)
+    chunks = pruned.mapInPandas(fn, schema=CHUNKS_SCHEMA)
     return chunks.withColumn("chunk_id", F.xxhash64("content", "url"))
+
+
+def transform_chunks(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The logical plan: pages -> chunk rows, batch or streaming."""
+    return _chunk_plan(_prune_for_udf(pages), cfg)
 
 
 def transform_extracted(pages: DataFrame) -> DataFrame:
@@ -381,10 +376,12 @@ def _run_pipeline_impl(
         bpc = max(bpc, -(-len(todo) // cfg.max_commit_groups))
     source = with_bucket(pages, cfg.n_buckets)
     used_stage_dir: str | None = None
-    if cfg.stage_input and len(todo) > bpc:
-        # one bucketed exchange + partitioned write (the north-rule
-        # url-hash partitioning made physical); every group below then
-        # scans ONLY its bucket partitions.  Marker-gated: a kill
+    if len(todo) > bpc:
+        # stage the input once, partitioned by url-hash bucket (the
+        # north-rule url-hash partitioning made physical): the bucket
+        # column is computed, so an unpartitioned source can never
+        # prune it, while every group below scans ONLY its bucket
+        # partitions of the staged copy.  Marker-gated: a kill
         # mid-stage leaves no marker and the dir is rewritten; a
         # resume with the same out_dir AND the same input file set
         # reuses.  (The partitioned write emits no top-level _SUCCESS,
@@ -413,7 +410,7 @@ def _run_pipeline_impl(
             # HTML rows, >cap rows dropped, warc_ts pruned): the
             # same row set the chunker sees, at roughly half the
             # staged bytes of the raw input
-            stage_writer = (
+            (
                 _prune_for_udf(source, keep_cols=("bucket",))
                 .repartition(
                     cfg.n_buckets * spread,
@@ -421,10 +418,10 @@ def _run_pipeline_impl(
                     F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(spread)),
                 )
                 .write.mode("overwrite")
+                .option("compression", CODEC)
+                .partitionBy("bucket")
+                .parquet(stage_dir)
             )
-            if cfg.codec:  # None = session default, same as the catalog
-                stage_writer = stage_writer.option("compression", cfg.codec)
-            stage_writer.partitionBy("bucket").parquet(stage_dir)
             if fp is not None:
                 _write_stage_marker(spark, stage_dir, fp)
         source = spark.read.parquet(stage_dir)
@@ -517,20 +514,11 @@ def _run_pipeline_impl(
             .observe(page_obs, *_per_bucket("*", "n_"), *_per_bucket("_nb", "b_"))
             .drop("_nb")
         )
-        fn = make_chunk_batches(
-            cfg.template, cfg.budget, cfg.delimiters, cfg.tokenize, mode_acc=mode_acc
-        )
         chunk_obs = Observation(f"chunks_{lo}")
-        chunks = (
-            subset.mapInPandas(fn, schema=CHUNKS_SCHEMA)
-            .withColumn("chunk_id", F.xxhash64("content", "url"))
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int"),
-            )
-            .observe(chunk_obs, *_per_bucket("*", "c_"))
+        chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets).observe(
+            chunk_obs, *_per_bucket("*", "c_")
         )
-        catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=cfg.codec)
+        catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=CODEC)
         pstats = page_obs.get
         cstats = chunk_obs.get
         wall = time.time() - t0
@@ -622,16 +610,6 @@ def cli(argv=None, spark: SparkSession | None = None) -> None:
         "run; 0 disables the cap and honors --buckets-per-commit exactly",
     )
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument(
-        "--count-only",
-        action="store_true",
-        help="run the extract+chunk transform and count it, no writes: "
-        "the compute-scaling measurement shape (the e2e write stage is "
-        "bounded by this VM's single shared disk — see BENCH.md — "
-        "which a real cluster's per-node disks don't share).  Runs "
-        "twice and reports both walls so the warm one excludes "
-        "codegen-compile/python-worker-startup fixed costs.",
-    )
     args = ap.parse_args(argv)
     if spark is None:
         from ..session import get_spark
@@ -650,26 +628,6 @@ def cli(argv=None, spark: SparkSession | None = None) -> None:
         n_buckets=args.buckets,
         **kw,
     )
-    if args.count_only:
-        n_pages = pages.count()
-        t0 = time.time()
-        transform_chunks(pages, cfg).count()  # cold: codegen + workers
-        cold = time.time() - t0
-        t0 = time.time()
-        n_chunks = transform_chunks(pages, cfg).count()
-        warm = time.time() - t0
-        print(
-            json.dumps(
-                {
-                    "n_pages": n_pages,
-                    "n_chunks": n_chunks,
-                    "wall_sec": round(warm, 2),
-                    "wall_cold_sec": round(cold, 2),
-                    "docs_per_sec": round(n_pages / warm, 1),
-                }
-            )
-        )
-        return
     t0 = time.time()
     totals = run_pipeline(spark, pages, cfg, resume=not args.no_resume)
     # job-internal wall (excludes spark-submit/JVM startup): the

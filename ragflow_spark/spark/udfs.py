@@ -90,23 +90,17 @@ def sniff_doc_type(html: bytes | None, text: str | None) -> str:
     return "empty"
 
 
-def extract_document(
-    html: bytes | None, text: str | None, lang: str | None
-) -> tuple[str, str, str, list[str]]:
-    """(doc_type, title, text, sections) for one page row."""
-    return extract_document_ex(html, text, lang)[:4]
-
-
 def extract_document_ex(
     html: bytes | None, text: str | None, lang: str | None
 ) -> tuple[str, str, str, list[str], str]:
-    """extract_document plus the extraction-mode tag: "" for non-PDF
-    rows; for PDFs the parsers.pdf.extract_pdf_text_mode value
-    (interp / scan / scan-error), with "+text" appended when the
-    extracted body came out empty and the row's ``text`` column was
-    used instead.  Anything but "interp" is a FALLBACK the pipeline
-    surfaces per bucket (VERDICT r3: a corpus-scale interpreter
-    regression must not degrade extraction silently).
+    """(doc_type, title, text, sections, mode) for one page row.  The
+    mode tag is "" for non-PDF rows; for PDFs it is the
+    parsers.pdf.extract_pdf_text_mode value (interp / scan /
+    scan-error), with "+text" appended when the extracted body came
+    out empty and the row's ``text`` column was used instead.
+    Anything but "interp" is a FALLBACK the pipeline surfaces per
+    bucket (VERDICT r3: a corpus-scale interpreter regression must not
+    degrade extraction silently).
 
     A document the extractors cannot survive (pathological DOM
     nesting, adversarially deep JSON, corrupt archives throwing past
@@ -182,7 +176,7 @@ def _extract_document_inner(
         # rag/app/email.py:94-106)
         for _fname, payload in atts:
             try:
-                sub = extract_document(payload, None, lang)
+                sub = extract_document_ex(payload, None, lang)
             except Exception:  # noqa: BLE001 - undecodable attachment
                 continue
             sections.extend(sub[3])
@@ -204,48 +198,29 @@ def is_fallback_mode(mode: str) -> bool:
     return bool(mode) and mode != "interp"
 
 
+def _extracted_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """The row loop both extraction UDFs share: one
+    ``(url, n_bytes_in, doc_type, title, text, sections, mode)`` per
+    page row of a ``(url, html, text, lang)`` batch."""
+    for url, html, text, lang in zip(pdf["url"], pdf["html"], pdf["text"], pdf["lang"]):
+        n_bytes_in = len(html) if html is not None else 0
+        yield (url, n_bytes_in, *extract_document_ex(html, text, lang))
+
+
 def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """pages(url, html, text, lang) -> extracted rows."""
     for pdf in batches:
-        rows = []
-        for url, html, text, lang in zip(
-            pdf["url"], pdf["html"], pdf["text"], pdf["lang"]
-        ):
-            doc_type, title, body, sections, mode = extract_document_ex(
-                html, text, lang
-            )
-            rows.append(
-                (
-                    url,
-                    doc_type,
-                    title,
-                    body,
-                    sections,
-                    len(sections),
-                    len(html) if html is not None else 0,
-                    mode,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url",
-                "doc_type",
-                "title",
-                "text",
-                "sections",
-                "n_sections",
-                "n_bytes_in",
-                "extract_mode",
-            ],
-        )
+        rows = [
+            (url, doc_type, title, body, sections, len(sections), n_bytes_in, mode)
+            for url, n_bytes_in, doc_type, title, body, sections, mode in _extracted_rows(pdf)
+        ]
+        yield pd.DataFrame(rows, columns=EXTRACTED_SCHEMA.fieldNames())
 
 
 def make_chunk_batches(
     template: str = "naive",
     budget: int = 128,
     delimiters: str = "\n!?。；！？",
-    tokenize: bool = True,
     mode_acc=None,
 ):
     """Factory for the extract+chunk mapInPandas function.
@@ -261,66 +236,31 @@ def make_chunk_batches(
     any document type count separately in n_extract_err.  Accumulator
     semantics are at-least-once under task retries — a monitoring
     metric, not an exact count."""
+    chunk_kw = {"budget": budget, "delimiters": delimiters} if template == "naive" else {}
 
     def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            buckets = (
-                pdf["bucket"]
-                if (mode_acc is not None and "bucket" in pdf.columns)
-                else None
-            )
+            count_modes = mode_acc is not None and "bucket" in pdf.columns
             stats: dict[int, list[int]] = {}
-            for j, (url, html, text, lang) in enumerate(
-                zip(pdf["url"], pdf["html"], pdf["text"], pdf["lang"])
+            for j, (url, _n, doc_type, title, _body, sections, mode) in enumerate(
+                _extracted_rows(pdf)
             ):
-                doc_type, title, _body, sections, mode = extract_document_ex(
-                    html, text, lang
-                )
-                if buckets is not None and (
-                    doc_type == "pdf" or mode == "extract-error"
-                ):
-                    st = stats.setdefault(int(buckets.iloc[j]), [0, 0, 0])
+                if count_modes and (doc_type == "pdf" or mode == "extract-error"):
+                    st = stats.setdefault(int(pdf["bucket"].iloc[j]), [0, 0, 0])
                     if doc_type == "pdf":
                         st[0] += 1
                         if is_fallback_mode(mode):
                             st[1] += 1
                     if mode == "extract-error":
                         st[2] += 1
-                chunks = chunk_sections(
-                    template,
-                    sections,
-                    **(
-                        {"budget": budget, "delimiters": delimiters}
-                        if template == "naive"
-                        else {}
-                    ),
-                )
-                for i, ck in enumerate(chunks):
-                    if tokenize:
-                        ltks, sm = content_tokens(ck)
-                    else:
-                        ltks, sm = "", ""
-                    rows.append((url, i, ck, ltks, sm, title, doc_type))
-            if mode_acc is not None and stats:
+                for i, ck in enumerate(chunk_sections(template, sections, **chunk_kw)):
+                    rows.append((url, i, ck, *content_tokens(ck), title, doc_type))
+            if stats:
                 mode_acc.add(stats)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url",
-                    "chunk_ord",
-                    "content",
-                    "content_ltks",
-                    "content_sm_ltks",
-                    "title",
-                    "doc_type",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=CHUNKS_SCHEMA.fieldNames())
 
     return chunk_batches
-
-
-chunk_batches = make_chunk_batches()
 
 
 def tokenize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -16,10 +16,9 @@ would be cloud-storage notifications or Kafka — same plan shape.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..data.pagegen import PAGE_SCHEMA
-from ..spark.udfs import CHUNKS_SCHEMA, make_chunk_batches
+from ..spark.pipeline import PipelineConfig, transform_chunks
 
 
 def stream_extract(
@@ -33,18 +32,17 @@ def stream_extract(
     max_files_per_trigger: int = 64,
 ):
     """Start (and with ``available_now`` run-to-completion) the
-    streaming extract+chunk job; returns the StreamingQuery."""
+    streaming extract+chunk job — the batch ``transform_chunks`` plan
+    over the stream; returns the StreamingQuery."""
     pages = (
         spark.readStream.schema(PAGE_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(in_dir)
     )
-    fn = make_chunk_batches(template, budget)
-    chunks = pages.select("url", "html", "text", "lang").mapInPandas(
-        fn, schema=CHUNKS_SCHEMA
-    ).withColumn("chunk_id", F.xxhash64("content", "url"))
+    cfg = PipelineConfig(out_dir=out_dir, template=template, budget=budget)
     writer = (
-        chunks.writeStream.format("parquet")
+        transform_chunks(pages, cfg)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

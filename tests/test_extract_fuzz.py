@@ -8,7 +8,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ragflow_spark.chunk.templates import chunk_sections
-from ragflow_spark.spark.udfs import extract_document
+from ragflow_spark.spark.udfs import extract_document_ex
 from ragflow_spark.text.codec import decode_bytes
 from ragflow_spark.text.tokenizer import content_tokens
 
@@ -21,10 +21,10 @@ _settings = settings(
 @_settings
 @given(blob=st.binary(max_size=4096), text=st.text(max_size=200))
 def test_extract_document_total(blob, text):
-    a = extract_document(blob, text, "English")
-    b = extract_document(blob, text, "English")
+    a = extract_document_ex(blob, text, "English")
+    b = extract_document_ex(blob, text, "English")
     assert a == b  # deterministic
-    doc_type, title, body, sections = a
+    doc_type, title, body, sections, _mode = a
     assert isinstance(doc_type, str) and isinstance(sections, list)
 
 

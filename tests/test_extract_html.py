@@ -86,13 +86,13 @@ class TestEdges:
 def test_bom_utf16_html_detected():
     """UTF-16 BOM'd HTML must sniff as html, not leak markup as txt
     (regression: byte-level '<' checks miss multi-byte encodings)."""
-    from ragflow_spark.spark.udfs import extract_document, sniff_doc_type
+    from ragflow_spark.spark.udfs import extract_document_ex, sniff_doc_type
 
     html = "<html><head><title>T</title></head><body><article><p>Real body text here.</p></article></body></html>"
     for enc in ("utf-16", "utf-16-be", "utf-8-sig"):
         blob = html.encode(enc)
         assert sniff_doc_type(blob, None) == "html", enc
-        doc_type, _, body, _ = extract_document(blob, None, "English")
+        doc_type, _, body, _, _ = extract_document_ex(blob, None, "English")
         assert doc_type == "html"
         assert "<" not in body and "Real body text here." in body
 

@@ -59,8 +59,9 @@ a{i} AS (
     SELECT c.centroid_id, vf.ev,
            row_number() OVER (
              PARTITION BY vf.vec_id
-             ORDER BY round(list_dot_product(ev, mv)
-                 / (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(mv, mv))), 6) DESC,
+             ORDER BY CASE WHEN sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(mv, mv)) > 0
+                 THEN round(list_dot_product(ev, mv)
+                 / (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(mv, mv))), 6) END DESC,
                c.centroid_id) AS rnk
     FROM vf, c{i - 1} c
   ) WHERE rnk = 1),
@@ -130,9 +131,23 @@ def test_lloyd_empty_cell_keeps_previous_centroid(spark):
     assert len(spark_c) == k
     # every centroid equals the (identical) init vector, starved or not
     assert all(mv == base for mv in spark_c.values())
-    # and the init order is the md5 shuffle: recompute it independently
-    order = sorted(range(6), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
-    assert set(spark_c) == {0, 1} and order[:k] is not None
+    assert set(spark_c) == {0, 1}
+
+
+def test_lloyd_twin_exact_with_all_zero_rounded_centroid(spark):
+    """The md5-first row is a finite but tiny vector whose init
+    centroid rounds to all zeros: both engines must rank that
+    centroid's NULL similarity last rather than divide by its zero
+    norm."""
+    rng = np.random.default_rng(5)
+    dim, k, iters = 4, 3, 2
+    ids = sorted(range(30), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(30)]
+    rows[ids[0]] = (ids[0], [1e-7] * dim)
+    spark_c = _spark_centroids(spark, rows, k, iters)
+    duck_c = _duck_centroids(rows, k, iters, dim)
+    assert spark_c == duck_c
+    assert spark_c[0] == [0.0] * dim  # never won a member, kept its init
 
 
 def test_lloyd_sample_trained_twin_and_recall(spark):

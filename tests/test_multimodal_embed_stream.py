@@ -82,11 +82,35 @@ def test_embed_chunks_deterministic_and_searchable(spark):
     assert top.count() == 6
 
 
-def test_stream_extract_availablenow_incremental(spark):
+def test_stream_extract_availablenow_incremental(spark, monkeypatch):
+    """Incremental exactly-once pickup, and the stream runs the batch
+    plan: its output equals ``transform_chunks`` over the same files,
+    the html byte cap included (one page is over the cap)."""
+    import datetime as dt
+
+    from ragflow_spark.data.pagegen import PAGE_SCHEMA
+    from ragflow_spark.spark import pipeline
+
     tmp = tempfile.mkdtemp(prefix="rs_stream_")
     in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
     try:
-        pages_dataframe(spark, 60, seed=42, partitions=2).write.mode("append").parquet(in_dir)
+        first_pages = pages_dataframe(spark, 60, seed=42, partitions=2)
+        later_pages = pages_dataframe(spark, 120, seed=43, partitions=2).withColumn(
+            "url", F.concat(F.lit("b2-"), F.col("url"))
+        )
+        cap = max(
+            df.agg(F.max(F.length("html"))).first()[0]
+            for df in (first_pages, later_pages)
+        )
+        monkeypatch.setattr(pipeline, "MAX_HTML_BYTES", cap)
+        over_url = "https://big.example.com/over-cap"
+        over_cap = spark.createDataFrame(
+            [(over_url, dt.datetime(2024, 1, 1),
+              b"<html><body><p>" + b"word " * cap + b"</p></body></html>",
+              "over the cap", "English")],
+            PAGE_SCHEMA,
+        )
+        first_pages.unionByName(over_cap).write.mode("append").parquet(in_dir)
         q = stream_extract(spark, in_dir, out_dir, ckpt)
         q.awaitTermination(120)
         first = spark.read.parquet(out_dir)
@@ -95,9 +119,7 @@ def test_stream_extract_availablenow_incremental(spark):
         assert n1 > 0
         # new files arrive (distinct url space) -> second availableNow
         # run picks up ONLY them
-        pages_dataframe(spark, 120, seed=43, partitions=2).withColumn(
-            "url", F.concat(F.lit("b2-"), F.col("url"))
-        ).write.mode("append").parquet(in_dir)
+        later_pages.write.mode("append").parquet(in_dir)
         q2 = stream_extract(spark, in_dir, out_dir, ckpt)
         q2.awaitTermination(180)
         second = spark.read.parquet(out_dir)
@@ -108,6 +130,11 @@ def test_stream_extract_availablenow_incremental(spark):
         )
         assert dup == 0
         assert second.select("url").distinct().count() > urls1
+        batch = pipeline.transform_chunks(
+            spark.read.parquet(in_dir), pipeline.PipelineConfig(out_dir=out_dir)
+        )
+        assert sorted(second.collect()) == sorted(batch.select(*second.columns).collect())
+        assert second.where(F.col("url") == over_url).count() == 0
     finally:
         for s in spark.streams.active:
             s.stop()

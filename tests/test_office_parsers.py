@@ -16,7 +16,7 @@ from ragflow_spark.parsers.office import (
     xlsx_html_chunks,
     xlsx_lines,
 )
-from ragflow_spark.spark.udfs import extract_document, sniff_doc_type
+from ragflow_spark.spark.udfs import extract_document_ex, sniff_doc_type
 
 _XL_NS = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
 _W_NS = 'xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main"'
@@ -136,7 +136,7 @@ def test_extract_document_dispatch():
         (make_pptx(), "pptx"),
     ]:
         assert sniff_doc_type(blob, None) == expect
-        doc_type, _, text, sections = extract_document(blob, None, "English")
+        doc_type, _, text, sections, _ = extract_document_ex(blob, None, "English")
         assert doc_type == expect and sections and text
 
 
@@ -170,7 +170,7 @@ def test_xlsx_decompression_bomb_rejected_before_materializing():
     with pytest.raises(ValueError, match="exceeds"):
         read_xlsx(bomb)
     # UDF containment turns it into the fallback path, batch survives
-    doc_type, mode, _, _ = extract_document(bomb, "fallback text", "English")
+    doc_type, mode, _, _, _ = extract_document_ex(bomb, "fallback text", "English")
     assert mode != "office"
 
 

@@ -67,6 +67,21 @@ def test_quote_ops_break_lines():
     assert _extract_pdf_text_scan(_pdf(legacy)) == "a\nb\nc"
 
 
+def test_scanner_rescues_damaged_page_dict():
+    """A misspelled /Contents key hides the stream from the
+    positioned-char interpreter; only the legacy scanner recovers the
+    text, and the row is flagged as a fallback."""
+    from ragflow_spark.parsers.pdf import extract_pdf_text_mode
+    from ragflow_spark.spark.udfs import extract_document_ex, is_fallback_mode
+
+    s = b"BT /F1 12 Tf 72 720 Td (Hello) Tj 0 -14 Td (World) Tj ET"
+    pdf = _pdf(s).replace(b"/Contents", b"/Contentz")
+    assert extract_pdf_text_mode(pdf) == ("Hello\nWorld", "scan")
+    doc_type, _, text, sections, mode = extract_document_ex(pdf, None, "English")
+    assert (doc_type, text, sections, mode) == ("pdf", "Hello\nWorld", ["Hello", "World"], "scan")
+    assert is_fallback_mode(mode)
+
+
 def test_tm_breaks_line():
     s = b"BT 1 0 0 1 72 720 Tm (x) Tj 1 0 0 1 72 700 Tm (y) Tj ET"
     assert extract_pdf_text(_pdf(s)) == "x\ny"
@@ -196,14 +211,14 @@ class TestPositionedTextPath:
         assert "InsideForm" in extract_pdf_text(pdf)
 
     def test_full_corpus_byte_identity(self):
-        """The verify skill's quick check: extract_document over 1500
+        """The verify skill's quick check: extract_document_ex over 1500
         generated pages -> zero text mismatches (PDF rows included)."""
         from ragflow_spark.data.pagegen import generate_pages
-        from ragflow_spark.spark.udfs import extract_document
+        from ragflow_spark.spark.udfs import extract_document_ex
 
         bad = 0
         for _url, _ts, blob, text, lang in generate_pages(1500, 42):
-            _dt, _title, got, _secs = extract_document(bytes(blob), text, lang)
+            _dt, _title, got, _secs, _mode = extract_document_ex(bytes(blob), text, lang)
             if (got or "").strip() != text.strip():
                 bad += 1
         assert bad == 0

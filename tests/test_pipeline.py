@@ -363,7 +363,7 @@ class TestResumeLineageGuards:
                         cur[i] += v[i]
 
         acc = FakeAcc()
-        fn = U.make_chunk_batches(mode_acc=acc, tokenize=False)
+        fn = U.make_chunk_batches(mode_acc=acc)
         batch = pd.DataFrame(
             {
                 "url": [f"https://x.test/p{i}" for i in range(4)],

@@ -69,20 +69,20 @@ def test_sf1_kill_resume(tmp_path):
     n_pages = int(os.environ.get("RAGFLOW_SPARK_SF1_PAGES", "200000"))
 
     # corpus + zip, both built in subprocesses so this test owns no JVM
+    pages = str(tmp_path / "pages")
     gen = (
         "import sys; sys.path.insert(0, %r)\n"
         "from pyspark.sql import SparkSession\n"
         "s = (SparkSession.builder.master('local[32]')"
         ".config('spark.driver.memory','12g')"
         ".config('spark.ui.enabled','false').getOrCreate())\n"
-        "import bench\n"
-        "print(bench.ensure_pages(s, %d, '/tmp/sf1_pages_' + bench._pagegen_key(), partitions=128))\n"
-    ) % (ROOT, n_pages)
+        "from ragflow_spark.data.pagegen import write_pages\n"
+        "write_pages(s, %r, %d, partitions=128)\n"
+    ) % (ROOT, pages, n_pages)
     out = subprocess.run(
         [sys.executable, "-c", gen], capture_output=True, text=True, timeout=900
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    pages = out.stdout.strip().splitlines()[-1]
     subprocess.run(
         [sys.executable, os.path.join(ROOT, "scripts", "make_pyfiles.py")],
         check=True, cwd=ROOT, timeout=120,

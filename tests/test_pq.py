@@ -198,3 +198,12 @@ def test_pq_code_stats_spread_and_bounds(clustered):
     for r in stats:
         per_sub[r["sub_id"]] = per_sub.get(r["sub_id"], 0) + r["n"]
     assert all(v == n for v in per_sub.values())
+
+
+@pytest.mark.parametrize(
+    "rows", [[], [(0, [0.0, 0.0, 0.0, 0.0]), (1, [float("nan"), 1.0, 0.0, 0.0])]]
+)
+def test_pq_train_rejects_corpus_without_finite_norm_vectors(spark, rows):
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="no finite-norm vectors"):
+        pq_train(emb, n_sub=2, k_sub=2)
