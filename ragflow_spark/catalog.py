@@ -5,9 +5,8 @@ call sites.
 The north rule targets Iceberg tables (`pages`, `chunks`, the resume
 manifest).  This sandbox has no iceberg-spark-runtime jar, so the
 catalog probes for it at session time and transparently falls back to
-plain parquet paths; every reader/writer in the engine goes through
-these helpers, so flipping to Iceberg on a real cluster is
-configuration, not code:
+plain parquet paths; the chunk commits go through these helpers, so
+flipping to Iceberg on a real cluster is configuration, not code:
 
     spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<v> \
       --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog \
@@ -17,10 +16,15 @@ configuration, not code:
 Iceberg-mode upgrades the engine gets for free once active:
 * MERGE INTO for idempotent chunk upserts (instead of dynamic
   partition overwrite per bucket);
-* snapshot isolation for the manifest (instead of append + read);
 * hidden partitioning (`bucket(N, url)`) replacing our explicit
   bucket column;
 * partition/file pruning from table metadata.
+
+The resume manifest is not a catalog table: in both modes it is a
+parquet log the driver writes and reads through the Hadoop FS API
+(spark/pipeline.py ``_append_manifest``).  Carrying its rows in the
+snapshot summary of the Iceberg ``overwritePartitions`` commit waits
+until an Iceberg runtime is on the machine.
 """
 
 from __future__ import annotations
@@ -99,30 +103,6 @@ class Catalog:
             return self.spark.catalog.tableExists(ident)
         except Exception:  # noqa: BLE001 - treat catalog errors as absent
             return False
-
-    def read(self, table_or_path: str) -> DataFrame:
-        if self.fmt == "iceberg":
-            return self.spark.read.format("iceberg").load(self._ident(table_or_path))
-        return self.spark.read.parquet(table_or_path)
-
-    def append(self, df: DataFrame, table_or_path: str, codec: str | None = None) -> None:
-        if self.fmt == "iceberg":
-            ident = self._ident(table_or_path)
-            # DataFrameWriterV2.append() requires an existing table —
-            # nothing else ever CREATEs it, so the first write on a
-            # fresh warehouse must (NoSuchTableException otherwise)
-            if not self._table_exists(ident):
-                w = df.writeTo(ident).using("iceberg")
-                if codec:
-                    w = w.tableProperty("write.parquet.compression-codec", codec)
-                w.create()
-            else:
-                df.writeTo(ident).append()
-        else:
-            w = df.write.mode("append")
-            if codec:
-                w = w.option("compression", codec)
-            w.parquet(table_or_path)
 
     def overwrite_partitions(
         self,

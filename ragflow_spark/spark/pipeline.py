@@ -11,8 +11,10 @@ job.  Scale design (100 TB / 10^12 rows):
   byte cap (reference caps at 128 MB, rag/settings.py:58).
 * **Checkpoint / lineage** — each bucket commits independently: output
   is written with dynamic partition overwrite keyed by ``bucket``, then
-  a manifest row (bucket, counts, bytes, wall time, status) is appended.
-  On restart, committed buckets are anti-joined away (the reference's
+  the driver writes the group's manifest rows (bucket, counts, bytes,
+  wall time, status, input fingerprint) as one parquet file through the
+  Hadoop FS API, and reads them back on restart — no Spark job either
+  way.  Committed buckets are skipped (the reference's
   digest/reuse logic, task_service.py:370-455); a bucket interrupted
   mid-write is simply overwritten — idempotent, no dupes, no holes.
 * **No driver-side loops over rows** — the driver iterates over bucket
@@ -25,8 +27,11 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,12 +114,10 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def committed_buckets(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    catalog=None,
-    input_fp: str | None = None,
+    spark: SparkSession, cfg: PipelineConfig, input_fp: str | None = None
 ) -> set[int]:
-    """Buckets safely skippable on resume.
+    """Buckets safely skippable on resume.  Only a missing manifest
+    directory means "nothing committed"; an unreadable file raises.
 
     Two lineage guards (both recorded per manifest row):
 
@@ -129,17 +132,19 @@ def committed_buckets(
       correct output instead of silent cross-input mixing.  Rows with
       an empty fp (non-file-backed inputs) keep the legacy behavior.
     """
-    try:
-        manifest = (
-            catalog.read(cfg.manifest_dir)
-            if catalog is not None
-            else spark.read.parquet(cfg.manifest_dir)
-        )
-        rows = manifest.where(F.col("status") == "done").collect()
-    except Exception:
+    jdir, fs = _hadoop_path(spark, cfg.manifest_dir)
+    if not fs.exists(jdir):
         return set()
+    rows = []
+    for st in fs.listStatus(jdir):
+        name = st.getPath().getName()
+        # hidden as by Spark's and pyarrow's readers: `.crc` files and
+        # `_tmp.*` (a manifest write cut short before its rename)
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            table = pq.read_table(pa.BufferReader(_read_bytes(fs, st.getPath())))
+            rows += [r for r in table.to_pylist() if r["status"] == "done"]
     for r in rows:
-        nb = r["n_buckets"] if "n_buckets" in manifest.columns else None
+        nb = r.get("n_buckets")
         if nb is not None and int(nb) != cfg.n_buckets:
             raise ValueError(
                 f"resume mismatch: manifest at {cfg.manifest_dir} was "
@@ -156,20 +161,29 @@ def committed_buckets(
     return done
 
 
-def _append_manifest(
-    spark: SparkSession, cfg: PipelineConfig, rows: list[dict], catalog=None
-) -> None:
-    schema = (
-        "bucket int, status string, n_pages long, n_chunks long, "
-        "bytes_in long, n_pdf long, n_pdf_fallback long, "
-        "n_extract_err long, "
-        "wall_sec double, ts double, input_fp string, n_buckets int"
-    )
-    df = spark.createDataFrame(rows, schema=schema).coalesce(1)
-    if catalog is not None:
-        catalog.append(df, cfg.manifest_dir, codec=CODEC)
-    else:
-        df.write.mode("append").option("compression", CODEC).parquet(cfg.manifest_dir)
+# one manifest row per committed bucket: column for column the DDL it was
+# once written with through Spark, so files written either way read as one
+MANIFEST_SCHEMA = pa.schema([
+    ("bucket", pa.int32()), ("status", pa.string()), ("n_pages", pa.int64()),
+    ("n_chunks", pa.int64()), ("bytes_in", pa.int64()), ("n_pdf", pa.int64()),
+    ("n_pdf_fallback", pa.int64()), ("n_extract_err", pa.int64()),
+    ("wall_sec", pa.float64()), ("ts", pa.float64()), ("input_fp", pa.string()),
+    ("n_buckets", pa.int32()),
+])
+
+
+def _append_manifest(spark: SparkSession, cfg: PipelineConfig, rows: list[dict]) -> None:
+    """One manifest file per commit group, written by the driver: a
+    temp file renamed into place, so a reader never sees half a file."""
+    sink = pa.BufferOutputStream()
+    table = pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA)
+    pq.write_table(table, sink, compression=CODEC)
+    name = f"part-{time.time_ns()}-{uuid.uuid4().hex}.{CODEC}.parquet"
+    tmp, fs = _hadoop_path(spark, f"{cfg.manifest_dir}/_tmp.{name}")
+    dst = spark._jvm.org.apache.hadoop.fs.Path(f"{cfg.manifest_dir}/{name}")
+    _write_bytes(fs, tmp, sink.getvalue().to_pybytes())
+    if not fs.rename(tmp, dst):
+        raise OSError(f"manifest rename {tmp} -> {dst} failed")
 
 
 def _prune_for_udf(pages: DataFrame, keep_cols: tuple = ()) -> DataFrame:
@@ -261,22 +275,29 @@ def _hadoop_path(spark: SparkSession, path: str):
     return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def _read_bytes(fs, jpath) -> bytes:
+    """A whole (small) file in one py4j call."""
+    stream = fs.open(jpath)
+    try:
+        return stream.readAllBytes()
+    finally:
+        stream.close()
+
+
+def _write_bytes(fs, jpath, data: bytes) -> None:
+    out = fs.create(jpath, True)
+    try:
+        out.write(data)
+    finally:
+        out.close()
+
+
 def _read_stage_marker(spark: SparkSession, stage_dir: str) -> str | None:
     try:
         jpath, fs = _hadoop_path(spark, f"{stage_dir}/{STAGE_MARKER}")
         if not fs.exists(jpath):
             return None
-        stream = fs.open(jpath)
-        try:
-            data = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                data.append(b)
-            return bytes(data).decode("utf-8", "replace").strip()
-        finally:
-            stream.close()
+        return _read_bytes(fs, jpath).decode("utf-8", "replace").strip()
     except Exception:
         return None
 
@@ -284,11 +305,7 @@ def _read_stage_marker(spark: SparkSession, stage_dir: str) -> str | None:
 def _write_stage_marker(spark: SparkSession, stage_dir: str, fp: str) -> None:
     try:
         jpath, fs = _hadoop_path(spark, f"{stage_dir}/{STAGE_MARKER}")
-        out = fs.create(jpath, True)
-        try:
-            out.write(fp.encode("utf-8"))
-        finally:
-            out.close()
+        _write_bytes(fs, jpath, fp.encode("utf-8"))
     except Exception:
         pass
 
@@ -328,9 +345,10 @@ def run_pipeline(
 ) -> dict:
     """Process all url-hash buckets not yet committed; returns metrics.
 
-    Writes go through the table catalog (ragflow_spark/catalog.py):
-    Iceberg `overwritePartitions`/`append` when the runtime is on the
-    classpath, parquet dynamic-overwrite/append otherwise.
+    Chunk writes go through the table catalog (ragflow_spark/catalog.py):
+    Iceberg `overwritePartitions` when the runtime is on the classpath,
+    parquet dynamic overwrite otherwise.  The manifest is a parquet log
+    the driver writes itself in either mode (see _append_manifest).
     """
     state: dict = {}
     try:
@@ -367,7 +385,7 @@ def _run_pipeline_impl(
     # stage-reuse gate.  (Dynamic partition overwrite is scoped inside
     # Catalog.overwrite_partitions now — no session-global conf set.)
     fp = _input_fingerprint(pages, spark)
-    done = committed_buckets(spark, cfg, catalog, input_fp=fp) if resume else set()
+    done = committed_buckets(spark, cfg, input_fp=fp) if resume else set()
     todo = [b for b in range(cfg.n_buckets) if b not in done]
     # effective group size: at least buckets_per_commit, and no more
     # than max_commit_groups passes over the input per run
@@ -434,8 +452,7 @@ def _run_pipeline_impl(
         # target saturates at the 128 MiB default, so this is a no-op).
         # Originals are restored after the group loop (see finally).
         try:
-            _, fs = _hadoop_path(spark, stage_dir)
-            jp = spark._jvm.org.apache.hadoop.fs.Path(stage_dir)
+            jp, fs = _hadoop_path(spark, stage_dir)
             total_len = int(fs.getContentSummary(jp).getLength())
             n_groups = -(-len(todo) // bpc)
             par = spark.sparkContext.defaultParallelism
@@ -568,7 +585,7 @@ def _run_pipeline_impl(
             totals["n_pdf_fallback"] += int(n_fb)
             totals["n_extract_err"] += int(n_err)
         if rows:
-            _append_manifest(spark, cfg, rows, catalog)
+            _append_manifest(spark, cfg, rows)
     # every group committed: the staged scratch copy has served its
     # purpose — drop it rather than double the corpus's storage
     # footprint forever (a later resume that still has work restages)

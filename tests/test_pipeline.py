@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ragflow_spark.data.pagegen import generate_pages, pages_dataframe
 from ragflow_spark.spark.pipeline import (
     PipelineConfig,
+    _append_manifest,
     committed_buckets,
     run_pipeline,
     transform_chunks,
@@ -92,6 +93,13 @@ class TestPipelineResume:
         manifest = spark.read.parquet(cfg.manifest_dir)
         agg = manifest.groupBy().sum("n_pdf", "n_pdf_fallback").collect()[0]
         assert agg[0] == totals["n_pdf"] and agg[1] == 0
+        # one manifest file per commit group (4 buckets, 2 per group):
+        # the crash window a kill between data commit and manifest
+        # write leaves is exactly one group's file
+        import os
+
+        files = [f for f in os.listdir(cfg.manifest_dir) if f.endswith(".parquet")]
+        assert len(files) == 2
 
     def test_fallback_counted(self, spark, tmp_path):
         """A PDF the interpreter cannot read (even one that emits ZERO
@@ -245,6 +253,115 @@ class TestStageReuse:
         os.rename(new, f"{src}/{os.path.basename(old)}")
         fp2 = _input_fingerprint(spark.read.parquet(src), spark)
         assert fp1 != fp2
+
+
+def _manifest_row(bucket: int) -> dict:
+    """A done row of a 2-bucket run over input fingerprint "fp"."""
+    return {
+        "bucket": bucket,
+        "status": "done",
+        "n_pages": 3,
+        "n_chunks": 5,
+        "bytes_in": 700,
+        "n_pdf": 1,
+        "n_pdf_fallback": 0,
+        "n_extract_err": 0,
+        "wall_sec": 0.5,
+        "ts": 1.0 + bucket,
+        "input_fp": "fp",
+        "n_buckets": 2,
+    }
+
+
+class TestDriverManifest:
+    """The manifest is a parquet log the driver writes and reads
+    through the Hadoop FS API: no Spark job in either direction, and
+    files from the earlier Spark-written format read alongside."""
+
+    # the DDL the manifest was written with through Spark
+    SPARK_DDL = (
+        "bucket int, status string, n_pages long, n_chunks long, "
+        "bytes_in long, n_pdf long, n_pdf_fallback long, "
+        "n_extract_err long, "
+        "wall_sec double, ts double, input_fp string, n_buckets int"
+    )
+
+    def _parquet_files(self, d):
+        import os
+
+        return sorted(
+            os.path.join(d, f)
+            for f in os.listdir(d)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+
+    def test_append_and_resume_read_launch_no_spark_job(self, spark, tmp_path):
+        cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=2)
+        sc = spark.sparkContext
+        group = "manifest-io-no-job"
+        sc.setJobGroup(group, "manifest append + resume read")
+        try:
+            _append_manifest(spark, cfg, [_manifest_row(0), _manifest_row(1)])
+            assert committed_buckets(spark, cfg, input_fp="fp") == {0, 1}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    def test_unreadable_manifest_raises(self, spark, tmp_path):
+        """A corrupt manifest file must not read as "nothing committed"
+        (that would re-run every bucket and skip the n_buckets guard)."""
+        import os
+
+        import pyarrow as pa
+
+        cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=2)
+        # only a missing manifest directory means "nothing committed"
+        assert committed_buckets(spark, cfg) == set()
+        _append_manifest(spark, cfg, [_manifest_row(0)])
+        with open(os.path.join(cfg.manifest_dir, "part-x.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(pa.ArrowInvalid):
+            committed_buckets(spark, cfg)
+
+    def test_spark_written_and_driver_written_files_resume_together(
+        self, spark, tmp_path
+    ):
+        import os
+
+        import pyarrow.parquet as pq
+
+        from extractbench.checks import manifest_problems
+
+        out = str(tmp_path / "out")
+        cfg = PipelineConfig(out_dir=out, n_buckets=2)
+        # bucket 0 written the earlier way, through a Spark job
+        (
+            spark.createDataFrame([_manifest_row(0)], schema=self.SPARK_DDL)
+            .coalesce(1)
+            .write.mode("append")
+            .option("compression", "zstd")
+            .parquet(cfg.manifest_dir)
+        )
+        (spark_file,) = self._parquet_files(cfg.manifest_dir)
+        # bucket 1 written by the driver
+        _append_manifest(spark, cfg, [_manifest_row(1)])
+        (driver_file,) = set(self._parquet_files(cfg.manifest_dir)) - {spark_file}
+
+        def names_types(path):
+            return [(f.name, f.type) for f in pq.read_schema(path)]
+
+        assert names_types(driver_file) == names_types(spark_file)
+        assert committed_buckets(spark, cfg, input_fp="fp") == {0, 1}
+
+        # a write cut short before its rename leaves a truncated
+        # `_tmp.*` file: every manifest reader must skip it
+        with open(driver_file, "rb") as f:
+            data = f.read()
+        with open(os.path.join(cfg.manifest_dir, "_tmp.part-1-x.zstd.parquet"), "wb") as f:
+            f.write(data[: len(data) // 2])
+        assert committed_buckets(spark, cfg, input_fp="fp") == {0, 1}
+        assert spark.read.parquet(cfg.manifest_dir).count() == 2
+        assert manifest_problems(out, 2) == []
 
 
 def test_catalog_iceberg_identifiers(spark):
