@@ -9,6 +9,8 @@ Scale notes (100 TB design point):
   than big ones (swept 64/128/256/1024/2048 at 16 and 32 cores).
 * shuffle partitions default to cores in local mode; on a real cluster
   this would be ~2-3x total executor cores (configured at submit time).
+* no conf removes the per-task zip re-read (see spark/udfs.py): its guard
+  goes once workers run CPython >= 3.13 or PySpark drops that call.
 """
 
 from __future__ import annotations

@@ -7,11 +7,17 @@ Design rules (input_hint: "no per-row Python" at the Spark API level):
 * per-document logic (DOM, merge) is pure Python inside the batch — the
   same shape as the reference's per-task loop, but Arrow in / Arrow out;
 * format dispatch is magic-byte based (naive.py:404-549 routes on file
-  extension; a web corpus has no filenames, SURVEY.md §2.1).
+  extension; a web corpus has no filenames, SURVEY.md §2.1);
+* import installs ``guard_zip_rereads``: PySpark's per-task
+  ``importlib.invalidate_caches()`` re-parsed pyspark.zip, 200-450 ms a
+  task.  Drop it on CPython >= 3.13 workers or once PySpark stops that.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,6 +29,37 @@ from ..parsers.jsonp import split_json_text
 from ..parsers.txt import split_txt
 from ..text.codec import decode_bytes
 from ..text.tokenizer import content_tokens
+
+
+def guard_zip_rereads() -> None:
+    """Re-read a zip archive only when its (mtime, size) stamp moved; held
+    archives count as read.  Idempotent; a no-op on CPython >= 3.13."""
+    original = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(original, "__wrapped__"):
+        return
+    cache, stamps = zipimport._zip_directory_cache, {}
+
+    def stamp(archive: str) -> tuple[int, int] | None:
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None  # unknown: always re-read
+        return st.st_mtime_ns, st.st_size
+
+    def invalidate_caches(self) -> None:
+        now = stamp(self.archive)
+        if now is not None and stamps.get(self.archive) == now:
+            self._files = cache.get(self.archive, self._files)  # a sibling's read
+            return
+        original(self)
+        stamps[self.archive] = now if self.archive in cache else None
+    held = [i for i in list(sys.path_importer_cache.values()) if isinstance(i, zipimport.zipimporter)]
+    stamps.update((i.archive, stamp(i.archive)) for i in held if i.archive in cache)
+    invalidate_caches.__wrapped__ = original
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+guard_zip_rereads()
 
 EXTRACTED_SCHEMA = T.StructType(
     [
