@@ -137,20 +137,9 @@ class Catalog:
             else:
                 df.writeTo(ident).overwritePartitions()
         else:
-            conf = self.spark.conf
-            key = "spark.sql.sources.partitionOverwriteMode"
-            prev = conf.get(key, None)
-            conf.set(key, "dynamic")
-            try:
-                w = df.write.mode("overwrite")
-                if codec:
-                    w = w.option("compression", codec)
-                w.partitionBy(partition_col).parquet(table_or_path)
-            finally:
-                # never leak dynamic-overwrite into the caller's
-                # session: a later plain partitioned overwrite would
-                # silently keep stale partitions instead of truncating
-                if prev is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, prev)
+            # dynamic overwrite as a write option, never a session conf:
+            # it replaces only the partitions present in ``df``
+            w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            if codec:
+                w = w.option("compression", codec)
+            w.partitionBy(partition_col).parquet(table_or_path)

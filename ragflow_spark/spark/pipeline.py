@@ -350,40 +350,13 @@ def run_pipeline(
     parquet dynamic overwrite otherwise.  The manifest is a parquet log
     the driver writes itself in either mode (see _append_manifest).
     """
-    state: dict = {}
-    try:
-        return _run_pipeline_impl(spark, pages, cfg, resume, catalog, state)
-    finally:
-        # restore session-global split-size confs mutated for the
-        # staged group reads — never leak a 1 MiB split target into
-        # the caller's session (or into a later run that skips the
-        # staging branch)
-        for k, v in state.get("saved_confs", {}).items():
-            try:
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-            except Exception:
-                pass
-
-
-def _run_pipeline_impl(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: PipelineConfig,
-    resume: bool,
-    catalog,
-    state: dict,
-) -> dict:
     if catalog is None:
         from ..catalog import Catalog
 
         catalog = Catalog(spark)
     # input lineage: which file set produced each committed bucket —
     # recorded per manifest row, checked on resume, and reused as the
-    # stage-reuse gate.  (Dynamic partition overwrite is scoped inside
-    # Catalog.overwrite_partitions now — no session-global conf set.)
+    # stage-reuse gate.
     fp = _input_fingerprint(pages, spark)
     done = committed_buckets(spark, cfg, input_fp=fp) if resume else set()
     todo = [b for b in range(cfg.n_buckets) if b not in done]
@@ -402,26 +375,21 @@ def _run_pipeline_impl(
         # partitions of the staged copy.  Marker-gated: a kill
         # mid-stage leaves no marker and the dir is rewritten; a
         # resume with the same out_dir AND the same input file set
-        # reuses.  (The partitioned write emits no top-level _SUCCESS,
-        # so the gate is our own marker, stamped with a fingerprint of
-        # the input file list — a non-file-backed input fingerprints
-        # as None and is always restaged, never trusted stale.)
+        # reuses.  (The write's _SUCCESS does not say which input it
+        # staged, so the gate is our own marker, stamped with a
+        # fingerprint of the input file list — a non-file-backed input
+        # fingerprints as None and is always restaged, never trusted
+        # stale.)
         stage_dir = f"{cfg.out_dir}/stage_nb{cfg.n_buckets}"
         staged_ok = fp is not None and _read_stage_marker(spark, stage_dir) == fp
         if not (resume and staged_ok):
-            # restage from scratch: DELETE the old dir first rather
-            # than trust overwrite semantics — under dynamic partition
-            # overwrite (ambient session conf a caller may have set) a
-            # plain overwrite only replaces partitions present in the
-            # new data, so a shrunken input would silently leave the
-            # previous input's buckets (and old marker) in place and
-            # leak its pages into this run's output
-            _delete_path(spark, stage_dir)
             # spread every bucket over ~one file per core of a group's
             # read, so the pruned group scan below already has enough
             # splits for the CPU-bound extraction stage — measured at
             # 200k pages/32 buckets this removes a 2-8s AQE shuffle
-            # stage per group that a runtime repartition() costs
+            # stage per group that a runtime repartition() costs.
+            # Spark's own split rule reads them as >= one split per
+            # core; the per-group repartition guard below remains.
             par = spark.sparkContext.defaultParallelism
             spread = max(1, -(-par // max(bpc, 1)))
             # stage the PRUNED projection (text nulled for plain
@@ -435,7 +403,10 @@ def _run_pipeline_impl(
                     F.col("bucket"),
                     F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(spread)),
                 )
+                # static whatever the session says: truncates old
+                # buckets and marker, so a shrunken input leaves none
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "static")
                 .option("compression", CODEC)
                 .partitionBy("bucket")
                 .parquet(stage_dir)
@@ -444,33 +415,6 @@ def _run_pipeline_impl(
                 _write_stage_marker(spark, stage_dir, fp)
         source = spark.read.parquet(stage_dir)
         used_stage_dir = stage_dir
-        # size read splits so a pruned group scan yields >= one split
-        # per core: at small corpus scale the staged files are ~1 MiB
-        # and the default 128 MiB target + 4 MiB per-file open-cost
-        # packs them back into one or two splits, starving the
-        # CPU-bound extraction stage (at corpus scale the computed
-        # target saturates at the 128 MiB default, so this is a no-op).
-        # Originals are restored after the group loop (see finally).
-        try:
-            jp, fs = _hadoop_path(spark, stage_dir)
-            total_len = int(fs.getContentSummary(jp).getLength())
-            n_groups = -(-len(todo) // bpc)
-            par = spark.sparkContext.defaultParallelism
-            tgt = total_len // max(n_groups * par, 1)
-            tgt = min(max(tgt, 1 << 20), 128 << 20)
-            state["saved_confs"] = {
-                k: spark.conf.get(k, None)
-                for k in (
-                    "spark.sql.files.maxPartitionBytes",
-                    "spark.sql.files.openCostInBytes",
-                )
-            }
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(tgt))
-            spark.conf.set(
-                "spark.sql.files.openCostInBytes", str(min(tgt // 4, 4 << 20))
-            )
-        except Exception:
-            pass
     # prune ONCE over the bucketed table so the manifest stats below
     # aggregate the exact row set the chunker sees (the byte-cap filter
     # would otherwise silently desync n_pages/bytes_in from the output)
@@ -502,18 +446,11 @@ def _run_pipeline_impl(
         # jobs -> 19, wall 115-140s -> 85-106s (BENCH.md round 4); the
         # gap widens with bucket count, since every pre-r4 group paid
         # two extra unpruned passes over the full input.
-        def _per_bucket(col: str, prefix: str):
-            if col == "*":
-                return [
-                    F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(
-                        f"{prefix}{b}"
-                    )
-                    for b in group
-                ]
+        def _per_bucket(value, prefix: str):
             return [
-                F.sum(
-                    F.when(F.col("bucket") == b, F.col(col)).otherwise(0)
-                ).alias(f"{prefix}{b}")
+                F.sum(F.when(F.col("bucket") == b, value).otherwise(0)).alias(
+                    f"{prefix}{b}"
+                )
                 for b in group
             ]
 
@@ -528,12 +465,16 @@ def _run_pipeline_impl(
             subset = subset.repartition(par)
         subset = (
             subset.withColumn("_nb", F.coalesce(F.length("html"), F.lit(0)))
-            .observe(page_obs, *_per_bucket("*", "n_"), *_per_bucket("_nb", "b_"))
+            .observe(
+                page_obs,
+                *_per_bucket(F.lit(1), "n_"),
+                *_per_bucket(F.col("_nb"), "b_"),
+            )
             .drop("_nb")
         )
         chunk_obs = Observation(f"chunks_{lo}")
         chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets).observe(
-            chunk_obs, *_per_bucket("*", "c_")
+            chunk_obs, *_per_bucket(F.lit(1), "c_")
         )
         catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=CODEC)
         pstats = page_obs.get

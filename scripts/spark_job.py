@@ -15,7 +15,8 @@ the resumable bucket pipeline (ragflow_spark/spark/pipeline.py): url-hash
 buckets, per-bucket dynamic-overwrite commits, manifest lineage,
 anti-join restart.  All argument parsing and run logic live in
 ragflow_spark.spark.pipeline.cli() — this file only supplies the
-spark-submit-provided session.
+session, built with ragflow_spark.session.configure: the one conf set
+the in-process runs and the benchmark use too.
 """
 
 from __future__ import annotations
@@ -24,13 +25,12 @@ from pyspark.sql import SparkSession
 
 
 def main() -> None:
-    # spark-submit provides the session config (master, executors, ...)
-    spark = SparkSession.builder.appName("ragflow_spark.extract").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
+    from ragflow_spark.session import configure
     from ragflow_spark.spark.pipeline import cli
 
-    cli(spark=spark)
+    # spark-submit provides the cluster config (master, executors, ...)
+    builder = SparkSession.builder.appName("ragflow_spark.extract")
+    cli(spark=configure(builder).getOrCreate())
 
 
 if __name__ == "__main__":

@@ -255,6 +255,118 @@ class TestStageReuse:
         assert fp1 != fp2
 
 
+class TestSessionConfs:
+    """Engine code sets no session conf: overwrite modes ride each write
+    as options, and staged group scans get their splits from Spark's
+    own split rule."""
+
+    def test_engine_calls_leave_session_confs_unchanged(
+        self, spark, pages, tmp_path, monkeypatch
+    ):
+        import os
+
+        from ragflow_spark.catalog import Catalog
+        from ragflow_spark.spark import pipeline as P
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = spark.conf.get(key, None)
+        # the ambient mode that would keep stale stage buckets if the
+        # stage write followed the session
+        spark.conf.set(key, "dynamic")
+        try:
+            src = str(tmp_path / "src")
+            pages.write.parquet(src)
+            fpages = spark.read.parquet(src)
+            cfg = PipelineConfig(
+                out_dir=str(tmp_path / "out"), n_buckets=4, buckets_per_commit=2
+            )
+
+            # a staged two-group run
+            before = spark.conf.getAll
+            totals = run_pipeline(spark, fpages, cfg, resume=False)
+            assert totals["n_pages"] == 120
+            assert spark.conf.getAll == before
+
+            # a run killed in its second group
+            real_write = Catalog.overwrite_partitions
+            calls = {"n": 0}
+
+            def dying(self, df, path, col, **kw):
+                calls["n"] += 1
+                if calls["n"] == 2:
+                    raise RuntimeError("simulated mid-run kill")
+                return real_write(self, df, path, col, **kw)
+
+            monkeypatch.setattr(Catalog, "overwrite_partitions", dying)
+            with pytest.raises(RuntimeError):
+                run_pipeline(spark, fpages, cfg, resume=False)
+            assert spark.conf.getAll == before
+
+            # restage over a changed, smaller input after the kill: the
+            # killed run's stage (all 4 buckets) must not survive
+            stage_dir = f"{cfg.out_dir}/stage_nb4"
+            assert os.path.exists(f"{stage_dir}/bucket=3")
+            src2 = str(tmp_path / "src2")
+            with_bucket(pages, 4).where("bucket < 3").drop("bucket").write.parquet(src2)
+            small = spark.read.parquet(src2)
+            calls["n"] = 1  # die in the first group, right after staging
+            with pytest.raises(RuntimeError):
+                run_pipeline(spark, small, cfg)
+            monkeypatch.undo()
+            assert spark.conf.getAll == before
+            assert sorted(
+                d for d in os.listdir(stage_dir) if not d.startswith((".", "_"))
+            ) == ["bucket=0", "bucket=1", "bucket=2"]
+            assert P._read_stage_marker(spark, stage_dir) == P._input_fingerprint(
+                small, spark
+            )
+            assert spark.read.parquet(stage_dir).count() == small.count()
+
+            # a direct dynamic partition commit
+            cat_dir = str(tmp_path / "cat")
+            df = with_bucket(pages, 4)
+            Catalog(spark).overwrite_partitions(df, cat_dir, "bucket")
+            Catalog(spark).overwrite_partitions(
+                df.where("bucket = 1"), cat_dir, "bucket"
+            )
+            assert spark.conf.getAll == before
+            assert spark.read.parquet(cat_dir).count() == 120
+            # the commit stays dynamic under a static session mode too
+            spark.conf.set(key, "static")
+            Catalog(spark).overwrite_partitions(
+                df.where("bucket = 2"), cat_dir, "bucket"
+            )
+            assert spark.read.parquet(cat_dir).count() == 120
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
+    def test_staged_group_scans_read_one_split_per_core(
+        self, spark, pages, tmp_path, monkeypatch
+    ):
+        """Spark's default split confs (session.configure's) read each
+        group's pruned scan of the staged input as >= one split per
+        core at local[4], 8 buckets in groups of 4."""
+        from ragflow_spark.spark import pipeline as P
+
+        kept = []
+        monkeypatch.setattr(P, "_delete_path", lambda spark_, path: kept.append(path))
+        cfg = PipelineConfig(
+            out_dir=str(tmp_path / "out"), n_buckets=8, buckets_per_commit=4
+        )
+        run_pipeline(spark, pages, cfg)
+        stage_dir = f"{cfg.out_dir}/stage_nb8"
+        assert kept == [stage_dir]
+        par = spark.sparkContext.defaultParallelism
+        assert par == 4
+        staged = spark.read.parquet(stage_dir)
+        for group in ([0, 1, 2, 3], [4, 5, 6, 7]):
+            scan = staged.where(F.col("bucket").isin(group))
+            assert scan.rdd.getNumPartitions() >= par
+
+
 def _manifest_row(bucket: int) -> dict:
     """A done row of a 2-bucket run over input fingerprint "fp"."""
     return {
