@@ -77,13 +77,16 @@ def _decode_bytes(out: bytes) -> str:
         return out.decode("latin-1", errors="ignore")
 
 
+_WS_RUN = re.compile(rb"\s+")
+
+
 def _raw_string(lit: bytes) -> bytes:
     """The string operand's raw bytes: unhex for ``<...>``, escape
     resolution for ``(...)`` — decoding to text is the caller's job
     (simple fonts: BOM/UTF-8/latin-1 cascade; CID fonts: the
     /ToUnicode CMap in parsers/pdf_chars.py)."""
     if lit[:1] == b"<":  # hex string: <48656C6C6F>
-        hx = re.sub(rb"\s+", b"", lit[1:-1])
+        hx = _WS_RUN.sub(b"", lit[1:-1])
         if len(hx) % 2:  # odd digit count: implicit trailing 0
             hx += b"0"
         try:
@@ -91,6 +94,8 @@ def _raw_string(lit: bytes) -> bytes:
         except ValueError:
             return b""
     body = lit[1:-1]
+    if b"\\" not in body:  # no escapes: the literal is its own value
+        return bytes(body)
     out = bytearray()
     i = 0
     while i < len(body):
@@ -145,20 +150,16 @@ def extract_pdf_text_mode(pdf: bytes) -> tuple[str, str]:
     degradation — the pipeline aggregates these per bucket
     (spark/pipeline.py)."""
     try:
-        from ..pdf.assemble import order_lines
+        from ..pdf.assemble import chars_to_lines, insert_word_gaps, order_lines
         from .pdf_chars import pdf_pages_chars
 
         pages = pdf_pages_chars(pdf)
         if any(p["chars"] for p in pages):
-            from ..pdf.assemble import insert_word_gaps
-
             lines: list[str] = []
             for p in pages:
-                for ln in order_lines(
-                    _chars_to_lines_compat(p["chars"])
-                ):
+                for ln in order_lines(chars_to_lines(p["chars"])):
                     insert_word_gaps(ln)
-                    txt = "".join(c["text"] for c in ln).strip()
+                    txt = "".join([c["text"] for c in ln]).strip()
                     if txt:
                         lines.append(txt)
             partial = any(p.get("n_inexact_glyphs", 0) for p in pages)
@@ -167,12 +168,6 @@ def extract_pdf_text_mode(pdf: bytes) -> tuple[str, str]:
     except Exception:
         mode = "scan-error"
     return _extract_pdf_text_scan(pdf), mode
-
-
-def _chars_to_lines_compat(chars):
-    from ..pdf.assemble import chars_to_lines
-
-    return chars_to_lines(chars)
 
 
 def _extract_pdf_text_scan(pdf: bytes) -> str:

@@ -50,20 +50,30 @@ _EN_CAPTION = re.compile(r"(Table|Figure)\s*\d+\s*[:.．：]", re.IGNORECASE)
 
 def insert_word_gaps(chars: list[Char]) -> list[Char]:
     """The reference's space-insertion pre-pass (pdf_parser.py:1070-1077),
-    applied to a page's chars in stream order.  Mutates and returns."""
-    j = 0
-    n = len(chars)
-    while j + 1 < n:
-        a, b = chars[j], chars[j + 1]
-        at = a["text"]
+    applied to a page's chars in stream order.  Mutates and returns.
+
+    Each glyph's fields are read once: the right neighbour of one pair
+    is the left glyph of the next, so its text, x1 and width carry over
+    in locals."""
+    if not chars:
+        return chars
+    a = chars[0]
+    at, ax1, aw = a["text"], a["x1"], a["width"]
+    for b in chars[1:]:
+        bt = b["text"]
+        bw = b["width"]
         if (
             at
-            and b["text"]
+            and bt
             and at[0] in _GAP_FIRST  # == _ALNUM_PAIR.match(at + bt)
-            and b["x0"] - a["x1"] >= min(b["width"], a["width"]) / 2
+            # min(bw, aw) / 2, as the builtin picks on ties and NaN
+            and b["x0"] - ax1 >= (aw if aw < bw else bw) / 2
         ):
             a["text"] = at + " "
-        j += 1
+        a = b
+        at = bt
+        ax1 = b["x1"]
+        aw = bw
     return chars
 
 
@@ -96,18 +106,35 @@ def page_stats(pages: list[dict]) -> tuple[list[float], list[float], list[float]
 def chars_to_lines(chars: list[Char]) -> list[list[Char]]:
     """Group a page's chars (stream order) into visual lines: a new
     line starts when the baseline moves by more than half a char
-    height, or x regresses past the line start (wrap)."""
+    height, or x regresses past the line start (wrap).
+
+    The previous glyph's top, height and width and the line's start x0
+    live in locals; ``max(h, ph, 1.0)`` is spelled out with the
+    builtin's left-to-right, first-wins comparisons."""
     lines: list[list[Char]] = []
-    for c in chars:
-        if lines:
-            prev = lines[-1][-1]
-            same_row = abs(c["top"] - prev["top"]) <= max(
-                c["height"], prev["height"], 1.0
-            ) / 2
-            if same_row and c["x0"] >= lines[-1][0]["x0"] - prev["width"]:
-                lines[-1].append(c)
-                continue
-        lines.append([c])
+    if not chars:
+        return lines
+    c = chars[0]
+    line = [c]
+    lines.append(line)
+    line_x0 = c["x0"]
+    ptop, ph, pw = c["top"], c["height"], c["width"]
+    for c in chars[1:]:
+        top = c["top"]
+        h = c["height"]
+        m = ph if ph > h else h
+        if 1.0 > m:
+            m = 1.0
+        x0 = c["x0"]
+        if abs(top - ptop) <= m / 2 and x0 >= line_x0 - pw:
+            line.append(c)
+        else:
+            line = [c]
+            lines.append(line)
+            line_x0 = x0
+        ptop = top
+        ph = h
+        pw = c["width"]
     return lines
 
 

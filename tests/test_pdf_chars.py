@@ -264,6 +264,13 @@ def test_word_gap_rule_reference_semantics():
     assert chars[1]["text"] == "b"       # gap 0.5 < 3
     assert chars[2]["text"] == "c "      # gap 7.5 >= 3, "c?" matches [!,.:;%]
     assert chars[3]["text"] == "?"       # "?d" does not match the class
+    # a CJK cell then a number cell ("数据" | "20"): the class has no
+    # CJK, so the column gap after "据" gets no space — the text path
+    # reads "数据20" (whether PlainParser agrees waits on a reference
+    # checkout; ROADMAP's carried PDF item)
+    cjk = [ch("数", 0, 12.0), ch("据", 12, 12.0), ch("2", 40), ch("0", 46)]
+    insert_word_gaps(cjk)
+    assert [c["text"] for c in cjk] == ["数", "据", "2", "0"]  # gap 16 >= 3
 
 
 def test_page_stats_medians_and_cumsum(doc_pdf):
@@ -693,3 +700,74 @@ def test_lzw_filter_roundtrip_and_stream():
     )
     chars = pdf_pages_chars(pdf)[0]["chars"]
     assert "".join(c["text"] for c in chars) == "LzwText"
+
+
+def _inherit_pdf() -> bytes:
+    """Two-level page tree: the /Differences font and the /MediaBox on
+    the root /Pages node, /Rotate 90 on the intermediate node, nothing
+    on the page; a second page whose /Parent chain loops."""
+    shown = b"BT /F1 12 Tf 1 0 0 1 72 300 Tm (caf\\200 ol\\200) Tj ET"
+    plain = b"BT /F1 12 Tf 1 0 0 1 72 300 Tm (hi) Tj ET"
+    return (
+        b"%PDF-1.4\n"
+        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+        b"2 0 obj << /Type /Pages /Kids [3 0 R 8 0 R] /Count 2"
+        b" /MediaBox [0 0 300 400] /Resources << /Font << /F1 5 0 R >> >> >> endobj\n"
+        b"3 0 obj << /Type /Pages /Parent 2 0 R /Kids [4 0 R] /Count 1"
+        b" /Rotate 90 >> endobj\n"
+        b"4 0 obj << /Type /Page /Parent 3 0 R /Contents 6 0 R >> endobj\n"
+        b"5 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
+        b" /Encoding << /Differences [128 /eacute] >> >> endobj\n"
+        b"6 0 obj << /Length " + str(len(shown)).encode() + b" >> stream\n"
+        + shown + b"\nendstream endobj\n"
+        b"8 0 obj << /Type /Page /Parent 9 0 R /Contents 11 0 R >> endobj\n"
+        b"9 0 obj << /Type /Pages /Parent 10 0 R >> endobj\n"
+        b"10 0 obj << /Type /Pages /Parent 9 0 R >> endobj\n"
+        b"11 0 obj << /Length " + str(len(plain)).encode() + b" >> stream\n"
+        + plain + b"\nendstream endobj\n"
+        b"trailer << /Root 1 0 R >>\n%%EOF"
+    )
+
+
+def test_page_attributes_inherit_from_any_ancestor():
+    """ISO 32000-1 7.7.3.4: /Resources, /MediaBox and /Rotate inherit
+    from any /Pages ancestor, not only the direct parent.  Without the
+    walk the root's /Differences font is missed and the page reads
+    'caf\\x80 ol\\x80' while the mode still says interp."""
+    from ragflow_spark.parsers.pdf import extract_pdf_text_mode
+
+    pdf = _inherit_pdf()
+    first, looped = pdf_pages_chars(pdf)
+    assert "".join(c["text"] for c in first["chars"]) == "café olé"
+    # root /MediaBox 300x400, displayed through the inherited /Rotate 90
+    assert (first["width"], first["height"]) == (400.0, 300.0)
+    # the /Parent cycle ends the walk: own dict, default box, no rotation
+    assert "".join(c["text"] for c in looped["chars"]) == "hi"
+    assert (looped["width"], looped["height"]) == (612.0, 792.0)
+    # the horizontal run displays vertically on the rotated page: one
+    # glyph per visual line, the space line stripped away
+    text, mode = extract_pdf_text_mode(pdf)
+    assert (text.split("\n"), mode) == (list("caféolé") + ["hi"], "interp")
+
+
+def test_inherited_walk_visits_each_node_once_per_document():
+    """Many pages under one deep /Parent chain: the memo makes the
+    walk O(nodes) per document, not O(pages x depth)."""
+    from ragflow_spark.parsers.pdf_chars import _inherited
+
+    depth, n_pages = 3000, 400
+    objs = {1: b"<< /Type /Pages /Rotate 180 >>"}
+    for i in range(2, depth + 1):
+        objs[i] = b"<< /Type /Pages /Parent %d 0 R >>" % (i - 1)
+    for p in range(n_pages):
+        objs[10_000 + p] = b"<< /Type /Page /Parent %d 0 R >>" % depth
+    calls = [0]
+
+    def own(head):
+        calls[0] += 1
+        return 180 if b"/Rotate" in head else None
+
+    memo: dict = {}
+    got = [_inherited(objs, 10_000 + p, own, memo) for p in range(n_pages)]
+    assert got == [180] * n_pages
+    assert calls[0] == depth + n_pages
