@@ -11,6 +11,8 @@ chunks that round 2 could only run on synthetic boxes.
 from __future__ import annotations
 
 import random
+import signal
+import time
 
 import pytest
 
@@ -771,3 +773,39 @@ def test_inherited_walk_visits_each_node_once_per_document():
     got = [_inherited(objs, 10_000 + p, own, memo) for p in range(n_pages)]
     assert got == [180] * n_pages
     assert calls[0] == depth + n_pages
+
+
+def test_lexer_linear_on_long_whitespace_runs():
+    """300 kB whitespace runs that no token follows (before a lone
+    '{', '}' or '>', an unclosed '(', or at the end of the stream)
+    lex in linear time.  A lexer pattern that may start with a
+    whitespace run retries it at every byte, O(run^2): hours for
+    these streams, where a linear lexer takes about 0.1 s each on a
+    4-vCPU VM.  The timer turns such a stall into a failure."""
+    pad = b" " * 300_000
+    shown = b"BT /F1 12 Tf 1 0 0 1 72 300 Tm (hi) Tj"
+    tails = [
+        pad + b"{ ET",
+        pad + b"} ET",
+        pad + b"> ET",
+        b" ET" + pad,
+        b" ET" + pad + b"(",
+        b" ET\n" + b"\r\n\t " * 75_000,
+    ]
+    budget = 5.0
+
+    def stalled(*_):
+        pytest.fail(f"lexing padded streams took over {budget} s")
+
+    prev = signal.signal(signal.SIGALRM, stalled)
+    signal.setitimer(signal.ITIMER_REAL, budget)
+    try:
+        t0 = time.perf_counter()
+        for tail in tails:
+            (page,) = pdf_pages_chars(_one_page_pdf(shown + tail))
+            assert "".join(c["text"] for c in page["chars"]) == "hi"
+        elapsed = time.perf_counter() - t0
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, prev)
+    assert elapsed < budget
