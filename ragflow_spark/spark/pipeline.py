@@ -14,7 +14,9 @@ job.  Scale design (100 TB / 10^12 rows):
   the driver writes the group's manifest rows (bucket, counts, bytes,
   wall time, status, input fingerprint) as one parquet file through the
   Hadoop FS API, and reads them back on restart — no Spark job either
-  way.  Committed buckets are skipped (the reference's
+  way.  The per-bucket counts come from the chunk UDF's accumulator
+  (``_ModeStatsParam``), so a group's plan has the same size whatever
+  its bucket count.  Committed buckets are skipped (the reference's
   digest/reuse logic, task_service.py:370-455); a bucket interrupted
   mid-write is simply overwritten — idempotent, no dupes, no holes.
 * **No driver-side loops over rows** — the driver iterates over bucket
@@ -36,7 +38,13 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .udfs import CHUNKS_SCHEMA, EXTRACTED_SCHEMA, extract_batches, make_chunk_batches
+from .udfs import (
+    BUCKET_STATS,
+    CHUNKS_SCHEMA,
+    EXTRACTED_SCHEMA,
+    extract_batches,
+    make_chunk_batches,
+)
 
 MAX_HTML_BYTES = 128 * 1024 * 1024  # parity: rag/settings.py:58
 # parquet codec for the chunk output, the staged input and the
@@ -47,16 +55,27 @@ CODEC = "zstd"
 
 
 class _ModeStatsParam(AccumulatorParam):
-    """Merges ``{bucket: [n_pdf, n_pdf_fallback, n_extract_err]}``
-    dicts from the chunker UDF (udfs.make_chunk_batches) so the
-    manifest can record the PDF interpreter-fallback rate per bucket
-    (VERDICT r3 #3: a corpus-scale interpreter regression must not
-    silently degrade extraction to the legacy scanner / ``text``
-    column).  n_extract_err counts extraction crashes of ANY document
-    type separately — folding them into n_pdf_fallback made the ratio
-    exceed 100% on buckets where HTML rows degraded, masquerading an
-    HTML regression as a PDF one.  At-least-once under task retries —
-    a monitoring signal, not an exact count."""
+    """Merges ``{bucket: [n_pages, n_chunks, bytes_in, n_pdf,
+    n_pdf_fallback, n_extract_err]}`` dicts (``udfs.BUCKET_STATS``)
+    from the chunker UDF (udfs.make_chunk_batches): every count of a
+    bucket's manifest row.  The PDF counts record the interpreter
+    fallback rate per bucket (VERDICT r3 #3: a corpus-scale
+    interpreter regression must not silently degrade extraction to the
+    legacy scanner / ``text`` column); n_extract_err counts extraction
+    crashes of ANY document type separately, so an HTML regression
+    cannot pass for a PDF one.
+
+    Exact, not at-least-once: the UDF runs in the write job's result
+    stage (after the group's ``repartition`` shuffle when there is
+    one), and Spark 4.1's DAGScheduler merges a result task's
+    accumulator updates only on its partition's first successful
+    completion; failed or killed attempts report only
+    ``countFailedValues`` accumulators, which a Python accumulator is
+    not.  ``CollectMetricsExec`` (``Observation``) reports through an
+    accumulator under the same rule, so these counts are as exact as
+    observed aggregates of the same stage.  A writer that shuffled
+    after the UDF would move it to a map stage, whose re-runs merge
+    again — for both channels alike."""
 
     def zero(self, value):
         return {}
@@ -85,6 +104,16 @@ class PipelineConfig:
     # 4096-bucket corpus into thousands of jobs.  0 disables the bound.
     max_commit_groups: int = 8
 
+    def __post_init__(self):
+        # checked before any Spark work: n_buckets < 1 used to commit
+        # nothing and report success, buckets_per_commit < 1 failed
+        # only after staging the whole input
+        for name, low in (("n_buckets", 1), ("buckets_per_commit", 1), ("max_commit_groups", 0)):
+            if getattr(self, name) < low:
+                raise ValueError(
+                    f"PipelineConfig.{name} must be >= {low}, got {getattr(self, name)}"
+                )
+
     @property
     def chunks_dir(self) -> str:
         return os.path.join(self.out_dir, "chunks")
@@ -108,9 +137,7 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
     stage write additionally sub-splits every bucket by a second url
     hash (see run_pipeline), which is the salting knob if a deployment
     ever buckets by host for locality."""
-    return pages.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+    return pages.withColumn("bucket", F.expr(f"CAST(pmod(xxhash64(url), {n_buckets}) AS INT)"))
 
 
 def committed_buckets(
@@ -195,22 +222,19 @@ def _prune_for_udf(pages: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     before crossing Arrow — roughly halving UDF input bytes at corpus
     scale.  The html byte cap mirrors the reference's 128 MB doc limit.
     ``keep_cols`` carries extra columns (e.g. ``bucket``) through.
+    Written as SQL text: the same optimized plan as the Column API in
+    two py4j calls instead of dozens.
     """
     # conservative: keeping text is always safe (nulling is purely an
     # IPC optimization), so match any %PDF- in the head — this covers
     # whitespace-prefixed PDFs, which sniff_doc_type lstrips for
     keep_text = (
-        F.col("html").isNull()
-        | (F.length("html") == 0)
-        | (F.instr(F.substring(F.col("html").cast("string"), 1, 64), "%PDF-") > 0)
+        "html IS NULL OR length(html) = 0"
+        " OR instr(substring(CAST(html AS STRING), 1, 64), '%PDF-') > 0"
     )
-    return pages.select(
-        *keep_cols,
-        "url",
-        "html",
-        F.when(keep_text, F.col("text")).alias("text"),
-        "lang",
-    ).where(F.coalesce(F.length("html"), F.lit(0)) <= MAX_HTML_BYTES)
+    return pages.selectExpr(
+        *keep_cols, "url", "html", f"CASE WHEN {keep_text} THEN text END AS text", "lang"
+    ).where(f"coalesce(length(html), 0) <= {MAX_HTML_BYTES}")
 
 
 STAGE_MARKER = "_RAGFLOW_STAGED"
@@ -324,7 +348,7 @@ def _chunk_plan(pruned: DataFrame, cfg: PipelineConfig, mode_acc=None) -> DataFr
     id = xxhash64(content + doc_id), rag/svr/task_executor.py:287)."""
     fn = make_chunk_batches(cfg.template, cfg.budget, cfg.delimiters, mode_acc=mode_acc)
     chunks = pruned.mapInPandas(fn, schema=CHUNKS_SCHEMA)
-    return chunks.withColumn("chunk_id", F.xxhash64("content", "url"))
+    return chunks.withColumn("chunk_id", F.expr("xxhash64(content, url)"))
 
 
 def transform_chunks(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -366,6 +390,7 @@ def run_pipeline(
     if cfg.max_commit_groups and todo:
         bpc = max(bpc, -(-len(todo) // cfg.max_commit_groups))
     source = with_bucket(pages, cfg.n_buckets)
+    par = spark.sparkContext.defaultParallelism
     used_stage_dir: str | None = None
     if len(todo) > bpc:
         # stage the input once, partitioned by url-hash bucket (the
@@ -390,8 +415,7 @@ def run_pipeline(
             # stage per group that a runtime repartition() costs.
             # Spark's own split rule reads them as >= one split per
             # core; the per-group repartition guard below remains.
-            par = spark.sparkContext.defaultParallelism
-            spread = max(1, -(-par // max(bpc, 1)))
+            spread = -(-par // bpc)
             # stage the PRUNED projection (text nulled for plain
             # HTML rows, >cap rows dropped, warc_ts pruned): the
             # same row set the chunker sees, at roughly half the
@@ -401,7 +425,7 @@ def run_pipeline(
                 .repartition(
                     cfg.n_buckets * spread,
                     F.col("bucket"),
-                    F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(spread)),
+                    F.expr(f"pmod(xxhash64(url, 1), {spread})"),
                 )
                 # static whatever the session says: truncates old
                 # buckets and marker, so a shrunken input leaves none
@@ -415,9 +439,8 @@ def run_pipeline(
                 _write_stage_marker(spark, stage_dir, fp)
         source = spark.read.parquet(stage_dir)
         used_stage_dir = stage_dir
-    # prune ONCE over the bucketed table so the manifest stats below
-    # aggregate the exact row set the chunker sees (the byte-cap filter
-    # would otherwise silently desync n_pages/bytes_in from the output)
+    # the chunker's input, pruned once over the bucketed table (a
+    # same-result re-projection over the already-pruned stage)
     bucketed = _prune_for_udf(source, keep_cols=("bucket",))
     totals = {
         "n_pages": 0,
@@ -428,61 +451,31 @@ def run_pipeline(
         "n_pdf_fallback": 0,
         "n_extract_err": 0,
     }
-    # per-bucket PDF/fallback counts flow back through an accumulator:
-    # counted at extraction time inside the UDF, so even a document
-    # that emits zero chunks (failed extraction, empty text) is seen
+    # every per-bucket count flows back through one accumulator,
+    # counted inside the chunk UDF as it reads each page (see
+    # _ModeStatsParam for why it is exact): the group's plan carries
+    # no per-bucket expressions, so it has the same size and the same
+    # per-row work at 4 or 512 buckets a group, and a document that
+    # emits zero chunks still counts
     mode_acc = spark.sparkContext.accumulator({}, _ModeStatsParam())
-
-    from pyspark.sql import Observation
 
     for lo in range(0, len(todo), bpc):
         group = todo[lo : lo + bpc]
         t0 = time.time()
-        # ONE pass per group: page/byte stats and chunk counts ride the
-        # write job as CollectMetrics observations (exact aggregates on
-        # the successful execution), instead of a second full input
-        # scan + a read-back of the written partitions per group —
-        # measured at 200k pages / 32 buckets / local[32]: 41 Spark
-        # jobs -> 19, wall 115-140s -> 85-106s (BENCH.md round 4); the
-        # gap widens with bucket count, since every pre-r4 group paid
-        # two extra unpruned passes over the full input.
-        def _per_bucket(value, prefix: str):
-            return [
-                F.sum(F.when(F.col("bucket") == b, value).otherwise(0)).alias(
-                    f"{prefix}{b}"
-                )
-                for b in group
-            ]
-
-        page_obs = Observation(f"pages_{lo}")
-        subset = bucketed.where(F.col("bucket").isin(group))
+        subset = bucketed.where(f"bucket IN ({', '.join(map(str, group))})")
         # partition-pruned group slices can read as a handful of splits
         # (one-ish file per bucket), starving the CPU-bound extraction
         # stage — spread them to the executor parallelism (no-op at
         # corpus scale, where a group spans thousands of splits)
-        par = spark.sparkContext.defaultParallelism
         if subset.rdd.getNumPartitions() < par:
             subset = subset.repartition(par)
-        subset = (
-            subset.withColumn("_nb", F.coalesce(F.length("html"), F.lit(0)))
-            .observe(
-                page_obs,
-                *_per_bucket(F.lit(1), "n_"),
-                *_per_bucket(F.col("_nb"), "b_"),
-            )
-            .drop("_nb")
-        )
-        chunk_obs = Observation(f"chunks_{lo}")
-        chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets).observe(
-            chunk_obs, *_per_bucket(F.lit(1), "c_")
-        )
+        chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets)
         catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=CODEC)
-        pstats = page_obs.get
-        cstats = chunk_obs.get
         wall = time.time() - t0
-        mode_stats = dict(mode_acc.value)  # cumulative; buckets disjoint per group
+        mode_stats = mode_acc.value  # cumulative; buckets disjoint per group
+        zero = [0] * len(BUCKET_STATS)
+        live = [b for b in group if mode_stats.get(b, zero)[0]]
         rows = []
-        live = [b for b in group if int(pstats.get(f"n_{b}") or 0)]
         for b in group:
             # EVERY processed bucket gets a manifest row, including
             # pageless ones (n_pages=0, wall 0): leaving them out of
@@ -495,36 +488,26 @@ def run_pipeline(
             # the exact input that produced it, and without a
             # fingerprint a later resume cannot tell — same never-trust
             # rule the stage-reuse marker applies.
-            n_pages = int(pstats.get(f"n_{b}") or 0)
-            if n_pages == 0 and fp is None:
+            counts = dict(zip(BUCKET_STATS, mode_stats.get(b, zero)))
+            if counts["n_pages"] == 0 and fp is None:
                 continue
-            n_pdf, n_fb, n_err = mode_stats.get(int(b), (0, 0, 0))
-            n_chunks = int(cstats.get(f"c_{b}") or 0)
             rows.append(
                 {
-                    "bucket": int(b),
+                    "bucket": b,
                     "status": "done",
-                    "n_pages": n_pages,
-                    "n_chunks": n_chunks,
-                    "bytes_in": int(pstats.get(f"b_{b}") or 0),
-                    "n_pdf": int(n_pdf),
-                    "n_pdf_fallback": int(n_fb),
-                    "n_extract_err": int(n_err),
+                    **counts,
                     # attribute the group's wall to the buckets that
                     # actually carried pages, so summing manifest
                     # wall_sec reproduces true runtime even when a
                     # group is mostly pageless
-                    "wall_sec": (wall / len(live)) if (live and n_pages) else 0.0,
+                    "wall_sec": wall / len(live) if counts["n_pages"] else 0.0,
                     "ts": time.time(),
                     "input_fp": fp or "",
                     "n_buckets": cfg.n_buckets,
                 }
             )
-            totals["n_pages"] += n_pages
-            totals["n_chunks"] += n_chunks
-            totals["n_pdf"] += int(n_pdf)
-            totals["n_pdf_fallback"] += int(n_fb)
-            totals["n_extract_err"] += int(n_err)
+            for k in totals.keys() & counts.keys():
+                totals[k] += counts[k]
         if rows:
             _append_manifest(spark, cfg, rows)
     # every group committed: the staged scratch copy has served its

@@ -607,6 +607,150 @@ class TestResumeLineageGuards:
                 "bucket": [7, 7, 7, 7],
             }
         )
-        list(fn(iter([batch])))
-        n_pdf, n_fb, n_err = acc.value[7]
+        out = pd.concat(list(fn(iter([batch]))))
+        stats = dict(zip(U.BUCKET_STATS, acc.value[7]))
+        n_pdf, n_fb, n_err = stats["n_pdf"], stats["n_pdf_fallback"], stats["n_extract_err"]
         assert (n_pdf, n_fb, n_err) == (1, 1, 2)  # fb <= pdf; errs apart
+        # the page, byte and chunk counts of the same rows: one chunk
+        # each (the stub emits one one-line section per row)
+        assert stats["n_pages"] == 4
+        assert stats["bytes_in"] == sum(len(h) for h in batch["html"])
+        assert stats["n_chunks"] == len(out) == 4
+
+
+@pytest.mark.parametrize(
+    "field, bad",
+    [
+        ("n_buckets", {"n_buckets": 0}),
+        ("n_buckets", {"n_buckets": -2}),
+        ("buckets_per_commit", {"buckets_per_commit": 0, "max_commit_groups": 0}),
+        ("max_commit_groups", {"max_commit_groups": -1}),
+    ],
+)
+def test_invalid_config_raises_before_any_spark_work(spark, pages, tmp_path, field, bad):
+    """n_buckets < 1 used to commit nothing and report success (a silent
+    loss of every page); buckets_per_commit 0 failed only after staging
+    the whole input.  The config now refuses them, naming the field,
+    before run_pipeline touches the output dir."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=field):
+        run_pipeline(spark, pages, PipelineConfig(out_dir=str(out), **bad))
+    assert not out.exists()
+
+
+# a one-page PDF whose misspelled /Contents key hides the stream from
+# the positioned-char interpreter: the legacy scanner reads it (a fallback)
+_DAMAGED_PDF = (
+    b"%PDF-1.4\n"
+    b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+    b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
+    b"3 0 obj << /Type /Page /Parent 2 0 R /Contentz 4 0 R >> endobj\n"
+    b"4 0 obj << /Length 56 >> stream\n"
+    b"BT /F1 12 Tf 72 720 Td (Hello) Tj 0 -14 Td (World) Tj ET"
+    b"\nendstream endobj\n"
+    b"trailer << /Root 1 0 R >>\n%%EOF"
+)
+
+
+class TestManifestCounts:
+    """Every count of a manifest row comes from the chunk UDF's
+    per-bucket accumulator; each must equal the same count taken from
+    the data, on the staged multi-group path and on the unstaged
+    single-group resume path."""
+
+    N = 8
+
+    @staticmethod
+    def _bucket(n):
+        return F.pmod(F.xxhash64("url"), F.lit(n)).cast("int").alias("bucket")
+
+    def _expected(self, spark, fpages, cfg, cap):
+        """bucket -> counts, from a groupBy over the pruned input and
+        over the written chunks."""
+        from ragflow_spark.spark.udfs import BUCKET_STATS
+
+        kept = fpages.where(F.coalesce(F.length("html"), F.lit(0)) <= cap)
+        pdf = F.col("doc_type") == "pdf"
+        per_bucket = [
+            kept.groupBy(self._bucket(self.N)).agg(
+                F.count("*").alias("n_pages"),
+                F.coalesce(F.sum(F.length("html")), F.lit(0)).alias("bytes_in"),
+            ),
+            spark.read.parquet(cfg.chunks_dir).groupBy("bucket").agg(
+                F.count("*").alias("n_chunks")
+            ),
+            transform_extracted(fpages).groupBy(self._bucket(self.N)).agg(
+                F.sum(pdf.cast("long")).alias("n_pdf"),
+                F.sum((pdf & ~F.col("extract_mode").isin("", "interp")).cast("long")).alias(
+                    "n_pdf_fallback"
+                ),
+                F.sum((F.col("extract_mode") == "extract-error").cast("long")).alias(
+                    "n_extract_err"
+                ),
+            ),
+        ]
+        out = {b: dict.fromkeys(BUCKET_STATS, 0) for b in range(self.N)}
+        for df in per_bucket:
+            for r in df.collect():
+                out[r["bucket"]].update({k: v for k, v in r.asDict().items() if k != "bucket"})
+        return out
+
+    def _check(self, spark, fpages, cfg, cap):
+        import pyarrow.parquet as pq
+
+        from ragflow_spark.spark.udfs import BUCKET_STATS
+
+        expected = self._expected(spark, fpages, cfg, cap)
+        rows = sorted(pq.read_table(cfg.manifest_dir).to_pylist(), key=lambda r: r["bucket"])
+        assert [r["bucket"] for r in rows] == list(range(self.N))
+        for r in rows:
+            assert {k: r[k] for k in BUCKET_STATS} == expected[r["bucket"]], r["bucket"]
+        return rows
+
+    def test_counts_equal_the_data_staged_and_resumed(self, spark, pages, tmp_path, monkeypatch):
+        import datetime as dt
+
+        from extractbench.checks import simulate_kill
+        from ragflow_spark.data.pagegen import PAGE_SCHEMA
+        from ragflow_spark.spark import pipeline as P
+
+        cap = pages.agg(F.max(F.length("html"))).first()[0]
+        monkeypatch.setattr(P, "MAX_HTML_BYTES", cap)
+        ts = dt.datetime(2024, 1, 1)
+        over_url = "https://big.example.com/over-cap"
+        extra = spark.createDataFrame(
+            [
+                (over_url, ts, b"<html><body><p>" + b"word " * cap + b"</p></body></html>",
+                 "over the cap", "English"),
+                ("https://pdf.example.com/damaged.pdf", ts, _DAMAGED_PDF, None, "English"),
+            ],
+            PAGE_SCHEMA,
+        )
+        # a second-group bucket left pageless: neither extra row is in it
+        taken = {r[0] for r in extra.select(self._bucket(self.N)).collect()}
+        empty = min(set(range(self.N // 2, self.N)) - taken)
+        src = str(tmp_path / "src")
+        pages.unionByName(extra).where(self._bucket(self.N) != empty).write.parquet(src)
+        fpages = spark.read.parquet(src)
+        cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=self.N, buckets_per_commit=4)
+
+        first = run_pipeline(spark, fpages, cfg)  # staged: two groups of 4
+        rows = self._check(spark, fpages, cfg, cap)
+        # the fixture reaches every case: the over-cap page is dropped,
+        # the damaged PDF is a fallback, one bucket has no page
+        assert first["n_pages"] == fpages.count() - 1
+        assert sum(r["n_pdf_fallback"] for r in rows) == first["n_pdf_fallback"] == 1
+        assert rows[empty]["n_pages"] == 0 and rows[empty]["wall_sec"] == 0.0
+        for k in ("n_pages", "n_chunks", "n_pdf", "n_extract_err"):
+            assert first[k] == sum(r[k] for r in rows)
+
+        # the second group's manifest file is gone: the restart runs its
+        # 4 buckets as one unstaged group (no stage marker written)
+        assert simulate_kill(cfg.out_dir) == list(range(self.N // 2, self.N))
+        marks = []
+        monkeypatch.setattr(P, "_write_stage_marker", lambda *a: marks.append(a))
+        second = run_pipeline(spark, fpages, cfg)
+        assert second["buckets"] == self.N // 2 and marks == []
+        rows = self._check(spark, fpages, cfg, cap)
+        for k in ("n_pages", "n_chunks", "n_pdf", "n_pdf_fallback", "n_extract_err"):
+            assert second[k] == sum(r[k] for r in rows[self.N // 2 :])
