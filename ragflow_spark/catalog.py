@@ -45,29 +45,22 @@ def iceberg_available(spark: SparkSession, catalog_name: str = "lake") -> bool:
     loadable.  The class probe goes through Spark's own Utils
     (context/Spark classloader) because ``--packages``/``--jars`` jars
     land in Spark's MutableURLClassLoader, which the py4j gateway's
-    ``java.lang.Class.forName`` (system classloader) cannot see — the
-    naive probe silently reported Iceberg absent on clusters launched
-    exactly as the module docstring prescribes."""
+    ``java.lang.Class.forName`` (system classloader) cannot see.  That
+    loader's parent is the app class loader, so Utils finds every
+    class ``Class.forName`` does: a second probe never rescues."""
     try:
         impl = spark.conf.get(f"spark.sql.catalog.{catalog_name}", None)
     except Exception:  # noqa: BLE001
         impl = None
     if not impl:
         return False
-    for probe in (
-        lambda: spark._jvm.org.apache.spark.util.Utils.classForName(
+    try:
+        spark._jvm.org.apache.spark.util.Utils.classForName(
             "org.apache.iceberg.spark.SparkCatalog", False, False
-        ),
-        lambda: spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        ),
-    ):
-        try:
-            probe()
-            return True
-        except Exception:  # noqa: BLE001 - try the next loader
-            continue
-    return False
+        )
+    except Exception:  # noqa: BLE001 - class absent
+        return False
+    return True
 
 
 class Catalog:

@@ -22,9 +22,8 @@ from email.parser import BytesParser
 # so a crafted message a few hundred KB long (thousands of nested
 # container headers of either kind) blows the recursion limit inside
 # BytesParser.parse before any of our code runs.  Real mail nests a
-# handful of levels; reject far past that, BEFORE parsing.  ValueError
-# lands in the extraction UDF's malformed-message containment
-# (spark/udfs.py) -> txt fallback.
+# handful of levels; reject far past that, BEFORE parsing.  The
+# extraction router's error net counts the row (spark/udfs.py).
 _MAX_MULTIPARTS = 100
 _MULTIPART_DECL = re.compile(rb"(?im)^content-type:\s*(?:multipart|message)/")
 
@@ -88,14 +87,16 @@ def parse_eml(
     return text_txt, html_txt, attachments
 
 
-def email_sections(data: bytes, budget: int = 128) -> list[tuple[str, str]]:
-    """Sections the way the reference builds them (email.py:81-84):
-    txt-parsed header+plain lines, then the html extractor's lines."""
+def email_sections(
+    text_txt: list[str], html_txt: list[str], budget: int = 128
+) -> list[tuple[str, str]]:
+    """``parse_eml``'s text and html parts as sections the way the
+    reference builds them (email.py:81-84): txt-parsed header+plain
+    lines, then the html extractor's lines."""
     from ..extract.html import extract_html
 
     from .txt import split_txt
 
-    text_txt, html_txt, _atts = parse_eml(data)
     sections = [tuple(s) for s in split_txt("\n".join(text_txt), budget)]
     if html_txt:
         html_lines = extract_html("\n".join(html_txt)).sections
@@ -112,7 +113,7 @@ def email_chunks(
     from ..chunk.merge import greedy_merge, nonempty_chunks
 
     return nonempty_chunks(
-        greedy_merge(email_sections(data, budget), budget, delimiters)
+        greedy_merge(email_sections(*parse_eml(data)[:2], budget), budget, delimiters)
     )
 
 

@@ -36,8 +36,8 @@ _CELL_REF = re.compile(r"([A-Z]+)([0-9]+)")
 # DTD entity-expansion attack; stdlib zipfile/ElementTree guard against
 # neither, and at corpus scale the failure mode is a stalled/OOM-killed
 # executor, not a caught exception.  Over-cap parts raise ValueError,
-# which the extraction UDF's corrupt-archive containment turns into the
-# text-column fallback (spark/udfs.py).
+# which the extraction UDF's office catch turns into an empty document
+# with mode "extract-error", counted per bucket (spark/udfs.py).
 _MAX_PART_BYTES = 64 * 1024 * 1024  # per decompressed XML part
 _MAX_SHEET_CELLS = 4_000_000  # materialized cells (incl. gap padding)
 _MAX_COLS = 16_384  # Excel's own column limit (XFD)

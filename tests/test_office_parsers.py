@@ -169,9 +169,11 @@ def test_xlsx_decompression_bomb_rejected_before_materializing():
     assert len(bomb) < 1_000_000  # the attack: tiny on the wire
     with pytest.raises(ValueError, match="exceeds"):
         read_xlsx(bomb)
-    # UDF containment turns it into the fallback path, batch survives
-    doc_type, mode, _, _, _ = extract_document_ex(bomb, "fallback text", "English")
-    assert mode != "office"
+    # the router's office catch: an empty document, counted as an
+    # extraction error (never the text column, never zip bytes)
+    assert extract_document_ex(bomb, "fallback text", "English") == (
+        "xlsx", "", "", [], "extract-error"
+    )
 
 
 def test_docx_dtd_entity_bomb_rejected_not_expanded():
@@ -188,6 +190,7 @@ def test_docx_dtd_entity_bomb_rejected_not_expanded():
     )
     with pytest.raises(ValueError, match="DTD"):
         read_docx(bomb)
+    assert extract_document_ex(bomb, None, "English") == ("docx", "", "", [], "extract-error")
 
 
 def test_xlsx_hostile_column_refs_place_sequentially():

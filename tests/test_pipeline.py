@@ -58,8 +58,12 @@ class TestTransforms:
             lambda s: sorted(s) == list(range(len(s)))
         )).all()
         assert pdf["content"].str.strip().str.len().gt(0).all()
-        assert pdf["chunk_id"].is_unique or True  # ids deterministic, may collide on same content? no:
-        # chunk_id = xxhash64(content, url) — unique per (url, content)
+        # chunk_id = xxhash64(content, url): two rows share an id
+        # exactly when they share (url, content)
+        ids = pdf.groupby(["url", "content"])["chunk_id"].nunique()
+        assert (ids == 1).all()
+        pairs = pdf.drop_duplicates(subset=["url", "content"])
+        assert pairs["chunk_id"].is_unique
         assert not pdf.duplicated(subset=["url", "chunk_ord"]).any()
 
     def test_deterministic_plan(self, spark, pages):
