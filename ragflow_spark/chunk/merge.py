@@ -53,8 +53,7 @@ def greedy_merge(
     open_threshold = budget * (100 - overlap_pct) / 100.0
     keep_fraction = (100 - overlap_pct) / 100.0
 
-    def push(fragment: str, tag: str) -> None:
-        n = count_tokens(fragment)
+    def push(fragment: str, tag: str, n: int) -> None:
         tag = tag or ""
         if n < 8:
             tag = ""
@@ -73,17 +72,17 @@ def greedy_merge(
 
     pattern = delimiter_pattern(delimiters)
     only_delim = re.compile(f"^{pattern}$") if pattern else None
+    # one count per section, or per piece of a section split on the
+    # delimiters
     for text, tag in sections:
-        if count_tokens(text) < budget:
-            push(text, tag)
-            continue
-        if not pattern:
-            push(text, tag)
+        n = count_tokens(text)
+        if n < budget or not pattern:
+            push(text, tag, n)
             continue
         for piece in re.split(f"({pattern})", text, flags=re.DOTALL):
             if only_delim is not None and only_delim.match(piece):
                 continue
-            push(piece, tag)
+            push(piece, tag, count_tokens(piece))
 
     return chunks
 

@@ -57,13 +57,16 @@ def _read_part(zf: zipfile.ZipFile, name: str) -> bytes:
 
 
 def sniff_office(data: bytes) -> str | None:
-    """'xlsx' | 'docx' | 'pptx' | None from magic bytes + part names."""
+    """'xlsx' | 'docx' | 'pptx' | None from magic bytes + part names.
+    None also for an archive ``zipfile`` cannot open: a damaged central
+    directory raises ``BadZipFile``, some ``NotImplementedError`` or
+    ``ValueError``."""
     if not data or not bytes(data[:4]) == b"PK\x03\x04":
         return None
     try:
         with zipfile.ZipFile(BytesIO(bytes(data))) as zf:
             names = set(zf.namelist())
-    except zipfile.BadZipFile:
+    except Exception:  # noqa: BLE001 - any unreadable archive
         return None
     if any(n.startswith("xl/") for n in names):
         return "xlsx"

@@ -100,9 +100,11 @@ class PipelineConfig:
     delimiters: str = "\n!?。；！？"
     n_buckets: int = 8
     buckets_per_commit: int = 4  # group buckets per write to bound job count
-    # bound the number of commit groups per run: each group is one full
-    # pass over the (staged) input, so unbounded group counts turn a
-    # 4096-bucket corpus into thousands of jobs.  0 disables the bound.
+    # bound the number of commit groups per run: each group is one job
+    # over the input (its own buckets of the staged copy, or every
+    # split of an unstaged one-wave input), so unbounded group counts
+    # turn a 4096-bucket corpus into thousands of jobs.  0 disables
+    # the bound.
     max_commit_groups: int = 8
 
     def __post_init__(self):
@@ -263,15 +265,7 @@ def _input_fingerprint(pages: DataFrame, spark: SparkSession | None = None) -> s
     h = hashlib.md5("\n".join(files).encode())
     if spark is not None:
         try:
-            parents = sorted({f.rsplit("/", 1)[0] for f in files})
-            for p in parents:
-                jpath, fs = _hadoop_path(spark, p)
-                summ = fs.getContentSummary(jpath)
-                st = fs.getFileStatus(jpath)
-                h.update(
-                    f"|{p}:{summ.getLength()}:{summ.getFileCount()}:"
-                    f"{st.getModificationTime()}".encode()
-                )
+            h.update(_dirs_state(_input_dirs(spark, files)).encode())
         except Exception:
             return None  # can't verify contents -> never trust a stale stage
     # fold in a normalized logical-plan hash: the file set alone
@@ -293,6 +287,23 @@ def _input_fingerprint(pages: DataFrame, spark: SparkSession | None = None) -> s
     except Exception:
         return None  # can't verify lineage -> never trust a stale stage
     return h.hexdigest()
+
+
+def _input_dirs(spark: SparkSession, files: list[str]) -> list[tuple]:
+    """``(path, Hadoop path, file system)`` of each unique parent
+    directory of ``files``."""
+    return [(p, *_hadoop_path(spark, p)) for p in sorted({f.rsplit("/", 1)[0] for f in files})]
+
+
+def _dirs_state(dirs: list[tuple]) -> str:
+    """Each directory's content summary (total bytes + file count) and
+    modification time, from live FS calls: five py4j calls a directory."""
+    out = []
+    for p, jpath, fs in dirs:
+        summ = fs.getContentSummary(jpath)
+        st = fs.getFileStatus(jpath)
+        out.append(f"|{p}:{summ.getLength()}:{summ.getFileCount()}:{st.getModificationTime()}")
+    return "".join(out)
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -373,6 +384,27 @@ def run_pipeline(
     Iceberg `overwritePartitions` when the runtime is on the classpath,
     parquet dynamic overwrite otherwise.  The manifest is a parquet log
     the driver writes itself in either mode (see _append_manifest).
+
+    Staging.  A run of more than one commit group over an input that
+    spans more than one wave of tasks (more splits than
+    ``defaultParallelism``) first stages the input, shuffled into
+    url-hash bucket partitions, so each group scans only its own
+    buckets.  Every other run reads the input directly, once per group:
+    a one-wave input costs one wave per group either way, and at 2, 4
+    and 8 groups the stage's shuffle and write never paid for
+    themselves there (the measured crossover is in docs/PLANS.md).  The
+    10^12-document corpus is always multi-wave, so it always stages.
+
+    Consistency.  A staged run reads a snapshot: every group scans the
+    copy written from one fingerprinted input.  An unstaged run of
+    several groups re-reads the input in every group, so after each
+    later group's write it re-reads the part of the fingerprint that
+    can move during a run (its directories' sizes, file counts and
+    modification times) and raises, before that group's manifest
+    append, if the input changed: the group's partitions are then
+    overwritten but not marked done, and a resume redoes them.  A
+    non-file-backed input has no fingerprint and must not change
+    during the run.
     """
     catalog = Catalog(spark)
     # input lineage: which file set produced each committed bucket —
@@ -386,10 +418,23 @@ def run_pipeline(
     bpc = cfg.buckets_per_commit
     if cfg.max_commit_groups and todo:
         bpc = max(bpc, -(-len(todo) // cfg.max_commit_groups))
-    source = with_bucket(pages, cfg.n_buckets)
     par = spark.sparkContext.defaultParallelism
-    used_stage_dir: str | None = None
-    if len(todo) > bpc:
+    # the chunker's input, pruned once over the bucketed table
+    bucketed = _prune_for_udf(with_bucket(pages, cfg.n_buckets), keep_cols=("bucket",))
+    # one probe of the input's split count (a no-op run needs none)
+    n_splits = bucketed.rdd.getNumPartitions() if todo else 0
+    stage_dir = f"{cfg.out_dir}/stage_nb{cfg.n_buckets}"
+    multi_group = len(todo) > bpc
+    staged = multi_group and n_splits > par
+    # an unstaged run of several groups re-reads the input in each: the
+    # guard below re-reads its directories' state after every later
+    # group (the rest of the fingerprint, the file list the DataFrame
+    # listed and its plan, cannot change within a run)
+    watched, before = [], ""
+    if fp is not None and multi_group and not staged:
+        watched = _input_dirs(spark, pages.inputFiles())
+        before = _dirs_state(watched)
+    if staged:
         # stage the input once, partitioned by url-hash bucket (the
         # north-rule url-hash partitioning made physical): the bucket
         # column is computed, so an unpartitioned source can never
@@ -402,7 +447,6 @@ def run_pipeline(
         # fingerprint of the input file list — a non-file-backed input
         # fingerprints as None and is always restaged, never trusted
         # stale.)
-        stage_dir = f"{cfg.out_dir}/stage_nb{cfg.n_buckets}"
         staged_ok = fp is not None and _read_stage_marker(spark, stage_dir) == fp
         if not (resume and staged_ok):
             # spread every bucket over ~one file per core of a group's
@@ -418,8 +462,7 @@ def run_pipeline(
             # same row set the chunker sees, at roughly half the
             # staged bytes of the raw input
             (
-                _prune_for_udf(source, keep_cols=("bucket",))
-                .repartition(
+                bucketed.repartition(
                     cfg.n_buckets * spread,
                     F.col("bucket"),
                     F.expr(f"pmod(xxhash64(url, 1), {spread})"),
@@ -434,11 +477,8 @@ def run_pipeline(
             )
             if fp is not None:
                 _write_stage_marker(spark, stage_dir, fp)
-        source = spark.read.parquet(stage_dir)
-        used_stage_dir = stage_dir
-    # the chunker's input, pruned once over the bucketed table (a
-    # same-result re-projection over the already-pruned stage)
-    bucketed = _prune_for_udf(source, keep_cols=("bucket",))
+        # a same-result re-projection over the already-pruned stage
+        bucketed = _prune_for_udf(spark.read.parquet(stage_dir), keep_cols=("bucket",))
     totals = {
         "n_pages": 0,
         "n_chunks": 0,
@@ -460,14 +500,24 @@ def run_pipeline(
         group = todo[lo : lo + bpc]
         t0 = time.time()
         subset = bucketed.where(f"bucket IN ({', '.join(map(str, group))})")
-        # partition-pruned group slices can read as a handful of splits
-        # (one-ish file per bucket), starving the CPU-bound extraction
-        # stage — spread them to the executor parallelism (no-op at
-        # corpus scale, where a group spans thousands of splits)
-        if subset.rdd.getNumPartitions() < par:
+        # an input of fewer splits than cores, or a partition-pruned
+        # staged slice (one-ish file per bucket), would starve the
+        # CPU-bound extraction stage — spread it to the executor
+        # parallelism (no-op at corpus scale, where a group spans
+        # thousands of splits).  An unstaged group reads every split
+        # of the input, so its count is the one probed above.
+        if (subset.rdd.getNumPartitions() if staged else n_splits) < par:
             subset = subset.repartition(par)
         chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets)
         catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=CODEC)
+        if lo and watched and _dirs_state(watched) != before:
+            # this group re-read an input that changed since the run
+            # began: its partitions are overwritten but not marked
+            # done, so a resume redoes them against the new input
+            raise RuntimeError(
+                f"input changed during the run (groups before bucket {group[0]} "
+                "are committed); rerun to resume against the new input"
+            )
         wall = time.time() - t0
         mode_stats = mode_acc.value  # cumulative; buckets disjoint per group
         zero = [0] * len(BUCKET_STATS)
@@ -507,11 +557,13 @@ def run_pipeline(
                 totals[k] += counts[k]
         if rows:
             _append_manifest(spark, cfg, rows)
-    # every group committed: the staged scratch copy has served its
+    # every group committed: a staged scratch copy has served its
     # purpose — drop it rather than double the corpus's storage
-    # footprint forever (a later resume that still has work restages)
-    if used_stage_dir is not None:
-        _delete_path(spark, used_stage_dir)
+    # footprint forever (a later resume that still has work restages).
+    # Also when this run did not stage: a killed staged run's copy
+    # would otherwise outlive a one-group resume.
+    if todo:
+        _delete_path(spark, stage_dir)
     return totals
 
 
@@ -544,8 +596,10 @@ def cli(argv=None, spark: SparkSession | None = None) -> None:
         "--max-commit-groups",
         type=int,
         default=None,
-        help="cap on commit groups (= passes over the staged input) per "
-        "run; 0 disables the cap and honors --buckets-per-commit exactly",
+        help="cap on commit groups (= jobs over the input: the staged copy "
+        "when the input spans more than one wave of tasks, else the input "
+        "itself) per run; 0 disables the cap and honors "
+        "--buckets-per-commit exactly",
     )
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args(argv)

@@ -99,7 +99,9 @@ def sniff_doc_type(html: bytes | None, text: str | None) -> str:
         if raw[:4] == b"PK\x03\x04":
             from ..parsers.office import sniff_office
 
-            return sniff_office(bytes(html)) or "txt"
+            # any other archive, readable or not, is typed "zip": its
+            # bytes are not text
+            return sniff_office(bytes(html)) or "zip"
         # BOM'd or BOM-less multi-byte content (UTF-16/32 NUL stripes):
         # byte-level '<' checks miss it — decode a prefix through the
         # codec cascade and sniff the decoded text instead
@@ -149,7 +151,8 @@ def extract_document_ex(
     ``n_extract_err``, whatever its document type.  This net keeps the
     row's sniffed doc_type and degrades it to the decoded raw text; the
     office branch catches its own errors and returns an empty body
-    instead (decoded zip bytes are not text)."""
+    instead (decoded zip bytes are not text), as does every ``zip`` row
+    (an archive that is not readable OOXML)."""
     try:
         return _extract_document_inner(html, text, lang)
     except Exception:  # noqa: BLE001 - poisoned row, keep the batch alive
@@ -197,6 +200,9 @@ def _extract_document_inner(
             # counted, but empty: the net's degrade would chunk zip bytes
             return doc_type, "", "", [], "extract-error"
         return doc_type, "", "\n".join(sections), sections, ""
+    if doc_type == "zip":
+        # no extractor reads it: counted and empty, as the office catch
+        return doc_type, "", "", [], "extract-error"
     if doc_type == "eml":
         from ..parsers.eml import email_sections, parse_eml
 

@@ -76,6 +76,103 @@ class TestGreedyMerge:
         assert greedy_merge(secs, 24) == greedy_merge(secs, 24)
 
 
+def _greedy_merge_twice_counted(sections, budget, delimiters, overlap_pct):
+    """greedy_merge as it was when it counted every section twice (once
+    to choose the split, once in push): the output oracle."""
+    import re
+
+    from ragflow_spark.chunk.merge import strip_position_tags
+
+    if not sections:
+        return []
+    chunks, counts = [""], [0]
+    open_threshold = budget * (100 - overlap_pct) / 100.0
+    keep_fraction = (100 - overlap_pct) / 100.0
+
+    def push(fragment, tag):
+        n = count_tokens(fragment)
+        tag = tag or ""
+        if n < 8:
+            tag = ""
+        if chunks[-1] == "" or counts[-1] > open_threshold:
+            carried = strip_position_tags(chunks[-1])
+            fragment = carried[int(len(carried) * keep_fraction):] + fragment
+            if fragment.find(tag) < 0:
+                fragment += tag
+            chunks.append(fragment)
+            counts.append(n)
+        else:
+            if chunks[-1].find(tag) < 0:
+                fragment += tag
+            chunks[-1] += fragment
+            counts[-1] += n
+
+    pattern = delimiter_pattern(delimiters)
+    only_delim = re.compile(f"^{pattern}$") if pattern else None
+    for text, tag in sections:
+        if count_tokens(text) < budget or not pattern:
+            push(text, tag)
+            continue
+        for piece in re.split(f"({pattern})", text, flags=re.DOTALL):
+            if only_delim is not None and only_delim.match(piece):
+                continue
+            push(piece, tag)
+    return chunks
+
+
+def _fuzz_sections(rng, n):
+    words = ["data", "Spark", "x", "42", "中文内容", "テスト", "!", "?", "。", "；", "\n", " ", ", "]
+    tags = ["", "", "@@1\t10.0\t90.0\t5.0\t20.0##", "@@2\t0\t1\t2\t3##"]
+    out = []
+    for _ in range(n):
+        k = rng.choice([0, 1, 3, 12, 60, 300])
+        text = "".join(rng.choice(words) + rng.choice(["", " "]) for _ in range(k))
+        out.append((text, rng.choice(tags)))
+    return out
+
+
+class TestGreedyMergeCountsOnce:
+    """greedy_merge counts each section's tokens once (and each piece
+    of a section it splits), with output equal to the twice-counting
+    form over a seeded fuzz corpus."""
+
+    CASES = [(8, "\n!?。；！？", 0), (16, "。", 20), (32, "", 0), (128, "\n!?。；！？", 50)]
+
+    def test_output_equals_the_twice_counting_form(self):
+        import random
+
+        rng = random.Random(1)
+        for trial in range(300):
+            secs = _fuzz_sections(rng, rng.randrange(0, 30))
+            for budget, delims, overlap in self.CASES:
+                got = greedy_merge(secs, budget, delims, overlap)
+                want = _greedy_merge_twice_counted(secs, budget, delims, overlap)
+                assert got == want, (trial, budget, delims, overlap)
+
+    def test_one_count_per_section_or_piece(self, monkeypatch):
+        import random
+        import re
+
+        from ragflow_spark.chunk import merge
+
+        rng = random.Random(2)
+        for trial in range(100):
+            secs = _fuzz_sections(rng, rng.randrange(1, 30))
+            for budget, delims, overlap in self.CASES:
+                pattern = delimiter_pattern(delims)
+                want = 0
+                for text, _ in secs:
+                    want += 1
+                    if pattern and count_tokens(text) >= budget:
+                        pieces = re.split(f"({pattern})", text, flags=re.DOTALL)
+                        want += sum(not re.match(f"^{pattern}$", p) for p in pieces)
+                calls = []
+                monkeypatch.setattr(merge, "count_tokens", lambda t: calls.append(t) or count_tokens(t))
+                greedy_merge(secs, budget, delims, overlap)
+                monkeypatch.undo()
+                assert len(calls) == want, (trial, budget, delims)
+
+
 class TestHierarchy:
     EN = [
         "Chapter I",

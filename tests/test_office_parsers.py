@@ -248,3 +248,31 @@ def test_xlsx_bad_shared_string_index_yields_empty_cell():
     )
     (_, rows), = read_xlsx(doc)
     assert rows == [[None, None, "ok"]]
+
+
+def test_mutated_archives_never_become_text():
+    """A ``PK`` document no OOXML reader opens is typed ``zip`` and
+    gets the office catch's empty, counted row: its bytes never become
+    text or chunks.  Seeded byte mutations after the magic (1-8 random
+    bytes, or a 1-40 byte span deletion) of the three generators."""
+    import random
+
+    rng = random.Random(10)
+    seeds = [make_xlsx(), make_docx(), make_pptx()]
+    seen = set()
+    for i in range(600):
+        data = bytearray(seeds[i % 3])
+        if i % 2:
+            for _ in range(rng.randrange(1, 9)):
+                data[rng.randrange(4, len(data))] = rng.randrange(256)
+        else:
+            at = rng.randrange(4, len(data) - 1)
+            del data[at : at + rng.randrange(1, 41)]
+        doc_type, title, text, sections, mode = extract_document_ex(bytes(data), None, "English")
+        assert doc_type != "txt", i
+        if doc_type == "zip" or mode == "extract-error":
+            assert (title, text, sections, mode) == ("", "", [], "extract-error"), i
+        seen.add((doc_type, mode))
+    # the corpus reaches both: unreadable archives and damaged parts
+    assert ("zip", "extract-error") in seen
+    assert {("xlsx", "extract-error"), ("docx", "extract-error")} <= seen

@@ -22,6 +22,16 @@ def pages(spark):
     return pages_dataframe(spark, 120, seed=42, partitions=4).cache()
 
 
+def _multi_wave(spark):
+    """A session whose file scans plan 16 KB splits: the fixture's
+    file-backed pages then span more splits than cores, so a
+    multi-group run over them stages its input.  Its own session, so
+    the shared one keeps its confs."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    return s
+
+
 class TestGenerator:
     def test_deterministic(self):
         a = generate_pages(30, seed=7)
@@ -167,7 +177,9 @@ class TestStageReuse:
 
         src = str(tmp_path / "pages_src")
         pages.write.parquet(src)
-        fpages = spark.read.parquet(src)
+        mw = _multi_wave(spark)
+        fpages = mw.read.parquet(src)
+        assert fpages.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
         out = str(tmp_path / "out")
         cfg = PipelineConfig(out_dir=out, n_buckets=4, buckets_per_commit=1)
 
@@ -185,7 +197,7 @@ class TestStageReuse:
 
         monkeypatch.setattr(Catalog, "overwrite_partitions", dying)
         with pytest.raises(RuntimeError):
-            run_pipeline(spark, fpages, cfg)
+            run_pipeline(mw, fpages, cfg)
         monkeypatch.undo()
 
         stage_dir = f"{out}/stage_nb4"
@@ -204,7 +216,7 @@ class TestStageReuse:
             return real_marker(spark_, d, fp)
 
         monkeypatch.setattr(P, "_write_stage_marker", counting)
-        totals = run_pipeline(spark, fpages, cfg)
+        totals = run_pipeline(mw, fpages, cfg)
         monkeypatch.undo()
         assert writes["n"] == 0  # stage was reused, not rebuilt
         assert committed_buckets(spark, cfg) == {0, 1, 2, 3}
@@ -222,13 +234,13 @@ class TestStageReuse:
         assert manifest.where(F.col("wall_sec") <= 0).count() == 0
         # lineage: every committed bucket records the input fingerprint
         fps = {r[0] for r in manifest.select("input_fp").distinct().collect()}
-        assert fps == {P._input_fingerprint(fpages, spark)}
+        assert fps == {P._input_fingerprint(fpages, mw)}
 
         # a different file set fingerprints differently (would restage)
         src2 = str(tmp_path / "pages_src2")
         pages.write.parquet(src2)
-        fp1 = P._input_fingerprint(fpages, spark)
-        fp2 = P._input_fingerprint(spark.read.parquet(src2), spark)
+        fp1 = P._input_fingerprint(fpages, mw)
+        fp2 = P._input_fingerprint(mw.read.parquet(src2), mw)
         assert fp1 and fp2 and fp1 != fp2
 
     def test_non_file_input_never_reuses_stage(self, spark, pages):
@@ -258,6 +270,99 @@ class TestStageReuse:
         fp2 = _input_fingerprint(spark.read.parquet(src), spark)
         assert fp1 != fp2
 
+    def test_one_group_resume_drops_a_killed_runs_stage(
+        self, spark, pages, tmp_path, monkeypatch
+    ):
+        """A staged run killed before its last group leaves its stage
+        behind; the resume has one group left, so it reads the input
+        directly, and still drops the stage when it commits."""
+        import os
+
+        from ragflow_spark.catalog import Catalog
+        from ragflow_spark.spark import pipeline as P
+
+        src = str(tmp_path / "src")
+        pages.write.parquet(src)
+        mw = _multi_wave(spark)
+        fpages = mw.read.parquet(src)
+        cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=4, buckets_per_commit=2)
+        real_write = Catalog.overwrite_partitions
+        calls = {"n": 0}
+
+        def dying(self, df, path, col, **kw):
+            calls["n"] += 1
+            if calls["n"] == 2:
+                raise RuntimeError("simulated mid-run kill")
+            return real_write(self, df, path, col, **kw)
+
+        monkeypatch.setattr(Catalog, "overwrite_partitions", dying)
+        with pytest.raises(RuntimeError, match="simulated"):
+            run_pipeline(mw, fpages, cfg)
+        monkeypatch.undo()
+        stage_dir = f"{cfg.out_dir}/stage_nb4"
+        assert os.path.exists(f"{stage_dir}/{P.STAGE_MARKER}")
+        assert len(committed_buckets(spark, cfg)) == 2
+
+        marks = []
+        monkeypatch.setattr(P, "_write_stage_marker", lambda *a: marks.append(a))
+        totals = run_pipeline(mw, fpages, cfg)
+        assert totals["buckets"] == 2 and marks == []  # one unstaged group
+        assert committed_buckets(spark, cfg) == {0, 1, 2, 3}
+        assert not os.path.exists(stage_dir)
+
+
+class TestInputChangeGuard:
+    """An unstaged run of several groups re-reads its input in every
+    group; an input rewritten in place between two groups must stop the
+    run before the later group is marked done."""
+
+    def test_input_rewritten_between_groups_raises(self, spark, tmp_path, monkeypatch):
+        import pyarrow.parquet as pq
+
+        from extractbench.checks import read_chunks, row_digest, simulate_kill
+        from ragflow_spark.catalog import Catalog
+        from ragflow_spark.spark import pipeline as P
+
+        src = str(tmp_path / "src")
+        pages_dataframe(spark, 60, seed=11, partitions=4).write.parquet(src)
+        cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=4, buckets_per_commit=2)
+        real_write = Catalog.overwrite_partitions
+        calls = {"n": 0}
+
+        def rewriting(self, df, path, col, **kw):
+            real_write(self, df, path, col, **kw)
+            calls["n"] += 1
+            if calls["n"] == 1:  # after the first group's write
+                pages_dataframe(spark, 30, seed=12, partitions=1).write.mode(
+                    "append"
+                ).parquet(src)
+
+        monkeypatch.setattr(Catalog, "overwrite_partitions", rewriting)
+        with pytest.raises(RuntimeError, match="input changed"):
+            run_pipeline(spark, spark.read.parquet(src), cfg)
+        monkeypatch.undo()
+        assert calls["n"] == 2  # the later group wrote, then the guard fired
+        rows = pq.read_table(cfg.manifest_dir).to_pylist()
+        assert sorted(r["bucket"] for r in rows) == [0, 1]
+
+        # a resume over the rewritten input equals a clean run over it
+        new = spark.read.parquet(src)
+        assert run_pipeline(spark, new, cfg)["buckets"] == 4
+        clean = PipelineConfig(out_dir=str(tmp_path / "clean"), n_buckets=4, buckets_per_commit=2)
+        run_pipeline(spark, new, clean)
+        assert row_digest(read_chunks(cfg.chunks_dir)) == row_digest(
+            read_chunks(clean.chunks_dir)
+        )
+
+        # a one-group restart reads its input's state once, for the
+        # fingerprint, as before
+        assert simulate_kill(clean.out_dir) == [2, 3]
+        reads = []
+        real_state = P._dirs_state
+        monkeypatch.setattr(P, "_dirs_state", lambda *a: reads.append(a) or real_state(*a))
+        assert run_pipeline(spark, new, clean)["buckets"] == 2
+        assert len(reads) == 1
+
 
 class TestSessionConfs:
     """Engine code sets no session conf: overwrite modes ride each write
@@ -272,6 +377,7 @@ class TestSessionConfs:
         from ragflow_spark.catalog import Catalog
         from ragflow_spark.spark import pipeline as P
 
+        spark = _multi_wave(spark)
         key = "spark.sql.sources.partitionOverwriteMode"
         prev = spark.conf.get(key, None)
         # the ambient mode that would keep stale stage buckets if the
@@ -360,7 +466,7 @@ class TestSessionConfs:
         cfg = PipelineConfig(
             out_dir=str(tmp_path / "out"), n_buckets=8, buckets_per_commit=4
         )
-        run_pipeline(spark, pages, cfg)
+        run_pipeline(spark, pages.repartition(8), cfg)
         stage_dir = f"{cfg.out_dir}/stage_nb8"
         assert kept == [stage_dir]
         par = spark.sparkContext.defaultParallelism
@@ -735,10 +841,17 @@ class TestManifestCounts:
         empty = min(set(range(self.N // 2, self.N)) - taken)
         src = str(tmp_path / "src")
         pages.unionByName(extra).where(self._bucket(self.N) != empty).write.parquet(src)
-        fpages = spark.read.parquet(src)
+        mw = _multi_wave(spark)
+        fpages = mw.read.parquet(src)
         cfg = PipelineConfig(out_dir=str(tmp_path / "out"), n_buckets=self.N, buckets_per_commit=4)
 
-        first = run_pipeline(spark, fpages, cfg)  # staged: two groups of 4
+        staged = []
+        real_marker = P._write_stage_marker
+        monkeypatch.setattr(
+            P, "_write_stage_marker", lambda *a: staged.append(a) or real_marker(*a)
+        )
+        first = run_pipeline(mw, fpages, cfg)  # staged: two groups of 4
+        assert len(staged) == 1
         rows = self._check(spark, fpages, cfg, cap)
         # the fixture reaches every case: the over-cap page is dropped,
         # the damaged PDF is a fallback, one bucket has no page
@@ -753,7 +866,7 @@ class TestManifestCounts:
         assert simulate_kill(cfg.out_dir) == list(range(self.N // 2, self.N))
         marks = []
         monkeypatch.setattr(P, "_write_stage_marker", lambda *a: marks.append(a))
-        second = run_pipeline(spark, fpages, cfg)
+        second = run_pipeline(mw, fpages, cfg)
         assert second["buckets"] == self.N // 2 and marks == []
         rows = self._check(spark, fpages, cfg, cap)
         for k in ("n_pages", "n_chunks", "n_pdf", "n_pdf_fallback", "n_extract_err"):

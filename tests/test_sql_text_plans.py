@@ -50,10 +50,15 @@ def _plan(df) -> str:
 
 
 @pytest.fixture(scope="module")
-def pages(spark, tmp_path_factory):
+def pages_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("sqltext") / "pages")
     pages_dataframe(spark, 40, seed=3, partitions=2).write.parquet(path)
-    return spark.read.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def pages(spark, pages_path):
+    return spark.read.parquet(pages_path)
 
 
 def test_transform_plans_equal_the_column_api(pages):
@@ -65,7 +70,13 @@ def test_transform_plans_equal_the_column_api(pages):
     assert _plan(P.transform_extracted(pages)) == _plan(extracted)
 
 
-def test_stage_write_plan_equals_the_column_api(spark, pages, tmp_path, monkeypatch):
+def test_stage_write_plan_equals_the_column_api(spark, pages_path, tmp_path, monkeypatch):
+    # 8 KB splits: the input spans more splits than cores, so the
+    # two-group run stages it (its own session keeps the shared confs)
+    spark = spark.newSession()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8k")
+    pages = spark.read.parquet(pages_path)
+    assert pages.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
     written = {}
     real = DataFrameWriter.parquet
 
