@@ -254,20 +254,33 @@ def _input_fingerprint(pages: DataFrame, spark: SparkSession | None = None) -> s
     identical file names (e.g. a deterministic part-00000 naming
     scheme) still changes the fingerprint.  One FS call per parent
     directory, not per file — O(1) for the common single-dir input."""
+    return _fingerprint_and_dirs(pages, spark)[0]
+
+
+def _fingerprint_and_dirs(
+    pages: DataFrame, spark: SparkSession | None
+) -> tuple[str | None, list, str]:
+    """``_input_fingerprint``, the ``_input_dirs`` it resolved and the
+    ``_dirs_state`` it hashed (empty without a fingerprint or a
+    session), so a run lists, resolves and reads its input once."""
     import hashlib
 
     try:
         files = sorted(pages.inputFiles())
     except Exception:
-        return None
+        return None, [], ""
     if not files:
-        return None
+        return None, [], ""
     h = hashlib.md5("\n".join(files).encode())
+    dirs: list = []
+    state = ""
     if spark is not None:
         try:
-            h.update(_dirs_state(_input_dirs(spark, files)).encode())
+            dirs = _input_dirs(spark, files)
+            state = _dirs_state(dirs)
+            h.update(state.encode())
         except Exception:
-            return None  # can't verify contents -> never trust a stale stage
+            return None, [], ""  # can't verify contents -> never trust a stale stage
     # fold in a normalized logical-plan hash: the file set alone
     # cannot distinguish `read.parquet(p)` from `read.parquet(p)
     # .where(bucket == 0)` — a partial-input run would then mark its
@@ -285,8 +298,8 @@ def _input_fingerprint(pages: DataFrame, spark: SparkSession | None = None) -> s
         plan = pages._jdf.queryExecution().analyzed().toString()
         h.update(_re.sub(r"#\d+L?", "#", plan).encode())
     except Exception:
-        return None  # can't verify lineage -> never trust a stale stage
-    return h.hexdigest()
+        return None, [], ""  # can't verify lineage -> never trust a stale stage
+    return h.hexdigest(), dirs, state
 
 
 def _input_dirs(spark: SparkSession, files: list[str]) -> list[tuple]:
@@ -304,6 +317,32 @@ def _dirs_state(dirs: list[tuple]) -> str:
         st = fs.getFileStatus(jpath)
         out.append(f"|{p}:{summ.getLength()}:{summ.getFileCount()}:{st.getModificationTime()}")
     return "".join(out)
+
+
+def _reject_out_dir_inside(spark: SparkSession, out_dir: str, dirs: list[tuple]) -> None:
+    """Raise if ``out_dir`` lies in an input directory (an input read
+    by a glob such as ``/data/*.parquet`` with ``out_dir`` under
+    ``/data``).  The fingerprint's content summaries are recursive, so
+    the run's own writes would move it: an unstaged run's input-change
+    guard would trip after its second group, and no resume could trust
+    a committed bucket."""
+    from urllib.parse import unquote, urlsplit
+
+    def key(uri: str) -> tuple[str, str, str]:
+        # file:/x (Hadoop's form) and file:///x (inputFiles' URI form,
+        # percent-encoded) alike
+        u = urlsplit(uri)
+        return u.scheme, u.netloc, unquote(u.path).rstrip("/") + "/"
+
+    jpath, fs = _hadoop_path(spark, out_dir)
+    scheme, netloc, out = key(fs.makeQualified(jpath).toString())
+    for p, _, _ in dirs:
+        s, n, path = key(p)
+        if (s, n) == (scheme, netloc) and out.startswith(path):
+            raise ValueError(
+                f"out_dir {out_dir!r} lies inside the input directory {p!r}: "
+                "write the output outside every input directory"
+            )
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -389,10 +428,11 @@ def run_pipeline(
     spans more than one wave of tasks (more splits than
     ``defaultParallelism``) first stages the input, shuffled into
     url-hash bucket partitions, so each group scans only its own
-    buckets.  Every other run reads the input directly, once per group:
-    a one-wave input costs one wave per group either way, and at 2, 4
-    and 8 groups the stage's shuffle and write never paid for
-    themselves there (the measured crossover is in docs/PLANS.md).  The
+    buckets.  Every other run reads the input directly, once per group.
+    Measured at 2, 4 and 8 groups (docs/PLANS.md): on a one-wave input
+    the stage's shuffle and write never paid for themselves; at two
+    waves the two paths tie; at four and eight waves an unstaged group
+    re-reads every split and the stage wins every warm pair.  The
     10^12-document corpus is always multi-wave, so it always stages.
 
     Consistency.  A staged run reads a snapshot: every group scans the
@@ -404,13 +444,17 @@ def run_pipeline(
     append, if the input changed: the group's partitions are then
     overwritten but not marked done, and a resume redoes them.  A
     non-file-backed input has no fingerprint and must not change
-    during the run.
+    during the run.  Directory sizes are recursive, so ``out_dir`` must
+    lie outside every input directory (a run raises before any work
+    otherwise).
     """
     catalog = Catalog(spark)
     # input lineage: which file set produced each committed bucket —
     # recorded per manifest row, checked on resume, and reused as the
     # stage-reuse gate.
-    fp = _input_fingerprint(pages, spark)
+    fp, in_dirs, in_state = _fingerprint_and_dirs(pages, spark)
+    if in_dirs:
+        _reject_out_dir_inside(spark, cfg.out_dir, in_dirs)
     done = committed_buckets(spark, cfg, input_fp=fp) if resume else set()
     todo = [b for b in range(cfg.n_buckets) if b not in done]
     # effective group size: at least buckets_per_commit, and no more
@@ -430,10 +474,7 @@ def run_pipeline(
     # guard below re-reads its directories' state after every later
     # group (the rest of the fingerprint, the file list the DataFrame
     # listed and its plan, cannot change within a run)
-    watched, before = [], ""
-    if fp is not None and multi_group and not staged:
-        watched = _input_dirs(spark, pages.inputFiles())
-        before = _dirs_state(watched)
+    watched = in_dirs if multi_group and not staged else []
     if staged:
         # stage the input once, partitioned by url-hash bucket (the
         # north-rule url-hash partitioning made physical): the bucket
@@ -510,7 +551,7 @@ def run_pipeline(
             subset = subset.repartition(par)
         chunks = with_bucket(_chunk_plan(subset, cfg, mode_acc), cfg.n_buckets)
         catalog.overwrite_partitions(chunks, cfg.chunks_dir, "bucket", codec=CODEC)
-        if lo and watched and _dirs_state(watched) != before:
+        if lo and watched and _dirs_state(watched) != in_state:
             # this group re-read an input that changed since the run
             # began: its partitions are overwritten but not marked
             # done, so a resume redoes them against the new input

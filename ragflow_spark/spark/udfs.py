@@ -100,7 +100,10 @@ def sniff_doc_type(html: bytes | None, text: str | None) -> str:
             from ..parsers.office import sniff_office
 
             # any other archive, readable or not, is typed "zip": its
-            # bytes are not text
+            # bytes are not text.  An intact archive of a format no
+            # extractor reads (ODT, EPUB, JAR, a plain zip) is typed
+            # "zip" too: sniffing cannot tell it from an OOXML archive
+            # whose part names were damaged
             return sniff_office(bytes(html)) or "zip"
         # BOM'd or BOM-less multi-byte content (UTF-16/32 NUL stripes):
         # byte-level '<' checks miss it — decode a prefix through the
@@ -152,7 +155,8 @@ def extract_document_ex(
     row's sniffed doc_type and degrades it to the decoded raw text; the
     office branch catches its own errors and returns an empty body
     instead (decoded zip bytes are not text), as does every ``zip`` row
-    (an archive that is not readable OOXML)."""
+    (an archive that is not readable OOXML, so also an intact archive
+    of an unread format such as ODT, EPUB or a plain zip)."""
     try:
         return _extract_document_inner(html, text, lang)
     except Exception:  # noqa: BLE001 - poisoned row, keep the batch alive

@@ -276,3 +276,22 @@ def test_mutated_archives_never_become_text():
     # the corpus reaches both: unreadable archives and damaged parts
     assert ("zip", "extract-error") in seen
     assert {("xlsx", "extract-error"), ("docx", "extract-error")} <= seen
+
+
+def test_intact_non_ooxml_archives_are_counted_empty_zip_rows():
+    """An intact archive of a format no extractor reads (a plain zip,
+    an ODT-shaped one) is typed ``zip`` and gets the same empty,
+    counted row as a damaged one: its bytes never become text."""
+
+    def archive(parts):
+        buf = BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            for name, body in parts.items():
+                zf.writestr(name, body)
+        return buf.getvalue()
+
+    plain = archive({"notes.txt": "hello world\n" * 20})
+    odt = archive({"mimetype": "application/vnd.oasis.opendocument.text", "content.xml": "<a/>"})
+    for data in (plain, odt):
+        assert sniff_doc_type(data, None) == "zip"
+        assert extract_document_ex(data, None, "English") == ("zip", "", "", [], "extract-error")

@@ -363,6 +363,23 @@ class TestInputChangeGuard:
         assert run_pipeline(spark, new, clean)["buckets"] == 2
         assert len(reads) == 1
 
+    def test_out_dir_inside_a_globbed_input_directory_is_rejected(self, spark, tmp_path):
+        """An input read by a glob can share its directory with the
+        output.  The fingerprint's content summaries are recursive, so
+        the run's own writes would move it; such a run stops before it
+        writes anything.  An output beside the input still runs."""
+        import os
+
+        data = str(tmp_path / "data")
+        pages_dataframe(spark, 20, seed=13, partitions=2).write.parquet(data)
+        pages = spark.read.parquet(f"{data}/*.parquet")
+        inside = PipelineConfig(out_dir=f"{data}/out", n_buckets=4, buckets_per_commit=2)
+        with pytest.raises(ValueError, match="inside the input directory"):
+            run_pipeline(spark, pages, inside)
+        assert not os.path.exists(inside.out_dir)
+        beside = PipelineConfig(out_dir=f"{data}_out", n_buckets=4, buckets_per_commit=2)
+        assert run_pipeline(spark, pages, beside)["n_pages"] == 20
+
 
 class TestSessionConfs:
     """Engine code sets no session conf: overwrite modes ride each write
