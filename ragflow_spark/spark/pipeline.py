@@ -53,6 +53,11 @@ MAX_HTML_BYTES = 128 * 1024 * 1024  # parity: rag/settings.py:58
 # on this corpus (A/B at 100k pages, BENCH.md r4) — at 10^12 rows
 # output bytes are the write cost
 CODEC = "zstd"
+# bound the number of commit groups per run: each group is one job over
+# the input (its own buckets of the staged copy, or every split of an
+# unstaged one-wave input), so unbounded group counts would turn a
+# 4096-bucket corpus into thousands of jobs
+MAX_COMMIT_GROUPS = 8
 
 
 class _ModeStatsParam(AccumulatorParam):
@@ -100,30 +105,18 @@ class PipelineConfig:
     delimiters: str = "\n!?。；！？"
     n_buckets: int = 8
     buckets_per_commit: int = 4  # group buckets per write to bound job count
-    # bound the number of commit groups per run: each group is one job
-    # over the input (its own buckets of the staged copy, or every
-    # split of an unstaged one-wave input), so unbounded group counts
-    # turn a 4096-bucket corpus into thousands of jobs.  0 disables
-    # the bound.
-    max_commit_groups: int = 8
 
     def __post_init__(self):
         # checked before any Spark work: n_buckets < 1 used to commit
         # nothing and report success, buckets_per_commit < 1 failed
         # only after staging the whole input
-        for name, low in (("n_buckets", 1), ("buckets_per_commit", 1), ("max_commit_groups", 0)):
-            if getattr(self, name) < low:
-                raise ValueError(
-                    f"PipelineConfig.{name} must be >= {low}, got {getattr(self, name)}"
-                )
+        for name in ("n_buckets", "buckets_per_commit"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"PipelineConfig.{name} must be >= 1, got {getattr(self, name)}")
 
     @property
     def chunks_dir(self) -> str:
         return os.path.join(self.out_dir, "chunks")
-
-    @property
-    def extracted_dir(self) -> str:
-        return os.path.join(self.out_dir, "extracted")
 
     @property
     def manifest_dir(self) -> str:
@@ -243,44 +236,41 @@ def _prune_for_udf(pages: DataFrame, keep_cols: tuple = ()) -> DataFrame:
 STAGE_MARKER = "_RAGFLOW_STAGED"
 
 
-def _input_fingerprint(pages: DataFrame, spark: SparkSession | None = None) -> str | None:
-    """Fingerprint of the input's backing file set (None if not
-    file-backed).  Cheap — driver-side metadata only, no job.  Used to
-    gate stage reuse on resume: same files => same staged buckets.
+def _input_fingerprint(pages: DataFrame) -> tuple[str | None, list, str]:
+    """``(fp, dirs, state)``: a fingerprint of the input's backing file
+    set (None if not file-backed), the ``_input_dirs`` it resolved and
+    the ``_dirs_state`` it hashed, so a run lists, resolves and reads
+    its input once.  Cheap — driver-side metadata only, no job.  Used
+    to gate stage reuse on resume: same files => same staged buckets.
 
     Beyond the sorted path list, the fingerprint folds in each unique
     parent directory's content summary (total bytes + file count) and
     its modification time, so an input rewritten *in place* with
     identical file names (e.g. a deterministic part-00000 naming
-    scheme) still changes the fingerprint.  One FS call per parent
-    directory, not per file — O(1) for the common single-dir input."""
-    return _fingerprint_and_dirs(pages, spark)[0]
-
-
-def _fingerprint_and_dirs(
-    pages: DataFrame, spark: SparkSession | None
-) -> tuple[str | None, list, str]:
-    """``_input_fingerprint``, the ``_input_dirs`` it resolved and the
-    ``_dirs_state`` it hashed (empty without a fingerprint or a
-    session), so a run lists, resolves and reads its input once."""
+    scheme) still changes the fingerprint.  The file list crosses py4j
+    as one joined string, so the call count does not grow with the
+    file count; each parent directory costs about a dozen calls (its
+    path and file system, then ``_dirs_state``'s five).  A single-dir
+    input costs 24 calls in all, at 4 files or 64."""
     import hashlib
 
+    spark = pages.sparkSession
     try:
-        files = sorted(pages.inputFiles())
+        # one string, not one py4j call per element of the Java array
+        seq = spark._jvm.scala.collection.immutable.ArraySeq
+        joined = seq.unsafeWrapArray(pages._jdf.inputFiles()).mkString("\n")
     except Exception:
         return None, [], ""
-    if not files:
+    if not joined:
         return None, [], ""
+    files = sorted(joined.split("\n"))
     h = hashlib.md5("\n".join(files).encode())
-    dirs: list = []
-    state = ""
-    if spark is not None:
-        try:
-            dirs = _input_dirs(spark, files)
-            state = _dirs_state(dirs)
-            h.update(state.encode())
-        except Exception:
-            return None, [], ""  # can't verify contents -> never trust a stale stage
+    try:
+        dirs = _input_dirs(spark, files)
+        state = _dirs_state(dirs)
+        h.update(state.encode())
+    except Exception:
+        return None, [], ""  # can't verify contents -> never trust a stale stage
     # fold in a normalized logical-plan hash: the file set alone
     # cannot distinguish `read.parquet(p)` from `read.parquet(p)
     # .where(bucket == 0)` — a partial-input run would then mark its
@@ -452,16 +442,14 @@ def run_pipeline(
     # input lineage: which file set produced each committed bucket —
     # recorded per manifest row, checked on resume, and reused as the
     # stage-reuse gate.
-    fp, in_dirs, in_state = _fingerprint_and_dirs(pages, spark)
+    fp, in_dirs, in_state = _input_fingerprint(pages)
     if in_dirs:
         _reject_out_dir_inside(spark, cfg.out_dir, in_dirs)
     done = committed_buckets(spark, cfg, input_fp=fp) if resume else set()
     todo = [b for b in range(cfg.n_buckets) if b not in done]
     # effective group size: at least buckets_per_commit, and no more
-    # than max_commit_groups passes over the input per run
-    bpc = cfg.buckets_per_commit
-    if cfg.max_commit_groups and todo:
-        bpc = max(bpc, -(-len(todo) // cfg.max_commit_groups))
+    # than MAX_COMMIT_GROUPS passes over the input per run
+    bpc = max(cfg.buckets_per_commit, -(-len(todo) // MAX_COMMIT_GROUPS))
     par = spark.sparkContext.defaultParallelism
     # the chunker's input, pruned once over the bucketed table
     bucketed = _prune_for_udf(with_bucket(pages, cfg.n_buckets), keep_cols=("bucket",))
@@ -608,11 +596,10 @@ def run_pipeline(
     return totals
 
 
-def cli(argv=None, spark: SparkSession | None = None) -> None:
-    """Shared CLI for the extraction job — used both by
-    ``python -m``/entry-point launches (builds a local session) and by
-    ``scripts/spark_job.py`` under spark-submit (session passed in).
-    One argparse, one launch path; pragma: exercised by spark-submit."""
+def cli(argv: list[str] | None, spark: SparkSession) -> None:
+    """The extraction job's CLI: parses ``argv`` (None reads
+    ``sys.argv``) and runs the pipeline on ``spark``, the session
+    ``scripts/spark_job.py`` builds under spark-submit."""
     # pragma: no cover - exercised by spark-submit e2e, not pytest
     import argparse
 
@@ -625,41 +612,20 @@ def cli(argv=None, spark: SparkSession | None = None) -> None:
     ap.add_argument(
         "--buckets-per-commit",
         type=int,
-        default=None,
-        help="resume-point granularity floor (default: PipelineConfig's; "
-        "larger = coarser resume points).  NOTE: the effective group "
-        "size is also floored by --max-commit-groups so one run never "
-        "degrades into thousands of passes; pass a large "
-        "--max-commit-groups to honor a small --buckets-per-commit "
-        "exactly.",
-    )
-    ap.add_argument(
-        "--max-commit-groups",
-        type=int,
-        default=None,
-        help="cap on commit groups (= jobs over the input: the staged copy "
-        "when the input spans more than one wave of tasks, else the input "
-        "itself) per run; 0 disables the cap and honors "
-        "--buckets-per-commit exactly",
+        default=PipelineConfig.buckets_per_commit,
+        help="resume-point granularity floor (larger = coarser resume "
+        "points).  The effective group size is also floored so one run "
+        f"makes at most {MAX_COMMIT_GROUPS} commit groups.",
     )
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args(argv)
-    if spark is None:
-        from ..session import get_spark
-
-        spark = get_spark("ragflow_spark.pipeline")
     pages = spark.read.parquet(args.pages)
-    kw = {}
-    if args.buckets_per_commit is not None:
-        kw["buckets_per_commit"] = args.buckets_per_commit
-    if args.max_commit_groups is not None:
-        kw["max_commit_groups"] = args.max_commit_groups
     cfg = PipelineConfig(
         out_dir=args.out,
         template=args.template,
         budget=args.budget,
         n_buckets=args.buckets,
-        **kw,
+        buckets_per_commit=args.buckets_per_commit,
     )
     t0 = time.time()
     totals = run_pipeline(spark, pages, cfg, resume=not args.no_resume)
@@ -667,7 +633,3 @@ def cli(argv=None, spark: SparkSession | None = None) -> None:
     # throughput figure that scales with executors
     totals["wall_sec"] = round(time.time() - t0, 2)
     print(json.dumps(totals))
-
-
-if __name__ == "__main__":  # pragma: no cover
-    cli()

@@ -8,15 +8,16 @@ Usage (the north-rule launch shape):
         scripts/spark_job.py \
         --pages <pages parquet/iceberg dir> --out <output dir> \
         [--template naive] [--budget 128] [--buckets 4096] \
-        [--buckets-per-commit N] [--max-commit-groups N] [--no-resume]
+        [--buckets-per-commit N] [--no-resume]
 
 On a cluster the zip ships the package to every executor; the job is
 the resumable bucket pipeline (ragflow_spark/spark/pipeline.py): url-hash
-buckets, per-bucket dynamic-overwrite commits, manifest lineage,
-anti-join restart.  All argument parsing and run logic live in
-ragflow_spark.spark.pipeline.cli() — this file only supplies the
-session, built with ragflow_spark.session.configure: the one conf set
-the in-process runs and the benchmark use too.
+buckets, per-bucket dynamic-overwrite commits, manifest lineage, and a
+restart that skips the buckets the manifest marks done (the driver
+reads it back in committed_buckets).  All argument parsing and run
+logic live in ragflow_spark.spark.pipeline.cli() — this file only
+supplies the session, built with ragflow_spark.session.configure: the
+one conf set the in-process runs and the benchmark use too.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def main() -> None:
 
     # spark-submit provides the cluster config (master, executors, ...)
     builder = SparkSession.builder.appName("ragflow_spark.extract")
-    cli(spark=configure(builder).getOrCreate())
+    cli(None, configure(builder).getOrCreate())
 
 
 if __name__ == "__main__":

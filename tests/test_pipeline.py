@@ -234,19 +234,19 @@ class TestStageReuse:
         assert manifest.where(F.col("wall_sec") <= 0).count() == 0
         # lineage: every committed bucket records the input fingerprint
         fps = {r[0] for r in manifest.select("input_fp").distinct().collect()}
-        assert fps == {P._input_fingerprint(fpages, mw)}
+        assert fps == {P._input_fingerprint(fpages)[0]}
 
         # a different file set fingerprints differently (would restage)
         src2 = str(tmp_path / "pages_src2")
         pages.write.parquet(src2)
-        fp1 = P._input_fingerprint(fpages, mw)
-        fp2 = P._input_fingerprint(mw.read.parquet(src2), mw)
+        fp1 = P._input_fingerprint(fpages)[0]
+        fp2 = P._input_fingerprint(mw.read.parquet(src2))[0]
         assert fp1 and fp2 and fp1 != fp2
 
     def test_non_file_input_never_reuses_stage(self, spark, pages):
         from ragflow_spark.spark.pipeline import _input_fingerprint
 
-        assert _input_fingerprint(pages) is None  # createDataFrame-backed
+        assert _input_fingerprint(pages)[0] is None  # createDataFrame-backed
 
     def test_in_place_rewrite_changes_fingerprint(self, spark, pages, tmp_path):
         """Same file names, rewritten contents -> different fingerprint
@@ -257,7 +257,7 @@ class TestStageReuse:
 
         src = str(tmp_path / "src")
         pages.limit(50).coalesce(1).write.parquet(src)
-        fp1 = _input_fingerprint(spark.read.parquet(src), spark)
+        fp1 = _input_fingerprint(spark.read.parquet(src))[0]
         moved = str(tmp_path / "aside")
         shutil.move(src, moved)
         pages.limit(80).coalesce(1).write.parquet(src)
@@ -267,7 +267,7 @@ class TestStageReuse:
         old = sorted(glob.glob(f"{moved}/part-*.parquet"))[0]
         new = sorted(glob.glob(f"{src}/part-*.parquet"))[0]
         os.rename(new, f"{src}/{os.path.basename(old)}")
-        fp2 = _input_fingerprint(spark.read.parquet(src), spark)
+        fp2 = _input_fingerprint(spark.read.parquet(src))[0]
         assert fp1 != fp2
 
     def test_one_group_resume_drops_a_killed_runs_stage(
@@ -444,9 +444,7 @@ class TestSessionConfs:
             assert sorted(
                 d for d in os.listdir(stage_dir) if not d.startswith((".", "_"))
             ) == ["bucket=0", "bucket=1", "bucket=2"]
-            assert P._read_stage_marker(spark, stage_dir) == P._input_fingerprint(
-                small, spark
-            )
+            assert P._read_stage_marker(spark, stage_dir) == P._input_fingerprint(small)[0]
             assert spark.read.parquet(stage_dir).count() == small.count()
 
             # a direct dynamic partition commit
@@ -750,8 +748,7 @@ class TestResumeLineageGuards:
     [
         ("n_buckets", {"n_buckets": 0}),
         ("n_buckets", {"n_buckets": -2}),
-        ("buckets_per_commit", {"buckets_per_commit": 0, "max_commit_groups": 0}),
-        ("max_commit_groups", {"max_commit_groups": -1}),
+        ("buckets_per_commit", {"buckets_per_commit": 0}),
     ],
 )
 def test_invalid_config_raises_before_any_spark_work(spark, pages, tmp_path, field, bad):
