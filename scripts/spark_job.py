@@ -4,6 +4,7 @@ Usage (the north-rule launch shape):
 
     python scripts/make_pyfiles.py                      # -> dist/ragflow_spark.zip
     spark-submit --master <cluster> \
+        --driver-java-options "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m" \
         --py-files dist/ragflow_spark.zip \
         scripts/spark_job.py \
         --pages <pages parquet/iceberg dir> --out <output dir> \
@@ -18,6 +19,10 @@ reads it back in committed_buckets).  All argument parsing and run
 logic live in ragflow_spark.spark.pipeline.cli() — this file only
 supplies the session, built with ragflow_spark.session.configure: the
 one conf set the in-process runs and the benchmark use too.
+
+The driver-java-options string is ragflow_spark.session.JVM_FLAGS:
+configure() gives it to the executors, but the driver JVM runs before
+configure() does, so the driver's copy comes from the launch line.
 """
 
 from __future__ import annotations

@@ -13,3 +13,16 @@ def spark():
     s = get_spark("ragflow_spark-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+REFERENCE_ROOT = "/root/reference"  # checkout of the reference project the parity tests execute
+
+
+def read_reference(path: str) -> str:
+    """The text of ``path`` in the reference checkout.  When the file is
+    absent the calling test, or the fixture that calls this, skips and
+    names the path."""
+    if not os.path.isfile(path):
+        pytest.skip(f"reference file {path} is absent")
+    with open(path, encoding="utf-8") as f:
+        return f.read()

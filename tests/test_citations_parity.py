@@ -17,13 +17,14 @@ from ragflow_spark.ops.citations import insert_citations, split_answer_pieces
 from ragflow_spark.ops.embed import _HashEncoder
 from ragflow_spark.text.querybuild import QueryBuilder, hybrid_similarity_of, rm_www
 from ragflow_spark.text import tokenizer as our_tok
+from tests.conftest import read_reference
 
 REF = "/root/reference/rag/nlp/search.py"
 
 
 @pytest.fixture(scope="module")
 def ref_insert():
-    tree = ast.parse(open(REF, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF))
     cls = next(
         n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Dealer"
     )

@@ -23,6 +23,7 @@ import pytest
 from ragflow_spark.text.normalize import full_to_half, tradi2simp
 from ragflow_spark.text.porter import lemmatize_noun, porter_stem
 from ragflow_spark.text.tokenizer import WebTokenizer
+from tests.conftest import REFERENCE_ROOT, read_reference
 
 REF = "/root/reference/rag/nlp/rag_tokenizer.py"
 
@@ -82,7 +83,7 @@ def _seed_words() -> list[tuple[str, int, str]]:
         ("命起", 50, "n"), ("起源", 120_000, "n"),
     ]
     words.extend(curated)
-    ner = json.load(open("/root/reference/rag/res/ner.json", encoding="utf-8"))
+    ner = json.loads(read_reference(f"{REFERENCE_ROOT}/rag/res/ner.json"))
     zh_keys = [k for k in ner if not k.isascii()][:200]
     for k in zh_keys:
         words.append((k, rng.randint(10, 5_000_000), "nz"))
@@ -101,6 +102,7 @@ def dict_file(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def ref_tok(dict_file):
+    src = read_reference(REF)
     saved = {}
 
     def put(name, mod):
@@ -144,7 +146,6 @@ def ref_tok(dict_file):
     put("api.utils", api_utils)
     put("api.utils.file_utils", file_utils)
 
-    src = open(REF, encoding="utf-8").read()
     # execute only up to the module-level singleton construction —
     # everything below `tokenizer = RagTokenizer()` in the reference
     # is wrapper functions we don't need

@@ -33,11 +33,12 @@ from ragflow_spark.pdf.geometry import (
     sort_x_first,
     sort_y_first,
 )
+from tests.conftest import REFERENCE_ROOT, read_reference
 
 
 @pytest.fixture(scope="module")
 def ref_cls():
-    src = open("/root/reference/deepdoc/vision/recognizer.py").read()
+    src = read_reference(f"{REFERENCE_ROOT}/deepdoc/vision/recognizer.py")
     tree = ast.parse(src)
     cls = next(
         n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Recognizer"
@@ -166,7 +167,7 @@ def test_layouts_cleanup_parity(ref_cls, seed):
 
 @pytest.fixture(scope="module")
 def ref_pdf(ref_cls):
-    src = open("/root/reference/deepdoc/parser/pdf_parser.py").read()
+    src = read_reference(f"{REFERENCE_ROOT}/deepdoc/parser/pdf_parser.py")
     tree = ast.parse(src)
     cls = next(
         n
@@ -358,7 +359,7 @@ def ref_tsr(ref_cls):
 
     from ragflow_spark.text.tokenizer import tokenize_text
 
-    src = open("/root/reference/deepdoc/vision/table_structure_recognizer.py").read()
+    src = read_reference(f"{REFERENCE_ROOT}/deepdoc/vision/table_structure_recognizer.py")
     tree = ast.parse(src)
     cls = next(
         n

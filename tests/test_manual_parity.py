@@ -21,6 +21,7 @@ from ragflow_spark.chunk.manual_template import (
 )
 from ragflow_spark.text import tokenizer as our_tok
 from ragflow_spark.text.tokens import count_tokens
+from tests.conftest import read_reference
 
 REF_MANUAL = "/root/reference/rag/app/manual.py"
 REF_NLP = "/root/reference/rag/nlp/__init__.py"
@@ -29,7 +30,7 @@ REF_NLP = "/root/reference/rag/nlp/__init__.py"
 @pytest.fixture(scope="module")
 def ref_chunk():
     # real level helpers from rag/nlp
-    tree = ast.parse(open(REF_NLP, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF_NLP))
     names = {"bullets_category", "title_frequency", "not_bullet", "not_title"}
     nodes = []
     for n in tree.body:
@@ -88,7 +89,7 @@ def ref_chunk():
         sys.modules[name] = m
     ns = {"__name__": "ref_manual", "__file__": REF_MANUAL}
     try:
-        exec(compile(open(REF_MANUAL, encoding="utf-8").read(), REF_MANUAL, "exec"), ns)
+        exec(compile(read_reference(REF_MANUAL), REF_MANUAL, "exec"), ns)
     finally:
         for name, old in saved.items():
             if old is None:

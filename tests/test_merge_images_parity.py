@@ -18,6 +18,7 @@ from ragflow_spark.chunk.merge import (
     greedy_merge_with_images,
 )
 from ragflow_spark.text.tokens import count_tokens
+from tests.conftest import read_reference
 
 REF = "/root/reference/rag/nlp/__init__.py"
 
@@ -29,7 +30,7 @@ class _FakeImageClass:
 
 @pytest.fixture(scope="module")
 def ref():
-    tree = ast.parse(open(REF, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF))
     wanted = [
         n
         for n in tree.body

@@ -22,6 +22,8 @@ import time
 
 import pytest
 
+from ragflow_spark.session import JVM_FLAGS
+
 pytestmark = pytest.mark.skipif(
     not os.environ.get("RAGFLOW_SPARK_SF1"),
     reason="sf1 rehearsal is opt-in (RAGFLOW_SPARK_SF1=1): ~3-5 min",
@@ -52,6 +54,7 @@ def _submit(pages: str, out: str) -> subprocess.Popen:
             "--driver-memory", "8g",
             "--conf", "spark.sql.shuffle.partitions=16",
             "--conf", "spark.ui.enabled=false",
+            "--driver-java-options", JVM_FLAGS,
             "--py-files", os.path.join(ROOT, "dist", "ragflow_spark.zip"),
             os.path.join(ROOT, "scripts", "spark_job.py"),
             "--pages", pages, "--out", out, "--buckets", "32",

@@ -19,6 +19,7 @@ from ragflow_spark.chunk.templates import (
 from ragflow_spark.data.pdfgen import make_doc_pdf
 from ragflow_spark.parsers.pdf_chars import pdf_pages_chars
 from ragflow_spark.pdf.assemble import assemble_page_boxes, page_stats
+from tests.conftest import read_reference
 
 REF = "/root/reference/rag/app/presentation.py"
 
@@ -51,7 +52,7 @@ class _FakeBase:
 
 @pytest.fixture(scope="module")
 def ref_pdf_cls():
-    tree = ast.parse(open(REF, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF))
     nodes = [
         n for n in tree.body
         if isinstance(n, ast.ClassDef) and n.name == "Pdf"

@@ -26,6 +26,7 @@ from ragflow_spark.chunk.qa import (
 )
 from ragflow_spark.parsers.office import read_docx, read_xlsx
 from ragflow_spark.text import tokenizer as our_tok
+from tests.conftest import read_reference
 from tests.test_office_parsers import make_xlsx
 
 REF = "/root/reference/rag/app/qa.py"
@@ -166,11 +167,11 @@ def ref_chunk():
         ),
     )
 
+    src = read_reference(REF)
     saved = {}
     for name, m in mods.items():
         saved[name] = sys.modules.get(name)
         sys.modules[name] = m
-    src = open(REF, encoding="utf-8").read()
     ns = {"__name__": "ref_qa", "__file__": REF}
     try:
         exec(compile(src, REF, "exec"), ns)

@@ -20,6 +20,7 @@ import types
 import pytest
 
 from ragflow_spark.chunk.qa import qa_from_pdf_boxes
+from tests.conftest import read_reference
 
 REF_QA = "/root/reference/rag/app/qa.py"
 REF_NLP = "/root/reference/rag/nlp/__init__.py"
@@ -33,7 +34,7 @@ def _line_tag(box) -> str:
 
 @pytest.fixture(scope="module")
 def ref_nlp_fns():
-    tree = ast.parse(open(REF_NLP, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF_NLP))
     names = {"has_qbullet", "qbullets_category", "index_int", "not_bullet"}
     nodes = []
     for n in tree.body:
@@ -93,7 +94,7 @@ def ref_pdf_cls(ref_nlp_fns):
         sys.modules[name] = m
     ns = {"__name__": "ref_qa_pdf", "__file__": REF_QA}
     try:
-        exec(compile(open(REF_QA, encoding="utf-8").read(), REF_QA, "exec"), ns)
+        exec(compile(read_reference(REF_QA), REF_QA, "exec"), ns)
     finally:
         for name, old in saved.items():
             if old is None:
@@ -220,7 +221,7 @@ class TestPdfQaParity:
 def test_docx_question_level_bullet_path(ref_nlp_fns):
     """Bullet-grammar branch of docx_question_level vs the reference
     function (AST-extracted with BULLET_PATTERN)."""
-    tree = ast.parse(open(REF_NLP, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF_NLP))
     nodes = [
         n
         for n in tree.body

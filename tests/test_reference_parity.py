@@ -26,6 +26,7 @@ from ragflow_spark.chunk.delimiters import delimiter_pattern
 from ragflow_spark.chunk.hierarchy import bullet_group_of, outline_merge
 from ragflow_spark.chunk.merge import greedy_merge, strip_position_tags
 from ragflow_spark.text.tokens import count_tokens
+from tests.conftest import REFERENCE_ROOT, read_reference
 
 REF = "/root/reference/rag/nlp/__init__.py"
 
@@ -48,7 +49,7 @@ _NAMES = [
 
 @pytest.fixture(scope="module")
 def ref():
-    tree = ast.parse(open(REF).read())
+    tree = ast.parse(read_reference(REF))
     wanted = []
     for node in tree.body:
         if isinstance(node, ast.FunctionDef) and node.name in _NAMES:
@@ -205,7 +206,7 @@ def test_hierarchical_merge_parity(ref, sections, depth):
 
 @pytest.fixture(scope="module")
 def ref_txt():
-    tree = ast.parse(open("/root/reference/deepdoc/parser/txt_parser.py").read())
+    tree = ast.parse(read_reference(f"{REFERENCE_ROOT}/deepdoc/parser/txt_parser.py"))
     cls = next(
         n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "RAGFlowTxtParser"
     )
@@ -239,7 +240,7 @@ def test_txt_parser_parity(ref_txt, txt, budget, delims):
 
 @pytest.fixture(scope="module")
 def ref_md():
-    tree = ast.parse(open("/root/reference/deepdoc/parser/markdown_parser.py").read())
+    tree = ast.parse(read_reference(f"{REFERENCE_ROOT}/deepdoc/parser/markdown_parser.py"))
     cls = next(
         n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "RAGFlowMarkdownParser"
     )
@@ -431,7 +432,7 @@ def test_title_frequency_parity(ref, sections):
 
 @pytest.fixture(scope="module")
 def ref_json():
-    tree = ast.parse(open("/root/reference/deepdoc/parser/json_parser.py").read())
+    tree = ast.parse(read_reference(f"{REFERENCE_ROOT}/deepdoc/parser/json_parser.py"))
     cls = next(
         n
         for n in tree.body

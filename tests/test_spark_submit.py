@@ -1,10 +1,13 @@
 """The north-rule launch shape: ``spark-submit --py-files`` with the
 package zip runs ``scripts/spark_job.py`` on the engine confs that
 ``session.configure`` sets, commits every bucket, and skips them all on
-a resubmit.  The test takes ~50 s on 4 vCPU."""
+a resubmit.  The submit test takes ~50 s on 4 vCPU.  The engine's JVMs
+run ``session.JVM_FLAGS``: the live session's JVM shows them, and the
+job's usage text quotes them for the driver's launch line."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -12,7 +15,7 @@ import subprocess
 import sys
 
 from ragflow_spark.data.pagegen import pages_dataframe
-from ragflow_spark.session import configure
+from ragflow_spark.session import JVM_FLAGS, configure
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -39,6 +42,7 @@ def _submit(pages: str, out: str, event_dir: str) -> dict:
             "--conf", f"spark.eventLog.dir={event_dir}",
             "--conf", "spark.eventLog.compress=false",
             "--conf", "spark.eventLog.rolling.enabled=false",
+            "--driver-java-options", JVM_FLAGS,
             "--py-files", os.path.join(ROOT, "dist", "ragflow_spark.zip"),
             os.path.join(ROOT, "scripts", "spark_job.py"),
             "--pages", pages, "--out", out, "--buckets", "4",
@@ -87,3 +91,26 @@ def test_submitted_job_runs_configured_confs(spark, tmp_path):
     for log in logs:
         props = _spark_properties(log)
         assert {k: props.get(k) for k in wanted} == wanted
+        # spark-submit prepends its own module flags to the launch line's
+        assert JVM_FLAGS in props["spark.driver.extraJavaOptions"]
+
+
+def test_usage_quotes_the_jvm_flags():
+    with open(os.path.join(ROOT, "scripts", "spark_job.py"), encoding="utf-8") as f:
+        usage = ast.get_docstring(ast.parse(f.read()))
+    assert f'--driver-java-options "{JVM_FLAGS}"' in usage
+
+
+def test_configure_sets_default_not_extra_java_options():
+    confs = configure(_Recorder()).confs
+    assert confs["spark.executor.defaultJavaOptions"] == JVM_FLAGS
+    assert not [k for k in confs if k.endswith(".extraJavaOptions")]
+
+
+def test_session_jvm_runs_c1_only_with_a_240m_code_cache(spark):
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
+    assert bean.getVMOption("ReservedCodeCacheSize").getValue() == "251658240"

@@ -21,6 +21,7 @@ import pytest
 from ragflow_spark.pdf.geometry import sort_y_first
 from ragflow_spark.pdf.tablefig import extract_table_figure
 from ragflow_spark.pdf.tsr import construct_table, is_caption
+from tests.conftest import read_reference
 
 REF = "/root/reference/deepdoc/parser/pdf_parser.py"
 
@@ -63,7 +64,7 @@ class _TSR:
 
 @pytest.fixture(scope="module")
 def ref_method():
-    tree = ast.parse(open(REF, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF))
     cls = next(
         n for n in tree.body
         if isinstance(n, ast.ClassDef) and n.name == "RAGFlowPdfParser"

@@ -23,6 +23,7 @@ from ragflow_spark.extract.html import extract_html
 from ragflow_spark.parsers.eml import email_chunks, parse_eml
 from ragflow_spark.parsers.txt import split_txt
 from ragflow_spark.text import tokenizer as our_tok
+from tests.conftest import read_reference
 from tests.test_qa_formats_parity import _fake_load_workbook, make_xlsx
 
 REF_TAG = "/root/reference/rag/app/tag.py"
@@ -87,7 +88,7 @@ def _exec_with(path, mods):
         sys.modules[name] = m
     ns = {"__name__": "ref_" + path.rsplit("/", 1)[-1][:-3], "__file__": path}
     try:
-        exec(compile(open(path, encoding="utf-8").read(), path, "exec"), ns)
+        exec(compile(read_reference(path), path, "exec"), ns)
     finally:
         for name, old in saved.items():
             if old is None:
@@ -101,7 +102,7 @@ def _exec_with(path, mods):
 def ref_tag_chunk():
     # the REAL Excel pairer from qa.py, with openpyxl faked over our
     # stdlib reader
-    tree = ast.parse(open(REF_QA, encoding="utf-8").read())
+    tree = ast.parse(read_reference(REF_QA))
     nodes = [
         n for n in tree.body
         if (isinstance(n, ast.ClassDef) and n.name == "Excel")

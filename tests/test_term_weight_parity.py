@@ -22,6 +22,7 @@ from ragflow_spark.text.normalize import full_to_half, tradi2simp
 from ragflow_spark.text.querybuild import QueryBuilder
 from ragflow_spark.text.synonyms import SynonymLookup, load_synonyms
 from ragflow_spark.text.term_weight import TermWeighter, load_resources
+from tests.conftest import read_reference
 
 REF_ROOT = "/root/reference"
 RES_DIR = f"{REF_ROOT}/rag/res"
@@ -59,7 +60,7 @@ class _FakeWordnet:
 def _exec_ref(path: str, extra_modules: dict) -> dict:
     """Execute a reference module's source with dependency stubs
     registered in sys.modules for the duration of the exec."""
-    src = open(path, encoding="utf-8").read()
+    src = read_reference(path)
     saved = {}
     for name, mod in extra_modules.items():
         saved[name] = sys.modules.get(name)
