@@ -9,8 +9,13 @@ Design rules (input_hint: "no per-row Python" at the Spark API level):
 * format dispatch is magic-byte based (naive.py:404-549 routes on file
   extension; a web corpus has no filenames, SURVEY.md §2.1);
 * import installs ``guard_zip_rereads``: PySpark's per-task
-  ``importlib.invalidate_caches()`` re-parsed pyspark.zip, 200-450 ms a
-  task.  Drop it on CPython >= 3.13 workers or once PySpark stops that.
+  ``importlib.invalidate_caches()`` re-parsed every zip on the worker's
+  path, pyspark.zip included, 200-450 ms a task.  A ``get_spark``
+  session's workers now load PySpark and py4j from directories (see
+  ``ragflow_spark/daemon.py``), so there the guard covers the
+  spark-core jar Spark puts on the path; under spark-submit it also
+  covers pyspark.zip, py4j and the ``--py-files`` zips.  Drop it on
+  CPython >= 3.13 workers or once PySpark stops that call.
 """
 
 from __future__ import annotations

@@ -3,7 +3,8 @@ package zip runs ``scripts/spark_job.py`` on the engine confs that
 ``session.configure`` sets, commits every bucket, and skips them all on
 a resubmit.  The submit test takes ~50 s on 4 vCPU.  The engine's JVMs
 run ``session.JVM_FLAGS``: the live session's JVM shows them, and the
-job's usage text quotes them for the driver's launch line."""
+job's usage text quotes them for the driver's launch line.  Only a
+``get_spark`` session runs the engine's worker daemon."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ import subprocess
 import sys
 
 from ragflow_spark.data.pagegen import pages_dataframe
-from ragflow_spark.session import JVM_FLAGS, configure
+from ragflow_spark.session import DAEMON_MODULE, JVM_FLAGS, configure
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -105,6 +106,13 @@ def test_configure_sets_default_not_extra_java_options():
     confs = configure(_Recorder()).confs
     assert confs["spark.executor.defaultJavaOptions"] == JVM_FLAGS
     assert not [k for k in confs if k.endswith(".extraJavaOptions")]
+
+
+def test_only_get_spark_names_the_engine_daemon(spark):
+    # a submitted job's executors get the engine from --py-files only
+    # per task, so their daemon must stay PySpark's own
+    assert "spark.python.daemon.module" not in configure(_Recorder()).confs
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == DAEMON_MODULE
 
 
 def test_session_jvm_runs_c1_only_with_a_240m_code_cache(spark):

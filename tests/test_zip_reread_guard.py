@@ -4,6 +4,9 @@ PySpark calls ``importlib.invalidate_caches()`` before every task; on
 CPython < 3.13 that re-parses every zip archive on the worker's path
 unless the guard is in place.  The guard must skip unchanged archives,
 re-read changed ones, install once, and stand aside on CPython >= 3.13.
+The conftest session's workers load PySpark and py4j from directories
+(``ragflow_spark/daemon.py``) but still hold zipimporters over the
+spark-core jar Spark puts on their path, so the worker test runs.
 """
 
 import importlib.util
