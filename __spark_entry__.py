@@ -2112,7 +2112,7 @@ SELECT doc_id, lang, content_ltks, content_sm_ltks FROM zh
 """
 
     # media header stats: the oracle re-derives the expected aggregate
-    # from the fake-container generator spec (ops/multimodal.py:187-199)
+    # from the fake-container generator spec (ops/multimodal.py:110-122)
     # rather than parsing binary — an independent twin computation.
     # n_rows = 400 is the sf=0.01 sizing the correctness gate uses.
     o["media_type_stats"] = """

@@ -11,19 +11,12 @@ layout detector stages are plugin-tagged upstream, §2.4):
 * the merge loop packs a chunk while it holds < 32 tokens, or < 1024
   tokens while still inside the same section run, position tags
   appended per piece.
-
-The docx branch (manual.py:112-169) differs from the qa template's:
-levels may come from bullet grammars too, and the table colspan fold
-only merges ADJACENT equal cells (the ``else: break``).
 """
 
 from __future__ import annotations
 
-import re
-
 from ..text.tokens import count_tokens
 from .hierarchy import bullet_group_of, heading_pivot_levels
-from .qa import docx_question_level
 
 Poss = list[tuple[float, float, float, float, float]]
 
@@ -111,60 +104,3 @@ def manual_pdf_chunks(
             last_sid = sec_id
     return chunks
 
-
-def manual_from_docx(data: bytes, bull: int = -1) -> tuple[list[str], list[str]]:
-    """docx branch (manual.py:112-169): heading/bullet-levelled
-    question stacks with the accumulated body appended; tables fold
-    ADJACENT equal cells only.  Returns (texts, table_htmls)."""
-    from ..parsers.office import read_docx
-
-    paras, tables = read_docx(data)
-    texts: list[str] = []
-    q_stack: list[str] = []
-    lvl_stack: list[int] = []
-    last_answer = ""
-    for text, style in paras:
-        level, p_text = 0, ""
-        if text.strip():
-            level, p_text = docx_question_level(text, style, bull)
-        if not level or level > 6:
-            last_answer = f"{last_answer}\n{p_text}"
-            continue
-        if last_answer:
-            sum_q = "\n".join(q_stack)
-            if sum_q:
-                texts.append(f"{sum_q}\n{last_answer}")
-            last_answer = ""
-        while q_stack and level <= lvl_stack[-1]:
-            q_stack.pop()
-            lvl_stack.pop()
-        q_stack.append(p_text)
-        lvl_stack.append(level)
-    if last_answer:
-        sum_q = "\n".join(q_stack)
-        if sum_q:
-            texts.append(f"{sum_q}\n{last_answer}")
-
-    tbl_out: list[str] = []
-    for rows in tables:
-        html = "<table>"
-        for r in rows:
-            html += "<tr>"
-            i = 0
-            while i < len(r):
-                span = 1
-                c = r[i]
-                for j in range(i + 1, len(r)):
-                    if c == r[j]:
-                        span += 1
-                        i = j
-                    else:
-                        break
-                i += 1
-                html += (
-                    f"<td>{c}</td>" if span == 1 else f"<td colspan='{span}'>{c}</td>"
-                )
-            html += "</tr>"
-        html += "</table>"
-        tbl_out.append(html)
-    return texts, tbl_out

@@ -1,107 +1,14 @@
-"""QA template: Q/A pair extraction from delimited text and markdown.
+"""QA template: Q/A pair extraction from delimited text, xlsx and docx.
 
-Behavior mirrors rag/app/qa.py (txt/csv two-column state machine
-:340-376, markdown heading-stack walk :418-451, chunk assembly
-``"Question: q\\tAnswer: a"`` with prefix stripping :262-305) and the
-question-numbering detectors in rag/nlp/__init__.py:74-165
-(QUESTION_PATTERN / qbullets_category / index_int) — re-derived, no
-shared code.
-
-Markdown answers render to HTML through the clean-room renderer
-(text/md_render.py, r4 — byte-parity with the ``markdown`` package
-verified at deploy by scripts/parity_markdown.py; the
-answer *content* is unchanged).
+Behavior mirrors rag/app/qa.py (txt two-column state machine :340-376,
+xlsx rows :36-77, docx heading-stack walk :185-265, chunk assembly
+``"Question: q\\tAnswer: a"`` with prefix stripping :262-305) —
+re-derived, no shared code.
 """
 
 from __future__ import annotations
 
 import re
-
-QUESTION_PATTERNS: list[re.Pattern] = [
-    re.compile(p)
-    for p in [
-        r"第([零一二三四五六七八九十百0-9]+)问",
-        r"第([零一二三四五六七八九十百0-9]+)条",
-        r"[\(（]([零一二三四五六七八九十百]+)[\)）]",
-        r"第([0-9]+)问",
-        r"第([0-9]+)条",
-        r"([0-9]{1,2})[\. 、]",
-        r"([零一二三四五六七八九十百]+)[ 、]",
-        r"[\(（]([0-9]{1,2})[\)）]",
-        r"QUESTION (ONE|TWO|THREE|FOUR|FIVE|SIX|SEVEN|EIGHT|NINE|TEN)",
-        r"QUESTION (I+V?|VI*|XI|IX|X)",
-        r"QUESTION ([0-9]+)",
-    ]
-]
-
-_NOT_BULLET = re.compile(r"[0-9]+ +[0-9~个只-]|[0-9]+\.{2,}")
-
-_EN_WORDS = {
-    "one": 1, "two": 2, "three": 3, "four": 4, "five": 5,
-    "six": 6, "seven": 7, "eight": 8, "nine": 9, "ten": 10,
-}
-_ROMAN = {"i": 1, "v": 5, "x": 10, "l": 50, "c": 100}
-_CN_DIGITS = {"零": 0, "一": 1, "二": 2, "三": 3, "四": 4, "五": 5,
-              "六": 6, "七": 7, "八": 8, "九": 9}
-
-
-def _roman_to_int(s: str) -> int | None:
-    s = s.lower()
-    if not s or any(ch not in _ROMAN for ch in s):
-        return None
-    total = 0
-    for i, ch in enumerate(s):
-        v = _ROMAN[ch]
-        if i + 1 < len(s) and _ROMAN[s[i + 1]] > v:
-            total -= v
-        else:
-            total += v
-    return total
-
-
-def _cn_to_int(s: str) -> int | None:
-    if not s or any(ch not in _CN_DIGITS and ch not in "十百" for ch in s):
-        return None
-    total, num = 0, 0
-    for ch in s:
-        if ch in _CN_DIGITS:
-            num = _CN_DIGITS[ch]
-        elif ch == "十":
-            total += (num or 1) * 10
-            num = 0
-        elif ch == "百":
-            total += (num or 1) * 100
-            num = 0
-    return total + num
-
-
-def index_int(index_str: str) -> int:
-    """Numbering -> int: arabic, english word, chinese numeral, roman."""
-    try:
-        return int(index_str)
-    except (TypeError, ValueError):
-        pass
-    for conv in (lambda s: _EN_WORDS.get(s.lower()), _cn_to_int, _roman_to_int):
-        v = conv(index_str)
-        if v is not None:
-            return v
-    return -1
-
-
-def qbullets_category(sections: list[str]) -> tuple[int, re.Pattern | None]:
-    """Index + pattern of the best-hitting question-numbering style."""
-    hits = [0] * len(QUESTION_PATTERNS)
-    for i, pat in enumerate(QUESTION_PATTERNS):
-        for sec in sections:
-            if pat.match(sec) and not _NOT_BULLET.match(sec):
-                hits[i] += 1
-                break
-    best, best_i = 0, -1
-    for i, h in enumerate(hits):
-        if h > best:
-            best, best_i = h, i
-    return best_i, (QUESTION_PATTERNS[best_i] if best_i >= 0 else None)
-
 
 _PREFIX_RE = re.compile(
     r"^(问题|答案|回答|user|assistant|Q|A|Question|Answer|问|答)[\t:： ]+",
@@ -137,99 +44,6 @@ def qa_from_delimited(text: str, eng: bool = True) -> list[str]:
         if question and answer:
             out.append(qa_chunk(question, answer, eng))
         question, answer = arr
-    if question:
-        out.append(qa_chunk(question, answer, eng))
-    return out
-
-
-_MD_HEADING = re.compile(r"#*")
-
-
-def md_question_level(line: str) -> tuple[int, str]:
-    m = _MD_HEADING.match(line)
-    return (len(m.group(0)), line.lstrip("#").lstrip()) if m else (0, line)
-
-
-def qa_from_markdown(text: str, eng: bool = True, render=None) -> list[str]:
-    """Heading-stack walk: headings accumulate into the question chain
-    (popping levels >= the new one); body lines form the answer, which
-    renders to HTML like the reference's
-    ``markdown(last_answer, extensions=['markdown.extensions.tables'])``
-    (rag/app/qa.py:438,450) — via the clean-room renderer by default
-    (``render=False`` keeps raw markdown, the pre-r4 behavior)."""
-    if render is None:
-        from ..text.md_render import render_markdown
-
-        render = lambda a: render_markdown(a, tables=True)  # noqa: E731
-    elif render is False:
-        render = lambda a: a.strip()  # noqa: E731
-    out: list[str] = []
-    q_stack: list[str] = []
-    lvl_stack: list[int] = []
-    last_answer = ""
-    code_block = False
-    for line in text.split("\n"):
-        if line.strip().startswith("```"):
-            code_block = not code_block
-        level, question = (0, "") if code_block else md_question_level(line)
-        if not level or level > 6:
-            last_answer += "\n" + line
-            continue
-        if last_answer.strip():
-            joined = "\n".join(q_stack)
-            if joined:
-                out.append(qa_chunk(joined, render(last_answer), eng))
-            last_answer = ""
-        while q_stack and level <= lvl_stack[-1]:
-            q_stack.pop()
-            lvl_stack.pop()
-        q_stack.append(question)
-        lvl_stack.append(level)
-    if last_answer.strip():
-        joined = "\n".join(q_stack)
-        if joined:
-            out.append(qa_chunk(joined, render(last_answer), eng))
-    return out
-
-
-def qa_from_sections(sections: list[str], eng: bool = True) -> list[str]:
-    """Bullet-numbered plain text: the dominant question-numbering
-    pattern starts each Q; following sections are its answer."""
-    _, pat = qbullets_category(sections)
-    if pat is None:
-        return []
-    out: list[str] = []
-    question, answer_parts = "", []
-    for sec in sections:
-        if pat.match(sec) and not _NOT_BULLET.match(sec):
-            if question:
-                out.append(qa_chunk(question, "\n".join(answer_parts), eng))
-            question, answer_parts = sec, []
-        elif question:
-            answer_parts.append(sec)
-    if question:
-        out.append(qa_chunk(question, "\n".join(answer_parts), eng))
-    return out
-
-
-def qa_from_csv(text: str, eng: bool = True) -> list[str]:
-    """csv branch (rag/app/qa.py:378-408): delimiter is TAB when any
-    line contains one, else comma; proper csv quoting honored; a
-    non-2-field row appends the RAW line to the running answer."""
-    import csv as _csv
-
-    lines = text.split("\n")
-    delim = "\t" if any("\t" in ln for ln in lines) else ","
-    out: list[str] = []
-    question, answer = "", ""
-    for i, row in enumerate(_csv.reader(lines, delimiter=delim)):
-        if len(row) != 2:
-            if question:
-                answer += "\n" + lines[i]
-            continue
-        if question and answer:
-            out.append(qa_chunk(question, answer, eng))
-        question, answer = row
     if question:
         out.append(qa_chunk(question, answer, eng))
     return out
@@ -331,180 +145,3 @@ def qa_from_docx(data: bytes, eng: bool = True) -> tuple[list[str], list[str]]:
         tbl_out.append(html)
     return qa_out, tbl_out
 
-
-# -- PDF QA walk (rag/app/qa.py:80-183) -------------------------------------
-
-_Q_TAIL = r"(\w|\W)*?(?:？|\?|\n|$)+"
-_ASK_RE = re.compile(r"(what|when|where|how|why|which|who|whose|为什么|为啥|哪)")
-_EMPTY_TAG = "@@0\t0\t0\t0\t0##"
-
-
-def _get_float(v) -> float:
-    if v is None:
-        return float("-inf")
-    try:
-        return float(v)
-    except Exception:
-        return float("-inf")
-
-
-def has_qbullet(
-    reg: str, box: dict, last_box: dict, last_index: int, last_bull, bull_x0_list: list
-):
-    """Question-bullet detector with layout guards
-    (rag/nlp/__init__.py:89-130): the numbering regex must match AND
-    the box's x0 must line up with the running bullet margin; an
-    out-of-order index only counts when the section looks like a
-    question (trailing ?, title layout, or an interrogative opener)."""
-    section, last_section = box["text"], last_box["text"]
-    full_reg = reg + _Q_TAIL
-    m = re.match(full_reg, section)
-    if m:
-        if "x0" not in last_box:
-            last_box["x0"] = box["x0"]
-        if "top" not in last_box:
-            last_box["top"] = box["top"]
-        if last_bull and box["x0"] - last_box["x0"] > 10:
-            return None, last_index
-        if (
-            not last_bull
-            and box["x0"] >= last_box["x0"]
-            and box["top"] - last_box["top"] < 20
-        ):
-            return None, last_index
-        avg_x0 = (
-            sum(bull_x0_list) / len(bull_x0_list) if bull_x0_list else box["x0"]
-        )
-        if box["x0"] - avg_x0 > 10:
-            return None, last_index
-        index_str = m.group(1)
-        index = index_int(index_str)
-        if last_section and last_section[-1] in (":", "："):
-            return None, last_index
-        if not last_index or index >= last_index:
-            bull_x0_list.append(box["x0"])
-            return m, index
-        if section and section[-1] in ("?", "？"):
-            bull_x0_list.append(box["x0"])
-            return m, index
-        if box.get("layout_type") == "title":
-            bull_x0_list.append(box["x0"])
-            return m, index
-        pure = section.lstrip(re.match(reg, section).group()).lower()
-        if _ASK_RE.match(pure):
-            bull_x0_list.append(box["x0"])
-            return m, index
-    return None, last_index
-
-
-def _tbl_info(tbls: list, i: int):
-    """(pn, left, right, top, bottom, tag, text) of table i; sentinel
-    when exhausted (rag/app/qa.py:172-183).  ``tbls`` rows are
-    (content_rows, positions) — the text-engine shape of
-    pdf/tablefig.extract_table_figure output."""
-    if i >= len(tbls):
-        return 1, 0, 0, 0, 0, _EMPTY_TAG, ""
-    content, poss = tbls[i]
-    pn, left, right, top, bottom = poss[0]
-    tag = "@@{}\t{:.1f}\t{:.1f}\t{:.1f}\t{:.1f}##".format(
-        pn + 1, left, right, top, bottom
-    )
-    return pn + 1, left, right, top, bottom, tag, "".join(content)
-
-
-def qa_from_pdf_boxes(
-    boxes: list[dict], tbls: list, line_tag_fn, eng: bool = True
-) -> list[tuple[str, str, str]]:
-    """The PDF QA state machine (rag/app/qa.py:108-170): walk the
-    layout boxes in reading order, start a new pair at each question
-    bullet, accumulate answer text, and splice each table's text+tag
-    into whichever answer spans its position.  Returns
-    (question, answer, position_tags) triples; the reference
-    additionally crops images — this engine keeps the tags (parse with
-    pdf.geometry.parse_line_tags).
-    """
-    sections = [b["text"] for b in boxes]
-    q_bull, pat = qbullets_category(sections)
-    if q_bull == -1 or pat is None:
-        raise ValueError("Unable to recognize Q&A structure.")
-    reg = pat.pattern
-    # sort tables by (page, top) like the reference's sort_key
-    tbls = sorted(tbls, key=lambda t: (t[1][0][0], t[1][0][3]))
-    qai: list[tuple[str, str, str]] = []
-    last_q, last_a, last_tag = "", "", ""
-    last_index = -1
-    last_box: dict = {"text": ""}
-    last_bull = None
-    bull_x0_list: list = []
-    tbl_index = 0
-    last_pn, last_bottom = 0, 0.0
-    for box in boxes:
-        section, ltag = box["text"], line_tag_fn(box)
-        bull, index = has_qbullet(
-            reg, box, last_box, last_index, last_bull, bull_x0_list
-        )
-        last_box, last_index, last_bull = box, index, bull
-        line_pn = _get_float(ltag.lstrip("@@").split("\t")[0])
-        line_top = _get_float(ltag.rstrip("##").split("\t")[3])
-        tbl_pn, _l, _r, tbl_top, _b, tbl_tag, tbl_text = _tbl_info(tbls, tbl_index)
-        if not bull:
-            if not last_q:
-                if tbl_pn < line_pn or (tbl_pn == line_pn and tbl_top <= line_top):
-                    tbl_index += 1
-                continue
-            sum_tag, sum_section = ltag, section
-            while (
-                (tbl_pn == last_pn and tbl_top >= last_bottom) or (tbl_pn > last_pn)
-            ) and ((tbl_pn == line_pn and tbl_top <= line_top) or (tbl_pn < line_pn)):
-                sum_tag = f"{tbl_tag}{sum_tag}"
-                sum_section = f"{tbl_text}{sum_section}"
-                tbl_index += 1
-                tbl_pn, _l, _r, tbl_top, _b, tbl_tag, tbl_text = _tbl_info(
-                    tbls, tbl_index
-                )
-            last_a = f"{last_a}{sum_section}"
-            last_tag = f"{last_tag}{sum_tag}"
-        else:
-            if last_q:
-                while (
-                    (tbl_pn == last_pn and tbl_top >= last_bottom)
-                    or (tbl_pn > last_pn)
-                ) and (
-                    (tbl_pn == line_pn and tbl_top <= line_top) or (tbl_pn < line_pn)
-                ):
-                    last_tag = f"{last_tag}{tbl_tag}"
-                    last_a = f"{last_a}{tbl_text}"
-                    tbl_index += 1
-                    tbl_pn, _l, _r, tbl_top, _b, tbl_tag, tbl_text = _tbl_info(
-                        tbls, tbl_index
-                    )
-                qai.append((last_q, last_a, last_tag))
-                last_q, last_a, last_tag = "", "", ""
-            last_q = bull.group()
-            _, end = bull.span()
-            last_a = section[end:]
-            last_tag = ltag
-        last_bottom = float(ltag.rstrip("##").split("\t")[4])
-        last_pn = line_pn
-    if last_q:
-        qai.append((last_q, last_a, last_tag))
-    return qai
-
-
-def docx_question_level(text: str, style: str, bull: int = -1) -> tuple[int, str]:
-    """Full ``docx_question_level`` (rag/nlp/__init__.py:621-631):
-    Heading styles win; otherwise, with a bullet grammar selected
-    (``bull`` >= 0), the matching pattern's index + 1 is the level and
-    a non-matching paragraph sinks to ``len(patterns)`` (body)."""
-    from .hierarchy import BULLET_GROUPS
-
-    txt = re.sub("　", " ", text).strip()
-    lvl = docx_style_level(style)
-    if lvl:
-        return lvl, txt
-    if bull < 0:
-        return 0, txt
-    for j, pat in enumerate(BULLET_GROUPS[bull]):
-        if re.match(pat, txt):
-            return j + 1, txt
-    return len(BULLET_GROUPS[bull]), txt

@@ -132,17 +132,6 @@ def field_name(header: str, ty: str) -> str:
     return base + FIELD_SUFFIX[ty]
 
 
-def parse_delimited(text: str, delimiter: str = "\t") -> tuple[list[str], list[list[str]]]:
-    """First line = headers; rows with mismatched arity are dropped
-    (the reference records them as failures)."""
-    lines = [ln for ln in text.split("\n") if ln != ""]
-    if not lines:
-        return [], []
-    headers = lines[0].split(delimiter)
-    rows = [r for ln in lines[1:] if len(r := ln.split(delimiter)) == len(headers)]
-    return headers, rows
-
-
 def table_rows(
     headers: list[str], rows: list[list[str]]
 ) -> tuple[list[str], dict[str, str], list[dict]]:

@@ -56,27 +56,3 @@ def tag_from_csv(text: str) -> list[tuple[str, list[str]]]:
         content = ""
     return out
 
-
-def tag_from_xlsx(data: bytes) -> list[tuple[str, list[str]]]:
-    """xlsx branch (tag.py:54-59 via the qa Excel pairer): first
-    non-empty cell is the content, second the tag list; no
-    accumulation across rows."""
-    from ..parsers.office import read_xlsx
-
-    out: list[tuple[str, list[str]]] = []
-    for _sheet, rows in read_xlsx(data):
-        for r in rows:
-            q, a = "", ""
-            for cell in r:
-                v = "" if cell is None else str(cell)
-                if not v:
-                    continue
-                if not q:
-                    q = v
-                elif not a:
-                    a = v
-                else:
-                    break
-            if q and a:
-                out.append((q, _norm_tags(a)))
-    return out

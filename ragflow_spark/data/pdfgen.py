@@ -152,53 +152,6 @@ def make_doc_pdf(
     return pdf
 
 
-def make_qa_pdf(words: list[str], doc_id: int = 0) -> bytes:
-    """One page of numbered Q&A (``1. question?`` bullets with answer
-    lines) plus a captioned grid table inside the second answer — the
-    input shape of the reference's QA pdf branch (rag/app/qa.py:108-170
-    question-bullet walk with table splicing)."""
-    words = [_esc(w) for w in (words or ["alpha"])]
-
-    def w(i: int) -> str:
-        return words[i % len(words)]
-
-    # questions need >= 20pt vertical separation from the preceding
-    # box or the reference's has_qbullet layout guard rejects them
-    # (rag/nlp/__init__.py:89-130; the first box is never a question)
-    p = _PageBuilder()
-    p.text_line(f"FAQ for {w(0)}")
-    p.blank()
-    p.text_line(f"1. What is {w(0)} {w(1)}?")
-    p.text_line(f"It is a {w(2)} {w(3)} runtime.")
-    p.text_line(f"It plans with {w(4)}.")
-    p.blank()
-    p.text_line(f"2. How does {w(5)} work?")
-    p.text_line(f"Data moves by {w(6)} key.")
-    p.table_row(["name", "count", "price"])
-    for r in range(1, 3):
-        p.table_row([w(r * 2), str((doc_id + r) * 10), f"{r}.{(doc_id + r) % 10}0"])
-    p.text_line(f"Table 1: {w(7)} metrics")
-    p.blank()
-    p.text_line(f"3. Why {w(8)} small {w(9)}?")
-    p.text_line(f"To avoid moving the {w(10)} side.")
-
-    s1 = p.stream()
-    objs = [
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj",
-        b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj",
-        (
-            f"3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 {PAGE_W} {PAGE_H}] "
-            "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >> endobj"
-        ).encode(),
-        b"4 0 obj << /Length " + str(len(s1)).encode() + b" >> stream\n" + s1
-        + b"\nendstream endobj",
-        b"5 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Courier >> endobj",
-    ]
-    return (
-        b"%PDF-1.4\n" + b"\n".join(objs) + b"\ntrailer << /Root 1 0 R >>\n%%EOF"
-    )
-
-
 def make_spanning_table_pdf(words: list[str], rows_per_page: int = 3) -> bytes:
     """Two pages whose grid table SPANS the page break (last rows of
     page 1, first rows of page 2, same columns) — exercises

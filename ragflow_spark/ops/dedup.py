@@ -72,16 +72,6 @@ def word_shingles_from(words: Column, k: int = 3) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Single-expression form; prefer the staged char_ngrams_from."""
-    return char_ngrams_from(col, n)
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Single-expression form; prefer the staged word_shingles_from."""
-    return word_shingles_from(F.split(F.trim(col), r"\s+"), k)
-
-
 def shingle_stage(
     df: DataFrame, id_col: str, text_col: str, shingle: str, shingle_n: int
 ) -> DataFrame:
@@ -193,15 +183,6 @@ def _affine_min_signature(hashes: Column, num_hashes: int, seed: int = 1) -> Col
         F.coalesce(F.size(hashes), F.lit(0)) <= 0,
         F.array_repeat(F.lit(None).cast("long"), num_hashes),
     ).otherwise(mins)
-
-
-def minhash_signature(grams: Column, num_hashes: int = 32, seed: int = 1) -> Column:
-    """num_hashes minhash values via affine reshuffles of xxhash64."""
-    return _affine_min_signature(
-        F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(_M31))),
-        num_hashes,
-        seed,
-    )
 
 
 def _window_hash_stage(
@@ -356,61 +337,6 @@ def minhash_dedup_pairs(
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def exact_canonical_docs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """One representative row (min id) per distinct canonical text.
-
-    The corpus-scale guard for every banded near-dup operator: a group
-    of m byte-identical documents (boilerplate pages, mirrored urls —
-    routine at 10^12 rows) lands all m members in every band bucket,
-    so the candidate self-join emits m(m-1)/2 pairs from that single
-    group — measured 1,999,000 candidates from one 2000-copy group at
-    toy scale (BENCH.md r4).  Running near-dup over exact-canonical
-    representatives removes the quadratic term exactly: identical docs
-    are already paired by :func:`dedup_exact`'s groups, so no
-    information is lost, and every representative-level near-dup pair
-    extends to the members of both exact groups by transitivity of
-    equality."""
-    canon = df.select(
-        F.col(id_col), norm_text(text_col).alias("_c")
-    ).select(F.col(id_col), F.col("_c"), F.sha2(F.col("_c"), 256).alias("_k"))
-    return (
-        canon.groupBy("_k")
-        .agg(F.min(id_col).alias(id_col), F.first("_c").alias(text_col))
-        .select(id_col, text_col)
-    )
-
-
-def minhash_dedup_pairs_canonical(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """:func:`minhash_dedup_pairs` over exact-canonical representatives
-    — the composition to run at corpus scale (see
-    :func:`exact_canonical_docs` for why).  Pair ids are the exact
-    groups' min-ids; combine with :func:`dedup_exact` output to expand
-    to member level."""
-    return minhash_dedup_pairs(
-        exact_canonical_docs(df, id_col, text_col), id_col, text_col, **kwargs
-    )
-
-
-def simhash_pairs_canonical(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """:func:`simhash_pairs` over exact-canonical representatives (the
-    identical-text flood hits simhash's segment buckets the same way)."""
-    return simhash_pairs(
-        exact_canonical_docs(df, id_col, text_col), id_col, text_col, **kwargs
     )
 
 

@@ -1,20 +1,15 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with
-a small typed header; decode / feature-extract / resize / frame-sample
-run as Arrow-batched ``mapInPandas`` stages (the same shape the
-reference uses for its vision stages, deepdoc/vision/operators.py —
-there per-image numpy ops behind an ONNX session).
+a small typed header; header parsing runs as an Arrow-batched
+``mapInPandas`` stage (the same shape the reference uses for its vision
+stages, deepdoc/vision/operators.py — there per-image numpy ops behind
+an ONNX session).
 
-The image/audio libraries are not available in this container, so the
-*codec* is stubbed two ways, clearly separated from the plumbing:
-
-* real formats (PNG/JPEG/WAV...) -> ``decode_real`` raises
-  ``NotImplementedError`` unless PIL is importable (import-try gate);
-* the deterministic fake container format below (``FIMG``/``FAUD``/
-  ``FVID`` headers) exercises the full Spark plumbing — schema,
-  partitioning, UDF signatures, Arrow batch shapes — end-to-end in
-  tests and queries.
+No image/audio codec is used: the deterministic fake container format
+below (``FIMG``/``FAUD``/``FVID`` headers) exercises the Spark
+plumbing — schema, partitioning, UDF signatures, Arrow batch shapes —
+end-to-end in tests and queries.
 
 Fake container layout (big-endian):
   FIMG | w:u16 | h:u16 | channels:u8 | payload bytes
@@ -45,32 +40,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("n_payload_bytes", T.LongType()),
     ]
 )
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def decode_real(payload: bytes):  # pragma: no cover - env-gated
-    """Real-codec decode (PNG/JPEG/...).  STUB: requires PIL, which is
-    not in this container; the Spark-side plumbing is identical to the
-    fake-format path."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "real image decode needs PIL; ship it via --py-files/venv "
-            "archives on the cluster"
-        ) from exc
-    import io
-
-    from PIL import Image
-
-    return Image.open(io.BytesIO(payload))
-
 
 def parse_header(payload: bytes | None) -> dict:
     """Typed metadata from the fake container header (None fields for
@@ -131,52 +100,6 @@ def media_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                 "sample_rate", "n_frames", "n_payload_bytes",
             ],
         )
-
-
-def byte_histogram(payload: bytes, bins: int = 16) -> list[float]:
-    """Deterministic stand-in feature extractor: normalized byte
-    histogram (the real path would be a vision model's embedding)."""
-    counts = [0] * bins
-    for b in payload:
-        counts[b * bins // 256] += 1
-    total = max(len(payload), 1)
-    return [c / total for c in counts]
-
-
-def image_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id, payload) -> fixed-dim feature vector per image row."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = parse_header(payload)
-            if m["media_type"] != "image":
-                continue
-            body = bytes(payload[9:])
-            rows.append((doc_id, byte_histogram(body)))
-        yield pd.DataFrame(rows, columns=["doc_id", "features"])
-
-
-def frame_sample_batches(every_n: int = 2):
-    """Factory: (doc_id, payload) -> one row per sampled video frame
-    (frame_ord, frame binary re-wrapped as FIMG)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = parse_header(payload)
-                if m["media_type"] != "video" or not m["n_frames"]:
-                    continue
-                body = bytes(payload[10:])
-                w, h = m["width"], m["height"]
-                frame_bytes = max(w * h, 1)
-                for i in range(0, m["n_frames"], every_n):
-                    frame = body[i * frame_bytes : (i + 1) * frame_bytes]
-                    wrapped = b"FIMG" + struct.pack(">HHB", w, h, 1) + frame
-                    rows.append((doc_id, i, bytearray(wrapped)))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_ord", "frame"])
-
-    return fn
 
 
 # --------------------------------------------------------------------------

@@ -349,26 +349,3 @@ def knn_pq(
         .select(query_id_col, "neighbor_id", "rank", "sim")
     )
 
-
-def pq_code_stats(
-    corpus: DataFrame,
-    n_sub: int = 8,
-    k_sub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Code-utilization histogram (sub_id, code, n) — the PQ 'index
-    build' summary, and a cheap skew check: a healthy fit spreads each
-    subspace across its ``k_sub`` codes."""
-    books = pq_train(
-        corpus, n_sub=n_sub, k_sub=k_sub, iters=iters,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
-    return (
-        codes.select(F.posexplode("codes").alias("sub_id", "code"))
-        .groupBy("sub_id", "code")
-        .agg(F.count("*").alias("n"))
-        .select("sub_id", "code", "n")
-    )

@@ -384,13 +384,6 @@ def lsh_signature_from(
     ).otherwise(packed)
 
 
-def lsh_signature(
-    vec: Column, n_bits: int = 16, seed: int = 7, dim: int | None = None
-) -> Column:
-    """Single-expression form; prefer lsh_signature_from on hot paths."""
-    return lsh_signature_from(as_double(vec), n_bits, seed)
-
-
 def knn_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -468,7 +461,7 @@ def knn_lsh(
 
 def lsh_signature_md5_from(v: Column, n_bits: int = 12, seed: int = 7) -> Column:
     """Sign sketch with md5-derived plane components — the cross-engine
-    twin of :func:`lsh_signature` (xxhash64 has no DuckDB equivalent;
+    twin of :func:`lsh_signature_from` (xxhash64 has no DuckDB equivalent;
     md5 hex prefixes do).  Component c(bit, dim) =
     int(md5("seed|bit|dim")[:15], 16) / 2^59 - 1 in [-1, 1); the
     long -> double cast rounds identically in both engines.
@@ -503,11 +496,6 @@ def lsh_signature_md5_from(v: Column, n_bits: int = 12, seed: int = 7) -> Column
             F.lit(0).cast("long")
         )
     return sig
-
-
-def lsh_signature_md5(vec: Column, n_bits: int = 12, seed: int = 7) -> Column:
-    """Single-expression form; prefer lsh_signature_md5_from on hot paths."""
-    return lsh_signature_md5_from(as_double(vec), n_bits, seed)
 
 
 def banded_keys(sig: Column, n_bits: int, n_bands: int) -> Column:

@@ -32,10 +32,6 @@ def word_count(col: str = "text") -> Column:
     )
 
 
-def add_token_count(df: DataFrame, col: str = "text") -> DataFrame:
-    return df.withColumn("n_tokens", word_count(col).cast("long"))
-
-
 def add_lang_id(df: DataFrame, col: str = "text") -> DataFrame:
     """ASCII-letter ratio heuristic: mirrors is_english / is_chinese
     (rag/nlp/__init__.py:228-257) as pure column expressions."""

@@ -7,8 +7,7 @@ just zip archives of XML parts, so these readers use ``zipfile`` +
 ``xml.etree`` only.  Output shapes mirror the reference:
 
 * xlsx -> per-row ``"header：value; ..."`` lines (`` ——sheetname``
-  suffix for non-default sheet names) and ≤256-row HTML chunks
-  (excel_parser.py:134-158, :89-132);
+  suffix for non-default sheet names, excel_parser.py:134-158);
 * docx -> (paragraph text, style name) pairs + tables as
   header-classified lines (docx_parser.py:25-139);
 * pptx -> per-slide joined text (ppt_parser.py).
@@ -21,7 +20,6 @@ from __future__ import annotations
 
 import re
 import zipfile
-from html import escape
 from io import BytesIO
 from xml.etree import ElementTree as ET
 
@@ -179,28 +177,6 @@ def xlsx_lines(data: bytes) -> list[str]:
                 line += " ——" + sheet
             res.append(line)
     return res
-
-
-def xlsx_html_chunks(data: bytes, chunk_rows: int = 256) -> list[str]:
-    """≤chunk_rows-row HTML tables with a header row per chunk
-    (excel_parser.py:89-132)."""
-    chunks = []
-    for sheet, rows in read_xlsx(data):
-        if not rows:
-            continue
-        head = "<tr>" + "".join(
-            f"<th>{escape(str(v).strip() if v is not None else '')}</th>" for v in rows[0]
-        ) + "</tr>"
-        body = rows[1:]
-        for lo in range(0, max(len(body), 1), chunk_rows):
-            tb = f"<table><caption>{sheet}</caption>" + head
-            for r in body[lo : lo + chunk_rows]:
-                tb += "<tr>" + "".join(
-                    f"<td>{'' if v is None else v}</td>" for v in r
-                ) + "</tr>"
-            tb += "</table>\n"
-            chunks.append(tb)
-    return chunks
 
 
 # --------------------------------------------------------------------------

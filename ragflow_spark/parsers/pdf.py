@@ -301,16 +301,3 @@ def is_english_pages(pages_chars: list[list[str]], seed: int = 42) -> bool:
         votes.append(_EN_RUN_RE.search(sample))
     n_pages = max(len(pages_chars), 1)
     return sum(1 for v in votes if v) > n_pages / 2
-
-
-def is_english_text(text: str, seed: int = 42, page_size: int = 2000) -> bool:
-    """Convenience wrapper over extracted text: split into page-sized
-    char lists and apply the sampled sniff.  Whitespace is dropped
-    first — pdfplumber's per-glyph chars (what the reference samples)
-    carry no space glyphs, and sampling shuffles chars anyway so a
-    space would spuriously break the 30-run."""
-    glyphs = [c for c in text if not c.isspace()]
-    pages = [
-        glyphs[i : i + page_size] for i in range(0, max(len(glyphs), 1), page_size)
-    ]
-    return is_english_pages(pages, seed)

@@ -49,12 +49,6 @@ def looks_english(s: str) -> bool:
     return ascii_ratio(s) > 0.8
 
 
-def looks_chinese(s: str) -> bool:
-    """CJK ratio > 0.2, mirroring ``is_chinese``
-    (rag/nlp/__init__.py:247-256)."""
-    return cjk_ratio(s) > 0.2
-
-
 # traditional -> simplified (rag_tokenizer.py:115-117 uses hanziconv).
 # The full conversion table is deploy-time data (hanziconv 0.3.2's
 # charmap is public): point RAGFLOW_SPARK_HANZI at a two-line file —

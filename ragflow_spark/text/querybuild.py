@@ -312,30 +312,3 @@ class QueryBuilder:
                     seen.add(s)
         return out
 
-
-def _cosine_rows(avec, bvecs):
-    """cosine(a, each b) without sklearn: plain numpy."""
-    import numpy as np
-
-    a = np.asarray(avec, dtype=float)
-    B = np.asarray(bvecs, dtype=float)
-    an = np.sqrt((a * a).sum()) or 1.0
-    bn = np.sqrt((B * B).sum(axis=1))
-    bn[bn == 0] = 1.0
-    return (B @ a) / (an * bn)
-
-
-def hybrid_similarity_of(
-    builder: "QueryBuilder", avec, bvecs, atks, btkss, tkweight=0.3, vtweight=0.7
-):
-    """``FulltextQueryer.hybrid_similarity`` (rag/nlp/query.py:219-237):
-    vector cosine (sklearn's cosine_similarity replaced by the numpy
-    identity) blended with token-set similarity; an all-zero vector row
-    falls back to pure token similarity."""
-    import numpy as np
-
-    sims = _cosine_rows(avec, bvecs)
-    tksim = builder.token_similarity(atks, btkss)
-    if np.sum(sims) == 0:
-        return np.array(tksim), tksim, sims
-    return sims * vtweight + np.array(tksim) * tkweight, tksim, sims

@@ -12,7 +12,7 @@ pinned, dependency-free estimator with cl100k-like magnitude:
 * whitespace                  -> 0 (cl100k folds the leading space)
 
 When ``RAGFLOW_SPARK_TIKTOKEN`` points at a cl100k ranks file, counting
-and truncation switch to the exact from-scratch BPE implementation
+switches to the exact from-scratch BPE implementation
 (``text.bpe`` — the public byte-pair-merge algorithm + the published
 pretokenizer pattern), making every budget reference-exact at deploy
 time.  Without it the estimator is the engine's single source of truth —
@@ -25,13 +25,6 @@ from __future__ import annotations
 import re
 
 from .bpe import deployed_encoder
-
-_TOKEN_RE = re.compile(
-    r"(?P<alpha>[A-Za-z]+)|(?P<num>[0-9]+)|(?P<other>[^\sA-Za-z0-9])"
-)
-_ALPHA_RUN = re.compile(r"[A-Za-z]+")
-_NUM_RUN = re.compile(r"[0-9]+")
-_OTHER_CHAR = re.compile(r"[^\sA-Za-z0-9]")
 
 # One token per match by construction: a greedy {1,7} letter block is
 # exactly one ceil(run/7) unit (likewise {1,3} for digit runs), and any
@@ -51,28 +44,3 @@ def count_tokens(text: str) -> int:
         return enc.count(text)
     return len(_COUNT_RE.findall(text))
 
-
-def truncate_tokens(text: str, max_tokens: int) -> str:
-    """Prefix of ``text`` whose token count is <= max_tokens (greedy by
-    the same lexer) — stand-in for the reference's tiktoken ``truncate``
-    (rag/utils/__init__.py:92-94); exact decode-of-prefix with a
-    deployed vocabulary."""
-    enc = deployed_encoder()
-    if enc is not None:
-        return enc.truncate(text, max_tokens)
-    if count_tokens(text) <= max_tokens:
-        return text
-    n = 0
-    end = 0
-    for m in _TOKEN_RE.finditer(text):
-        if m.lastgroup == "alpha":
-            step = (len(m.group()) + 6) // 7
-        elif m.lastgroup == "num":
-            step = (len(m.group()) + 2) // 3
-        else:
-            step = 1
-        if n + step > max_tokens:
-            break
-        n += step
-        end = m.end()
-    return text[:end]

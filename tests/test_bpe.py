@@ -1,7 +1,7 @@
 """Exact BPE (text/bpe.py): merge-order semantics, cl100k pretokenizer
 behavior, ranks-file loading, and the deploy-time env switch that makes
-``count_tokens``/``truncate_tokens`` vocabulary-exact
-(rag/utils/__init__.py:78-94 parity at deploy)."""
+``count_tokens`` vocabulary-exact (rag/utils/__init__.py:78-89 parity at
+deploy)."""
 
 from __future__ import annotations
 
@@ -66,25 +66,14 @@ def test_encode_known_ids(enc, ranks):
     # "the" -> single merged token; "thin" -> th + in
     assert enc.encode("the") == [ranks[b"the"]]
     assert enc.encode("thin") == [ranks[b"th"], ranks[b"in"]]
+    # a byte with no rank encodes as the -1 sentinel
+    assert BpeEncoder({b"a": 0, b"b": 1, b"ab": 2}).encode("aqb") == [0, -1, 1]
 
 
 def test_count_and_truncate(enc):
     text = "the thin cat"
     ids = enc.encode(text)
     assert enc.count(text) == len(ids)
-    assert enc.truncate(text, len(ids)) == text
-    # decode-of-prefix semantics: a cut mid-word keeps whole tokens only
-    cut = enc.truncate(text, 2)
-    assert text.startswith(cut) and 0 < len(cut) < len(text)
-
-
-def test_truncate_lossless_with_partial_vocabulary():
-    # "q" has no rank in this table; the kept prefix must still carry
-    # its raw bytes instead of silently dropping them
-    enc = BpeEncoder({b"a": 0, b"b": 1, b"ab": 2})
-    assert enc.encode("aqb") == [0, -1, 1]
-    assert enc.truncate("aqb", 2) == "aq"
-    assert enc.truncate("aqb", 3) == "aqb"
 
 
 def test_utf8_multibyte_counts(enc):
@@ -104,7 +93,6 @@ def test_env_switch_makes_count_exact(monkeypatch):
         # estimator counts ceil(7/7)=1 for "thinner"; exact BPE gives
         # th+in+n+er = 4 with the mini table -> proves the switch is live
         assert tokens.count_tokens("thinner") == 4
-        assert tokens.truncate_tokens("the thin", 1) == "the"
     finally:
         deployed_encoder.cache_clear()
 

@@ -15,10 +15,7 @@ import types
 
 import pytest
 
-from ragflow_spark.chunk.manual_template import (
-    manual_from_docx,
-    manual_pdf_chunks,
-)
+from ragflow_spark.chunk.manual_template import manual_pdf_chunks
 from ragflow_spark.text import tokenizer as our_tok
 from ragflow_spark.text.tokens import count_tokens
 from tests.conftest import read_reference
@@ -192,33 +189,3 @@ class TestManualParity:
             want = _ref_pdf(ref_chunk, secs, tbls, [])
             got = [c for c in manual_pdf_chunks(secs, tbls, []) if c.strip()]
             assert got == want, trial
-
-    def test_docx_adjacent_colspan(self):
-        import zipfile
-        from io import BytesIO
-
-        w = 'xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main"'
-        body = (
-            '<w:p><w:pPr><w:pStyle w:val="Heading1"/></w:pPr>'
-            "<w:r><w:t>Manual Title</w:t></w:r></w:p>"
-            "<w:p><w:r><w:t>body text</w:t></w:r></w:p>"
-            "<w:tbl><w:tr>"
-            "<w:tc><w:p><w:r><w:t>a</w:t></w:r></w:p></w:tc>"
-            "<w:tc><w:p><w:r><w:t>a</w:t></w:r></w:p></w:tc>"
-            "<w:tc><w:p><w:r><w:t>b</w:t></w:r></w:p></w:tc>"
-            "<w:tc><w:p><w:r><w:t>a</w:t></w:r></w:p></w:tc>"
-            "</w:tr></w:tbl>"
-        )
-        buf = BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            zf.writestr("[Content_Types].xml", "<Types/>")
-            zf.writestr(
-                "word/document.xml",
-                f"<w:document {w}><w:body>{body}</w:body></w:document>",
-            )
-        texts, tbls = manual_from_docx(buf.getvalue())
-        assert texts == ["Manual Title\n\nbody text"]
-        # ADJACENT fold only: a,a -> colspan 2; trailing lone a stays
-        assert tbls[0] == (
-            "<table><tr><td colspan='2'>a</td><td>b</td><td>a</td></tr></table>"
-        )

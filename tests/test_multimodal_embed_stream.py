@@ -5,7 +5,6 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from ragflow_spark.data.pagegen import pages_dataframe
@@ -41,25 +40,6 @@ def test_media_meta_and_stats(spark):
     assert rows[1]["media_type"] == "audio" and rows[1]["sample_rate"] == 16000
     stats = {r["media_type"]: r["n"] for r in media_type_stats(media).collect()}
     assert stats == {"image": 10, "audio": 10, "video": 10, "opaque": 10}
-
-
-def test_frame_sampling(spark):
-    from ragflow_spark.ops.multimodal import FEATURES_SCHEMA, frame_sample_batches, image_feature_batches
-
-    media = synthesize_media(spark, 12)
-    frames = media.select("doc_id", "payload").mapInPandas(
-        frame_sample_batches(every_n=2),
-        schema="doc_id long, frame_ord int, frame binary",
-    )
-    got = frames.collect()
-    assert got and all(r["frame_ord"] % 2 == 0 for r in got)
-    # sampled frames re-wrap as images -> feature extraction runs on them
-    feats = frames.select("doc_id", F.col("frame").alias("payload")).mapInPandas(
-        image_feature_batches, schema=FEATURES_SCHEMA
-    )
-    row = feats.first()
-    assert len(row["features"]) == 16
-    assert abs(sum(row["features"]) - 1.0) < 1e-6
 
 
 def test_embed_chunks_deterministic_and_searchable(spark):

@@ -13,7 +13,6 @@ from ragflow_spark.parsers.office import (
     read_docx,
     read_xlsx,
     sniff_office,
-    xlsx_html_chunks,
     xlsx_lines,
 )
 from ragflow_spark.spark.udfs import extract_document_ex, sniff_doc_type
@@ -106,13 +105,6 @@ def test_xlsx_lines_reference_shape():
         "name：apple; count：10",
         "name：pear; count：20",
     ]
-
-
-def test_xlsx_html_chunks():
-    chunks = xlsx_html_chunks(make_xlsx())
-    assert len(chunks) == 1
-    assert "<caption>Data</caption>" in chunks[0]
-    assert "<th>name</th>" in chunks[0] and "<td>apple</td>" in chunks[0]
 
 
 def test_read_docx_styles_runs_tables():

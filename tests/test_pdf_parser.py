@@ -150,14 +150,18 @@ def test_outline_cycle_is_bounded():
 
 
 def test_english_sniff():
-    from ragflow_spark.parsers.pdf import is_english_text
+    from ragflow_spark.parsers.pdf import is_english_pages
 
-    en = "The quick brown fox jumps over the lazy dog. " * 200
-    zh = "数据处理引擎按列扫描存储层提供过滤下推能力。" * 200
-    assert is_english_text(en) is True
-    assert is_english_text(zh) is False
+    def pages(text):
+        glyphs = [c for c in text if not c.isspace()]
+        return [glyphs[i : i + 2000] for i in range(0, len(glyphs), 2000)]
+
+    en = pages("The quick brown fox jumps over the lazy dog. " * 200)
+    zh = pages("数据处理引擎按列扫描存储层提供过滤下推能力。" * 200)
+    assert is_english_pages(en) is True
+    assert is_english_pages(zh) is False
     # deterministic across calls (seeded sampling)
-    assert is_english_text(en) == is_english_text(en)
+    assert is_english_pages(en) == is_english_pages(en)
 
 
 def test_english_sniff_regex_matches_reference_pattern():

@@ -85,38 +85,6 @@ def test_table_rows_available_for_splice(tagged_sections):
     assert any("name" in r for r in tables[0]["content"])
 
 
-def test_qa_template_over_real_bytes():
-    """QA pdf branch from raw bytes: question bullets walk the
-    positioned boxes, tables splice into the spanning answer
-    (rag/app/qa.py:108-170)."""
-    from ragflow_spark.chunk.qa import qa_from_pdf_boxes
-    from ragflow_spark.data.pdfgen import make_qa_pdf
-
-    pdf = make_qa_pdf(WORDS, doc_id=2)
-    boxes, mh, _cum, is_en = pdf_tagged_boxes(pdf)
-    rem, tables, _figs = extract_table_figure(
-        boxes, mh, is_english=is_en, page_cum_height=None
-    )
-    pages = pdf_pages_chars(pdf)
-    heights = [p["height"] for p in pages]
-    pairs = qa_from_pdf_boxes(
-        rem,
-        [(t["content"], t["positions"]) for t in tables],
-        lambda b: line_tag(b, [0.0] * len(heights), heights),
-        eng=is_en,
-    )
-    assert len(pairs) == 3
-    qs = [q for q, _a, _t in pairs]
-    assert qs[0].startswith("1. What is")
-    assert qs[1].startswith("2. How does")
-    assert qs[2].startswith("3. Why")
-    # the table spliced into answer 2 (its position sits inside it)
-    assert "name" in pairs[1][1]
-    assert "runtime" in pairs[0][1]
-    # every pair carries position tags
-    assert all(TAG_RE.search(t) for _q, _a, t in pairs)
-
-
 def test_cross_page_table_merge_from_real_bytes():
     """A table spanning the page break must merge into ONE table
     (extract_table_figure cross-page merge, pdf_parser.py:708-729) —

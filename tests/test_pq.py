@@ -22,7 +22,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ragflow_spark.ops.pq import knn_pq, pq_code_stats, pq_encode, pq_train
+from ragflow_spark.ops.pq import knn_pq, pq_encode, pq_train
 from ragflow_spark.ops.simsearch import knn_bruteforce
 
 
@@ -184,7 +184,14 @@ def test_pq_spec_replay_matches_numpy(spark):
 
 def test_pq_code_stats_spread_and_bounds(clustered):
     emb, _, _, _ = clustered
-    stats = pq_code_stats(emb, n_sub=8, k_sub=16, iters=3).collect()
+    books = pq_train(emb, n_sub=8, k_sub=16, iters=3)
+    stats = (
+        pq_encode(emb, books)
+        .select(F.posexplode("codes").alias("sub_id", "code"))
+        .groupBy("sub_id", "code")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    )
     by_sub: dict[int, int] = {}
     for r in stats:
         assert 0 <= r["code"] < 16

@@ -1,12 +1,11 @@
 """Black-box parity of the QA template's format variants vs the
-reference's own rag/app/qa.py ``chunk()`` (txt / csv / xlsx / markdown
-/ docx branches).  The reference module is executed from source with
-its heavy deps stubbed: openpyxl replaced by a fake workbook fed from
-OUR stdlib xlsx reader, python-docx by fake paragraph/table objects,
-``markdown`` by the identity function (this engine's documented
-deviation: answers stay raw markdown), and the tokenizer by ours on
-both sides.  Differences therefore isolate the pairing / heading-stack
-/ colspan logic."""
+reference's own rag/app/qa.py ``chunk()`` (txt / xlsx / docx branches).
+The reference module is executed from source with its heavy deps
+stubbed: openpyxl replaced by a fake workbook fed from OUR stdlib xlsx
+reader, python-docx by fake paragraph/table objects, ``markdown`` by
+the clean-room renderer, and the tokenizer by ours on both sides.
+Differences therefore isolate the pairing / heading-stack / colspan
+logic."""
 
 from __future__ import annotations
 
@@ -18,13 +17,11 @@ import pytest
 
 from ragflow_spark.chunk.qa import (
     docx_style_level,
-    qa_from_csv,
     qa_from_delimited,
     qa_from_docx,
-    qa_from_markdown,
     qa_from_xlsx,
 )
-from ragflow_spark.parsers.office import read_docx, read_xlsx
+from ragflow_spark.parsers.office import read_xlsx
 from ragflow_spark.text import tokenizer as our_tok
 from tests.conftest import read_reference
 from tests.test_office_parsers import make_xlsx
@@ -153,11 +150,9 @@ def ref_chunk():
     mod("rag", nlp=mods["rag.nlp"], utils=mods["rag.utils"])
     mod("docx", Document=_FakeDocument)
     mod("PIL", Image=types.SimpleNamespace(open=lambda *a, **k: None))
-    # the clean-room renderer stands in for the markdown package on the
-    # REFERENCE side too (r4): both pipelines render answers through the
-    # same function, so the comparison pins the full assembly incl. the
-    # rendered-HTML answers (the renderer itself is byte-checked against
-    # the real package at deploy by scripts/parity_markdown.py)
+    # the reference module imports the markdown package; the clean-room
+    # renderer stands in for it (byte-checked against the real package
+    # at deploy by scripts/parity_markdown.py)
     from ragflow_spark.text.md_render import render_markdown
 
     mod(
@@ -200,48 +195,17 @@ TXT = (
     "Q3?\tA3.\n"
 )
 
-CSV = (
-    'What is "AQE", really?,Adaptive query execution\n'
-    "unquoted continuation line\n"
-    '"Two words, one question?",Answer with no comma\n'
-    "Last?,Final answer\n"
-)
-
-MD = (
-    "# Spark\n"
-    "intro text\n"
-    "## Shuffles\n"
-    "they move rows\n"
-    "```\n# not a heading\n```\n"
-    "## Joins\n"
-    "broadcast beats sort-merge\n"
-    "### Hints\n"
-    "use broadcast()\n"
-)
-
 
 class TestQaFormatParity:
     def test_txt_branch(self, ref_chunk):
         ref = _contents(ref_chunk("qa.txt", binary=TXT.encode(), callback=_noop, lang="English"))
         assert qa_from_delimited(TXT) == ref
 
-    def test_csv_branch(self, ref_chunk):
-        ref = _contents(ref_chunk("qa.csv", binary=CSV.encode(), callback=_noop, lang="English"))
-        assert qa_from_csv(CSV) == ref
-
     def test_xlsx_branch(self, ref_chunk):
         data = make_xlsx()
         ref = _contents(ref_chunk("qa.xlsx", binary=data, callback=_noop, lang="English"))
         assert qa_from_xlsx(data) == ref
         assert len(ref) >= 2
-
-    def test_markdown_branch(self, ref_chunk):
-        ref = _contents(ref_chunk("qa.md", binary=MD.encode(), callback=_noop, lang="English"))
-        ours = qa_from_markdown(MD)
-        # both sides render answers through the same markdown renderer
-        # (reference via the sys.modules stub above) — byte-equal
-        assert ours == ref
-        assert any("<p>" in c for c in ours)
 
     def test_docx_branch(self, ref_chunk):
         paras = [

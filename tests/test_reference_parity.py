@@ -42,8 +42,6 @@ _NAMES = [
     "remove_contents_table",
     "make_colon_as_title",
     "title_frequency",
-    "QUESTION_PATTERN",
-    "qbullets_category",
 ]
 
 
@@ -466,25 +464,3 @@ def test_json_parser_parity(ref_json, doc, max_size):
     ours = split_json_text(doc.encode("utf-8"), max_chunk_size=max_size)
     assert ours == theirs
 
-
-# -- qbullets_category ------------------------------------------------------
-
-
-@pytest.mark.parametrize(
-    "sections",
-    [
-        ["1. What is this?", "an answer", "2. And that?", "more"],
-        ["第一问 什么是引擎", "回答", "第二问 为什么"],
-        ["QUESTION ONE", "answer", "QUESTION TWO", "answer"],
-        ["（一）问题", "（二）另一个"],
-        ["no bullets here", "plain text"],
-    ],
-)
-def test_qbullets_category_parity(ref, sections):
-    from ragflow_spark.chunk.qa import qbullets_category
-
-    their_idx, their_pat = ref["qbullets_category"](list(sections))
-    our_idx, our_pat = qbullets_category(list(sections))
-    assert our_idx == their_idx
-    if our_idx >= 0:
-        assert our_pat.pattern == their_pat

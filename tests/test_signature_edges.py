@@ -46,19 +46,18 @@ def test_embedding_near_dup_lsh_survives_empty_vector(spark):
 
 
 def test_minhash_signature_empty_grams_keeps_null_api(spark):
-    """Public-API parity with the pre-rewrite array_min form: an empty
-    gram array signs as [null]*K, never leaking the aggregate's _M31
-    init sentinels into persisted signatures."""
-    from ragflow_spark.ops.dedup import minhash_signature
+    """Parity with the pre-rewrite array_min form: an empty hash array
+    signs as [null]*K, never leaking the aggregate's _M31 init
+    sentinels into persisted signatures."""
+    from ragflow_spark.ops.dedup import _M31, _affine_min_signature
 
     df = spark.createDataFrame(
         [(1, ["abc", "bcd"]), (2, [])], "id long, grams array<string>"
     )
+    hashes = F.transform(F.col("grams"), lambda g: F.pmod(F.xxhash64(g), F.lit(_M31)))
     rows = {
         r["id"]: r["sig"]
-        for r in df.select(
-            "id", minhash_signature(F.col("grams"), num_hashes=4).alias("sig")
-        ).collect()
+        for r in df.select("id", _affine_min_signature(hashes, 4).alias("sig")).collect()
     }
     assert rows[2] == [None, None, None, None]
     assert all(v is not None for v in rows[1])
@@ -147,43 +146,6 @@ def test_degenerate_vectors_never_rank_or_crash(spark):
     assert sum(r["n_members"] for r in stats) == 6
     for r in stats:
         assert r["avg_sim"] is None or not math.isnan(r["avg_sim"]), r
-
-
-def test_canonical_composition_defuses_identical_text_flood(spark):
-    """A group of m identical documents floods every band bucket with
-    m members (m(m-1)/2 candidates from ONE group).  The canonical
-    composition runs near-dup over one representative per exact group,
-    removing the quadratic term with no lost information."""
-    from ragflow_spark.ops.dedup import (
-        exact_canonical_docs,
-        minhash_dedup_pairs_canonical,
-        minhash_lsh_candidates,
-        simhash_pairs_canonical,
-    )
-
-    rows = [(i, "the same boilerplate page text repeated everywhere") for i in range(200)]
-    # a deterministic near-dup pair: 60 words, last one changed ->
-    # word-3-shingle jaccard 0.966, well above the ~0.84 banding
-    # collision threshold (hashes are seeded, so collision is stable)
-    base = " ".join(f"w{i}" for i in range(60))
-    near = " ".join(f"w{i}" for i in range(59)) + " changed"
-    rows += [(10_000, base), (10_001, near)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    reps = exact_canonical_docs(docs)
-    assert reps.count() == 3  # one per distinct text
-    # representative of the flood group is its min id
-    assert {r["doc_id"] for r in reps.collect()} == {0, 10_000, 10_001}
-
-    flood = minhash_lsh_candidates(docs, shingle="word").count()
-    canon = minhash_lsh_candidates(reps, shingle="word").count()
-    assert flood >= 200 * 199 // 2  # quadratic in the group
-    assert canon <= 3  # at most the cross-group candidates
-
-    near = minhash_dedup_pairs_canonical(docs, threshold=0.5, shingle="word")
-    assert {(r["id_a"], r["id_b"]) for r in near.collect()} == {(10_000, 10_001)}
-    sp = simhash_pairs_canonical(docs, max_hamming=16)
-    assert (10_000, 10_001) in {(r["id_a"], r["id_b"]) for r in sp.collect()}
 
 
 def test_dimension_mismatch_rows_excluded_not_null(spark):

@@ -2,19 +2,10 @@
 
 from __future__ import annotations
 
-from ragflow_spark.chunk.qa import (
-    index_int,
-    qa_chunk,
-    qa_from_delimited,
-    qa_from_markdown,
-    qa_from_sections,
-    qbullets_category,
-    rm_prefix,
-)
+from ragflow_spark.chunk.qa import qa_chunk, qa_from_delimited, rm_prefix
 from ragflow_spark.chunk.table_template import (
     field_name,
     infer_column_type,
-    parse_delimited,
     table_chunks,
     table_rows,
     trans_bool,
@@ -48,12 +39,6 @@ def test_trans_helpers():
     assert trans_bool("maybe") is None
     assert trans_datetime("2023-04-05") == "2023-04-05 00:00:00"
     assert trans_datetime("not a date") is None
-
-
-def test_parse_delimited_drops_bad_arity():
-    headers, rows = parse_delimited("a\tb\n1\t2\nbroken\n3\t4")
-    assert headers == ["a", "b"]
-    assert rows == [["1", "2"], ["3", "4"]]
 
 
 def test_table_rows_and_field_map():
@@ -107,20 +92,6 @@ def test_table_rows_duplicate_field_slugs():
 # -- qa ---------------------------------------------------------------------
 
 
-def test_index_int_formats():
-    assert index_int("7") == 7
-    assert index_int("three") == 3
-    assert index_int("IX") == 9
-    assert index_int("十二") == 12
-    assert index_int("junk") == -1
-
-
-def test_qbullets_category_picks_dominant():
-    secs = ["1. What is Spark?", "2. Why partition?", "3. How to shuffle?"]
-    idx, pat = qbullets_category(secs)
-    assert pat is not None and pat.match("1. ")
-
-
 def test_rm_prefix_and_chunk_format():
     assert rm_prefix("Question: What?") == "What?"
     assert rm_prefix("答：因为") == "因为"
@@ -135,34 +106,3 @@ def test_qa_from_delimited_state_machine():
         "Question: q2\tAnswer: a2",
     ]
 
-
-def test_qa_from_markdown_heading_stack():
-    md = "# Topic\n## What is X?\nX is a thing.\n## Why X?\nBecause.\n"
-    out = qa_from_markdown(md)
-    assert len(out) == 2
-    assert out[0].startswith("Question: Topic\nWhat is X?\t")
-    # answers render to HTML (rag/app/qa.py:438 markdown(...))
-    assert out[0].endswith("Answer: <p>X is a thing.</p>")
-    out_raw = qa_from_markdown(md, render=False)
-    assert out_raw[0].endswith("Answer: X is a thing.")
-
-
-def test_qa_from_markdown_code_block_ignored():
-    # the ``` fence shields the inner line from QUESTION detection in
-    # the heading-stack walk; the renderer (like Python-Markdown
-    # without the fenced_code extension) still renders the inner line
-    # per plain markdown rules
-    md = "## Q?\n```\n# not a heading\n```\nanswer\n"
-    out = qa_from_markdown(md)
-    assert len(out) == 1 and "not a heading" in out[0]
-    out_raw = qa_from_markdown(md, render=False)
-    assert len(out_raw) == 1 and "# not a heading" in out_raw[0]
-
-
-def test_qa_from_sections():
-    # note: a leading "answer "/"Q: " style prefix is stripped by
-    # rm_prefix (reference parity), so body text avoids those words
-    secs = ["1. First question?", "the first reply", "2. Second question?", "the second reply"]
-    out = qa_from_sections(secs)
-    assert len(out) == 2
-    assert out[1] == "Question: 2. Second question?\tAnswer: the second reply"

@@ -14,17 +14,13 @@ from email.message import EmailMessage
 import pytest
 
 from ragflow_spark.chunk.merge import greedy_merge
-from ragflow_spark.chunk.tag_template import (
-    tag_from_csv,
-    tag_from_delimited,
-    tag_from_xlsx,
-)
+from ragflow_spark.chunk.tag_template import tag_from_csv, tag_from_delimited
 from ragflow_spark.extract.html import extract_html
 from ragflow_spark.parsers.eml import email_chunks, parse_eml
 from ragflow_spark.parsers.txt import split_txt
 from ragflow_spark.text import tokenizer as our_tok
 from tests.conftest import read_reference
-from tests.test_qa_formats_parity import _fake_load_workbook, make_xlsx
+from tests.test_qa_formats_parity import _fake_load_workbook
 
 REF_TAG = "/root/reference/rag/app/tag.py"
 REF_EMAIL = "/root/reference/rag/app/email.py"
@@ -156,14 +152,6 @@ class TestTagParity:
         ref = ref_tag_chunk("t.csv", binary=TAG_CSV.encode(), callback=_noop)
         want = [(d["content_with_weight"], d["tag_kwd"]) for d in ref]
         assert tag_from_csv(TAG_CSV) == want
-
-    def test_xlsx(self, ref_tag_chunk):
-        data = make_xlsx()
-        ref = ref_tag_chunk("t.xlsx", binary=data, callback=_noop)
-        want = [(d["content_with_weight"], d["tag_kwd"]) for d in ref]
-        got = tag_from_xlsx(data)
-        assert got == want
-        assert len(got) >= 2
 
     def test_tag_normalization(self):
         got = tag_from_delimited("c\ta.b, , x.y.z ,w\n")

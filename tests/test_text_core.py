@@ -3,13 +3,12 @@
 from ragflow_spark.text.codec import decode_bytes, detect_codec
 from ragflow_spark.text.normalize import (
     full_to_half,
-    looks_chinese,
     looks_english,
     squeeze_space,
 )
 from ragflow_spark.text.porter import lemmatize_noun, porter_stem
 from ragflow_spark.text.tokenizer import content_tokens, fine_grained, tokenize_text
-from ragflow_spark.text.tokens import count_tokens, truncate_tokens
+from ragflow_spark.text.tokens import count_tokens
 
 
 class TestCodec:
@@ -55,10 +54,6 @@ class TestTokens:
     def test_punct(self):
         assert count_tokens("a,b") == 3
 
-    def test_truncate(self):
-        t = truncate_tokens("one two three four five", 2)
-        assert t == "one two"
-
     def test_monotone(self):
         a = "spark engine " * 10
         assert count_tokens(a) > count_tokens(a[: len(a) // 2])
@@ -73,8 +68,6 @@ class TestNormalize:
 
     def test_lang_heuristics(self):
         assert looks_english("Plain English text, nothing else!")
-        assert looks_chinese("这是中文句子")
-        assert not looks_chinese("english only")
 
 
 class TestPorter:
