@@ -94,9 +94,9 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Demo ner/df/synonym resources over the synthetic corpus vocabulary —
 # deterministic stand-ins for rag/res/ner.json + term.freq +
-# synonym.json (production points RAGFLOW_SPARK_RES_DIR at the real
-# files; reference-source parity is tested in
-# tests/test_term_weight_parity.py).  The whitespace tokenizer keeps
+# synonym.json (term_weight.load_resources and synonyms.load_synonyms
+# read the real files from a directory; reference-source parity is
+# tested in tests/test_term_weight_parity.py).  The whitespace tokenizer keeps
 # query terms aligned with norm_text() corpus tokens so a DuckDB
 # oracle can replay the scoring bit-for-bit.
 _DEMO_NE = {"spark": "corp", "flink": "corp", "warehouse": "loca"}

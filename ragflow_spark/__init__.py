@@ -5,10 +5,11 @@ RAGFlow's deepdoc + chunking stack (reference: tuxmai/ragflow v0.20.1),
 re-expressed Spark-first:
 
 * input:  a Common-Crawl-style table ``pages(url, warc_ts, html, text, lang)``
-* output: ``extracted(url, title, text, sections)`` and
-  ``chunks(url, chunk_ord, content, content_ltks, content_sm_ltks, ...)``
+* output: ``chunks(url, chunk_ord, content, content_ltks, content_sm_ltks, ...)``,
+  committed per url-hash bucket; the driver logs each commit in a resume
+  manifest
 * all per-document logic runs inside Arrow-vectorized ``mapInPandas`` UDFs,
-  all corpus-level logic (dedup, metrics, manifest joins) is DataFrame ops.
+  all corpus-level logic (bucketing, dedup, metrics) is DataFrame ops.
 
 No code is copied from the reference; behavior is matched from its public
 semantics (file:line citations in each module's docstring).

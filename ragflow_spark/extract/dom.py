@@ -121,20 +121,14 @@ class _TreeBuilder(HTMLParser):
         self.stack = [self.root]
         self._raw: str | None = None
 
-    # current open node
-    @property
-    def top(self) -> Node:
-        return self.stack[-1]
-
     def handle_starttag(self, tag, attrs):
         if self._raw:
             return
         stack = self.stack
-        # implicit closes inlined (the _implicit_close calls cost a
-        # method call per candidate tag on the hottest handler); the
-        # branches are mutually exclusive — "li"/"td"/"th"/"tr" are
-        # not members of _P_CLOSERS — and each re-checks the NEW top
-        # after a pop, exactly like the sequential calls did
+        # implicit closes inlined (a helper would cost a method call
+        # per candidate tag on the hottest handler); the branches are
+        # mutually exclusive — "li"/"td"/"th"/"tr" are not members of
+        # _P_CLOSERS — and each re-checks the NEW top after a pop
         if tag in _P_CLOSERS:
             if stack[-1].tag == "p":
                 stack.pop()
@@ -196,10 +190,6 @@ class _TreeBuilder(HTMLParser):
             self.stack[-1].children.append(data)
 
     # -- helpers -----------------------------------------------------
-    def _implicit_close(self, tag: str) -> None:
-        if self.top.tag == tag:
-            self.stack.pop()
-
     def _pop_to(self, tag: str) -> None:
         stack = self.stack
         if stack[-1].tag == tag:  # well-formed close: the common case

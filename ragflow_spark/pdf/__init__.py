@@ -6,25 +6,3 @@ detector stages (OCR / layout / TSR models) are optional plugins that
 *tag* boxes; all downstream logic is pure Python/numpy and is covered
 by synthetic-box tests.
 """
-
-from .geometry import (  # noqa: F401
-    cleanup_layouts,
-    concat_downward,
-    filter_scraps,
-    find_max_overlap,
-    find_overlap_with_threshold,
-    find_tightest_horizontal_fit,
-    line_tag,
-    merge_horizontal,
-    merge_same_bullet,
-    merge_vertical,
-    overlap_area,
-    parse_line_tags,
-    proj_level,
-    remove_tags,
-    drop_toc_boxes,
-    sort_x_first,
-    sort_y_first,
-)
-from .tablefig import extract_table_figure  # noqa: F401
-from .tsr import block_type, construct_table  # noqa: F401

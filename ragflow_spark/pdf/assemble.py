@@ -31,12 +31,12 @@ import re
 Char = dict
 Box = dict
 
-_ALNUM_PAIR = re.compile(r"[0-9a-zA-Z,.:;!%]+")
-# ``_ALNUM_PAIR.match(a + b)`` is truthy iff the concatenation's FIRST
-# char is in the class (match anchors at pos 0; the + quantifier never
-# constrains beyond it), i.e. iff a's first char is (a is non-empty at
-# the use site) — so the hot pre-pass tests set membership instead of
-# allocating the concat and running the regex per adjacent pair
+# The reference's ``re.match(r"[0-9a-zA-Z,.:;!%]+", a + b)`` is truthy
+# iff the concatenation's FIRST char is in the class (match anchors at
+# pos 0; the + quantifier never constrains beyond it), i.e. iff a's
+# first char is (a is non-empty at the use site) — so the hot pre-pass
+# tests set membership instead of allocating the concat and running the
+# regex per adjacent pair
 _GAP_FIRST = frozenset("0123456789,.:;!%"
                        "abcdefghijklmnopqrstuvwxyz"
                        "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
@@ -65,7 +65,7 @@ def insert_word_gaps(chars: list[Char]) -> list[Char]:
         if (
             at
             and bt
-            and at[0] in _GAP_FIRST  # == _ALNUM_PAIR.match(at + bt)
+            and at[0] in _GAP_FIRST  # == the reference's regex on at + bt
             # min(bw, aw) / 2, as the builtin picks on ties and NaN
             and b["x0"] - ax1 >= (aw if aw < bw else bw) / 2
         ):

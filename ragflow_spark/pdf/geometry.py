@@ -1,4 +1,4 @@
-"""Layout-box geometry: reading order, spatial joins, merges, tags.
+"""Layout-box geometry: reading order, merges, TOC removal, tags.
 
 A *box* is a dict with at least ``x0 x1 top bottom text page_number``
 and optionally ``layout_type layoutno score R C``.  Coordinates grow
@@ -8,12 +8,9 @@ Semantics mirror the reference's deepdoc geometry stack — behaviors
 re-derived from:
 * sorts: deepdoc/vision/recognizer.py:54-111 (threshold-tolerant
   lexicographic — the XY-cut reading-order reconstruction)
-* overlap joins: deepdoc/vision/recognizer.py:113-281
 * merges: deepdoc/parser/pdf_parser.py:374-479 (_text_merge,
   _naive_vertical_merge), :481-483 (_concat_downward is a Y-sort in
-  this snapshot — kept as-is for parity), :593-666 (_filter_forpages,
-  _merge_with_same_bullet)
-* projection filter: deepdoc/parser/pdf_parser.py:881-992
+  this snapshot — kept as-is for parity), :593-666 (_filter_forpages)
 * position tags: deepdoc/parser/pdf_parser.py:905-920
 
 This is per-document logic: it runs inside one Arrow batch of a
@@ -78,119 +75,6 @@ def sort_rows_first(boxes: list[Box], threshold: float = 0) -> list[Box]:
 
 def sort_cols_first(boxes: list[Box], threshold: float = 0) -> list[Box]:
     return _stable_bubble(sort_x_first(boxes, threshold), "C", "top")
-
-
-# --------------------------------------------------------------------------
-# spatial joins
-# --------------------------------------------------------------------------
-
-
-def overlap_area(a: Box, b: Box, ratio: bool = True) -> float:
-    """Intersection area of a and b; if ``ratio``, normalized by a's
-    own area (asymmetric — "how much of a does b cover")."""
-    if b["x0"] > a["x1"] or b["x1"] < a["x0"]:
-        return 0.0
-    if b["bottom"] < a["top"] or b["top"] > a["bottom"]:
-        return 0.0
-    w = min(a["x1"], b["x1"]) - max(a["x0"], b["x0"])
-    h = min(a["bottom"], b["bottom"]) - max(a["top"], b["top"])
-    area_a = (a["x1"] - a["x0"]) * (a["bottom"] - a["top"])
-    ov = w * h if area_a != 0 else 0.0
-    if ov > 0 and ratio:
-        ov /= area_a
-    return ov
-
-
-def find_max_overlap(box: Box, boxes_sorted_by_y: list[Box]) -> int | None:
-    """Index of the y-sorted box with max overlap vs ``box`` (binary
-    search narrows the y-range, then a linear scan maximizes)."""
-    bxs = boxes_sorted_by_y
-    if not bxs:
-        return None
-    s, e = 0, len(bxs)
-    while s < e:
-        mid = (s + e) // 2
-        if box["bottom"] < bxs[mid]["top"]:
-            e = mid
-        elif box["top"] > bxs[mid]["bottom"]:
-            s = mid + 1
-        else:
-            break
-    best_i, best = None, 0.0
-    for i in range(len(bxs)):
-        ov = overlap_area(bxs[i], box)
-        if ov > best:
-            best_i, best = i, ov
-    return best_i
-
-
-def find_overlap_with_threshold(box: Box, boxes: list[Box], thr: float = 0.3) -> int | None:
-    """Max mutual-overlap partner, ignoring overlaps below ``thr``."""
-    best_i, best = None, (thr, 0.0)
-    for i, b in enumerate(boxes):
-        ov = (overlap_area(box, b), overlap_area(b, box))
-        if ov < best:
-            continue
-        best_i, best = i, ov
-    return best_i
-
-
-def find_tightest_horizontal_fit(box: Box, boxes: list[Box]) -> int | None:
-    """Partner in the same layout whose left/right/center x-distance is
-    minimal (used to slot a stray box into its column)."""
-    best_i, best = None, float("inf")
-    for i, b in enumerate(boxes):
-        if box.get("layoutno", "0") != b.get("layoutno", "0"):
-            continue
-        d = min(
-            abs(box["x0"] - b["x0"]),
-            abs(box["x1"] - b["x1"]),
-            abs(box["x0"] + box["x1"] - b["x0"] - b["x1"]) / 2,
-        )
-        if d < best:
-            best_i, best = i, d
-    return best_i
-
-
-def cleanup_layouts(
-    boxes: list[Box], layouts: list[Box], far: int = 2, thr: float = 0.7
-) -> list[Box]:
-    """Drop the worse of two near-duplicate layout regions: by detector
-    score when both have one, else by total covered text-box area."""
-
-    def disjoint(a: Box, b: Box) -> bool:
-        return (
-            a["x1"] < b["x0"]
-            or a["x0"] > b["x1"]
-            or a["bottom"] < b["top"]
-            or a["top"] > b["bottom"]
-        )
-
-    lts = list(layouts)
-    i = 0
-    while i + 1 < len(lts):
-        j = i + 1
-        while j < min(i + far, len(lts)) and (
-            lts[i].get("type", "") != lts[j].get("type", "") or disjoint(lts[i], lts[j])
-        ):
-            j += 1
-        if j >= min(i + far, len(lts)):
-            i += 1
-            continue
-        if overlap_area(lts[i], lts[j]) < thr and overlap_area(lts[j], lts[i]) < thr:
-            i += 1
-            continue
-        if lts[i].get("score") and lts[j].get("score"):
-            lts.pop(j if lts[i]["score"] > lts[j]["score"] else i)
-            continue
-        cover_i = sum(
-            overlap_area(b, lts[i], False) for b in boxes if not disjoint(b, lts[i])
-        )
-        cover_j = sum(
-            overlap_area(b, lts[j], False) for b in boxes if not disjoint(b, lts[j])
-        )
-        lts.pop(j if cover_i > cover_j else i)
-    return lts
 
 
 # --------------------------------------------------------------------------
@@ -290,41 +174,6 @@ def concat_downward(boxes: list[Box]) -> list[Box]:
     return sort_y_first(boxes, 0)
 
 
-_BULLET_ALPHA = set("qwertyuopasdfghjklzxcvbnm")
-
-
-def merge_same_bullet(boxes: list[Box], is_cjk=None) -> list[Box]:
-    """Join consecutive boxes that open with the identical bullet char
-    (non-letter, non-CJK)."""
-    if is_cjk is None:
-        is_cjk = lambda ch: "一" <= ch <= "鿿"  # noqa: E731
-    bxs = list(boxes)
-    i = 0
-    while i + 1 < len(bxs):
-        a, b = bxs[i], bxs[i + 1]
-        if not a["text"].strip():
-            bxs.pop(i)
-            continue
-        if not b["text"].strip():
-            bxs.pop(i + 1)
-            continue
-        ca, cb = a["text"].strip()[0], b["text"].strip()[0]
-        if (
-            ca != cb
-            or ca.lower() in _BULLET_ALPHA
-            or is_cjk(ca)
-            or a["top"] > b["bottom"]
-        ):
-            i += 1
-            continue
-        b["text"] = a["text"] + "\n" + b["text"]
-        b["x0"] = min(a["x0"], b["x0"])
-        b["x1"] = max(a["x1"], b["x1"])
-        b["top"] = a["top"]
-        bxs.pop(i)
-    return bxs
-
-
 # --------------------------------------------------------------------------
 # TOC / dirty-page removal
 # --------------------------------------------------------------------------
@@ -396,117 +245,8 @@ def drop_toc_boxes(boxes: list[Box], n_pages: int) -> list[Box]:
 
 
 # --------------------------------------------------------------------------
-# projection levels + scrap filter
-# --------------------------------------------------------------------------
-
-_PROJ_PATTERNS: list[tuple[re.Pattern, int]] = [
-    (re.compile(r"第[零一二三四五六七八九十百]+章"), 1),
-    (re.compile(r"第[零一二三四五六七八九十百]+[条节]"), 2),
-    (re.compile(r"[零一二三四五六七八九十百]+[、 　]"), 3),
-    (re.compile(r"[\(（][零一二三四五六七八九十百]+[）\)]"), 4),
-    (re.compile(r"[0-9]+(、|\.[　 ]|\.[^0-9])"), 5),
-    (re.compile(r"[0-9]+\.[0-9]+(、|[. 　]|[^0-9])"), 6),
-    (re.compile(r"[0-9]+\.[0-9]+\.[0-9]+(、|[ 　]|[^0-9])"), 7),
-    (re.compile(r"[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+(、|[ 　]|[^0-9])"), 8),
-    (re.compile(r".{,48}[：:?？]$"), 9),
-    (re.compile(r"[0-9]+）"), 10),
-    (re.compile(r"[\(（][0-9]+[）\)]"), 11),
-    (re.compile(r"[零一二三四五六七八九十百]+是"), 12),
-    (re.compile(r"[⚫•➢✓]"), 12),
-]
-_NUMERIC_LINE = re.compile(r"[0-9 ().,%%+/-]+$")
-
-
-def proj_level(line: str) -> int | None:
-    """Outline level of a line by its numbering pattern; None if plain
-    text, False-y for pure-numeric junk."""
-    if len(line) <= 2:
-        return None
-    if _NUMERIC_LINE.match(line):
-        return None
-    for pat, level in _PROJ_PATTERNS:
-        if pat.match(line):
-            return level
-    return None
-
-
-def filter_scraps(
-    boxes: list[Box],
-    page_width: list[float],
-    mean_height: list[float],
-) -> str:
-    """Keep only useful boxes (layout-typed, wide, or tall), grow each
-    seed downward by projection/x-proximity DFS, and drop narrow scrap
-    groups; groups join with newlines, documents with blank lines."""
-
-    def width(b: Box) -> float:
-        return b["x1"] - b["x0"]
-
-    def x_dis(a: Box, b: Box) -> float:
-        return min(
-            abs(a["x1"] - b["x0"]),
-            abs(a["x0"] - b["x1"]),
-            abs(a["x0"] + a["x1"] - b["x0"] - b["x1"]) / 2,
-        )
-
-    def useful(b: Box) -> bool:
-        if b.get("layout_type"):
-            return True
-        if width(b) > page_width[b["page_number"] - 1] / 3:
-            return True
-        return b["bottom"] - b["top"] > mean_height[b["page_number"] - 1]
-
-    bxs = list(boxes)
-    out: list[str] = []
-    while bxs:
-        lines: list[Box] = []
-        widths: list[float] = []
-        pw = page_width[bxs[0]["page_number"] - 1]
-        mh = mean_height[bxs[0]["page_number"] - 1]
-        seed_level = proj_level(bxs[0]["text"]) or bxs[0].get("layout_type", "") == "title"
-
-        # recursion-then-pop ordering and the min/center x-distance both
-        # affect which boxes land in the 20-box lookahead window — kept
-        # exactly as the reference (pdf_parser.py:936-957), parity-tested
-        def grow(line: Box, start: int) -> None:
-            lines.append(line)
-            widths.append(width(line))
-            level = proj_level(line["text"]) or line.get("layout_type", "") == "title"
-            for k in range(start + 1, min(start + 20, len(bxs))):
-                if bxs[k]["page_number"] - line["page_number"] > 0:
-                    break
-                if (
-                    not level
-                    and _y_dis(line, bxs[k]) >= 3 * mh
-                    and line["bottom"] - line["top"] < 1.5 * mh
-                ):
-                    break
-                if not useful(bxs[k]):
-                    continue
-                if level or x_dis(bxs[k], line) < pw / 10:
-                    grow(bxs[k], k)
-                    bxs.pop(k)
-                    break
-
-        try:
-            if useful(bxs[0]):
-                grow(bxs[0], 0)
-        except Exception:  # noqa: BLE001 - recursion guard (reference parity)
-            pass
-        bxs.pop(0)
-        mw = sum(widths) / len(widths) if widths else float("nan")
-        # no `lines and` guard: an empty group with a heading-level seed
-        # still emits (as "") in the reference — quirk preserved
-        if seed_level or mw / pw >= 0.35 or mw > 200:
-            out.append("\n".join(ln["text"] + ln.get("_tag", "") for ln in lines))
-    return "\n\n".join(out)
-
-
-# --------------------------------------------------------------------------
 # position tags
 # --------------------------------------------------------------------------
-
-_TAG_RE = re.compile(r"@@([0-9-]+)\t([0-9.\-]+)\t([0-9.\-]+)\t([0-9.\-]+)\t([0-9.\-]+)##")
 
 
 def line_tag(box: Box, page_cum_height: list[float], page_heights: list[float]) -> str:
@@ -527,17 +267,3 @@ def line_tag(box: Box, page_cum_height: list[float], page_heights: list[float]) 
         "-".join(str(p) for p in pn), box["x0"], box["x1"], top, bottom
     )
 
-
-def remove_tags(text: str) -> str:
-    return _TAG_RE.sub("", text)
-
-
-def parse_line_tags(text: str) -> list[tuple[list[int], float, float, float, float]]:
-    """Extract (pages, x0, x1, top, bottom) spans from tagged text."""
-    out = []
-    for m in _TAG_RE.finditer(text):
-        pages = [int(p) for p in m.group(1).split("-")]
-        out.append(
-            (pages, float(m.group(2)), float(m.group(3)), float(m.group(4)), float(m.group(5)))
-        )
-    return out

@@ -1,4 +1,4 @@
-"""The extraction job: pages -> extracted + chunks, resumable.
+"""The extraction job: pages -> chunks, committed per bucket, resumable.
 
 Restates the reference's ingest pipeline (SURVEY.md §3.1) as one Spark
 job.  Scale design (100 TB / 10^12 rows):
@@ -393,7 +393,7 @@ def _chunk_plan(pruned: DataFrame, cfg: PipelineConfig, mode_acc=None) -> DataFr
 
 
 def transform_chunks(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The logical plan: pages -> chunk rows, batch or streaming."""
+    """The logical plan: pages -> chunk rows."""
     return _chunk_plan(_prune_for_udf(pages), cfg)
 
 

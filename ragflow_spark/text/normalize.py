@@ -2,8 +2,7 @@
 
 Behavior matched from:
 * full-width -> half-width (``strQ2B``, rag/nlp/rag_tokenizer.py:101-113)
-* English / Chinese ratio heuristics (rag/nlp/__init__.py:228-257)
-* ``rmSpace`` (rag/utils/__init__.py:37-39)
+* the English ratio heuristic (rag/nlp/__init__.py:228-244)
 """
 
 from __future__ import annotations
@@ -24,22 +23,10 @@ def full_to_half(s: str) -> str:
     return s.translate(_Q2B_TABLE)
 
 
-def squeeze_space(s: str) -> str:
-    """Collapse runs of whitespace to one space, trim ends."""
-    return re.sub(r"\s+", " ", s).strip()
-
-
 def ascii_ratio(s: str) -> float:
     if not s:
         return 0.0
     hits = sum(1 for ch in s if _EN_CHAR.fullmatch(ch))
-    return hits / len(s)
-
-
-def cjk_ratio(s: str) -> float:
-    if not s:
-        return 0.0
-    hits = sum(1 for ch in s if "一" <= ch <= "鿿")
     return hits / len(s)
 
 

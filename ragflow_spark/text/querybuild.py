@@ -253,33 +253,6 @@ class QueryBuilder:
             )
         return None, keywords
 
-    # -- token-set similarity (query.py:239-263) --------------------------
-    def token_similarity(self, atks, btkss) -> list[float]:
-        def to_dict(tks):
-            if isinstance(tks, str):
-                tks = tks.split()
-            d: dict[str, float] = {}
-            for t, c in self.tw.weights(tks, preprocess=False):
-                d[t] = d.get(t, 0.0) + c
-            return d
-
-        ad = to_dict(atks)
-        return [self.similarity(ad, to_dict(b)) for b in btkss]
-
-    def similarity(self, qtwt, dtwt) -> float:
-        if isinstance(dtwt, str):
-            dtwt = {t: w for t, w in self.tw.weights(self.tw.split(dtwt), preprocess=False)}
-        if isinstance(qtwt, str):
-            qtwt = {t: w for t, w in self.tw.weights(self.tw.split(qtwt), preprocess=False)}
-        s = 1e-9
-        for k, v in qtwt.items():
-            if k in dtwt:
-                s += v
-        q = 1e-9
-        for v in qtwt.values():
-            q += v
-        return s / q
-
     # -- weighted term table for the Spark scorer -------------------------
     def weighted_terms(
         self, txt: str, syn_weight_ratio: float = 0.25

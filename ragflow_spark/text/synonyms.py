@@ -41,10 +41,7 @@ def _default_wordnet(tk: str) -> list[str]:
     return [t for t in names - {tk} if t]
 
 
-def load_synonyms(res_dir: str | None = None) -> dict:
-    res_dir = res_dir or os.environ.get("RAGFLOW_SPARK_RES_DIR", "")
-    if not res_dir:
-        return {}
+def load_synonyms(res_dir: str) -> dict:
     try:
         with open(os.path.join(res_dir, "synonym.json"), encoding="utf-8") as fh:
             return json.load(fh)
@@ -56,10 +53,6 @@ class SynonymLookup:
     def __init__(self, dictionary: dict | None = None, wordnet_fn=None):
         self.dictionary = dictionary or {}
         self._wordnet = wordnet_fn or _default_wordnet
-
-    @classmethod
-    def from_resources(cls, res_dir: str | None = None, **kw) -> "SynonymLookup":
-        return cls(dictionary=load_synonyms(res_dir), **kw)
 
     def lookup(self, tk: str, topn: int = 8) -> list[str]:
         if _LATIN.match(tk):

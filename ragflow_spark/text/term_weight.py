@@ -16,9 +16,8 @@ in tests/test_term_weight_parity.py.
 
 Resources: the reference loads ``rag/res/ner.json`` and
 ``rag/res/term.freq``.  Those are deploy-time data (Apache-2.0), NOT
-copied into this tree — point ``RAGFLOW_SPARK_RES_DIR`` (or the
-``res_dir`` argument) at a directory holding them, e.g. the reference
-checkout, or ship them with ``spark-submit --files``.  With no
+copied into this tree — ``load_resources`` reads them from a
+directory holding them, e.g. the reference checkout.  With no
 resources the weigher still runs with empty ne/df maps — exactly the
 reference's behavior when its own loads fail (term_weight.py:82-88
 catches and warns).
@@ -69,15 +68,12 @@ _NER_BOOST = {
 }
 
 
-def load_resources(res_dir: str | None = None) -> tuple[dict, dict | set]:
+def load_resources(res_dir: str) -> tuple[dict, dict | set]:
     """(ne, df) maps per the reference's loaders: ner.json is a plain
     token->tag dict; term.freq is token\\tcount lines, degrading to a
     bare set when every count is zero (term_weight.py:59-77)."""
-    res_dir = res_dir or os.environ.get("RAGFLOW_SPARK_RES_DIR", "")
     ne: dict = {}
     df: dict | set = {}
-    if not res_dir:
-        return ne, df
     try:
         with open(os.path.join(res_dir, "ner.json"), encoding="utf-8") as fh:
             ne = json.load(fh)
@@ -120,11 +116,6 @@ class TermWeighter:
         # (RAGFLOW_SPARK_HUQIE) upgrades POS/freq boosts transparently
         self._tag = tag or _tok.tag
         self._freq = freq or _tok.freq
-
-    @classmethod
-    def from_resources(cls, res_dir: str | None = None, **kw) -> "TermWeighter":
-        ne, df = load_resources(res_dir)
-        return cls(ne=ne, df=df, **kw)
 
     # -- pretoken (term_weight.py:90-113) ---------------------------------
     def pretoken(self, txt: str, num: bool = False, stpwd: bool = True) -> list[str]:
@@ -180,12 +171,7 @@ class TermWeighter:
                 i += 1
         return [t for t in res if t]
 
-    # -- ner / split (term_weight.py:142-158) ------------------------------
-    def ner_tag(self, t: str) -> str:
-        if not self.ne:
-            return ""
-        return self.ne.get(t, "")
-
+    # -- ner / split (term_weight.py:142-158; ner is read inline) ---------
     def split(self, txt: str) -> list[str]:
         """Glue adjacent latin-ending tokens into one term unless either
         is tagged ``func`` — the reference's English-phrase builder."""

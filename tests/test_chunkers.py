@@ -20,7 +20,6 @@ from ragflow_spark.chunk.templates import (
 )
 from ragflow_spark.chunk.toc import drop_toc_sections
 from ragflow_spark.parsers.jsonp import split_json_text
-from ragflow_spark.parsers.markdown import markdown_sections, split_markdown_tables
 from ragflow_spark.parsers.txt import split_txt
 from ragflow_spark.text.tokens import count_tokens
 
@@ -294,17 +293,6 @@ class TestFormatParsers:
         lines = "\n".join(json.dumps({"i": i, "t": "v" * 10}) for i in range(5))
         out = split_json_text(lines.encode())
         assert len(out) >= 1
-
-    def test_md_bordered_table(self):
-        md = "para\n\n| a | b |\n|---|---|\n| 1 | 2 |\n\ntail"
-        remainder, tables = split_markdown_tables(md)
-        assert len(tables) == 1 and "| a | b |" in tables[0]
-        assert "tail" in remainder
-
-    def test_md_sections_heading_glue(self):
-        md = "# Title\nbody under title\n\n## Sub\nmore body"
-        secs, _ = markdown_sections(md)
-        assert any(s.startswith("# Title") for s, _ in secs)
 
 
 def test_over_nested_json_rejected_linearly():

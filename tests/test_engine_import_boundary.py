@@ -4,10 +4,11 @@ A fresh interpreter imports ``ragflow_spark.spark.udfs`` (what a worker
 imports) and routes one document of each routed type through
 ``extract_document_ex`` -> ``chunk_sections`` -> ``content_tokens``.
 None of the off-path families may load on the way: the operator suite
-(``ops``), the streaming jobs, the test and benchmark generators
-(``data``), the query-side text modules and the chunk templates the
-extraction job never selects.  This pins the boundary a package split
-would draw before any module moves.
+(``ops``), the test and benchmark generators (``data``), the query-side
+text modules, the chunk templates the extraction job never selects and
+the layout-model modules of ``pdf/`` the positioned-char path does not
+call.  This pins the boundary a package split would draw before any
+module moves.
 """
 
 from __future__ import annotations
@@ -25,8 +26,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 OFF_PATH = (
     "ragflow_spark.ops",
-    "ragflow_spark.streaming",
     "ragflow_spark.data",
+    "ragflow_spark.parsers.markdown",
+    "ragflow_spark.pdf.geometry",
+    "ragflow_spark.pdf.tablefig",
+    "ragflow_spark.pdf.tsr",
     "ragflow_spark.text.querybuild",
     "ragflow_spark.text.term_weight",
     "ragflow_spark.text.synonyms",

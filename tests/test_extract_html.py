@@ -2,7 +2,7 @@
 surface: title glue + "\\n" split are exact reference semantics,
 deepdoc/parser/html_parser.py:40-49)."""
 
-from ragflow_spark.extract import extract_html
+from ragflow_spark.extract.html import extract_html
 
 ARTICLE = """<html><head><title>Doc 1</title><style>p{color:red}</style>
 <script>var x=1;</script></head><body>

@@ -1,12 +1,11 @@
 """Parity vs the reference's own Recognizer geometry statics.
 
-``Recognizer``'s spatial sorts and overlap joins
-(deepdoc/vision/recognizer.py:54-281) are dependency-free at class-def
-time (numpy + cmp_to_key); the class is extracted from source AST and
-its static methods are run side-by-side with ragflow_spark.pdf.geometry
-on randomized box sets.  Byte-exact agreement here pins the XY-cut
-reading order and the overlap-join semantics the whole PDF stack
-builds on.
+``Recognizer``'s spatial sorts (deepdoc/vision/recognizer.py:54-111)
+are dependency-free at class-def time (numpy + cmp_to_key); the class
+is extracted from source AST and its static methods are run
+side-by-side with ragflow_spark.pdf.geometry on randomized box sets.
+Byte-exact agreement here pins the XY-cut reading order the whole PDF
+stack builds on.
 """
 
 from __future__ import annotations
@@ -23,11 +22,6 @@ import numpy as np
 import pytest
 
 from ragflow_spark.pdf.geometry import (
-    cleanup_layouts,
-    find_max_overlap,
-    find_overlap_with_threshold,
-    find_tightest_horizontal_fit,
-    overlap_area,
     sort_cols_first,
     sort_rows_first,
     sort_x_first,
@@ -101,65 +95,6 @@ def test_rc_sort_parity(ref_cls, seed):
     assert _keys(sort_cols_first(boxes, 2.0)) == _keys(
         ref_cls.sort_C_firstly([dict(b) for b in boxes], 2.0)
     )
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_overlap_area_parity(ref_cls, seed):
-    rng = random.Random(200 + seed)
-    for _ in range(50):
-        a, b = _rand_boxes(rng, 2)
-        assert overlap_area(a, b) == pytest.approx(
-            ref_cls.overlapped_area(a, b), abs=0
-        )
-        assert overlap_area(a, b, ratio=False) == pytest.approx(
-            ref_cls.overlapped_area(a, b, ratio=False), abs=0
-        )
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_find_overlapped_parity(ref_cls, seed):
-    rng = random.Random(300 + seed)
-    grid = ref_cls.sort_Y_firstly(_rand_boxes(rng, 30), 0)
-    probe = _rand_boxes(rng, 1)[0]
-    ours = find_max_overlap(probe, grid)
-    # reference's binary search narrows then scans the SAME maximization
-    theirs = ref_cls.find_overlapped(probe, grid)
-    assert ours == theirs
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_find_overlapped_with_threshold_parity(ref_cls, seed):
-    rng = random.Random(400 + seed)
-    boxes = _rand_boxes(rng, 25)
-    probe = _rand_boxes(rng, 1)[0]
-    assert find_overlap_with_threshold(probe, boxes) == ref_cls.find_overlapped_with_threshold(
-        probe, boxes
-    )
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_tightest_fit_parity(ref_cls, seed):
-    rng = random.Random(500 + seed)
-    boxes = _rand_boxes(rng, 25)
-    probe = _rand_boxes(rng, 1)[0]
-    assert find_tightest_horizontal_fit(probe, boxes) == ref_cls.find_horizontally_tightest_fit(
-        probe, boxes
-    )
-
-
-@pytest.mark.parametrize("seed", range(6))
-def test_layouts_cleanup_parity(ref_cls, seed):
-    rng = random.Random(600 + seed)
-    boxes = _rand_boxes(rng, 30)
-    layouts = []
-    for i, b in enumerate(_rand_boxes(rng, 12)):
-        b["type"] = rng.choice(["table", "text", "figure"])
-        if rng.random() < 0.7:
-            b["score"] = round(rng.uniform(0.1, 1.0), 3)
-        layouts.append(b)
-    ours = cleanup_layouts([dict(b) for b in boxes], [dict(x) for x in layouts])
-    theirs = ref_cls.layouts_cleanup([dict(b) for b in boxes], [dict(x) for x in layouts])
-    assert [x["text"] for x in ours] == [x["text"] for x in theirs]
 
 
 # -- RAGFlowPdfParser merge methods (fake-self extraction) -----------------
@@ -261,28 +196,6 @@ def test_naive_vertical_merge_parity(ref_pdf, seed, eng):
         b["text"]
         for b in merge_vertical([dict(b) for b in boxes], [12.0], [50.0], is_english=eng)
     ]
-    assert ours == theirs
-
-
-@pytest.mark.parametrize("seed", range(4))
-def test_merge_with_same_bullet_parity(ref_pdf, seed):
-    from ragflow_spark.pdf.geometry import merge_same_bullet
-
-    rng = random.Random(900 + seed)
-    boxes = _line_boxes(rng, 12)
-    for b in boxes:
-        if rng.random() < 0.5:
-            b["text"] = "• " + b["text"]
-    # the reference consults rag_tokenizer.is_chinese on the first char;
-    # provide the same contract our geometry uses
-    import types as _types
-
-    fake_tok = _types.SimpleNamespace(is_chinese=lambda ch: "一" <= ch <= "鿿")
-    ref_pdf._merge_with_same_bullet.__globals__["rag_tokenizer"] = fake_tok
-    fake = _FakePdf(boxes, mean_height=[12.0])
-    ref_pdf._merge_with_same_bullet(fake)
-    theirs = [b["text"] for b in fake.boxes]
-    ours = [b["text"] for b in merge_same_bullet([dict(b) for b in boxes])]
     assert ours == theirs
 
 
@@ -498,50 +411,4 @@ def test_construct_table_parity_untagged(ref_tsr):
         [dict(b) for b in boxes], is_english=True, html=False
     )
     ours = construct_table([dict(b) for b in boxes], is_english=True, html=False)
-    assert ours == theirs
-
-
-# -- __filterout_scraps -----------------------------------------------------
-
-
-class _ScrapsFake(_FakePdf):
-    def __init__(self, mean_height, ref_pdf):
-        super().__init__([], mean_height)
-        self.page_images = [_Img(612 * 3, 800 * 3)]
-        self.page_cum_height = [0.0, 800.0]
-        self._ref = ref_pdf
-
-    def proj_match(self, line):
-        return self._ref.proj_match(self, line)
-
-    def _line_tag(self, bx, ZM):
-        return self._ref._line_tag(self, bx, ZM)
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_filterout_scraps_parity(ref_pdf, seed):
-    from ragflow_spark.pdf.geometry import filter_scraps, line_tag
-
-    rng = random.Random(1400 + seed)
-    boxes = []
-    y = 0.0
-    for i in range(20):
-        y += rng.uniform(10, 25)
-        wide = rng.random() < 0.7
-        x0 = rng.uniform(0, 50) if wide else rng.uniform(400, 550)
-        w = rng.uniform(250, 500) if wide else rng.uniform(10, 40)
-        t = rng.choice(
-            [f"1. heading {i}", f"body line {i} with words", f"{i}", "第一章 标题"]
-        )
-        b = {
-            "x0": x0, "x1": x0 + w, "top": y, "bottom": y + 12,
-            "text": t, "page_number": 1,
-        }
-        if rng.random() < 0.5:
-            b["layout_type"] = "text" if rng.random() < 0.8 else "title"
-        boxes.append(b)
-    fake = _ScrapsFake([12.0], ref_pdf)
-    theirs = ref_pdf._RAGFlowPdfParser__filterout_scraps(fake, [dict(b) for b in boxes], 3)
-    tagged = [dict(b, _tag=line_tag(b, [0.0, 800.0], [800.0, 800.0])) for b in boxes]
-    ours = filter_scraps(tagged, page_width=[612.0], mean_height=[12.0])
     assert ours == theirs

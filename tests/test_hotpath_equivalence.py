@@ -40,7 +40,10 @@ from ragflow_spark.parsers.pdf_chars import (
     dedupe_chars,
     pdf_pages_chars,
 )
-from ragflow_spark.pdf.assemble import _ALNUM_PAIR, _GAP_FIRST
+from ragflow_spark.pdf.assemble import _GAP_FIRST
+
+# the reference's word-gap condition (pdf_parser.py:1070-1077)
+_ALNUM_PAIR = re.compile(r"[0-9a-zA-Z,.:;!%]+")
 
 
 def _naive_dedupe(chars, tolerance):

@@ -1,92 +1,9 @@
-"""Hostile markdown through the table splitter / sectioner / renderer.
-
-The reference's table regexes (deepdoc/parser/markdown_parser.py) chain
-lazy quantifiers (``\\|.*?\\|.*?\\|.*?\\n``), which backtrack
-combinatorially on pipe-dense lines that never complete a match: a
-single 2,000-pipe line cost ~16 s, and 2,000 lines of 250 pipes ran for
-minutes.  parsers/markdown.py now uses deterministic single-line
-equivalents (every lazy ``.*?`` before a ``\\|`` stops at the FIRST
-pipe, i.e. ``[^|\\n]*``) plus a placeholder swap for lines no real
-table row can be (>256 pipes / >64k chars).
-
-Documented intended deviation from the reference: the old borderless
-divider ``(?:\\s*[:-]+[-| :]*\\s*)`` let ``\\s*`` span NEWLINES, so a
-"table" whose header and divider are separated by blank lines — which
-no markdown engine renders as a table — was extracted anyway.  The
-deterministic divider is single-line, so those pseudo-tables stay in
-the text (strictly fewer extractions; a 200k-case differential fuzz
-found no string the new patterns match that the old could not).
-"""
+"""Hostile markdown through the renderer (text/md_render.py): a deep
+blockquote nests to a capped depth instead of recursing per level."""
 
 from __future__ import annotations
 
-import time
-
-from ragflow_spark.parsers.markdown import markdown_sections, split_markdown_tables
 from ragflow_spark.text.md_render import render_markdown
-
-
-def test_pipe_dense_lines_stay_linear():
-    bombs = [
-        "|" * 1_000_000,                                 # one hostile line
-        ("|" + "x|" * 249 + "\n") * 2_000,               # near-cap rows
-        ("|a|b|\n|-|-|\n" + "|" * 5_000 + "\n") * 100,   # header+divider bait
-        "-" * 1_000_000 + "\n|a|b|\n",                   # dash flood
-    ]
-    for bomb in bombs:
-        t0 = time.time()
-        remainder, tables = split_markdown_tables(bomb)
-        markdown_sections(bomb)
-        assert time.time() - t0 < 10.0
-        # nothing swallowed: remainder + tables carry every pipe
-        assert (
-            remainder.count("|") + sum(t.count("|") for t in tables)
-            == bomb.count("|")
-        )
-
-
-def test_hostile_lines_restored_in_remainder():
-    doc = "intro\n" + "|" * 500 + "\nmore text\n|h1|h2|\n|--|--|\n|a|b|\n"
-    remainder, tables = split_markdown_tables(doc)
-    assert "|" * 500 in remainder  # placeholder swapped back
-    assert len(tables) == 1 and "|h1|h2|" in tables[0]
-    assert "\x00" not in remainder
-
-
-def test_minified_oneline_html_table_still_extracts():
-    row = "<tr><td>a|b</td></tr>" * 5_000  # >64k chars, pipe-dense, legit
-    doc = "before\n<table>" + row + "</table>\nafter\n"
-    remainder, tables = split_markdown_tables(doc)
-    assert len(tables) == 1 and tables[0].count("<tr>") == 5_000
-    assert "before" in remainder and "after" in remainder
-
-
-def test_legit_tables_unchanged():
-    doc = (
-        "intro\n\n|h1|h2|\n|--|--|\n|a|b|\n|c|d|\n\n"
-        "text\nname|age\n---|---\nbob|3\n"
-    )
-    remainder, tables = split_markdown_tables(doc)
-    assert len(tables) == 2
-    assert tables[0].strip().startswith("|h1|h2|")
-    assert tables[1].strip().startswith("name|age")
-    assert "intro" in remainder and "text" in remainder
-
-
-def test_newline_bridged_pseudo_tables_match_reference():
-    # the reference's divider-row \s* legally crosses newlines, so a
-    # blank line between header and divider (borderless) — and a
-    # bordered divider with no same-line closing pipe, which borrows
-    # the next row's leading pipe — both extract.  Quirk-for-quirk
-    # parity (same policy as the tag-template csv quirk); the r5
-    # linear rewrite initially dropped these two shapes, caught by a
-    # bidirectional finditer-extent fuzz vs the reference patterns.
-    doc = "name|age\n\n---|---\nbob|3\n"
-    _, tables = split_markdown_tables(doc)
-    assert len(tables) == 1 and "bob|3" in tables[0]
-    doc2 = "|h1|h2|h3\n|---\n|a|b|c\n|d|e|f\n"
-    _, tables2 = split_markdown_tables(doc2)
-    assert len(tables2) == 1 and "|d|e|f" in tables2[0]
 
 
 def test_deep_blockquote_capped_not_recursive():

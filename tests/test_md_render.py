@@ -70,16 +70,3 @@ def test_tables_flag_off_keeps_paragraph():
 
 def test_pipe_without_divider_is_not_a_table():
     assert md("answer with | pipe") == "<p>answer with | pipe</p>"
-
-
-def test_markdown_sections_render_tables():
-    from ragflow_spark.parsers.markdown import markdown_sections
-
-    text = "# T\nbody\n\n| A | B |\n|---|---|\n| 1 | 2 |\n"
-    _secs, raw = markdown_sections(text, separate_tables=True)
-    _secs, html = markdown_sections(
-        text, separate_tables=True, render_tables=True
-    )
-    assert len(raw) == len(html) == 1
-    assert raw[0].lstrip().startswith("|")
-    assert html[0].startswith("<table>") and "<td>1</td>" in html[0]

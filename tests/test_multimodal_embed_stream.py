@@ -1,13 +1,9 @@
-"""Multimodal plumbing, embedding stage, streaming ingest (Spark-level)."""
+"""Multimodal plumbing and the embedding stage (Spark-level)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
-from ragflow_spark.data.pagegen import pages_dataframe
 from ragflow_spark.ops.embed import embed_chunks
 from ragflow_spark.ops.multimodal import (
     fake_payload,
@@ -17,7 +13,6 @@ from ragflow_spark.ops.multimodal import (
     synthesize_media,
 )
 from ragflow_spark.ops.simsearch import knn_bruteforce
-from ragflow_spark.streaming import stream_extract
 
 
 def test_parse_header_roundtrip():
@@ -60,62 +55,3 @@ def test_embed_chunks_deterministic_and_searchable(spark):
     )
     top = knn_bruteforce(emb, q, k=3)
     assert top.count() == 6
-
-
-def test_stream_extract_availablenow_incremental(spark, monkeypatch):
-    """Incremental exactly-once pickup, and the stream runs the batch
-    plan: its output equals ``transform_chunks`` over the same files,
-    the html byte cap included (one page is over the cap)."""
-    import datetime as dt
-
-    from ragflow_spark.data.pagegen import PAGE_SCHEMA
-    from ragflow_spark.spark import pipeline
-
-    tmp = tempfile.mkdtemp(prefix="rs_stream_")
-    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    try:
-        first_pages = pages_dataframe(spark, 60, seed=42, partitions=2)
-        later_pages = pages_dataframe(spark, 120, seed=43, partitions=2).withColumn(
-            "url", F.concat(F.lit("b2-"), F.col("url"))
-        )
-        cap = max(
-            df.agg(F.max(F.length("html"))).first()[0]
-            for df in (first_pages, later_pages)
-        )
-        monkeypatch.setattr(pipeline, "MAX_HTML_BYTES", cap)
-        over_url = "https://big.example.com/over-cap"
-        over_cap = spark.createDataFrame(
-            [(over_url, dt.datetime(2024, 1, 1),
-              b"<html><body><p>" + b"word " * cap + b"</p></body></html>",
-              "over the cap", "English")],
-            PAGE_SCHEMA,
-        )
-        first_pages.unionByName(over_cap).write.mode("append").parquet(in_dir)
-        q = stream_extract(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        first = spark.read.parquet(out_dir)
-        n1 = first.count()
-        urls1 = first.select("url").distinct().count()
-        assert n1 > 0
-        # new files arrive (distinct url space) -> second availableNow
-        # run picks up ONLY them
-        later_pages.write.mode("append").parquet(in_dir)
-        q2 = stream_extract(spark, in_dir, out_dir, ckpt)
-        q2.awaitTermination(180)
-        second = spark.read.parquet(out_dir)
-        assert second.count() > n1
-        # exactly-once: no duplicate (url, chunk_ord) pairs
-        dup = (
-            second.groupBy("url", "chunk_ord").count().where(F.col("count") > 1).count()
-        )
-        assert dup == 0
-        assert second.select("url").distinct().count() > urls1
-        batch = pipeline.transform_chunks(
-            spark.read.parquet(in_dir), pipeline.PipelineConfig(out_dir=out_dir)
-        )
-        assert sorted(second.collect()) == sorted(batch.select(*second.columns).collect())
-        assert second.where(F.col("url") == over_url).count() == 0
-    finally:
-        for s in spark.streams.active:
-            s.stop()
-        shutil.rmtree(tmp, ignore_errors=True)

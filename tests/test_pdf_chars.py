@@ -20,7 +20,6 @@ from ragflow_spark.data.pagegen import _tiny_pdf
 from ragflow_spark.data.pdfgen import EM, LEADING, make_doc_pdf
 from ragflow_spark.parsers.pdf import extract_pdf_outline
 from ragflow_spark.parsers.pdf_chars import pdf_pages_chars
-from ragflow_spark.pdf import construct_table, extract_table_figure
 from ragflow_spark.pdf.assemble import (
     chars_to_lines,
     insert_word_gaps,
@@ -28,6 +27,8 @@ from ragflow_spark.pdf.assemble import (
     page_stats,
     pdf_tagged_boxes,
 )
+from ragflow_spark.pdf.tablefig import extract_table_figure
+from ragflow_spark.pdf.tsr import construct_table
 
 WORDS = (
     "spark engine partition strategy broadcast shuffle join table data "

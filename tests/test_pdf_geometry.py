@@ -2,27 +2,17 @@
 
 from __future__ import annotations
 
-from ragflow_spark.pdf import (
-    block_type,
-    cleanup_layouts,
+from ragflow_spark.chunk.merge import strip_position_tags
+from ragflow_spark.pdf.geometry import (
     concat_downward,
-    construct_table,
     drop_toc_boxes,
-    filter_scraps,
-    find_max_overlap,
-    find_overlap_with_threshold,
-    find_tightest_horizontal_fit,
     line_tag,
     merge_horizontal,
-    merge_same_bullet,
     merge_vertical,
-    overlap_area,
-    parse_line_tags,
-    proj_level,
-    remove_tags,
     sort_x_first,
     sort_y_first,
 )
+from ragflow_spark.pdf.tsr import block_type, construct_table
 
 
 def box(x0, top, x1, bottom, text="", page=1, **kw):
@@ -45,43 +35,6 @@ def test_sort_y_first_threshold_ties_break_left_to_right():
 def test_sort_x_first():
     a, b = box(30, 0, 40, 10, "b"), box(10, 5, 20, 15, "a")
     assert [x["text"] for x in sort_x_first([a, b], 1)] == ["a", "b"]
-
-
-# -- overlap joins ---------------------------------------------------------
-
-
-def test_overlap_area_ratio_and_absolute():
-    a = box(0, 0, 10, 10)
-    b = box(5, 5, 15, 15)
-    assert overlap_area(a, b, ratio=False) == 25
-    assert overlap_area(a, b) == 0.25
-    assert overlap_area(a, box(20, 20, 30, 30)) == 0
-
-
-def test_find_max_overlap_picks_best():
-    grid = [box(0, i * 10, 10, i * 10 + 10, f"r{i}") for i in range(10)]
-    probe = box(0, 33, 10, 39)
-    assert grid[find_max_overlap(probe, grid)]["text"] == "r3"
-
-
-def test_find_overlap_with_threshold():
-    cells = [box(0, 0, 10, 10, "a"), box(20, 0, 30, 10, "b")]
-    assert find_overlap_with_threshold(box(21, 1, 29, 9), cells) == 1
-    assert find_overlap_with_threshold(box(100, 100, 110, 110), cells) is None
-
-
-def test_find_tightest_horizontal_fit_respects_layout():
-    cells = [box(0, 0, 10, 10, layoutno="t0"), box(12, 0, 22, 10, layoutno="t0"),
-             box(0, 0, 10, 10, layoutno="other")]
-    probe = box(11, 50, 23, 60, layoutno="t0")
-    assert find_tightest_horizontal_fit(probe, cells) == 1
-
-
-def test_cleanup_layouts_prefers_score():
-    l1 = box(0, 0, 100, 100, type="table", score=0.9)
-    l2 = box(1, 1, 99, 99, type="table", score=0.5)
-    out = cleanup_layouts([], [l1, l2])
-    assert out == [l1]
 
 
 # -- merges ----------------------------------------------------------------
@@ -111,17 +64,7 @@ def test_concat_downward_is_y_sort_parity():
     assert [x["text"] for x in concat_downward([a, b])] == ["first", "second"]
 
 
-def test_merge_same_bullet():
-    a = box(0, 0, 50, 10, "• alpha")
-    b = box(0, 12, 50, 22, "• beta")
-    out = merge_same_bullet([a, b])
-    assert len(out) == 1 and out[0]["text"] == "• alpha\n• beta"
-    # latin letter openers never merge
-    c, d = box(0, 0, 50, 10, "alpha"), box(0, 12, 50, 22, "avocado")
-    assert len(merge_same_bullet([c, d])) == 2
-
-
-# -- TOC / scraps ----------------------------------------------------------
+# -- TOC -------------------------------------------------------------------
 
 
 def test_drop_toc_boxes_removes_entries_until_body_repeat():
@@ -143,21 +86,6 @@ def test_drop_toc_boxes_dirty_pages():
     assert [b["text"] for b in out] == ["real body"]
 
 
-def test_proj_level_patterns():
-    assert proj_level("第一章 总则") == 1
-    assert proj_level("1. Introduction") == 5
-    assert proj_level("1.2 Methods x") == 6
-    assert proj_level("plain text line") is None
-    assert proj_level("123 45.6%") is None
-
-
-def test_filter_scraps_keeps_wide_drops_narrow():
-    wide = [box(0, i * 20, 400, i * 20 + 12, f"wide line {i}") for i in range(3)]
-    scrap = [box(500, 500, 520, 508, "pg")]
-    text = filter_scraps(wide + scrap, page_width=[600.0], mean_height=[10.0])
-    assert "wide line 0" in text and "pg" not in text
-
-
 # -- position tags ---------------------------------------------------------
 
 
@@ -165,16 +93,13 @@ def test_line_tag_roundtrip():
     b = box(10, 30, 100, 50, page=1)
     tag = line_tag(b, page_cum_height=[0.0, 800.0], page_heights=[800.0, 800.0])
     assert tag.startswith("@@1\t10.0\t100.0\t30.0\t50.0##")
-    spans = parse_line_tags("some text" + tag)
-    assert spans == [([1], 10.0, 100.0, 30.0, 50.0)]
-    assert remove_tags("abc" + tag + "def") == "abcdef"
+    assert strip_position_tags("abc" + tag + "def") == "abcdef"
 
 
 def test_line_tag_cross_page():
     b = box(10, 790, 100, 820, page=1)
     tag = line_tag(b, page_cum_height=[0.0, 800.0], page_heights=[800.0, 800.0])
-    pages = parse_line_tags("x" + tag)[0][0]
-    assert pages == [1, 2]
+    assert tag.startswith("@@1-2\t")
 
 
 # -- table structure recovery ----------------------------------------------

@@ -99,7 +99,7 @@ def test_scrambled_stream_table_still_recovered(seed):
     stream's recovered table (rows, captions, header detection — all
     content-dependent reference behaviors) must equal the in-order
     stream's exactly."""
-    from ragflow_spark.pdf import extract_table_figure
+    from ragflow_spark.pdf.tablefig import extract_table_figure
 
     rng = random.Random(seed)
     words = _trial_words(rng)

@@ -11,12 +11,13 @@ import re
 
 import pytest
 
+from ragflow_spark.chunk.merge import strip_position_tags
 from ragflow_spark.chunk.templates import chunk_sections
 from ragflow_spark.data.pdfgen import make_doc_pdf
 from ragflow_spark.parsers.pdf_chars import pdf_pages_chars
-from ragflow_spark.pdf import extract_table_figure
 from ragflow_spark.pdf.assemble import page_stats, pdf_tagged_boxes
-from ragflow_spark.pdf.geometry import line_tag, remove_tags
+from ragflow_spark.pdf.geometry import line_tag
+from ragflow_spark.pdf.tablefig import extract_table_figure
 
 WORDS = (
     "spark engine partition strategy broadcast shuffle join table data "
@@ -45,10 +46,10 @@ def tagged_sections():
 def test_position_tags_attach_and_strip(tagged_sections):
     secs, _tables = tagged_sections
     assert secs and all(TAG_RE.search(s) for s in secs)
-    # remove_tags inverts line_tag exactly
+    # strip_position_tags inverts line_tag exactly
     for s in secs:
-        assert remove_tags(s) == TAG_RE.sub("", s)
-        assert "@@" not in remove_tags(s)
+        assert strip_position_tags(s) == TAG_RE.sub("", s)
+        assert "@@" not in strip_position_tags(s)
 
 
 def test_book_template_over_real_bytes(tagged_sections):
@@ -58,7 +59,7 @@ def test_book_template_over_real_bytes(tagged_sections):
     joined = "\n".join(chunks)
     # every section's text survived into some chunk
     for s in secs:
-        assert remove_tags(s).split(".")[0][:24] in remove_tags(joined)
+        assert strip_position_tags(s).split(".")[0][:24] in strip_position_tags(joined)
     # position tags ride along into the packed chunks
     assert TAG_RE.search(joined)
 
@@ -242,7 +243,7 @@ def test_naive_template_pdf_branch_from_real_bytes():
     # every surviving chunk carries at least one position tag (the
     # merge's tag policy is reference-parity-tested in test_chunkers)
     assert all(TAG_RE.search(c) for c in chunks)
-    assert "Chapter I" in remove_tags(joined)
+    assert "Chapter I" in strip_position_tags(joined)
     # table rows live separately (tbls), as the reference returns them
     assert tables and tables[0]["content"]
 

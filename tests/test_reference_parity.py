@@ -233,82 +233,12 @@ def test_txt_parser_parity(ref_txt, txt, budget, delims):
     assert ours == theirs
 
 
-# -- RAGFlowMarkdownParser.extract_tables_and_remainder --------------------
-
-
-@pytest.fixture(scope="module")
-def ref_md():
-    tree = ast.parse(read_reference(f"{REFERENCE_ROOT}/deepdoc/parser/markdown_parser.py"))
-    cls = next(
-        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "RAGFlowMarkdownParser"
-    )
-    import re as _re
-
-    ns = {"re": _re, "num_tokens_from_string": count_tokens}
-    exec(compile(ast.Module(body=[cls], type_ignores=[]), "markdown_parser", "exec"), ns)
-    return ns["RAGFlowMarkdownParser"](chunk_token_num=128)
-
-
-MD_DOC = """# Title
-
-Intro paragraph here.
-
-| a | b |
-|---|---|
-| 1 | 2 |
-| 3 | 4 |
-
-Closing words.
-
-<table><tr><td>html cell</td></tr></table>
-
-tail text
-"""
-
-
-def test_markdown_table_extraction_parity(ref_md):
-    from ragflow_spark.parsers.markdown import split_markdown_tables
-
-    theirs_rem, theirs_tables = ref_md.extract_tables_and_remainder(MD_DOC)
-    ours_rem, ours_tables = split_markdown_tables(MD_DOC)
-    assert ours_tables == theirs_tables
-    assert ours_rem == theirs_rem
-
-
-
-
 # -- property-based fuzz parity (hypothesis) -------------------------------
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 _ALPHABET = "ab cd. ef! gh? 。；！？\n一二三数据 123\t@#"
-
-# table-shaped alphabet: pipes, dashes, colons, whitespace (incl. the
-# newline-crossing \s* quirk the reference's divider rows carry), text
-_MD_TABLE_ALPHABET = "|-: \t\nab"
-
-
-@settings(
-    max_examples=300,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(txt=st.text(alphabet=_MD_TABLE_ALPHABET, max_size=80))
-def test_markdown_table_extraction_parity_fuzz(ref_md, txt):
-    """Pin the linear-regex rewrite to the reference patterns over
-    adversarial table-ish strings: same tables, same remainder.  The
-    r5 rewrite's one-directional fuzz missed two newline-crossing
-    divider shapes (blank line before a borderless divider; a bordered
-    divider borrowing the next row's leading pipe) — this compares
-    both directions via full output equality."""
-    from ragflow_spark.parsers.markdown import split_markdown_tables
-
-    doc = txt + "\n"
-    theirs_rem, theirs_tables = ref_md.extract_tables_and_remainder(doc)
-    ours_rem, ours_tables = split_markdown_tables(doc)
-    assert ours_tables == theirs_tables
-    assert ours_rem == theirs_rem
 
 
 @settings(

@@ -293,22 +293,6 @@ class TestQueryBuildParity:
         for q in MIXED_QUERIES:
             self._compare(ref_queryer, ours_queryer, q)
 
-    def test_token_similarity(self, ref_queryer, ours_queryer):
-        a = "spark engine partition strategy"
-        bs = [
-            "partition strategy for spark",
-            "completely unrelated words here",
-            "spark",
-        ]
-        got = ours_queryer.token_similarity(a, bs)
-        want = [float(x) for x in ref_queryer.token_similarity(a, bs)]
-        assert got == want
-
-    def test_similarity_strings(self, ref_queryer, ours_queryer):
-        q = "broadcast join skew"
-        d = "broadcast the small side of the join to avoid skew"
-        assert ours_queryer.similarity(q, d) == float(ref_queryer.similarity(q, d))
-
 
 class TestQueryBuildFuzz:
     def test_random_queries(self, ref_queryer, ours_queryer):

@@ -1,11 +1,7 @@
 """Unit tests: codec cascade, token counting, normalization, tokenizer."""
 
 from ragflow_spark.text.codec import decode_bytes, detect_codec
-from ragflow_spark.text.normalize import (
-    full_to_half,
-    looks_english,
-    squeeze_space,
-)
+from ragflow_spark.text.normalize import full_to_half, looks_english
 from ragflow_spark.text.porter import lemmatize_noun, porter_stem
 from ragflow_spark.text.tokenizer import content_tokens, fine_grained, tokenize_text
 from ragflow_spark.text.tokens import count_tokens
@@ -62,9 +58,6 @@ class TestTokens:
 class TestNormalize:
     def test_q2b(self):
         assert full_to_half("ＡＢＣ１２３　ｘ") == "ABC123 x"
-
-    def test_squeeze(self):
-        assert squeeze_space("  a \n\t b  ") == "a b"
 
     def test_lang_heuristics(self):
         assert looks_english("Plain English text, nothing else!")
