@@ -697,7 +697,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         words = (text or "").split()[:24] or ["x"]
         pdf_bytes = make_doc_pdf(words, doc_id=int(doc_id))
-        rem, tables, _figs, _mh, _cum, _en = pdf_layout_document(pdf_bytes)
+        rem, tables, _mh, _cum, _en = pdf_layout_document(pdf_bytes)
         return pdf_bytes, rem, tables
 
     def _pdf_tables(s, d):

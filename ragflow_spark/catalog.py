@@ -36,10 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 _IDENT_OK = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*$")
 _IDENT_BAD = re.compile(r"[^A-Za-z0-9_]")
+CATALOG_NAME = "lake"  # the Iceberg catalog a deployment configures
 
 
-def iceberg_available(spark: SparkSession, catalog_name: str = "lake") -> bool:
-    """True only when Iceberg writes through ``<catalog_name>.<table>``
+def iceberg_available(spark: SparkSession) -> bool:
+    """True only when Iceberg writes through ``lake.<table>``
     identifiers can actually work: the catalog must be CONFIGURED on
     the session (``spark.sql.catalog.<name>``) and the runtime class
     loadable.  The class probe goes through Spark's own Utils
@@ -49,7 +50,7 @@ def iceberg_available(spark: SparkSession, catalog_name: str = "lake") -> bool:
     loader's parent is the app class loader, so Utils finds every
     class ``Class.forName`` does: a second probe never rescues."""
     try:
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog_name}", None)
+        impl = spark.conf.get(f"spark.sql.catalog.{CATALOG_NAME}", None)
     except Exception:  # noqa: BLE001
         impl = None
     if not impl:
@@ -63,33 +64,31 @@ def iceberg_available(spark: SparkSession, catalog_name: str = "lake") -> bool:
     return True
 
 
+def iceberg_ident(table: str) -> str:
+    """Valid Iceberg identifier for either a plain table name or a
+    filesystem path.  PipelineConfig hands us paths like
+    ``/tmp/out/chunks``; the readable part maps every path
+    component (non-identifier chars -> ``_``) and a short content
+    hash of the ORIGINAL string keeps distinct directories mapped
+    to distinct tables — '_'-folding alone is not injective
+    ('/tmp/out-2/x' and '/tmp/out_2/x' would share a table and
+    silently mix two pipelines' data)."""
+    if _IDENT_OK.fullmatch(table):
+        return f"{CATALOG_NAME}.{table}"
+    parts = [p for p in table.replace("\\", "/").split("/") if p]
+    name = "_".join(_IDENT_BAD.sub("_", p) for p in parts) or "t"
+    if name[0].isdigit():
+        name = "t_" + name
+    tag = hashlib.md5(table.encode("utf-8")).hexdigest()[:8]
+    return f"{CATALOG_NAME}.{name}_{tag}"
+
+
 class Catalog:
-    """format='auto' resolves to iceberg when the runtime is present."""
+    """Iceberg when the runtime is present, parquet otherwise."""
 
-    def __init__(self, spark: SparkSession, fmt: str = "auto", catalog_name: str = "lake"):
-        if fmt == "auto":
-            fmt = "iceberg" if iceberg_available(spark, catalog_name) else "parquet"
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.fmt = fmt
-        self.catalog_name = catalog_name
-
-    def _ident(self, table: str) -> str:
-        """Valid Iceberg identifier for either a plain table name or a
-        filesystem path.  PipelineConfig hands us paths like
-        ``/tmp/out/chunks``; the readable part maps every path
-        component (non-identifier chars -> ``_``) and a short content
-        hash of the ORIGINAL string keeps distinct directories mapped
-        to distinct tables — '_'-folding alone is not injective
-        ('/tmp/out-2/x' and '/tmp/out_2/x' would share a table and
-        silently mix two pipelines' data)."""
-        if _IDENT_OK.fullmatch(table):
-            return f"{self.catalog_name}.{table}"
-        parts = [p for p in table.replace("\\", "/").split("/") if p]
-        name = "_".join(_IDENT_BAD.sub("_", p) for p in parts) or "t"
-        if name[0].isdigit():
-            name = "t_" + name
-        tag = hashlib.md5(table.encode("utf-8")).hexdigest()[:8]
-        return f"{self.catalog_name}.{name}_{tag}"
+        self.iceberg = iceberg_available(spark)
 
     def _table_exists(self, ident: str) -> bool:
         try:
@@ -113,10 +112,10 @@ class Catalog:
         network-attached storage).  On the Iceberg path compression is
         a table property (``write.parquet.compression-codec``) set at
         table creation, not per write."""
-        if self.fmt == "iceberg":
+        if self.iceberg:
             from pyspark.sql import functions as F
 
-            ident = self._ident(table_or_path)
+            ident = iceberg_ident(table_or_path)
             if not self._table_exists(ident):
                 # first commit creates the table partitioned by the
                 # commit column, so later overwritePartitions calls

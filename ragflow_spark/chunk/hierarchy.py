@@ -134,11 +134,15 @@ def _governing_index(sorted_indices: list[int], target: int) -> int:
     return lo
 
 
+# token budget under which outline_merge packs consecutive singleton
+# chunks
+_PACK_BUDGET = 218
+
+
 def outline_merge(
     group: int,
     sections: list[str] | list[tuple[str, str]],
     depth: int,
-    pack_budget: int = 218,
 ) -> list[list[str]]:
     """Heading-chain chunking (``hierarchical_merge``,
     rag/nlp/__init__.py:431-518).
@@ -146,7 +150,7 @@ def outline_merge(
     Buckets sections into bullet levels (+ layout-title + body), walks the
     top ``depth`` levels emitting, per heading, the chain of governing
     lower-level headings and the heading's body; then packs consecutive
-    singleton chunks under ``pack_budget`` tokens.
+    singleton chunks under ``_PACK_BUDGET`` tokens.
     """
     if not sections or group < 0:
         return []
@@ -205,7 +209,7 @@ def outline_merge(
     for chain in resolved:
         if len(chain) == 1:
             n = count_tokens(re.sub(r"@@[0-9]+.*", "", chain[0]))
-            if n + sizes[-1] < pack_budget:
+            if n + sizes[-1] < _PACK_BUDGET:
                 packed[-1].append(chain[0])
                 sizes[-1] += n
                 continue
@@ -213,5 +217,5 @@ def outline_merge(
             sizes.append(n)
             continue
         packed.append(chain)
-        sizes.append(pack_budget)
+        sizes.append(_PACK_BUDGET)
     return packed

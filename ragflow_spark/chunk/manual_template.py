@@ -58,7 +58,6 @@ def manual_pdf_chunks(
     sections: list[tuple[str, str, Poss]],
     tbls: list[tuple[list, Poss]],
     outlines: list[tuple[str, int]],
-    from_page: int = 0,
 ) -> list[str]:
     """The pdf-branch post-processing (manual.py:217-253).  ``tbls``
     rows are (content_rows, positions) — tablefig shape; the reference
@@ -82,7 +81,7 @@ def manual_pdf_chunks(
             (
                 rows if isinstance(rows, str) else rows[0],
                 -1,
-                [(p[0] + 1 - from_page, p[1], p[2], p[3], p[4]) for p in poss],
+                [(p[0] + 1, p[1], p[2], p[3], p[4]) for p in poss],
             )
         )
 

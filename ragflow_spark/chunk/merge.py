@@ -6,9 +6,8 @@ including its quirks, which are part of the parity contract:
 * the accumulator starts with one empty chunk (callers drop empties
   downstream, rag/nlp/__init__.py:270-271);
 * a new chunk opens when the *current* chunk's token count exceeds
-  ``budget * (100 - overlap_pct) / 100`` (strict >);
-* with overlap, the tail fraction of the previous chunk (position tags
-  stripped) is prepended to the new one;
+  ``budget`` (strict >); the reference's ``overlapped_percent`` is
+  always 0 here, so no tail of the previous chunk is carried;
 * a section whose own token count reaches the budget is first split on
   the delimiter pattern (separators dropped);
 * position tags are appended at most once per chunk, and never for
@@ -16,8 +15,7 @@ including its quirks, which are part of the parity contract:
 
 Position tags use the reference's in-band format
 ``@@pn\\tx0\\tx1\\ttop\\tbottom##`` (deepdoc/parser/pdf_parser.py:918-920)
-so PDF-path chunks stay byte-compatible; ``strip_position_tags`` mirrors
-``RAGFlowPdfParser.remove_tag`` (:1142-1144).
+so PDF-path chunks stay byte-compatible.
 """
 
 from __future__ import annotations
@@ -27,21 +25,14 @@ import re
 from ..text.tokens import count_tokens
 from .delimiters import delimiter_pattern
 
-_TAG_RE = re.compile(r"@@[\t0-9.-]+?##")
-
 DEFAULT_DELIMITERS = "\n!?。；！？"
 DEFAULT_BUDGET = 128
-
-
-def strip_position_tags(text: str) -> str:
-    return _TAG_RE.sub("", text)
 
 
 def greedy_merge(
     sections: list[str] | list[tuple[str, str]],
     budget: int = DEFAULT_BUDGET,
     delimiters: str = DEFAULT_DELIMITERS,
-    overlap_pct: int = 0,
 ) -> list[str]:
     if not sections:
         return []
@@ -50,16 +41,12 @@ def greedy_merge(
 
     chunks: list[str] = [""]
     counts: list[int] = [0]
-    open_threshold = budget * (100 - overlap_pct) / 100.0
-    keep_fraction = (100 - overlap_pct) / 100.0
 
     def push(fragment: str, tag: str, n: int) -> None:
         tag = tag or ""
         if n < 8:
             tag = ""
-        if chunks[-1] == "" or counts[-1] > open_threshold:
-            carried = strip_position_tags(chunks[-1])
-            fragment = carried[int(len(carried) * keep_fraction):] + fragment
+        if chunks[-1] == "" or counts[-1] > budget:
             if fragment.find(tag) < 0:
                 fragment += tag
             chunks.append(fragment)

@@ -20,13 +20,11 @@ def rm_prefix(txt: str) -> str:
     return _PREFIX_RE.sub("", txt.strip())
 
 
-def qa_chunk(q: str, a: str, eng: bool = True) -> str:
-    qp = "Question: " if eng else "问题："
-    ap = "Answer: " if eng else "回答："
-    return "\t".join([qp + rm_prefix(q), ap + rm_prefix(a)])
+def qa_chunk(q: str, a: str) -> str:
+    return "\t".join(["Question: " + rm_prefix(q), "Answer: " + rm_prefix(a)])
 
 
-def qa_from_delimited(text: str, eng: bool = True) -> list[str]:
+def qa_from_delimited(text: str) -> list[str]:
     """Two-column Q/A state machine: a 2-field line starts a new pair,
     other lines append to the running answer."""
     lines = text.split("\n")
@@ -42,14 +40,14 @@ def qa_from_delimited(text: str, eng: bool = True) -> list[str]:
                 answer += "\n" + ln
             continue
         if question and answer:
-            out.append(qa_chunk(question, answer, eng))
+            out.append(qa_chunk(question, answer))
         question, answer = arr
     if question:
-        out.append(qa_chunk(question, answer, eng))
+        out.append(qa_chunk(question, answer))
     return out
 
 
-def qa_from_xlsx(data: bytes, eng: bool = True) -> list[str]:
+def qa_from_xlsx(data: bytes) -> list[str]:
     """xlsx branch (rag/app/qa.py:36-77): per sheet, per row, the first
     non-empty cell is the question and the second the answer; rows
     without both are skipped."""
@@ -70,7 +68,7 @@ def qa_from_xlsx(data: bytes, eng: bool = True) -> list[str]:
                 else:
                     break
             if q and a:
-                out.append(qa_chunk(q, a, eng))
+                out.append(qa_chunk(q, a))
     return out
 
 
@@ -85,7 +83,7 @@ def docx_style_level(style: str) -> int:
     return int(m.group(1)) if m else 0
 
 
-def qa_from_docx(data: bytes, eng: bool = True) -> tuple[list[str], list[str]]:
+def qa_from_docx(data: bytes) -> tuple[list[str], list[str]]:
     """docx branch (rag/app/qa.py:185-265): Heading-styled paragraphs
     maintain a question stack (pop levels >= the new one); body
     paragraphs accumulate into the answer; tables emit as HTML with
@@ -108,7 +106,7 @@ def qa_from_docx(data: bytes, eng: bool = True) -> tuple[list[str], list[str]]:
         if last_answer:
             sum_q = "\n".join(q_stack)
             if sum_q:
-                qa_out.append(qa_chunk(sum_q, last_answer, eng))
+                qa_out.append(qa_chunk(sum_q, last_answer))
             last_answer = ""
         while q_stack and level <= lvl_stack[-1]:
             q_stack.pop()
@@ -118,7 +116,7 @@ def qa_from_docx(data: bytes, eng: bool = True) -> tuple[list[str], list[str]]:
     if last_answer:
         sum_q = "\n".join(q_stack)
         if sum_q:
-            qa_out.append(qa_chunk(sum_q, last_answer, eng))
+            qa_out.append(qa_chunk(sum_q, last_answer))
 
     tbl_out: list[str] = []
     for rows in tables:

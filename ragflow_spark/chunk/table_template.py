@@ -166,17 +166,11 @@ def table_rows(
     return texts, field_map, dicts
 
 
-def table_chunks(
-    headers: list[str],
-    rows: list[list[str]],
-    eng: bool = True,
-    batch_size: int = 10,
-) -> list[str]:
-    """Row texts joined ``batch_size`` per chunk ("; " / "； " joiner,
-    tokenize_table parity)."""
+def table_chunks(headers: list[str], rows: list[list[str]]) -> list[str]:
+    """Row texts joined 10 per chunk with the English "; " joiner
+    (tokenize_table parity)."""
     texts, _, _ = table_rows(headers, rows)
-    sep = "; " if eng else "； "
-    return [sep.join(texts[i : i + batch_size]) for i in range(0, len(texts), batch_size)]
+    return ["; ".join(texts[i : i + 10]) for i in range(0, len(texts), 10)]
 
 
 # --------------------------------------------------------------------------

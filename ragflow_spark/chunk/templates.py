@@ -33,7 +33,7 @@ from .toc import drop_toc_sections, synthesize_colon_titles
 def naive_chunks(
     sections: list[str],
     budget: int = 128,
-    delimiters: str = "\n!?。；！？",
+    delimiters: str = DEFAULT_DELIMITERS,
 ) -> list[str]:
     """HTML/txt/json path of naive.chunk: drop empty sections, greedy
     merge, drop blank chunks (rag/app/naive.py:521-525,567-577)."""
@@ -41,7 +41,7 @@ def naive_chunks(
     return nonempty_chunks(greedy_merge(pairs, budget, delimiters))
 
 
-def book_chunks(sections: list[str], budget: int = 256) -> list[str]:
+def book_chunks(sections: list[str]) -> list[str]:
     pairs = [(s, "") for s in sections if s]
     eng = looks_english(" ".join(t for t, _ in pairs)[:2000])
     drop_toc_sections(pairs, eng=eng)
@@ -50,8 +50,8 @@ def book_chunks(sections: list[str], budget: int = 256) -> list[str]:
     if group >= 0:
         merged = outline_merge(group, pairs, depth=5)
         return nonempty_chunks(["\n".join(ck) for ck in merged])
-    # no outline: fall back to greedy merge at the book budget with the
-    # book delimiter set (rag/app/book.py:140-144)
+    # no outline: fall back to greedy merge at the book budget (256)
+    # with the book delimiter set (rag/app/book.py:140-144)
     split_pairs = []
     for t, _ in pairs:
         halves = t.split("@")
@@ -59,7 +59,7 @@ def book_chunks(sections: list[str], budget: int = 256) -> list[str]:
             split_pairs.append((halves[0], "@" + halves[1]))
         else:
             split_pairs.append((halves[0], ""))
-    return nonempty_chunks(greedy_merge(split_pairs, budget, "\n。；！？"))
+    return nonempty_chunks(greedy_merge(split_pairs, 256, "\n。；！？"))
 
 
 def laws_chunks(sections: list[str]) -> list[str]:

@@ -63,8 +63,8 @@ class _PageBuilder:
         self.expected.append(("row", [_esc(c) for c in cells]))
         self.y -= LEADING
 
-    def blank(self, n: int = 1) -> None:
-        self.y -= LEADING * n
+    def blank(self) -> None:
+        self.y -= LEADING
 
     def stream(self, scramble=None) -> bytes:
         """``scramble``: a ``random.Random`` — emit draw units in

@@ -70,9 +70,6 @@ def kmeans_lloyd(
     emb: DataFrame,
     k: int = 8,
     iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample_mod: int | None = None,
 ) -> DataFrame:
     """Deterministic spherical k-means: Lloyd's algorithm with an
     md5-shuffled init and a FIXED iteration count, every step an
@@ -97,14 +94,6 @@ def kmeans_lloyd(
     times, not O(iters²) through re-derived lineage, and the broadcast
     side of every assignment join is a literal local relation.
 
-    ``train_sample_mod=m`` is the 100-TB shape: the fit only sees rows
-    whose ``md5(id)`` starts below ``1/m`` of the hex space (a
-    deterministic, engine-replayable ~1/m uniform sample — the same
-    md5 shuffle the init uses), and only the cheap assignment pass in
-    :func:`ragflow_spark.ops.simsearch.knn_ivf` streams the full
-    corpus (standard IVF practice: train on a sample, assign
-    everything).  ``None`` trains on every finite row.
-
     Reference anchor: the trained-cell upgrade over the fixed-subset
     IVF mirrors how rag/raptor.py:138-143 fits cluster structure over
     chunk embeddings before using it (there with GMM; the GMM/UMAP
@@ -115,26 +104,11 @@ def kmeans_lloyd(
     spark = emb.sparkSession
     v = (
         emb.select(
-            F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_vv")
+            F.col("vec_id").alias("_id"), as_double(F.col("embedding")).alias("_vv")
         )
         .withColumn("_vn", norm(F.col("_vv")))
         .where(finite_norm(F.col("_vn")))
     )
-    if train_sample_mod is not None and train_sample_mod > 1:
-        # ~1/m deterministic sample: the first 8 md5 hex chars parsed
-        # as an int land uniformly in [0, 2^32); keep the low slice.
-        # Replayable in SQL as ('0x' || substr(md5(id), 1, 8))::BIGINT.
-        cut = (1 << 32) // train_sample_mod
-        v = v.where(
-            F.conv(
-                F.substring(
-                    F.md5(F.col("_id").cast("string").cast("binary")), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            < F.lit(cut)
-        )
     init = (
         v.select(
             F.md5(F.col("_id").cast("string").cast("binary")).alias("_h"),
@@ -185,7 +159,7 @@ def kmeans_lloyd(
         # empty cell -> previous centroid persists
         cents = [(cid, new.get(cid, mv)) for cid, mv in cents]
     return spark.createDataFrame(
-        cents, f"centroid_id int, {vec_col} array<double>"
+        cents, "centroid_id int, embedding array<double>"
     )
 
 
@@ -196,35 +170,22 @@ def knn_ivf_trained(
     n_cells: int = 10,
     n_probe: int = 3,
     iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    train_sample_mod: int | None = None,
 ) -> DataFrame:
     """IVF ANN over *learned* cells: deterministic Lloyd centroids
     (:func:`kmeans_lloyd`) feed the cell-probing search in
     ops/simsearch.py.  Fully SQL-replayable end to end — training,
     assignment, probing and the top-k all carry twin-oracle rounding/
-    tie rules, so the driver hash-gates this path against DuckDB.
-    ``train_sample_mod`` trains the cells on a deterministic ~1/m
-    sample while the full corpus is still assigned and searched."""
+    tie rules, so the driver hash-gates this path against DuckDB."""
     from .simsearch import knn_ivf
 
-    centroids = kmeans_lloyd(
-        emb, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-        train_sample_mod=train_sample_mod,
-    )
-    return knn_ivf(
-        emb, queries, centroids, k=k, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-    )
+    centroids = kmeans_lloyd(emb, k=n_cells, iters=iters)
+    return knn_ivf(emb, queries, centroids, k=k, n_probe=n_probe)
 
 
 UMAP_MAX_DRIVER_ROWS = 50_000
 
 
-def _em_fit_numpy(x, k: int, seed: int, max_iter: int = 100, tol: float = 1e-3,
-                  reg: float = 1e-6):
+def _em_fit_numpy(x, k: int, seed: int):
     """Full-covariance EM with sklearn GaussianMixture's semantics
     (kmeans++-style mean seeding, reg_covar on the diagonal, mean-ll
     tolerance).  Returns (total_log_likelihood, (weights, means, covs))."""
@@ -239,12 +200,12 @@ def _em_fit_numpy(x, k: int, seed: int, max_iter: int = 100, tol: float = 1e-3,
         p = d2 / tot if tot > 0 else None
         means.append(x[int(rng.choice(n, p=p))])
     means = np.asarray(means, dtype=np.float64)
-    base_cov = np.atleast_2d(np.cov(x.T)) + reg * np.eye(d)
+    base_cov = np.atleast_2d(np.cov(x.T)) + 1e-6 * np.eye(d)
     covs = np.repeat(base_cov[None, :, :], k, axis=0)
     weights = np.full(k, 1.0 / k)
     prev_mean_ll = -np.inf
     total_ll = -np.inf
-    for _ in range(max_iter):
+    for _ in range(100):
         log_prob = np.empty((n, k))
         for c in range(k):
             chol = np.linalg.cholesky(covs[c])
@@ -263,10 +224,10 @@ def _em_fit_numpy(x, k: int, seed: int, max_iter: int = 100, tol: float = 1e-3,
         means = (resp.T @ x) / nk[:, None]
         for c in range(k):
             diff = x - means[c]
-            covs[c] = (diff.T * resp[:, c]) @ diff / nk[c] + reg * np.eye(d)
+            covs[c] = (diff.T * resp[:, c]) @ diff / nk[c] + 1e-6 * np.eye(d)
         weights = nk / n
         mean_ll = total_ll / n
-        if abs(mean_ll - prev_mean_ll) < tol:
+        if abs(mean_ll - prev_mean_ll) < 1e-3:
             break
         prev_mean_ll = mean_ll
     return total_ll, (weights, means, covs)

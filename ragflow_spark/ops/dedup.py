@@ -23,7 +23,7 @@ from .textstats import norm_text
 # -- exact ---------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """One row per distinct canonical text: canonical id + group size.
 
     Groups on ``sha2(canon, 256)`` rather than the canonical text
@@ -36,11 +36,11 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     dedup-poisoning vector, and DuckDB replays it exactly
     (``sha256(canon)``)."""
     return (
-        df.select(F.col(id_col), norm_text(text_col).alias("canon"))
-        .select(F.col(id_col), F.sha2(F.col("canon"), 256).alias("_k"))
+        df.select(F.col("doc_id"), norm_text("text").alias("canon"))
+        .select(F.col("doc_id"), F.sha2(F.col("canon"), 256).alias("_k"))
         .groupBy("_k")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count("*").alias("n_dups"),
         )
         .select("canonical_id", "n_dups")
@@ -87,8 +87,6 @@ def shingle_stage(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
@@ -98,7 +96,7 @@ def ngram_jaccard_pairs(
     the scale path prefilters with LSH (minhash_lsh_candidates) first.
     """
     grams = (
-        df.select(F.col(id_col).alias("id"), norm_text(text_col).alias("_c"))
+        df.select(F.col("doc_id").alias("id"), norm_text("text").alias("_c"))
         .select("id", F.explode(char_ngrams_from(F.col("_c"), n)).alias("g"))
         .distinct()
     )
@@ -144,7 +142,7 @@ def _affine_params(num_hashes: int, seed: int = 1) -> list[tuple[int, int]]:
     ]
 
 
-def _affine_min_signature(hashes: Column, num_hashes: int, seed: int = 1) -> Column:
+def _affine_min_signature(hashes: Column, num_hashes: int) -> Column:
     """array<long> of num_hashes minima of affine reshuffles of a
     (materialized) 31-bit hash array — ONE traversal with an array
     accumulator, not num_hashes array_min columns.  The unrolled form
@@ -153,7 +151,7 @@ def _affine_min_signature(hashes: Column, num_hashes: int, seed: int = 1) -> Col
     measured 2.7x cold / 1.4x warm at sf0.1 for K=32).  All arithmetic
     stays under 2^56 (31-bit modulus x 25-bit-safe literals... a,b <
     2^31, h < 2^31 -> h*a < 2^62) so ANSI mode never sees overflow."""
-    params = _affine_params(num_hashes, seed)
+    params = _affine_params(num_hashes, 1)
     arr_a = F.array(*[F.lit(a).cast("long") for a, _ in params])
     arr_b = F.array(*[F.lit(b).cast("long") for _, b in params])
     idx = F.sequence(F.lit(1), F.lit(num_hashes))
@@ -306,12 +304,7 @@ def minhash_lsh_candidates(
 
 def minhash_dedup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 4,
-    shingle_n: int = 3,
     shingle: str = "char",
 ) -> DataFrame:
     """LSH candidates verified with exact shingle Jaccard.
@@ -322,9 +315,9 @@ def minhash_dedup_pairs(
     would otherwise verify on one core."""
     spark = df.sparkSession
     cand = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, shingle_n, shingle
+        df, "doc_id", "text", 32, 4, 3, shingle
     ).repartition(spark.sparkContext.defaultParallelism, "id_a")
-    grams = shingle_stage(df, id_col, text_col, shingle, shingle_n).withColumnRenamed(
+    grams = shingle_stage(df, "doc_id", "text", shingle, 3).withColumnRenamed(
         "_grams", "grams"
     )
     return (
@@ -398,34 +391,13 @@ def simhash64(col: Column) -> Column:
     return simhash64_from(token_hashes(col))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_blocks: int | None = None,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs within Hamming distance via pigeonhole banding —
-    EXACT recall at every radius.
-
-    With the default ``n_blocks = max_hamming + 1`` this is plain
-    pigeonhole: a pair at distance <= d leaves at least one of the d+1
-    segments untouched, so the join is bucketed on single segments.
-    Key width shrinks as d grows (d=8 -> 7-bit keys), which floods the
-    candidate stage with ~n^2/2^7 pairs per segment.
-
-    ``n_blocks > max_hamming + 1`` switches to combination banding
-    (Manku et al., WWW'07 §3): split into k blocks; <= d flipped bits
-    damage <= d blocks, so some (k - d)-subset of blocks is intact.
-    One table per subset — C(k, d) tables keyed on (k-d)/k x 64 bits.
-    k=10 at d=8 means 45 tables with ~12.8-bit keys: ~11x fewer
-    candidates than the 9-segment default for ~5x more (narrow) explode
-    rows — the right trade at corpus scale where the candidate join,
-    not the map stage, is the bottleneck."""
-    n_segs = max_hamming + 1
-    k = n_blocks or n_segs
-    if k < n_segs:
-        raise ValueError(f"n_blocks must be >= max_hamming + 1, got {k}")
+    EXACT recall at every radius: a pair at distance <= d leaves at
+    least one of the d+1 segments untouched, so the join is bucketed on
+    single segments.  Key width shrinks as d grows (d=8 -> 7-bit keys),
+    which floods the candidate stage with ~n^2/2^7 pairs per segment."""
+    k = max_hamming + 1
     bounds = [round(64 * i / k) for i in range(k + 1)]
 
     def _mask(width: int) -> int:
@@ -443,8 +415,8 @@ def simhash_pairs(
     # duplicated the ENTIRE signature aggregate per row per side
     # (tests/test_plans.py pins the clean shape).
     sh = (
-        _spread(df.where(F.col(text_col).isNotNull()))
-        .select(F.col(id_col).alias("id"), token_hashes(norm_text(text_col)).alias("hs"))
+        _spread(df.where(F.col("text").isNotNull()))
+        .select(F.col("doc_id").alias("id"), token_hashes(norm_text("text")).alias("hs"))
         .select(
             "id",
             F.coalesce(simhash64_from(F.col("hs")), F.lit(0).cast("long")).alias("sh"),
@@ -456,19 +428,7 @@ def simhash_pairs(
             F.lit(_mask(bounds[s + 1] - bounds[s])).cast("long")
         )
 
-    if k == n_segs:
-        tables = [F.struct(F.lit(s).alias("seg"), block(s).alias("key")) for s in range(k)]
-    else:
-        from itertools import combinations
-
-        subset_size = k - max_hamming
-        tables = [
-            F.struct(
-                F.lit(t).alias("seg"),
-                F.xxhash64(*[block(s) for s in combo]).alias("key"),
-            )
-            for t, combo in enumerate(combinations(range(k), subset_size))
-        ]
+    tables = [F.struct(F.lit(s).alias("seg"), block(s).alias("key")) for s in range(k)]
     segs = sh.select(
         "id",
         "sh",
@@ -520,8 +480,6 @@ def minhash_signature_md5(grams: Column, num_hashes: int = 12) -> Column:
 
 def minhash_lsh_candidates_md5(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 12,
     bands: int = 4,
     shingle_n: int = 3,
@@ -536,7 +494,7 @@ def minhash_lsh_candidates_md5(
     # grams materialize first: minhash_signature_md5 references its
     # input num_hashes times (per-column re-evaluation, docs/PLANS.md)
     banded = (
-        shingle_stage(_spread(df), id_col, text_col, shingle, shingle_n)
+        shingle_stage(_spread(df), "doc_id", "text", shingle, shingle_n)
         .select("id", minhash_signature_md5(F.col("_grams"), num_hashes).alias("sig"))
         .select(
             "id",
@@ -570,8 +528,7 @@ def minhash_lsh_candidates_md5(
 
 
 def simhash_md5_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+    df: DataFrame) -> DataFrame:
     """60-bit SimHash per document from md5-derived token hashes.
 
     Explode (token x bit) then two groupBys — all JVM-side expressions;
@@ -579,9 +536,9 @@ def simhash_md5_signatures(
     arithmetic so an external oracle matches bit-for-bit.
     """
     toks = _spread(df).select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
+            F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
         ).alias("tok"),
     ).withColumn("hx", F.substring(F.md5(F.col("tok")), 1, 15))
     bits = toks.select(
@@ -609,7 +566,7 @@ def simhash_md5_signatures(
         )
         .groupBy("id")
         .agg(F.sum("term").alias("simhash"))
-        .select(F.col("id").alias(id_col), F.col("simhash"))
+        .select(F.col("id").alias("doc_id"), F.col("simhash"))
     )
 
 
@@ -619,8 +576,6 @@ def simhash_md5_signatures(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs: (id_a < id_b,
     sim >= threshold), sim rounded to 6.
@@ -641,11 +596,11 @@ def embedding_near_dup_pairs(
     # sim = NaN pairs past the threshold filter (ADVICE r4 bug class)
     a = _spread(
         emb.select(
-            F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("_va")
+            F.col("vec_id").alias("id_a"), as_double(F.col("embedding")).alias("_va")
         ).withColumn("_na", norm(F.col("_va"))).where(finite_norm(F.col("_na")))
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("_vb")
+        F.col("vec_id").alias("id_b"), as_double(F.col("embedding")).alias("_vb")
     ).withColumn("_nb", norm(F.col("_vb"))).where(finite_norm(F.col("_nb")))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -664,10 +619,6 @@ def embedding_near_dup_pairs(
 def embedding_near_dup_lsh(
     emb: DataFrame,
     threshold: float = 0.35,
-    n_bits: int = 12,
-    n_bands: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate near-dup pairs: banded sign-sketch bucketing generates
     candidates (pair survives iff some band matches), then the exact
@@ -682,13 +633,13 @@ def embedding_near_dup_lsh(
         norm,
     )
 
-    bands = banded_keys(F.col("_sig"), n_bits, n_bands)
+    bands = banded_keys(F.col("_sig"), 12, 3)
 
     keyed = (
-        emb.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("_v"))
+        emb.select(F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_n", norm(F.col("_v")))
         .where(finite_norm(F.col("_n")))  # degenerates (incl. NaN) exit before signature work
-        .select("id", "_v", "_n", lsh_signature_from(F.col("_v"), n_bits).alias("_sig"))
+        .select("id", "_v", "_n", lsh_signature_from(F.col("_v"), 12).alias("_sig"))
         .select("id", "_v", "_n", bands.alias("bb"))
         .select(
             "id", "_v", "_n", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")

@@ -74,8 +74,6 @@ def pq_train(
     n_sub: int = 8,
     k_sub: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Fit PQ codebooks: ``codebooks[s][j]`` = centroid ``j`` of
     subspace ``s`` (driver-side lists; tiny by construction).
@@ -89,7 +87,7 @@ def pq_train(
     centroid id, rounded means, empty cells keep their centroid.
     """
     spark = emb.sparkSession
-    v = _normalized(emb, id_col, vec_col)
+    v = _normalized(emb, "vec_id", "embedding")
     first = v.select("_nv").first()
     if first is None:
         raise ValueError("no finite-norm vectors to train PQ codebooks")
@@ -100,7 +98,7 @@ def pq_train(
 
     init_rows = (
         v.select(
-            F.md5(F.col(id_col).cast("string").cast("binary")).alias("_h"),
+            F.md5(F.col("vec_id").cast("string").cast("binary")).alias("_h"),
             "_nv",
         )
         .orderBy("_h")
@@ -127,7 +125,7 @@ def pq_train(
             ]
         )
     )
-    train = v.select(F.col(id_col).alias("_id"), subs.alias("_p")).select(
+    train = v.select(F.col("vec_id").alias("_id"), subs.alias("_p")).select(
         "_id", F.col("_p.sub_id").alias("_s"), F.col("_p._sv").alias("_sv")
     )
     for _ in range(iters):
@@ -174,8 +172,6 @@ def pq_train(
 def pq_encode(
     emb: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<int>) — one zero-shuffle projection.
 
@@ -185,7 +181,7 @@ def pq_encode(
     trainer's argmin)."""
     n_sub = len(codebooks)
     d_sub = len(codebooks[0][0])
-    v = _normalized(emb, id_col, vec_col)
+    v = _normalized(emb, "vec_id", "embedding")
 
     def _code(s: int) -> Column:
         sv = F.slice("_nv", s * d_sub + 1, d_sub)
@@ -198,7 +194,7 @@ def pq_encode(
         return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
     return v.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*[_code(s) for s in range(n_sub)]).alias("codes"),
     )
 
@@ -211,9 +207,6 @@ def knn_pq(
     k_sub: int = 16,
     iters: int = 3,
     rerank: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k cosine via PQ/ADC with exact re-ranking:
     train, encode the corpus, score every (query, code) pair through
@@ -236,14 +229,11 @@ def knn_pq(
     the default 16·k=80 clears it.
     ``rerank=1`` degrades to pure ADC ordering (the paper's
     non-reranked variant) for contrast/benchmarks."""
-    books = pq_train(
-        corpus, n_sub=n_sub, k_sub=k_sub, iters=iters,
-        id_col=id_col, vec_col=vec_col,
+    books = pq_train(corpus, n_sub=n_sub, k_sub=k_sub, iters=iters)
+    codes = pq_encode(corpus, books).select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    qn = _normalized(queries, query_id_col, vec_col)
+    qn = _normalized(queries, "query_id", "embedding")
     # lut[s][j] = round(dot(q_s, books[s][j]), 6): dim·k_sub mults once
     # per query row, inside the broadcast relation
     d_sub = len(books[0][0])
@@ -264,7 +254,7 @@ def knn_pq(
             for s in range(n_sub)
         ]
     )
-    q = qn.select(F.col(query_id_col), lut.alias("_lut"))
+    q = qn.select(F.col("query_id"), lut.alias("_lut"))
     score = F.round(
         F.aggregate(
             F.zip_with(
@@ -278,8 +268,8 @@ def knn_pq(
         6,
     )
     scored = codes.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col(query_id_col)
-    ).select(F.col(query_id_col), F.col("neighbor_id"), score.alias("sim"))
+        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
+    ).select(F.col("query_id"), F.col("neighbor_id"), score.alias("sim"))
 
     # two-phase shortlist (same shape as knn_bruteforce: per-partition
     # heap over narrow rows, then a shortlist·P-row global resolve)
@@ -292,28 +282,28 @@ def knn_pq(
         for pdf in batches:
             t = pd.concat([best, pdf]) if best is not None else pdf
             t = t.sort_values(
-                [query_id_col, "sim", "neighbor_id"],
+                ["query_id", "sim", "neighbor_id"],
                 ascending=[True, False, True],
                 kind="mergesort",
             )
-            best = t.groupby(query_id_col, sort=False).head(shortlist)
+            best = t.groupby("query_id", sort=False).head(shortlist)
         if best is not None:
             yield best
 
     local = scored.mapInPandas(_local_topk, schema=scored.schema)
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
     )
     cand = (
         local.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= shortlist)
-        .select(query_id_col, "neighbor_id")
+        .select("query_id", "neighbor_id")
     )
     if rerank <= 1:
         return (
             local.withColumn("rank", F.row_number().over(w).cast("long"))
             .where(F.col("rank") <= k)
-            .select(query_id_col, "neighbor_id", "rank", "sim")
+            .select("query_id", "neighbor_id", "rank", "sim")
         )
     # exact re-rank of the shortlist: norms materialized per side below
     # the joins, one dot traversal per surviving pair (cosine_pre)
@@ -321,15 +311,15 @@ def knn_pq(
 
     cv = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("_cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double(F.col("embedding")).alias("_cv"),
         )
         .withColumn("_cn", norm(F.col("_cv")))
         .where(finite_norm(F.col("_cn")))
     )
     qv = (
         queries.select(
-            F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv")
+            F.col("query_id"), as_double(F.col("embedding")).alias("_qv")
         )
         .withColumn("_qn", norm(F.col("_qv")))
         .where(finite_norm(F.col("_qn")))
@@ -337,15 +327,15 @@ def knn_pq(
     exact = F.round(
         cosine_pre(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")), 6
     )
-    rw = Window.partitionBy(query_id_col).orderBy(
+    rw = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
     )
     return (
         cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), query_id_col)
+        .join(F.broadcast(qv), "query_id")
         .withColumn("sim", exact)
         .withColumn("rank", F.row_number().over(rw).cast("long"))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "sim")
+        .select("query_id", "neighbor_id", "rank", "sim")
     )
 

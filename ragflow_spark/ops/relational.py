@@ -20,36 +20,33 @@ from pyspark.sql import functions as F
 def sessionize(
     events: DataFrame,
     gap_sec: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
     """Per-user session stats: a new session starts when the gap from
     the previous event exceeds ``gap_sec`` (strictly)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # whole-second epoch (truncated), timezone-free: TIMESTAMP_NTZ (the
     # type parquet naive timestamps load as) cannot cast to long, so
     # diff from a naive anchor; plain TIMESTAMP casts directly
-    ts_type = dict(events.dtypes).get(ts_col, "timestamp")
+    ts_type = dict(events.dtypes).get("ts", "timestamp")
     if ts_type == "timestamp_ntz":
         secs = F.expr(
-            f"timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
-            f"date_trunc('second', {ts_col}))"
+            "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
+            "date_trunc('second', ts))"
         )
     else:
-        secs = F.col(ts_col).cast("long")
+        secs = F.col("ts").cast("long")
     gap = secs - F.lag(secs).over(w)
     new_sess = F.when(gap.isNull() | (gap > gap_sec), F.lit(1)).otherwise(F.lit(0))
     sess = events.withColumn("_new", new_sess).withColumn(
         "_sess", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
     return (
-        sess.groupBy(user_col)
+        sess.groupBy("user_id")
         .agg(
             F.max("_sess").cast("long").alias("n_sessions"),
             F.count("*").alias("n_events"),
         )
-        .select(user_col, "n_sessions", "n_events")
+        .select("user_id", "n_sessions", "n_events")
     )
 
 
@@ -105,7 +102,7 @@ def props_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def user_running_value(events: DataFrame, limit_users: int = 20) -> DataFrame:
+def user_running_value(events: DataFrame) -> DataFrame:
     """Ordered running sum per user (rows-unbounded-preceding window):
     the pagination/sort + window coverage in one deterministic query."""
     w = (
@@ -114,7 +111,7 @@ def user_running_value(events: DataFrame, limit_users: int = 20) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        events.where(F.col("user_id") < limit_users)
+        events.where(F.col("user_id") < 20)
         .withColumn("running_value", F.round(F.sum("value").over(w), 4))
         .select("user_id", "event_id", "running_value")
     )

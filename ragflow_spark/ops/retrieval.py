@@ -106,10 +106,6 @@ def bm25_raw_scores(
 def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
     top_k: int = 20,
 ) -> DataFrame:
     """Top-k docs for a bag-of-terms query: (doc_id, score, rank).
@@ -123,24 +119,19 @@ def bm25_scores(
     then ranks attach via a window over just those k rows.  Never a
     global unpartitioned row_number over the full corpus.
     """
-    agg = bm25_raw_scores(df, query_terms, id_col, text_col, k1, b)
+    agg = bm25_raw_scores(df, query_terms, "doc_id", "text", K1, B)
     topk = agg.orderBy(F.desc("score"), F.asc("id")).limit(top_k)
     w = Window.orderBy(F.desc("score"), F.asc("id"))
     return (
         topk.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select(F.col("id").alias(id_col), "score", "rank")
+        .select(F.col("id").alias("doc_id"), "score", "rank")
     )
 
 
 def hybrid_rerank(
     df: DataFrame,
     query_text: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    text_weight: float = 0.05,
-    dense_weight: float = 0.95,
     top_k: int = 10,
-    dim: int = 32,
 ) -> DataFrame:
     """Weighted text+dense fusion (0.05/0.95 parity): BM25 normalized by
     the per-query max, dense side = cosine vs the hash-encoded query.
@@ -153,21 +144,21 @@ def hybrid_rerank(
     from .simsearch import as_double, cosine_pre, norm
 
     terms = [t for t in query_text.lower().split() if t]
-    bm = bm25_raw_scores(df, terms, id_col, text_col)
+    bm = bm25_raw_scores(df, terms, "doc_id", "text")
     bm_max = bm.agg(F.coalesce(F.max("score"), F.lit(1.0)).alias("m"))
 
     chunks = df.select(
-        F.col(id_col).alias("chunk_id"), F.col(text_col).alias("content")
+        F.col("doc_id").alias("chunk_id"), F.col("text").alias("content")
     )
     # doc-side cast + norm materialize once per row below the join;
     # query-side once total inside the 1-row broadcast (see cosine_pre)
     emb = (
-        embed_chunks(chunks, dim=dim)
-        .withColumnRenamed("chunk_id", id_col)
+        embed_chunks(chunks, dim=32)
+        .withColumnRenamed("chunk_id", "doc_id")
         .withColumn("_dv", as_double(F.col("q_vec")))
         .withColumn("_dn", norm(F.col("_dv")))
     )
-    qv = _HashEncoder(dim).encode([query_text])[0]
+    qv = _HashEncoder(32).encode([query_text])[0]
     spark = df.sparkSession
     qdf = (
         spark.createDataFrame([(qv,)], "qv array<float>")
@@ -178,7 +169,7 @@ def hybrid_rerank(
     fused = (
         emb.crossJoin(F.broadcast(qdf))
         .crossJoin(F.broadcast(bm_max))
-        .join(bm.select(F.col("id").alias(id_col), "score"), id_col, "left")
+        .join(bm.select(F.col("id").alias("doc_id"), "score"), "doc_id", "left")
         .withColumn(
             "dense_sim",
             F.round(
@@ -191,17 +182,17 @@ def hybrid_rerank(
         .withColumn(
             "fused",
             F.round(
-                F.lit(text_weight) * F.coalesce(F.col("score") / F.col("m"), F.lit(0.0))
-                + F.lit(dense_weight) * F.col("dense_sim"),
+                F.lit(0.05) * F.coalesce(F.col("score") / F.col("m"), F.lit(0.0))
+                + F.lit(0.95) * F.col("dense_sim"),
                 6,
             ),
         )
     )
-    topk = fused.orderBy(F.desc("fused"), F.asc(id_col)).limit(top_k)
-    w = Window.orderBy(F.desc("fused"), F.asc(id_col))
+    topk = fused.orderBy(F.desc("fused"), F.asc("doc_id")).limit(top_k)
+    w = Window.orderBy(F.desc("fused"), F.asc("doc_id"))
     return (
         topk.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select(id_col, "fused", "dense_sim", "rank")
+        .select("doc_id", "fused", "dense_sim", "rank")
     )
 
 
@@ -213,8 +204,6 @@ def hybrid_rerank(
 def weighted_fulltext_scores(
     df: DataFrame,
     term_weights: list[tuple[str, float, bool]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_k: int = 20,
 ) -> DataFrame:
     """Docs scored by the reference's weighted query build: score(d) =
@@ -235,8 +224,8 @@ def weighted_fulltext_scores(
     # expression materialization rule) — unstaged, the O(len)
     # normalize+split would run once per query term per row.
     staged = df.select(
-        F.col(id_col).alias("id"),
-        F.split(norm_text(text_col), " ").alias("_toks"),
+        F.col("doc_id").alias("id"),
+        F.split(norm_text("text"), " ").alias("_toks"),
     )
     toks = F.col("_toks")
     score = F.lit(0.0)
@@ -252,15 +241,13 @@ def weighted_fulltext_scores(
     w_rank = Window.orderBy(F.desc("score"), F.asc("id"))
     return (
         topk.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .select(F.col("id").alias(id_col), "score", "rank")
+        .select(F.col("id").alias("doc_id"), "score", "rank")
     )
 
 
 def token_sim_scores(
     df: DataFrame,
     query_weights: list[tuple[str, float]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_k: int = 20,
 ) -> DataFrame:
     """The reference's token-set similarity (rag/nlp/query.py:239-263,
@@ -270,8 +257,8 @@ def token_sim_scores(
     """
     # _toks staged once (materialization rule, docs/PLANS.md)
     staged = df.select(
-        F.col(id_col).alias("id"),
-        F.split(norm_text(text_col), " ").alias("_toks"),
+        F.col("doc_id").alias("id"),
+        F.split(norm_text("text"), " ").alias("_toks"),
     )
     toks = F.col("_toks")
     matched = F.lit(0.0)
@@ -290,7 +277,7 @@ def token_sim_scores(
     w_rank = Window.orderBy(F.desc("token_sim"), F.asc("id"))
     return (
         topk.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .select(F.col("id").alias(id_col), "token_sim", "rank")
+        .select(F.col("id").alias("doc_id"), "token_sim", "rank")
     )
 
 
@@ -298,12 +285,7 @@ def hybrid_similarity_rerank(
     df: DataFrame,
     query_text: str,
     query_weights: list[tuple[str, float]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tkweight: float = 0.3,
-    vtweight: float = 0.7,
     top_k: int = 10,
-    dim: int = 32,
 ) -> DataFrame:
     """The reference's rerank fusion (rag/nlp/query.py:219-237
     ``hybrid_similarity``, used by search.rerank): 0.3 * token-set
@@ -314,7 +296,7 @@ def hybrid_similarity_rerank(
 
     # _toks staged once (materialization rule, docs/PLANS.md)
     staged = df.select(
-        F.col(id_col), F.split(norm_text(text_col), " ").alias("_toks")
+        F.col("doc_id"), F.split(norm_text("text"), " ").alias("_toks")
     )
     toks = F.col("_toks")
     matched = F.lit(0.0)
@@ -328,22 +310,22 @@ def hybrid_similarity_rerank(
     tsim = (F.lit(1e-9) + matched) / F.lit(1e-9 + total)
 
     chunks = df.select(
-        F.col(id_col).alias("chunk_id"), F.col(text_col).alias("content")
+        F.col("doc_id").alias("chunk_id"), F.col("text").alias("content")
     )
-    emb = embed_chunks(chunks, dim=dim).withColumnRenamed("chunk_id", id_col)
-    qv = _HashEncoder(dim).encode([query_text])[0]
+    emb = embed_chunks(chunks, dim=32).withColumnRenamed("chunk_id", "doc_id")
+    qv = _HashEncoder(32).encode([query_text])[0]
     qdf = (
         df.sparkSession.createDataFrame([(qv,)], "qv array<float>")
         .select(as_double(F.col("qv")).alias("_qdv"))
         .withColumn("_qn", norm(F.col("_qdv")))
     )
-    base = staged.select(F.col(id_col), F.round(tsim, 6).alias("token_sim"))
+    base = staged.select(F.col("doc_id"), F.round(tsim, 6).alias("token_sim"))
     fused = (
         base.join(
             emb.select(
-                F.col(id_col), as_double(F.col("q_vec")).alias("_dv")
+                F.col("doc_id"), as_double(F.col("q_vec")).alias("_dv")
             ).withColumn("_dn", norm(F.col("_dv"))),
-            id_col,
+            "doc_id",
         )
         .crossJoin(F.broadcast(qdf))
         .withColumn(
@@ -358,49 +340,48 @@ def hybrid_similarity_rerank(
         .withColumn(
             "hybrid",
             F.round(
-                F.lit(tkweight) * F.col("token_sim")
-                + F.lit(vtweight) * F.col("dense_sim"),
+                F.lit(0.3) * F.col("token_sim")
+                + F.lit(0.7) * F.col("dense_sim"),
                 6,
             ),
         )
     )
-    topk = fused.orderBy(F.desc("hybrid"), F.asc(id_col)).limit(top_k)
-    w_rank = Window.orderBy(F.desc("hybrid"), F.asc(id_col))
+    topk = fused.orderBy(F.desc("hybrid"), F.asc("doc_id")).limit(top_k)
+    w_rank = Window.orderBy(F.desc("hybrid"), F.asc("doc_id"))
     return (
         topk.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .select(id_col, "hybrid", "token_sim", "dense_sim", "rank")
+        .select("doc_id", "hybrid", "token_sim", "dense_sim", "rank")
     )
+
+
+# fixed settings of retrieval_pipeline; oracle_sql() in __spark_entry__.py
+# replays the same values
+RERANK_LIMIT = 64
+SIMILARITY_THRESHOLD = 0.2
+VECTOR_SIMILARITY_WEIGHT = 0.3
 
 
 def retrieval_pipeline(
     df: DataFrame,
     query_text: str,
     term_weights: list[tuple[str, float, bool]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     page: int = 1,
     page_size: int = 10,
-    rerank_limit: int = 64,
-    similarity_threshold: float = 0.2,
-    vector_similarity_weight: float = 0.3,
-    dim: int = 32,
     rank_feature: dict[str, float] | None = None,
-    tag_col: str = "tag_feas",
-    pagerank_col: str = "pagerank",
 ) -> DataFrame:
     """The reference's end-to-end retrieval orchestration
     (rag/nlp/search.py:348-431 ``retrieval``) as ONE Spark plan:
 
     1. recall: weighted-term match + dense cosine fused 0.05/0.95
-       (search.py:114 FusionExpr), top ``rerank_limit`` candidates via
+       (search.py:114 FusionExpr), top ``RERANK_LIMIT`` candidates via
        TakeOrderedAndProject — the corpus is scanned once, both
        signals come from the same projection + one broadcast join;
     2. rerank over ONLY those candidates: token-set similarity
        (query weights vs doc membership) and dense cosine fused
        ``(1 - w) * tksim + w * dense`` (search.py:436-441 with
-       tkweight = 1 - vector_similarity_weight);
+       tkweight = 1 - VECTOR_SIMILARITY_WEIGHT);
     3. threshold filter + deterministic pagination
-       (sim >= threshold, rank by (sim desc, id), rows
+       (sim >= SIMILARITY_THRESHOLD, rank by (sim desc, id), rows
        ``(page-1)*page_size .. page*page_size``).
 
     With ``rank_feature`` set, the boost participates in BOTH stages,
@@ -414,7 +395,7 @@ def retrieval_pipeline(
     the boost is one extra projection over the corpus scan — no second
     scan, and the cut stays a TakeOrderedAndProject.
 
-    Stage 2-3 touch ``rerank_limit`` rows, so the windows there are
+    Stage 2-3 touch ``RERANK_LIMIT`` rows, so the windows there are
     k-row, never corpus-wide.  Fully replayable in external SQL (the
     driver oracle) — every hash is md5-derived.
     """
@@ -434,9 +415,9 @@ def retrieval_pipeline(
         tk_matched = tk_matched + F.when(hit, F.lit(w6)).otherwise(F.lit(0.0))
         tk_total += w6
 
-    chunks = df.select(F.col(id_col).alias("chunk_id"), F.col(text_col).alias("content"))
-    emb = embed_chunks(chunks, dim=dim).withColumnRenamed("chunk_id", id_col)
-    qv = _HashEncoder(dim).encode([query_text])[0]
+    chunks = df.select(F.col("doc_id").alias("chunk_id"), F.col("text").alias("content"))
+    emb = embed_chunks(chunks, dim=32).withColumnRenamed("chunk_id", "doc_id")
+    qv = _HashEncoder(32).encode([query_text])[0]
     qdf = (
         df.sparkSession.createDataFrame([(qv,)], "qv array<float>")
         .select(as_double(F.col("qv")).alias("_qdv"))
@@ -446,23 +427,23 @@ def retrieval_pipeline(
     extra_cols = []
     if rank_feature is not None:
         extra_cols.append(
-            (F.col(tag_col) if tag_col in df.columns else F.lit(None).cast("string"))
-            .alias(tag_col)
+            (F.col("tag_feas") if "tag_feas" in df.columns else F.lit(None).cast("string"))
+            .alias("tag_feas")
         )
         extra_cols.append(
             (
                 # coalesce like rank_feature_scores does: a NULL
                 # pagerank would propagate through rank_fea into the
                 # fused sim and silently drop the doc at the threshold
-                F.coalesce(F.col(pagerank_col), F.lit(0.0))
-                if pagerank_col in df.columns
+                F.coalesce(F.col("pagerank"), F.lit(0.0))
+                if "pagerank" in df.columns
                 else F.lit(0.0)
-            ).alias(pagerank_col)
+            ).alias("pagerank")
         )
     base = df.withColumn(
-        "_toks", F.split(norm_text(text_col), " ")
+        "_toks", F.split(norm_text("text"), " ")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(wft, 6).alias("wft"),
         F.round((F.lit(1e-9) + tk_matched) / F.lit(1e-9 + tk_total), 6).alias(
             "token_sim"
@@ -473,9 +454,9 @@ def retrieval_pipeline(
     scored = (
         base.join(
             emb.select(
-                F.col(id_col), as_double(F.col("q_vec")).alias("_dv")
+                F.col("doc_id"), as_double(F.col("q_vec")).alias("_dv")
             ).withColumn("_dn", norm(F.col("_dv"))),
-            id_col,
+            "doc_id",
         )
         .crossJoin(F.broadcast(qdf))
         .crossJoin(F.broadcast(wft_max))
@@ -500,13 +481,13 @@ def retrieval_pipeline(
     )
     if rank_feature is not None:
         scored = _with_rank_fea(
-            scored, rank_feature, tag_col, F.col(pagerank_col)
+            scored, rank_feature, "tag_feas", F.col("pagerank")
         )
         cut_key = F.round(F.col("fused") + F.col("rank_fea"), 6)
     else:
         cut_key = F.col("fused")
-    cand = scored.orderBy(cut_key.desc(), F.asc(id_col)).limit(rerank_limit)
-    vw = vector_similarity_weight
+    cand = scored.orderBy(cut_key.desc(), F.asc("doc_id")).limit(RERANK_LIMIT)
+    vw = VECTOR_SIMILARITY_WEIGHT
     hybrid = (
         F.lit(1.0 - vw) * F.col("token_sim") + F.lit(vw) * F.col("dense_sim")
     )
@@ -515,11 +496,11 @@ def retrieval_pipeline(
     else:
         sim_expr = F.round(hybrid, 6)
     reranked = cand.withColumn("sim", sim_expr).where(
-        F.col("sim") >= similarity_threshold
+        F.col("sim") >= SIMILARITY_THRESHOLD
     )
-    w_rank = Window.orderBy(F.desc("sim"), F.asc(id_col))
+    w_rank = Window.orderBy(F.desc("sim"), F.asc("doc_id"))
     lo, hi = (page - 1) * page_size, page * page_size
-    out_cols = [id_col, "sim", "token_sim", "dense_sim", "fused", "rank"]
+    out_cols = ["doc_id", "sim", "token_sim", "dense_sim", "fused", "rank"]
     if rank_feature is not None:
         out_cols.insert(2, "rank_fea")
     return (
@@ -534,7 +515,6 @@ def _with_rank_fea(
     query_rfea: dict[str, float],
     tag_col: str,
     pagerank: Column,
-    out: str = "rank_fea",
 ) -> DataFrame:
     """Append ``round(rank_fea + pagerank, 6)`` as column ``out``: the
     tag-similarity boost ``10 * <q, d> / (|d| * |q|)`` over the JSON
@@ -571,7 +551,7 @@ def _with_rank_fea(
         ).otherwise(nor / F.sqrt(F.col("_rf_denor")) / F.lit(q_denor))
         * 10.0
     )
-    return staged.withColumn(out, F.round(fea + pagerank, 6)).drop(
+    return staged.withColumn("rank_fea", F.round(fea + pagerank, 6)).drop(
         "_rf_tags", "_rf_denor"
     )
 
@@ -579,9 +559,6 @@ def _with_rank_fea(
 def rank_feature_scores(
     df: DataFrame,
     query_rfea: dict[str, float],
-    id_col: str = "doc_id",
-    tag_col: str = "tag_feas",
-    pagerank_col: str = "pagerank",
 ) -> DataFrame:
     """The reference's rank-feature boost
     (rag/nlp/search.py:258-277 ``_rank_feature_scores``): per doc,
@@ -601,10 +578,10 @@ def rank_feature_scores(
     (id, rank_fea).
     """
     pagerank = (
-        F.coalesce(F.col(pagerank_col), F.lit(0.0))
-        if pagerank_col in df.columns
+        F.coalesce(F.col("pagerank"), F.lit(0.0))
+        if "pagerank" in df.columns
         else F.lit(0.0)
     )
-    return _with_rank_fea(df, query_rfea, tag_col, pagerank).select(
-        F.col(id_col), F.col("rank_fea")
+    return _with_rank_fea(df, query_rfea, "tag_feas", pagerank).select(
+        F.col("doc_id"), F.col("rank_fea")
     )

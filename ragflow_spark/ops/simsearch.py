@@ -46,32 +46,18 @@ def norm(v: Column) -> Column:
     return F.sqrt(dot(v, v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either vector has zero norm (empty
-    array, all-zero, or null) — cosine is undefined there, and under
-    ANSI mode the unguarded 0/0 raised DIVIDE_BY_ZERO, aborting a whole
-    job on one degenerate row (r4 self-review repro).  The guarded
-    branch keeps the exact sqrt(dot)*sqrt(dot) denominator form the
-    DuckDB oracles replay bit-for-bit — do NOT fold it into
-    sqrt(dot*dot), which differs in ulp and can flip round(_, 6).
-
-    NOTE (hot paths): this expression traverses the arrays five times
-    per evaluation (the guard's condition and value each re-evaluate
-    the norms — Catalyst does not CSE across a ``when``).  Anywhere the
-    same vector meets many partners (a k-NN join, a scan against one
-    query), materialize the norms ONCE per row with :func:`norm` and
-    score with :func:`cosine_pre` — measured 2x on knn_bruteforce at
-    sf0.1 when the r4 guard landed here unhoisted (BENCH.md r4)."""
-    den = norm(a) * norm(b)
-    return F.when(den > 0, dot(a, b) / den).otherwise(F.lit(None).cast("double"))
-
-
 def cosine_pre(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
-    """:func:`cosine` with the norms already materialized as columns
-    (one array traversal per pair instead of five).  Bit-identical to
-    ``cosine(a, b)``: same ``dot / (sqrt(dot) * sqrt(dot))``
-    parenthesization, the subexpressions just evaluate once.  A NULL
-    norm fails ``den > 0`` and yields NULL — but a NaN norm does NOT:
+    """Cosine similarity with the norms (:func:`norm`) materialized as
+    columns once per row, so a vector meeting many partners (a k-NN
+    join, a scan against one query) is traversed once per pair, not
+    five times.  NULL when either vector has zero norm (empty array,
+    all-zero, or null) — cosine is undefined there, and under ANSI mode
+    an unguarded 0/0 raises DIVIDE_BY_ZERO, aborting a whole job on one
+    degenerate row.  Keep the exact ``dot / (sqrt(dot) * sqrt(dot))``
+    denominator form the DuckDB oracles replay bit-for-bit — do NOT
+    fold it into sqrt(dot*dot), which differs in ulp and can flip
+    round(_, 6).  A NULL norm fails ``den > 0`` and yields NULL — but
+    a NaN norm does NOT:
     Spark orders NaN above every other double, so ``NaN > 0`` is TRUE
     and the guard passes, producing a NaN sim that then outranks every
     real similarity in a desc sort.  Callers must therefore exclude
@@ -99,9 +85,6 @@ def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Top-k cosine neighbours per query (self excluded), two-phase.
 
@@ -122,7 +105,7 @@ def knn_bruteforce(
     # norms materialize BELOW the join — once per query row (inside the
     # broadcast relation) and once per corpus row (before the stream
     # side's inner loop) — so the per-pair work is ONE dot traversal +
-    # scalar ops, not cosine()'s five traversals (see cosine_pre).
+    # scalar ops (see cosine_pre).
     # Degenerate vectors (zero-norm, empty, null, null-element — all of
     # which make the norm NULL or 0) are filtered per SIDE here, not
     # via where(sim.isNotNull()) after the join: an isnotnull filter on
@@ -132,19 +115,19 @@ def knn_bruteforce(
     # covers the remaining NULL source (dimension mismatch), so sim is
     # provably non-NULL and no post-join filter is needed.
     q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv")
+        F.col("query_id"), as_double(F.col("embedding")).alias("_qv")
     ).withColumn("_qn", norm(F.col("_qv"))).where(finite_norm(F.col("_qn")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("_cv")
     ).withColumn("_cn", norm(F.col("_cv"))).where(finite_norm(F.col("_cn")))
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")), 6
     )
     scored = c.join(
         F.broadcast(q),
-        (F.col("neighbor_id") != F.col(query_id_col))
+        (F.col("neighbor_id") != F.col("query_id"))
         & (F.size(F.col("_cv")) == F.size(F.col("_qv"))),
-    ).select(F.col(query_id_col), F.col("neighbor_id"), sim.alias("sim"))
+    ).select(F.col("query_id"), F.col("neighbor_id"), sim.alias("sim"))
 
     def _local_topk(batches):
         import pandas as pd
@@ -153,23 +136,23 @@ def knn_bruteforce(
         for pdf in batches:
             t = pd.concat([best, pdf]) if best is not None else pdf
             t = t.sort_values(
-                [query_id_col, "sim", "neighbor_id"],
+                ["query_id", "sim", "neighbor_id"],
                 ascending=[True, False, True],
                 kind="mergesort",
             )
-            best = t.groupby(query_id_col, sort=False).head(k)
+            best = t.groupby("query_id", sort=False).head(k)
         if best is not None:
             yield best
 
     schema = scored.schema
     local = scored.mapInPandas(_local_topk, schema=schema)
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
     )
     return (
         local.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "sim")
+        .select("query_id", "neighbor_id", "rank", "sim")
     )
 
 
@@ -225,19 +208,16 @@ def ivf_assign(
 def ivf_build_stats(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """Cell sizes + mean member similarity — the IVF 'index build'."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, centroid_id_col)
+    assigned = ivf_assign(corpus, centroids, "vec_id", "embedding", "centroid_id")
     return (
-        assigned.groupBy(centroid_id_col)
+        assigned.groupBy("centroid_id")
         .agg(
             F.count("*").alias("n_members"),
             F.round(F.avg("centroid_sim"), 4).alias("avg_sim"),
         )
-        .select(centroid_id_col, "n_members", "avg_sim")
+        .select("centroid_id", "n_members", "avg_sim")
     )
 
 
@@ -247,9 +227,6 @@ def knn_ivf(
     centroids: DataFrame,
     k: int = 5,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: probe the n_probe best cells per query only.
 
@@ -257,17 +234,17 @@ def knn_ivf(
     a co-partitioned join on centroid_id between probed cells and cell
     members — the cross join is bounded by cell size, never corpus size.
     """
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, "centroid_id")
+    assigned = ivf_assign(corpus, centroids, "vec_id", "embedding", "centroid_id")
     # degenerate vectors filtered per side BELOW the join; dimension
     # mismatch guarded by the size check — so sim is provably non-NULL
     # and no where(sim.isNotNull()) re-materializes the dot product
     # inside the join condition (see knn_bruteforce)
     members = (
-        assigned.join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
+        assigned.join(corpus.select(F.col("vec_id"), F.col("embedding")), "vec_id")
         .select(
             "centroid_id",
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("_cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double(F.col("embedding")).alias("_cv"),
         )
         .withColumn("_cn", norm(F.col("_cv")))  # once per member row
         .where(finite_norm(F.col("_cn")))
@@ -276,22 +253,22 @@ def knn_ivf(
     # query row, below its crossJoin) — recomputing it here cost one
     # redundant full-array traversal per probe row (ADVICE r4)
     probes = ivf_probe_cells(
-        queries, centroids, n_probe, vec_col, query_id_col
+        queries, centroids, n_probe, "embedding", "query_id"
     ).where(finite_norm(F.col("_qn")))
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")), 6
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         probes.join(members, "centroid_id")
         .where(
-            (F.col("neighbor_id") != F.col(query_id_col))
+            (F.col("neighbor_id") != F.col("query_id"))
             & (F.size(F.col("_cv")) == F.size(F.col("_qv")))
         )
         .withColumn("sim", sim)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "sim")
+        .select("query_id", "neighbor_id", "rank", "sim")
     )
 
 
@@ -338,8 +315,7 @@ def _plane_component(bit: int | Column, dim_idx: Column, seed: int) -> Column:
 
 
 def lsh_signature_from(
-    v: Column, n_bits: int = 16, seed: int = 7
-) -> Column:
+    v: Column, n_bits: int = 16) -> Column:
     """Sign sketch from a MATERIALIZED double-array column: bit b =
     [<v, plane_b> >= 0], packed into a long.  Materialize ``v`` (and
     feed the signature through its own projection) on hot paths.
@@ -363,7 +339,7 @@ def lsh_signature_from(
         lambda acc, i: F.zip_with(
             acc,
             F.transform(
-                bidx, lambda b: F.element_at(v, i + 1) * _plane_component(b, i, seed)
+                bidx, lambda b: F.element_at(v, i + 1) * _plane_component(b, i, 7)
             ),
             lambda s, x: s + x,
         ),
@@ -388,11 +364,6 @@ def knn_lsh(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_bits: int = 12,
-    n_bands: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k via banded sign sketches: a pair is a candidate
     iff some band of the signature matches; candidates get the exact
@@ -413,9 +384,9 @@ def knn_lsh(
             .where(finite_norm(F.col("_n")))
         )
         step_s = step_v.select(
-            idc, "_v", "_n", lsh_signature_from(F.col("_v"), n_bits).alias("_sig")
+            idc, "_v", "_n", lsh_signature_from(F.col("_v"), 12).alias("_sig")
         )
-        bands = banded_keys(F.col("_sig"), n_bits, n_bands)
+        bands = banded_keys(F.col("_sig"), 12, 3)
         return step_s.select(idc, "_v", "_n", bands.alias("bb")).select(
             idc,
             "_v",
@@ -425,41 +396,41 @@ def knn_lsh(
         )
 
     cb = (
-        banded(corpus, id_col, vec_col)
-        .withColumnRenamed(id_col, "neighbor_id")
+        banded(corpus, "vec_id", "embedding")
+        .withColumnRenamed("vec_id", "neighbor_id")
         .withColumnRenamed("_n", "_cn")
     )
     qb = (
-        banded(queries, query_id_col, vec_col)
+        banded(queries, "query_id", "embedding")
         .withColumnRenamed("_v", "_qv")
         .withColumnRenamed("_n", "_qn")
     )
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_v"), F.col("_qn"), F.col("_cn")), 6
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         qb.join(cb, ["band", "bkey"])
         .where(
-            (F.col("neighbor_id") != F.col(query_id_col))
+            (F.col("neighbor_id") != F.col("query_id"))
             & (F.size(F.col("_qv")) == F.size(F.col("_v")))
         )
         # norms are functions of the vectors, so adding them to the
         # distinct key changes nothing; carrying them (8 bytes/row)
         # beats recomputing per pair
-        .select(query_id_col, "neighbor_id", "_qv", "_qn", "_v", "_cn")
+        .select("query_id", "neighbor_id", "_qv", "_qn", "_v", "_cn")
         .distinct()
         .withColumn("sim", sim)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "sim")
+        .select("query_id", "neighbor_id", "rank", "sim")
     )
 
 
 # -- md5-derived hyperplanes (oracle-parity twins) ---------------------------
 
 
-def lsh_signature_md5_from(v: Column, n_bits: int = 12, seed: int = 7) -> Column:
+def lsh_signature_md5_from(v: Column, n_bits: int = 12) -> Column:
     """Sign sketch with md5-derived plane components — the cross-engine
     twin of :func:`lsh_signature_from` (xxhash64 has no DuckDB equivalent;
     md5 hex prefixes do).  Component c(bit, dim) =
@@ -474,7 +445,7 @@ def lsh_signature_md5_from(v: Column, n_bits: int = 12, seed: int = 7) -> Column
                 F.substring(
                     F.md5(
                         F.concat_ws(
-                            "|", F.lit(str(seed)), F.lit(str(bit)), i.cast("string")
+                            "|", F.lit("7"), F.lit(str(bit)), i.cast("string")
                         ).cast("binary")
                     ),
                     1,
@@ -521,11 +492,6 @@ def knn_lsh_md5(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_bits: int = 12,
-    n_bands: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """:func:`knn_lsh` with md5-derived planes — identical plan shape
     (banded candidate join, exact rounded cosine, per-query rank), but
@@ -536,15 +502,15 @@ def knn_lsh_md5(
         # signature work (same shape as knn_lsh — no isnotnull(sim)
         # filter to duplicate the dot into the band-join condition)
         step_v = (
-            df.select(F.col(idc), as_double(F.col(vec_col)).alias("_v"))
+            df.select(F.col(idc), as_double(F.col("embedding")).alias("_v"))
             .withColumn("_n", norm(F.col("_v")))
             .where(finite_norm(F.col("_n")))
         )
         step_s = step_v.select(
-            idc, "_v", "_n", lsh_signature_md5_from(F.col("_v"), n_bits).alias("_sig")
+            idc, "_v", "_n", lsh_signature_md5_from(F.col("_v"), 12).alias("_sig")
         )
         return step_s.select(
-            idc, "_v", "_n", banded_keys(F.col("_sig"), n_bits, n_bands).alias("bb")
+            idc, "_v", "_n", banded_keys(F.col("_sig"), 12, 3).alias("bb")
         ).select(
             idc,
             "_v",
@@ -554,51 +520,47 @@ def knn_lsh_md5(
         )
 
     cb = (
-        banded(corpus, id_col)
-        .withColumnRenamed(id_col, "neighbor_id")
+        banded(corpus, "vec_id")
+        .withColumnRenamed("vec_id", "neighbor_id")
         .withColumnRenamed("_n", "_cn")
     )
     qb = (
-        banded(queries, query_id_col)
+        banded(queries, "query_id")
         .withColumnRenamed("_v", "_qv")
         .withColumnRenamed("_n", "_qn")
     )
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_v"), F.col("_qn"), F.col("_cn")), 6
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         qb.join(cb, ["band", "bkey"])
         .where(
-            (F.col("neighbor_id") != F.col(query_id_col))
+            (F.col("neighbor_id") != F.col("query_id"))
             & (F.size(F.col("_qv")) == F.size(F.col("_v")))
         )
-        .select(query_id_col, "neighbor_id", "_qv", "_qn", "_v", "_cn")
+        .select("query_id", "neighbor_id", "_qv", "_qn", "_v", "_cn")
         .distinct()
         .withColumn("sim", sim)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "sim")
+        .select("query_id", "neighbor_id", "rank", "sim")
     )
 
 
 def embedding_near_dup_lsh_md5(
     emb: DataFrame,
     threshold: float = 0.35,
-    n_bits: int = 12,
-    n_bands: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-dup pairs via md5-plane banded buckets + exact cosine
     confirm — the oracle-parity twin of
     :func:`ragflow_spark.ops.dedup.embedding_near_dup_lsh`."""
     keyed = (
-        emb.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("_v"))
+        emb.select(F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_n", norm(F.col("_v")))
         .where(finite_norm(F.col("_n")))  # degenerates exit before signature work
-        .select("id", "_v", "_n", lsh_signature_md5_from(F.col("_v"), n_bits).alias("_sig"))
-        .select("id", "_v", "_n", banded_keys(F.col("_sig"), n_bits, n_bands).alias("bb"))
+        .select("id", "_v", "_n", lsh_signature_md5_from(F.col("_v"), 12).alias("_sig"))
+        .select("id", "_v", "_n", banded_keys(F.col("_sig"), 12, 3).alias("bb"))
         .select(
             "id", "_v", "_n", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
         )

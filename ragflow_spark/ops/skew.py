@@ -34,8 +34,7 @@ def host_of(url_col: Column) -> Column:
 
 
 def hot_keys(
-    df: DataFrame, key_col: str, threshold: float = 0.01, max_keys: int = 1000
-) -> list[str]:
+    df: DataFrame, key_col: str, threshold: float = 0.01) -> list[str]:
     """Keys carrying more than ``threshold`` fraction of rows."""
     total = df.count()
     if total == 0:
@@ -45,7 +44,7 @@ def hot_keys(
         .agg(F.count("*").alias("n"))
         .where(F.col("n") > total * threshold)
         .orderBy(F.desc("n"))
-        .limit(max_keys)
+        .limit(1000)
         .collect()
     )
     return [r[key_col] for r in rows]
@@ -74,9 +73,7 @@ def salted_agg(
     df: DataFrame,
     key_col: str,
     aggs: dict[str, str],
-    hot: list[str] | None = None,
     salt_source: str = "url",
-    fanout: int = 16,
     threshold: float = 0.01,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation for algebraic aggregates
@@ -85,9 +82,8 @@ def salted_agg(
     ``aggs`` maps output column -> "count" | "sum:<col>" | "min:<col>"
     | "max:<col>".
     """
-    if hot is None:
-        hot = hot_keys(df, key_col, threshold)
-    salted = with_salt(df, key_col, hot, salt_source, fanout)
+    hot = hot_keys(df, key_col, threshold)
+    salted = with_salt(df, key_col, hot, salt_source, 16)
 
     partial_exprs, final_exprs = [], []
     for out, spec in aggs.items():

@@ -32,10 +32,10 @@ def word_count(col: str = "text") -> Column:
     )
 
 
-def add_lang_id(df: DataFrame, col: str = "text") -> DataFrame:
+def add_lang_id(df: DataFrame) -> DataFrame:
     """ASCII-letter ratio heuristic: mirrors is_english / is_chinese
     (rag/nlp/__init__.py:228-257) as pure column expressions."""
-    t = F.col(col)
+    t = F.col("text")
     total = F.length(t)
     # char class kept RE2/Java-portable (oracle parity): letters, digits,
     # whitespace, common ASCII punctuation, '-' last so it is literal
@@ -50,12 +50,12 @@ def add_lang_id(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def add_quality(df: DataFrame, col: str = "text") -> DataFrame:
+def add_quality(df: DataFrame) -> DataFrame:
     """Length + punctuation ratio + stopword ratio -> [0,1] quality score
     (Gopher/C4-style heuristics, expressed as native columns)."""
-    t = F.trim(F.col(col))
+    t = F.trim(F.col("text"))
     n_chars = F.length(t)
-    n_words = word_count(col)
+    n_words = word_count("text")
     n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?。；！？，]", ""))
     words = F.split(F.lower(t), r"\s+")
     n_stop = F.size(F.filter(words, lambda w: w.isin(_STOPWORDS)))
@@ -76,14 +76,14 @@ def add_quality(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def add_fingerprint(df: DataFrame, col: str = "text") -> DataFrame:
+def add_fingerprint(df: DataFrame) -> DataFrame:
     """Deterministic document fingerprint: md5 of the canonical form
     (exact-dup key) + a 64-bit xxhash (cheap join key).
 
     The canonical form is staged in its own projection so the
     O(len) regexp runs once per row, not once per derived column
     (docs/PLANS.md, expression materialization rule)."""
-    staged = df.withColumn("_canon", norm_text(col))
+    staged = df.withColumn("_canon", norm_text("text"))
     return (
         staged.withColumn("fp_md5", F.md5(F.col("_canon")))
         .withColumn("fp_xx64", F.xxhash64(F.col("_canon")))
@@ -95,8 +95,6 @@ def winnow_fingerprints(
     df: DataFrame,
     k: int = 8,
     w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03):
     hash every k-gram of the canonical text, slide a window of ``w``
@@ -114,7 +112,7 @@ def winnow_fingerprints(
     # materialize the canonical text ONCE per row: expressions used
     # inside transform() lambdas are re-evaluated per array element,
     # so an un-materialized canon would redo the regexp O(len) times
-    base = df.select(F.col(id_col).alias("id"), norm_text(text_col).alias("c"))
+    base = df.select(F.col("doc_id").alias("id"), norm_text("text").alias("c"))
     c = F.col("c")
     length = F.length(c)
     n_grams = F.greatest(length - (k - 1), F.lit(0))
@@ -135,6 +133,6 @@ def winnow_fingerprints(
     return (
         staged.select("id", F.explode(fps).alias("fp"))
         .where(F.col("fp").isNotNull())
-        .select(F.col("id").alias(id_col), "fp")
+        .select(F.col("id").alias("doc_id"), "fp")
         .distinct()
     )

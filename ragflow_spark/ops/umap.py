@@ -7,7 +7,7 @@ n_components=min(12, n-2), metric="cosine")`` before the GMM
 module implements the published algorithm (McInnes, Healy, Melville
 2018, arXiv:1802.03426) from scratch in numpy:
 
-1. exact k-NN under the chosen metric (layers are 10^2-10^4 rows — the
+1. exact cosine k-NN (layers are 10^2-10^4 rows — the
    reference also runs this driver-side at that scale);
 2. fuzzy simplicial set: per-point connectivity radius ``rho`` (nearest
    neighbour distance) and bandwidth ``sigma`` solved by bisection so
@@ -35,14 +35,11 @@ _SMOOTH_ITER = 64
 _MIN_K_DIST_SCALE = 1e-3
 
 
-def _pairwise_dist(x: np.ndarray, metric: str) -> np.ndarray:
-    if metric == "cosine":
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        norms = np.where(norms == 0, 1.0, norms)
-        sims = (x / norms) @ (x / norms).T
-        return np.clip(1.0 - sims, 0.0, 2.0)
-    diff = x[:, None, :] - x[None, :, :]
-    return np.sqrt((diff * diff).sum(-1))
+def _cosine_dist(x: np.ndarray) -> np.ndarray:
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    norms = np.where(norms == 0, 1.0, norms)
+    sims = (x / norms) @ (x / norms).T
+    return np.clip(1.0 - sims, 0.0, 2.0)
 
 
 def _smooth_knn_dist(dists: np.ndarray, k: float) -> tuple[np.ndarray, np.ndarray]:
@@ -72,9 +69,9 @@ def _smooth_knn_dist(dists: np.ndarray, k: float) -> tuple[np.ndarray, np.ndarra
     return rho, sigma
 
 
-def _fuzzy_graph(x: np.ndarray, n_neighbors: int, metric: str) -> np.ndarray:
+def _fuzzy_graph(x: np.ndarray, n_neighbors: int) -> np.ndarray:
     n = x.shape[0]
-    d = _pairwise_dist(x, metric)
+    d = _cosine_dist(x)
     np.fill_diagonal(d, np.inf)
     k = min(n_neighbors, n - 1)
     nn_idx = np.argsort(d, axis=1)[:, :k]
@@ -106,11 +103,17 @@ def _spectral_init(graph: np.ndarray, n_components: int, seed: int) -> np.ndarra
         return rng.uniform(-10, 10, (graph.shape[0], n_components))
 
 
-def _fit_ab(min_dist: float = 0.1, spread: float = 1.0) -> tuple[float, float]:
+# umap-learn's defaults, which the reference keeps
+_MIN_DIST = 0.1
+_N_EPOCHS = 200
+_NEGATIVE_SAMPLE_RATE = 5
+
+
+def _fit_ab() -> tuple[float, float]:
     """Least-squares fit of 1/(1 + a*d^(2b)) to the piecewise target
     curve (umap-learn's curve-fit, grid-searched here: no scipy)."""
-    xs = np.linspace(0, spread * 3, 300)
-    target = np.where(xs < min_dist, 1.0, np.exp(-(xs - min_dist) / spread))
+    xs = np.linspace(0, 3.0, 300)
+    target = np.where(xs < _MIN_DIST, 1.0, np.exp(-(xs - _MIN_DIST)))
     best = (1.577, 0.895)
     best_err = np.inf
     for a in np.linspace(0.5, 3.0, 26):
@@ -126,11 +129,6 @@ def umap_reduce(
     x: np.ndarray,
     n_components: int = 2,
     n_neighbors: int = 15,
-    metric: str = "cosine",
-    min_dist: float = 0.1,
-    n_epochs: int = 200,
-    negative_sample_rate: int = 5,
-    learning_rate: float = 1.0,
     seed: int = 42,
 ) -> np.ndarray:
     """Reduce ``x`` (n, dim) -> (n, n_components)."""
@@ -141,9 +139,9 @@ def umap_reduce(
     n_components = max(1, min(n_components, max(n - 2, 1)))
     if n <= 2:
         return np.zeros((n, n_components))
-    graph = _fuzzy_graph(x, max(2, n_neighbors), metric)
+    graph = _fuzzy_graph(x, max(2, n_neighbors))
     emb = _spectral_init(graph, n_components, seed)
-    a, b = _fit_ab(min_dist)
+    a, b = _fit_ab()
 
     rows, cols = np.nonzero(np.triu(graph))
     weights = np.maximum(graph[rows, cols], 1e-12)  # underflow floor
@@ -157,8 +155,8 @@ def umap_reduce(
     eps = weights.max() / weights
     rng = np.random.default_rng(seed)
     next_due = eps.copy()
-    for epoch in range(1, n_epochs + 1):
-        alpha = learning_rate * (1.0 - epoch / n_epochs)
+    for epoch in range(1, _N_EPOCHS + 1):
+        alpha = 1.0 - epoch / _N_EPOCHS
         idx = np.nonzero(next_due <= epoch)[0]
         if idx.size == 0:
             continue
@@ -175,7 +173,7 @@ def umap_reduce(
         np.add.at(emb, i, alpha * g)
         np.add.at(emb, j, -alpha * g)
         # negative sampling: repel each due edge's head from random points
-        ti = np.repeat(i, negative_sample_rate)
+        ti = np.repeat(i, _NEGATIVE_SAMPLE_RATE)
         tt = rng.integers(0, n, size=ti.size)
         mask = tt != ti
         ti, tt = ti[mask], tt[mask]
@@ -198,6 +196,5 @@ def raptor_reduce(
         x,
         n_components=min(n_components_cap, max(n - 2, 1)),
         n_neighbors=max(2, int((n - 1) ** 0.8)) if n > 1 else 2,
-        metric="cosine",
         seed=seed,
     )

@@ -104,16 +104,14 @@ def email_sections(
     return sections
 
 
-def email_chunks(
-    data: bytes, budget: int = 128, delimiters: str = "\n!?。；！？"
-) -> list[str]:
+def email_chunks(data: bytes, budget: int = 128) -> list[str]:
     """Main-body chunks: sections -> naive token-budget merge
     (email.py:86-91).  Attachment routing is the caller's job
     (spark/udfs.py folds attachment text into the same doc)."""
-    from ..chunk.merge import greedy_merge, nonempty_chunks
+    from ..chunk.merge import DEFAULT_DELIMITERS, greedy_merge, nonempty_chunks
 
     return nonempty_chunks(
-        greedy_merge(email_sections(*parse_eml(data)[:2], budget), budget, delimiters)
+        greedy_merge(email_sections(*parse_eml(data)[:2], budget), budget, DEFAULT_DELIMITERS)
     )
 
 

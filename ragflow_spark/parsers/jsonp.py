@@ -1,12 +1,13 @@
 """Size-bounded recursive JSON splitting.
 
 Behavior matched to ``RAGFlowJsonParser``
-(deepdoc/parser/json_parser.py:27-179): lists are first converted to
-index-keyed dicts, then the tree is packed into chunks whose serialized
-size stays under ``max_chunk_size * 2`` (reference doubles the configured
-size at :28), starting a new chunk only once the current one reaches
-``min_chunk_size``; JSONL inputs are detected by sampling and split
-per line.
+(deepdoc/parser/json_parser.py:27-179) at its default
+``max_chunk_size`` of 2000: lists are first converted to index-keyed
+dicts, then the tree is packed into chunks whose serialized size stays
+under 4000 (reference doubles the configured size at :28), starting a
+new chunk only once the current one reaches 1800 (its
+``max_chunk_size - 200``); JSONL inputs are detected by sampling and
+split per line.
 """
 
 from __future__ import annotations
@@ -17,15 +18,14 @@ from typing import Any
 from ..text.codec import decode_bytes
 
 
-class JsonSplitter:
-    def __init__(self, max_chunk_size: int = 2000, min_chunk_size: int | None = None):
-        self.max_chunk_size = max_chunk_size * 2
-        self.min_chunk_size = (
-            min_chunk_size
-            if min_chunk_size is not None
-            else max(max_chunk_size - 200, 50)
-        )
+_MAX_CHUNK_SIZE = 4000
+_MIN_CHUNK_SIZE = 1800
+# JSONL detection: at least 80% of the first 10 non-blank lines parse
+_JSONL_SAMPLE = 10
+_JSONL_THRESHOLD = 0.8
 
+
+class JsonSplitter:
     @staticmethod
     def _size(data: dict) -> int:
         return len(json.dumps(data, ensure_ascii=False))
@@ -49,10 +49,10 @@ class JsonSplitter:
                 new_path = path + [key]
                 used = self._size(chunks[-1])
                 need = self._size({key: value})
-                if need < self.max_chunk_size - used:
+                if need < _MAX_CHUNK_SIZE - used:
                     self._set_path(chunks[-1], new_path, value)
                 else:
-                    if used >= self.min_chunk_size:
+                    if used >= _MIN_CHUNK_SIZE:
                         chunks.append({})
                     self._split(value, new_path, chunks)
         else:
@@ -66,7 +66,7 @@ class JsonSplitter:
         return chunks
 
 
-def _is_jsonl(txt: str, sample_limit: int = 10, threshold: float = 0.8) -> bool:
+def _is_jsonl(txt: str) -> bool:
     lines = [ln.strip() for ln in txt.strip().splitlines() if ln.strip()]
     if not lines:
         return False
@@ -75,7 +75,7 @@ def _is_jsonl(txt: str, sample_limit: int = 10, threshold: float = 0.8) -> bool:
         return False
     except json.JSONDecodeError:
         pass
-    sample = lines[: min(len(lines), sample_limit)]
+    sample = lines[:_JSONL_SAMPLE]
 
     def ok(line: str) -> bool:
         try:
@@ -85,7 +85,7 @@ def _is_jsonl(txt: str, sample_limit: int = 10, threshold: float = 0.8) -> bool:
             return False
 
     valid = sum(1 for ln in sample if ok(ln))
-    return valid > 0 and valid / len(sample) >= threshold
+    return valid > 0 and valid / len(sample) >= _JSONL_THRESHOLD
 
 
 # json.loads's scanner, _listify, _split, and json.dumps all recurse
@@ -128,11 +128,11 @@ def _max_bracket_depth(txt: str) -> int:
     return peak
 
 
-def split_json_text(payload: bytes | str, max_chunk_size: int = 2000) -> list[str]:
+def split_json_text(payload: bytes | str) -> list[str]:
     txt = decode_bytes(payload) if isinstance(payload, (bytes, bytearray)) else payload
     if _max_bracket_depth(txt) > _MAX_JSON_DEPTH:
         raise ValueError("over-nested JSON document")
-    splitter = JsonSplitter(max_chunk_size)
+    splitter = JsonSplitter()
     out: list[str] = []
     if _is_jsonl(txt):
         for line in txt.strip().splitlines():

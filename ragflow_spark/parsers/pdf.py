@@ -280,7 +280,7 @@ def extract_pdf_outline(pdf: bytes) -> list[tuple[str, int]]:
 _EN_RUN_RE = re.compile(r"[a-zA-Z0-9,/¸;:'\[\]\(\)!@#$%^&*\"?<>._-]{30,}")
 
 
-def is_english_pages(pages_chars: list[list[str]], seed: int = 42) -> bool:
+def is_english_pages(pages_chars: list[list[str]]) -> bool:
     """The reference's sampled English sniff (pdf_parser.py:1059-1066):
     per page, sample up to 100 characters and look for a 30+ run of
     English-ish characters; the doc is English when a majority of pages
@@ -291,7 +291,7 @@ def is_english_pages(pages_chars: list[list[str]], seed: int = 42) -> bool:
     seed -> same sample)."""
     import random as _random
 
-    rng = _random.Random(seed)
+    rng = _random.Random(42)
     votes = []
     for chars in pages_chars:
         if not chars:

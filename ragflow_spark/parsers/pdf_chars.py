@@ -160,15 +160,15 @@ _FILTER_NAMES = re.compile(
 _MAX_DECODE_BYTES = 64 << 20
 
 
-def _flate_decode(data: bytes, cap: int = _MAX_DECODE_BYTES) -> bytes:
+def _flate_decode(data: bytes) -> bytes:
     d = zlib.decompressobj()
-    out = d.decompress(data, cap + 1)
-    if len(out) > cap:
+    out = d.decompress(data, _MAX_DECODE_BYTES + 1)
+    if len(out) > _MAX_DECODE_BYTES:
         raise ValueError("FlateDecode output exceeds bomb cap")
     return out + d.flush()
 
 
-def _lzw_decode(data: bytes, cap: int = _MAX_DECODE_BYTES) -> bytes:
+def _lzw_decode(data: bytes) -> bytes:
     """PDF/TIFF LZW (ISO 32000 7.4.4, public): 9..12-bit codes MSB
     first, 256 = clear table, 257 = EOD, early-change code widths."""
     out = bytearray()
@@ -200,7 +200,7 @@ def _lzw_decode(data: bytes, cap: int = _MAX_DECODE_BYTES) -> bytes:
                 table.append(entry)
             out += entry
             prev = entry
-            if len(out) > cap:
+            if len(out) > _MAX_DECODE_BYTES:
                 raise ValueError("LZWDecode output exceeds bomb cap")
             # early change: width grows one code BEFORE the table fills
             if len(table) >= (1 << width) - 1 and width < 12:
@@ -764,7 +764,7 @@ def _glyph_name_to_text(name: str) -> str | None:
 # directory of Adobe cmap-resources files, same deploy-data pattern
 # as RAGFLOW_SPARK_HUQIE/TIKTOKEN/HANZI); absent the data, advances
 # fall back to /DW (full-width — correct for the vast majority of CJK
-# glyphs) and the font is COUNTED in the predef-CMap diagnostics.
+# glyphs).
 _PREDEF_CMAP_CODECS = {
     # Adobe-GB1 (simplified Chinese)
     "GB-EUC": "gb2312", "GBpc-EUC": "gb2312",
@@ -993,11 +993,6 @@ def _parse_w_array(txt: bytes) -> dict[int, float]:
     return out
 
 
-def _diag_bump(diag: dict | None, key: str, n: int = 1) -> None:
-    if diag is not None:
-        diag[key] = diag.get(key, 0) + n
-
-
 def _resources_head(objs: dict[int, bytes], head: bytes) -> bytes:
     """The dictionary a page's or form's resource lookups search: the
     object its ``/Resources`` reference names, else ``head`` itself
@@ -1008,15 +1003,11 @@ def _resources_head(objs: dict[int, bytes], head: bytes) -> bytes:
     return head
 
 
-def _font_widths(
-    objs: dict[int, bytes], res_head: bytes, diag: dict | None = None
-) -> dict[bytes, _Font]:
+def _font_widths(objs: dict[int, bytes], res_head: bytes) -> dict[bytes, _Font]:
     """font resource name (e.g. b"F1") -> glyph advance model, for the
     fonts of one resource dictionary (see :func:`_resources_head`).
-    ``diag`` (optional) accumulates font-class counters: predefined
-    CMaps seen (codec-decoded vs unknown), Identity CMaps without
-    /ToUnicode, Type3 fonts — the mis-decode observability the r4
-    verdict asked for."""
+    A font whose text cannot be decoded faithfully is marked inexact,
+    and every glyph shown through it is counted per page."""
     widths: dict[bytes, _Font] = {}
     m = _keyed(b"/Font", rb"\s*<<(.*?)>>", re.DOTALL).search(res_head)
     if m:
@@ -1085,39 +1076,32 @@ def _font_widths(
                 # count it
                 cmap, code_w = {}, 2
                 exact = False
-                _diag_bump(diag, "identity_no_tounicode")
             else:
                 cdc = _predef_codec(nm)
                 if cdc is not None:
                     # text decodes exactly through the public codec;
                     # advances use /W only when the deploy CMap data
-                    # resolves code -> CID, else /DW (counted)
+                    # resolves code -> CID, else /DW
                     codec = cdc
                     cid_map = _load_deploy_cmap(nm)
                     if wmap is None:
                         wmap = {}
-                    _diag_bump(diag, "predef_cmap_codec")
-                    if wmap and cid_map is None:
-                        _diag_bump(diag, "predef_cmap_dw_advances")
                 else:
                     # a predefined CMap this build has no codec for
                     # (ISO-2022-coded or exotic): the plain decode
                     # cascade WILL mis-read it — flag the font so
                     # every shown glyph is counted, never silent
                     exact = False
-                    _diag_bump(diag, "predef_cmap_unknown")
         elif cmap is None and is_type0:
             # Type0 with an embedded-CMap-stream /Encoding (or none):
             # no faithful text mapping available — flag and count
             exact = False
-            _diag_bump(diag, "type0_undecoded")
 
         if _keyed(b"/Subtype", rb"\s*/Type3\b").search(head):
             # Type3 glyph widths are in GLYPH SPACE: advance =
             # w * FontMatrix[0] (not /1000 like simple fonts); text
             # comes from /Encoding /Differences names (CharProcs
             # drawing procedures carry no text)
-            _diag_bump(diag, "type3")
             scale = 0.001
             fmtx = _balanced_array(head, b"/FontMatrix")
             if fmtx:
@@ -1132,7 +1116,6 @@ def _font_widths(
             flat = 0.5 if table is None else flat
             if diffs is None:
                 exact = False  # byte codes are arbitrary: ASCII guess
-                _diag_bump(diag, "type3_no_differences")
 
         widths[key] = _Font(
             flat, first, table, cmap, code_w, wmap, dw, diffs,
@@ -1200,7 +1183,6 @@ def _page_xobjects(
     res_head: bytes,
     page_widths: dict[bytes, _Font],
     visited: frozenset[int] = frozenset(),
-    diag: dict | None = None,
     depth: int = 8,
     budget: dict | None = None,
 ) -> dict[bytes, dict]:
@@ -1244,13 +1226,13 @@ def _page_xobjects(
         if budget["xobj_builds"] > 10_000:
             break
         fres = _resources_head(objs, fhead)
-        fwidths = {**page_widths, **_font_widths(objs, fres, diag)}
+        fwidths = {**page_widths, **_font_widths(objs, fres)}
         out[name] = {
             "data": data,
             "matrix": _matrix_of(fhead),
             "widths": fwidths,
             "xobjects": _page_xobjects(
-                objs, fres, fwidths, visited | {ref}, diag,
+                objs, fres, fwidths, visited | {ref},
                 depth=depth - 1, budget=budget,
             )
             if depth > 1
@@ -1531,40 +1513,27 @@ def _interpret_page(
     return chars
 
 
-def dedupe_chars(chars: list[Char], tolerance: float = 1.0) -> list[Char]:
+# pdfplumber's ``dedupe_chars`` default, the only tolerance the
+# reference uses
+DEDUPE_TOLERANCE = 1.0
+
+
+def dedupe_chars(chars: list[Char]) -> list[Char]:
     """pdfplumber's ``page.dedupe_chars()`` (the reference calls it at
     pdf_parser.py:1025 before any processing): drop glyphs that repeat
-    the same text within ``tolerance`` of an already-seen position —
-    fake-bold / shadow double rendering otherwise doubles every char.
-    First occurrence wins, stream order preserved.
+    the same text within ``DEDUPE_TOLERANCE`` of an already-seen
+    position — fake-bold / shadow double rendering otherwise doubles
+    every char.  First occurrence wins, stream order preserved.
 
     Most pages repeat nothing, so a vectorised check
     (:func:`_dedupe_candidates`) first proves which glyphs cannot have
-    a same-text neighbour within ``tolerance``; a page where that holds
+    a same-text neighbour within the tolerance; a page where that holds
     for every glyph comes back as it is, and on any other page only the
     remaining candidates enter the grid (:func:`_grid_drops`).  A glyph
     with no such neighbour is kept by the grid and never drops another,
-    so the verdicts are those of the grid over the whole page.
-
-    Degenerate tolerances keep the naive-scan semantics exactly
-    (ADVICE r4: the earlier 1e-9 remap silently widened both):
-    ``tolerance == 0`` means ``abs(diff) <= 0`` — exact-position
-    dedupe, keyed directly; a negative tolerance satisfies no pair, so
-    nothing is deduped."""
-    if tolerance < 0:  # abs(dx) <= tol is never true: dedupe nothing
-        return list(chars)
-    if tolerance == 0:  # exact (text, x, top) match only
-        seen0: set[tuple] = set()
-        out0: list[Char] = []
-        for c in chars:
-            key = (c["text"], c["x0"], c["top"])
-            if key in seen0:
-                continue
-            seen0.add(key)
-            out0.append(c)
-        return out0
-    idx = _dedupe_candidates(chars, tolerance)
-    drop = _grid_drops(chars, idx, tolerance) if idx else None
+    so the verdicts are those of the grid over the whole page."""
+    idx = _dedupe_candidates(chars, DEDUPE_TOLERANCE)
+    drop = _grid_drops(chars, idx, DEDUPE_TOLERANCE) if idx else None
     if not drop:
         return list(chars)
     return [c for i, c in enumerate(chars) if i not in drop]
@@ -1776,7 +1745,7 @@ def _own_resources(objs: dict[int, bytes], head: bytes) -> bytes | None:
     return _resources_head(objs, head) if b"/Resources" in head else None
 
 
-def pdf_pages_chars(pdf: bytes, diag: dict | None = None) -> list[dict]:
+def pdf_pages_chars(pdf: bytes) -> list[dict]:
     """Per page: ``{"chars": [...], "width": W, "height": H,
     "n_inexact_glyphs": N}`` — the positioned-char table the reference
     builds in ``__images__`` (pdf_parser.py:1024-1029:
@@ -1786,8 +1755,7 @@ def pdf_pages_chars(pdf: bytes, diag: dict | None = None) -> list[dict]:
     cannot be decoded faithfully (Identity CMap without /ToUnicode,
     unknown predefined CMap, Type3 without /Differences) — the
     mis-decode detection of VERDICT r4 #4/#5; callers surface it as a
-    fallback-class metric.  ``diag`` (optional dict) additionally
-    accumulates per-font-class counters across pages."""
+    fallback-class metric."""
     if not pdf.startswith(b"%PDF-"):
         return []
     objs = _objects(pdf)
@@ -1807,8 +1775,8 @@ def pdf_pages_chars(pdf: bytes, diag: dict | None = None) -> list[dict]:
         )
         if res_head is None:  # no node on the chain names any
             res_head = head
-        widths = _font_widths(objs, res_head, diag)
-        xobjects = _page_xobjects(objs, res_head, widths, diag=diag)
+        widths = _font_widths(objs, res_head)
+        xobjects = _page_xobjects(objs, res_head, widths)
         chars: list[Char] = []
         figs: list[dict] = []
         counters: dict = {}
@@ -1829,7 +1797,6 @@ def pdf_pages_chars(pdf: bytes, diag: dict | None = None) -> list[dict]:
             if rot in (90, 270):
                 w, h = h, w
         n_inexact = counters.get("inexact_glyphs", 0)
-        _diag_bump(diag, "inexact_glyphs", n_inexact)
         pages.append(
             {
                 "chars": dedupe_chars(chars),

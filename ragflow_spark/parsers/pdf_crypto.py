@@ -364,10 +364,8 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
             return k[:32]
 
 
-def verify_user_password_r6(
-    u_entry: bytes, ue_entry: bytes, password: bytes = b""
-) -> bytes | None:
-    """R6 user-password check + file-key recovery (Algorithm 2.A):
+def verify_user_password_r6(u_entry: bytes, ue_entry: bytes) -> bytes | None:
+    """R6 empty-user-password check + file-key recovery (Algorithm 2.A):
     /U = hash || validation salt (8) || key salt (8); the file key is
     AES-256-CBC-decrypt(/UE) with the key-salt hash, zero IV, no pad."""
     if len(u_entry) < 48:
@@ -379,9 +377,9 @@ def verify_user_password_r6(
     if len(ue_entry) < 32:
         return None
     vsalt, ksalt = u_entry[32:40], u_entry[40:48]
-    if _hash_2b(password, vsalt, b"") != u_entry[:32]:
+    if _hash_2b(b"", vsalt, b"") != u_entry[:32]:
         return None
-    ikey = _hash_2b(password, ksalt, b"")
+    ikey = _hash_2b(b"", ksalt, b"")
     aes = AES(ikey)
     out = bytearray()
     prev = b"\x00" * 16

@@ -1,11 +1,10 @@
 """Plain-text chunk splitting.
 
 Behavior matched to ``RAGFlowTxtParser.parser_txt``
-(deepdoc/parser/txt_parser.py:28-64): unicode-unescape the delimiter
-config, split keeping separators attached to the *previous* chunk, pack
-until the current chunk's token count exceeds the budget (note: the
-reference checks the count *before* adding — quirk preserved), and
-return ``[text, ""]`` pairs.
+(deepdoc/parser/txt_parser.py:28-64) with its default delimiters:
+split on them (separators dropped), pack until the current chunk's
+token count exceeds the budget (note: the reference checks the count
+*before* adding — quirk preserved), and return ``[text, ""]`` pairs.
 """
 
 from __future__ import annotations
@@ -15,29 +14,14 @@ import re
 from ..chunk.delimiters import delimiter_pattern
 from ..text.tokens import count_tokens
 
-DEFAULT_TXT_DELIMITERS = "\n!?;。；！？"
+# the reference's default delimiters; its unicode-unescape of the
+# config (txt_parser.py:34) leaves this string as it is
+_PATTERN = delimiter_pattern("\n!?;。；！？")
+_SPLIT = re.compile(f"({_PATTERN})")
+_ONLY_DELIM = re.compile(f"^{_PATTERN}$")
 
 
-def _unescape(delims: str) -> str:
-    # the reference round-trips through unicode_escape to honor "\n"
-    # written literally in user config (txt_parser.py:34)
-    try:
-        return (
-            delims.encode("utf-8")
-            .decode("unicode_escape")
-            .encode("latin1")
-            .decode("utf-8")
-        )
-    except Exception:
-        return delims
-
-
-def split_txt(
-    txt: str,
-    budget: int = 128,
-    delimiters: str = DEFAULT_TXT_DELIMITERS,
-) -> list[list[str]]:
-    delimiters = _unescape(delimiters)
+def split_txt(txt: str, budget: int = 128) -> list[list[str]]:
     chunks = [""]
     counts = [0]
 
@@ -50,13 +34,8 @@ def split_txt(
             chunks[-1] += piece
             counts[-1] += n
 
-    pattern = delimiter_pattern(delimiters)
-    if not pattern:
-        push(txt)
-    else:
-        only = re.compile(f"^{pattern}$")
-        for piece in re.split(f"({pattern})", txt):
-            if only.match(piece):
-                continue
-            push(piece)
+    for piece in _SPLIT.split(txt):
+        if _ONLY_DELIM.match(piece):
+            continue
+        push(piece)
     return [[c, ""] for c in chunks]

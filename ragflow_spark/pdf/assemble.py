@@ -465,68 +465,23 @@ def tag_titles_from_outline(
 
 def pdf_layout_document(
     pdf: bytes,
-    *,
-    need_figures: bool = False,
-    return_html: bool = False,
-    merge: bool = True,
-    vertical_merge: bool = False,
-    drop_toc: bool = False,
-) -> tuple[list[Box], list[dict], list[dict], list[float], list[float], bool]:
+) -> tuple[list[Box], list[dict], list[float], list[float], bool]:
     """The full real-bytes layout pass in the reference's coordinate
     discipline and the manual/naive branch's pass ORDER
     (rag/app/manual.py:60-63, naive.py:282-294: ``_text_merge`` ->
-    ``_extract_table_figure`` -> ``_concat_downward`` ->
-    ``_filter_forpages``): tagged boxes lifted to cumulative tops (so
-    cross-page table merge and caption distances work,
-    pdf_parser.py:708-782); tables pop FIRST, then the parity-ported
-    text passes run on the remaining text boxes — Y-sort finalization,
-    optionally punctuation-gated paragraph joining of wrapped lines
-    (``vertical_merge=True``) and TOC-page removal (``drop_toc=True``).
-    Remaining boxes return page-local.  Returns (remaining, tables,
-    figures, mean_height, page_cum_height, is_english); table/figure
-    positions are page-local."""
-    from ..parsers.pdf import is_english_pages
-    from ..parsers.pdf_chars import pdf_pages_chars
-    from .geometry import (
-        concat_downward,
-        drop_toc_boxes,
-        merge_horizontal,
-        merge_vertical,
-    )
+    ``_extract_table_figure`` -> ``_concat_downward``): tagged boxes
+    lifted to cumulative tops (so cross-page table merge and caption
+    distances work, pdf_parser.py:708-782); tables pop FIRST, then the
+    remaining text boxes are Y-sorted.  Remaining boxes return
+    page-local.  Returns (remaining, tables, mean_height,
+    page_cum_height, is_english); table positions are page-local."""
+    from .geometry import concat_downward, merge_horizontal
     from .tablefig import extract_table_figure
 
-    pages = pdf_pages_chars(pdf)
-    mean_h, mean_w, cum_h = page_stats(pages)
-    is_en = bool(
-        is_english_pages(
-            [[c["text"] for c in p["chars"] if c["text"].strip()] for p in pages]
-        )
+    boxes, mean_h, cum_h, is_en = pdf_tagged_boxes(pdf)
+    boxes_c = merge_horizontal(with_cumulative_tops(boxes, cum_h), mean_h)
+    rem_c, tables = extract_table_figure(
+        boxes_c, mean_h, is_english=is_en, page_cum_height=cum_h
     )
-    boxes: list[Box] = []
-    seq = [0]
-    for pn, p in enumerate(pages, start=1):
-        em = mean_w[pn - 1] if mean_w[pn - 1] > 0 else 8.0
-        boxes.extend(
-            assemble_page_boxes(
-                p["chars"], pn, em, seq, p.get("figures")
-            )
-        )
-    boxes_c = with_cumulative_tops(boxes, cum_h)
-    if merge:
-        boxes_c = merge_horizontal(boxes_c, mean_h)
-    rem_c, tables, figures = extract_table_figure(
-        boxes_c,
-        mean_h,
-        need_figures=need_figures,
-        return_html=return_html,
-        is_english=is_en,
-        page_cum_height=cum_h,
-    )
-    if merge:
-        rem_c = concat_downward(rem_c)
-    if vertical_merge:
-        rem_c = merge_vertical(rem_c, mean_h, mean_w, is_english=is_en)
-    if drop_toc:
-        rem_c = drop_toc_boxes(rem_c, len(pages))
-    rem = to_page_local(rem_c, cum_h)
-    return rem, tables, figures, mean_h, cum_h, is_en
+    rem = to_page_local(concat_downward(rem_c), cum_h)
+    return rem, tables, mean_h, cum_h, is_en

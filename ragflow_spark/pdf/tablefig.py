@@ -1,26 +1,27 @@
-"""Table/figure extraction: box pop, cross-page merge, caption attach.
+"""Table extraction: box pop, cross-page merge, caption attach.
 
-Reimplements the model-free core of ``_extract_table_figure``
+Reimplements the model-free table core of ``_extract_table_figure``
 (deepdoc/parser/pdf_parser.py:668-879):
 
-* pop table/figure boxes into per-layout groups keyed by
-  ``page-layoutno``, dropping "数据来源:"-style source lines; captions,
-  titles and references break merge chains (``nomerge``);
+* pop table boxes into per-layout groups keyed by ``page-layoutno``,
+  dropping "数据来源:"-style source lines; captions, titles and
+  references break merge chains (``nomerge``);
 * merge a table group into the previous page's group when the pages
   are adjacent and the vertical gap is under ``mean_height * 23``;
-* attach each caption box to the nearest group by squared euclidean
-  distance (x-distance counted 0 when the boxes overlap on x), tables
-  winning ties (reference: ``tv < fv and tk``);
-* emit figures as joined text and tables through
-  :func:`ragflow_spark.pdf.tsr.construct_table`.
+* attach each caption box to the nearest table group by squared
+  euclidean distance (x-distance counted 0 when the boxes overlap on
+  x) and drop it from the text;
+* emit tables through :func:`ragflow_spark.pdf.tsr.construct_table`.
 
-Deviations (documented, not silent): the reference crops page images
-and, when the ONNX layout recognizer ran, snaps the bounding box to
-the detected layout region (pdf_parser.py:784-800).  This engine is
-text-only — positions come from the member-box extents (identical to
-the reference's fallback when no layout matches), and no image is
-produced.  Parity for everything else is tested black-box against the
-AST-executed reference method in tests/test_tablefig_parity.py.
+Deviations (documented, not silent): figure boxes are not popped, so
+their text stays in the remaining boxes.  The reference crops page
+images and, when the ONNX layout recognizer ran, snaps the bounding
+box to the detected layout region (pdf_parser.py:784-800).  This
+engine is text-only — positions come from the member-box extents
+(identical to the reference's fallback when no layout matches), and no
+image is produced.  Parity on pages without figure boxes is tested
+black-box against the AST-executed reference method in
+tests/test_tablefig_parity.py.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ def _x_overlapped(a: Box, b: Box) -> bool:
 
 
 def _group_positions(
-    bxs: list[Box], page_cum_height: list[float] | None, page_from: int = 0
+    bxs: list[Box], page_cum_height: list[float] | None
 ) -> list[tuple[int, float, float, float, float]]:
     """(page, left, right, top, bottom) per page of the group, pages
     ascending — the reference's cropout bbox fallback with cumulative
@@ -65,7 +66,7 @@ def _group_positions(
         bott = max(b["bottom"] for b in arr) - ht
         if right < left:
             right = left + 1
-        poss.append((pn + page_from, left, right, top, bott))
+        poss.append((pn, left, right, top, bott))
     return poss
 
 
@@ -73,23 +74,18 @@ def extract_table_figure(
     boxes: list[Box],
     mean_height: list[float],
     *,
-    need_figures: bool = True,
-    return_html: bool = False,
     is_english: bool = False,
     page_cum_height: list[float] | None = None,
-    page_from: int = 0,
-) -> tuple[list[Box], list[dict], list[dict]]:
-    """Returns (remaining_boxes, tables, figures).
+) -> tuple[list[Box], list[dict]]:
+    """Returns (remaining_boxes, tables).
 
     Each table: ``{"content": construct_table output, "positions":
-    [(page, left, right, top, bottom), ...]}``; each figure:
-    ``{"content": [joined text], "positions": [...]}``.
+    [(page, left, right, top, bottom), ...]}``.
     """
     bxs = list(boxes)
     tables: dict[str, list[Box]] = {}
-    figures: dict[str, list[Box]] = {}
 
-    # -- pop table/figure boxes into layout groups (ref :672-706) --------
+    # -- pop table boxes into layout groups (ref :672-706) ---------------
     i = 0
     lst_lout_no = ""
     nomerge: list[str] = []
@@ -106,14 +102,6 @@ def extract_table_figure(
                 bxs.pop(i)
                 continue
             tables.setdefault(lout_no, []).append(b)
-            bxs.pop(i)
-            lst_lout_no = lout_no
-            continue
-        if need_figures and b.get("layout_type") == "figure":
-            if _SOURCE_RE.match(b["text"]):
-                bxs.pop(i)
-                continue
-            figures.setdefault(lout_no, []).append(b)
             bxs.pop(i)
             lst_lout_no = lout_no
             continue
@@ -147,39 +135,21 @@ def extract_table_figure(
             i += 1
             continue
 
-        def nearest(groups: dict[str, list[Box]]) -> tuple[str, float]:
-            mink, minv = "", 1000000000
-            for k, arr in groups.items():
-                for b in arr:
-                    if b.get("layout_type", "").find("caption") >= 0:
-                        continue
-                    y_d = _y_dis(c, b)
-                    x_d = _x_dis(c, b) if not _x_overlapped(c, b) else 0
-                    dis = y_d * y_d + x_d * x_d
-                    if dis < minv:
-                        mink, minv = k, dis
-            return mink, minv
-
-        tk, tv = nearest(tables)
-        fk, fv = nearest(figures)
-        if tv < fv and tk:
+        tk, tv = "", 1000000000
+        for k, arr in tables.items():
+            for b in arr:
+                if b.get("layout_type", "").find("caption") >= 0:
+                    continue
+                y_d = _y_dis(c, b)
+                x_d = _x_dis(c, b) if not _x_overlapped(c, b) else 0
+                dis = y_d * y_d + x_d * x_d
+                if dis < tv:
+                    tk, tv = k, dis
+        if tk:
             tables[tk].insert(0, c)
-        elif fk:
-            figures[fk].insert(0, c)
         bxs.pop(i)
 
     # -- emit (ref :831-867, images skipped) ------------------------------
-    fig_out: list[dict] = []
-    for _k, arr in figures.items():
-        txt = "\n".join(b["text"] for b in arr)
-        if not txt:
-            continue
-        fig_out.append(
-            {
-                "content": [txt],
-                "positions": _group_positions(arr, page_cum_height, page_from),
-            }
-        )
 
     tbl_out: list[dict] = []
     for _k, arr in tables.items():
@@ -190,11 +160,9 @@ def extract_table_figure(
         )
         tbl_out.append(
             {
-                "content": construct_table(
-                    arr, is_english=is_english, html=return_html
-                ),
-                "positions": _group_positions(arr, page_cum_height, page_from),
+                "content": construct_table(arr, is_english=is_english),
+                "positions": _group_positions(arr, page_cum_height),
             }
         )
 
-    return bxs, tbl_out, fig_out
+    return bxs, tbl_out

@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from .geometry import Box, sort_cols_first, sort_rows_first, sort_x_first, sort_y_first
+from .geometry import Box, sort_cols_first, sort_rows_first, sort_x_first
 
 _CAPTION_RE = re.compile(r"[图表]+[ 0-9:：]{2,}")
 
@@ -247,7 +247,7 @@ def _mean(vals):
     return sum(vals) / len(vals)
 
 
-def _cal_spans(boxes, rows, cols, tbl, html=True):
+def _cal_spans(boxes, rows, cols, tbl):
     clft = [_mean(c.get("C_left", c["x0"]) for c in cln) for cln in cols]
     crgt = [_mean(c.get("C_right", c["x1"]) for c in cln) for cln in cols]
     rtop = [_mean(c.get("R_top", c["top"]) for c in row) for row in rows]
@@ -304,7 +304,7 @@ def _cal_spans(boxes, rows, cols, tbl, html=True):
                     arr_txt = join(arr)
                     if tbl[r][c] and join(tbl[r][c]) != arr_txt:
                         arr.extend(tbl[r][c])
-                    tbl[r][c] = None if html else arr
+                    tbl[r][c] = arr
             for a in arr:
                 if len(rowspan) > 1:
                     a["rowspan"] = len(rowspan)
@@ -321,42 +321,6 @@ def _cal_spans(boxes, rows, cols, tbl, html=True):
 # --------------------------------------------------------------------------
 # emitters
 # --------------------------------------------------------------------------
-
-
-def _html_table(cap, hdset, tbl):
-    html = "<table>"
-    if cap:
-        html += f"<caption>{cap}</caption>"
-    for i in range(len(tbl)):
-        row = "<tr>"
-        txts = []
-        for j, arr in enumerate(tbl[i]):
-            if arr is None:
-                continue
-            if not arr:
-                row += "<td></td>" if i not in hdset else "<th></th>"
-                continue
-            h = min(min(c["bottom"] - c["top"] for c in arr) / 2, 10)
-            txt = " ".join(c["text"] for c in sort_y_first(arr, h))
-            txts.append(txt)
-            sp = ""
-            if arr[0].get("colspan"):
-                sp = "colspan={}".format(arr[0]["colspan"])
-            if arr[0].get("rowspan"):
-                sp += " rowspan={}".format(arr[0]["rowspan"])
-            if i in hdset:
-                row += f"<th {sp} >" + txt + "</th>"
-            else:
-                row += f"<td {sp} >" + txt + "</td>"
-        if i in hdset:
-            if all(t in hdset for t in txts):
-                continue
-            for t in txts:
-                hdset.add(t)
-        row = row + "</tr>" if row != "<tr>" else ""
-        html += "\n" + row
-    html += "\n</table>"
-    return html
 
 
 def _desc_table(cap, hdr_rowno, tbl, is_english):
@@ -460,8 +424,9 @@ def _desc_table(cap, hdr_rowno, tbl, is_english):
 # --------------------------------------------------------------------------
 
 
-def construct_table(boxes: list[Box], is_english: bool = False, html: bool = False):
-    """boxes -> HTML string (html=True) or list of description rows.
+def construct_table(boxes: list[Box], is_english: bool):
+    """boxes -> list of description rows (the reference's
+    ``html=False`` output).
 
     Return shape mirrors the reference construct_table (:135-351):
     ``[]`` for no cells, the emitter output otherwise.
@@ -513,6 +478,4 @@ def construct_table(boxes: list[Box], is_english: bool = False, html: bool = Fal
         if h / cnt > 0.5:
             hdset.add(i)
 
-    if html:
-        return _html_table(cap, hdset, _cal_spans(boxes, rows, cols, tbl, True))
-    return _desc_table(cap, hdset, _cal_spans(boxes, rows, cols, tbl, False), is_english)
+    return _desc_table(cap, hdset, _cal_spans(boxes, rows, cols, tbl), is_english)

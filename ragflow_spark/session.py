@@ -41,8 +41,10 @@ Scale notes (100 TB design point):
   ``configure`` does not set it: under spark-submit an executor gets
   the engine only per task, from ``--py-files``, so a daemon naming it
   could not start; there each executor's daemon compiles PySpark once
-  per executor life.  A local session's workers inherit the driver's
-  environment, where the engine is importable for any UDF to run.
+  per executor life.  A local session's workers get the directory that
+  holds the package on their ``PYTHONPATH`` (``ENGINE_ROOT``), so the
+  daemon and every UDF import the engine whatever the working
+  directory.
 """
 
 from __future__ import annotations
@@ -53,6 +55,10 @@ from pyspark.sql import SparkSession
 
 JVM_FLAGS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 DAEMON_MODULE = "ragflow_spark.daemon"
+# the directory that holds the package: a local session's workers put it
+# on their PYTHONPATH, so they import the daemon and the engine from any
+# working directory (Python puts only the working directory there itself)
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -72,21 +78,17 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     )
 
 
-def get_spark(
-    app_name: str = "ragflow_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "ragflow_spark", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
         configure(SparkSession.builder.appName(app_name))
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.defaultJavaOptions", JVM_FLAGS)
         .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     return builder.getOrCreate()

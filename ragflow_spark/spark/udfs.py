@@ -271,12 +271,7 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 BUCKET_STATS = ("n_pages", "n_chunks", "bytes_in", "n_pdf", "n_pdf_fallback", "n_extract_err")
 
 
-def make_chunk_batches(
-    template: str = "naive",
-    budget: int = 128,
-    delimiters: str = "\n!?。；！？",
-    mode_acc=None,
-):
+def make_chunk_batches(template: str = "naive", budget: int = 128, mode_acc=None):
     """Factory for the extract+chunk mapInPandas function.
 
     ``mode_acc`` (optional) is a Spark accumulator of ``{bucket: [six
@@ -291,7 +286,7 @@ def make_chunk_batches(
     n_pdf_fallback counts only PDF rows, so the manifest ratio stays
     <= 100%.  The sums are exact when the function runs in the result
     stage of the job that commits its output (see _ModeStatsParam)."""
-    chunk_kw = {"budget": budget, "delimiters": delimiters} if template == "naive" else {}
+    chunk_kw = {"budget": budget} if template == "naive" else {}
 
     def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

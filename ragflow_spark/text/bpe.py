@@ -79,11 +79,11 @@ class BpeEncoder:
     -> rank ids.  No special-token handling (the reference counts plain
     prose)."""
 
-    def __init__(self, ranks: dict[bytes, int], pattern: str = CL100K_PATTERN):
+    def __init__(self, ranks: dict[bytes, int]):
         if _regex is None:
             raise RuntimeError("exact BPE needs the 'regex' module")
         self.ranks = ranks
-        self._pat = _regex.compile(pattern)
+        self._pat = _regex.compile(CL100K_PATTERN)
         self._decoder = {v: k for k, v in ranks.items()}
 
     def _encode_pairs(self, text: str) -> list[tuple[int, bytes]]:

@@ -54,10 +54,10 @@ class SynonymLookup:
         self.dictionary = dictionary or {}
         self._wordnet = wordnet_fn or _default_wordnet
 
-    def lookup(self, tk: str, topn: int = 8) -> list[str]:
+    def lookup(self, tk: str) -> list[str]:
         if _LATIN.match(tk):
             return [t for t in self._wordnet(tk) if t]
         res = self.dictionary.get(_WS.sub(" ", tk.lower()), [])
         if isinstance(res, str):
             res = [res]
-        return res[:topn]
+        return res[:8]

@@ -103,14 +103,12 @@ class TermWeighter:
         ne: dict | None = None,
         df: dict | set | None = None,
         tokenize=None,
-        fine_grained=None,
         tag=None,
         freq=None,
     ):
         self.ne = ne or {}
         self.df = df if df is not None else {}
         self._tokenize = tokenize or _tok.tokenize_text
-        self._fine = fine_grained or _tok.fine_grained
         # default hooks ride the default tokenizer's trie: empty-dict
         # behavior is tag "" / freq 0, a deploy-time huqie dictionary
         # (RAGFLOW_SPARK_HUQIE) upgrades POS/freq boosts transparently
@@ -118,11 +116,11 @@ class TermWeighter:
         self._freq = freq or _tok.freq
 
     # -- pretoken (term_weight.py:90-113) ---------------------------------
-    def pretoken(self, txt: str, num: bool = False, stpwd: bool = True) -> list[str]:
+    def pretoken(self, txt: str, num: bool = False) -> list[str]:
         res = []
         for t in self._tokenize(txt).split():
             tk = t
-            if (stpwd and tk in STOP_WORDS) or (
+            if tk in STOP_WORDS or (
                 _SINGLE_DIGIT.match(tk) and not num
             ):
                 continue
@@ -222,7 +220,7 @@ class TermWeighter:
         if not s:
             s = 0
         if not s and len(t) >= 4:
-            sub = [tt for tt in self._fine(t).split() if len(tt) > 1]
+            sub = [tt for tt in _tok.fine_grained(t).split() if len(tt) > 1]
             if len(sub) > 1:
                 s = min(self._freq_of(tt) for tt in sub) / 6.0
             else:
@@ -242,7 +240,7 @@ class TermWeighter:
         if _LATIN_WORD.match(t):
             return 300
         if len(t) >= 4:
-            sub = [tt for tt in self._fine(t).split() if len(tt) > 1]
+            sub = [tt for tt in _tok.fine_grained(t).split() if len(tt) > 1]
             if len(sub) > 1:
                 return max(3, min(self._df_of(tt) for tt in sub) / 6.0)
         return 3

@@ -122,18 +122,13 @@ _DENOMINATOR = 1_000_000
 
 
 class WebTokenizer:
-    """Trie-backed tokenizer; dictionary empty by default (see module
-    docstring).  ``dictionary`` maps word -> (freq, tag) or word ->
-    freq for convenience."""
+    """Trie-backed tokenizer; dictionary empty until
+    :meth:`load_user_dict` (see module docstring)."""
 
-    def __init__(self, dictionary: dict | None = None):
+    def __init__(self):
         self.trie = CharTrie()
         self.rtrie = CharTrie()  # reversed keys for backward matching
         self._n_words = 0
-        if dictionary:
-            for w, v in dictionary.items():
-                freq, tag = v if isinstance(v, tuple) else (v, "")
-                self.add_word(w, freq, tag)
 
     # -- dictionary management -----------------------------------------
     def add_word(self, word: str, freq: int, tag: str = "") -> None:
@@ -260,11 +255,10 @@ class WebTokenizer:
         memo[state] = out
         return out
 
-    def _best_dfs(self, span: str, rank: int = 0) -> list[str]:
+    def _best_dfs(self, span: str) -> list[str]:
         tkslist: list = []
         self._dfs(span, 0, [], tkslist)
-        ranked = self._sorted_segmentations(tkslist)
-        return ranked[min(rank, len(ranked) - 1)][0]
+        return self._sorted_segmentations(tkslist)[0][0]
 
     # -- bidirectional maximum matching (rag_tokenizer.py:250-296) ------
     def _max_forward(self, line: str) -> tuple[list[str], float]:

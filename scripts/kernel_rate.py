@@ -121,8 +121,8 @@ def _dedupe_census(counts: dict[str, int]):
         yield
         return
 
-    def wrapper(chars, tolerance):
-        out = check(chars, tolerance)
+    def wrapper(*args, **kwargs):
+        out = check(*args, **kwargs)
         counts["pages"] += 1
         counts["clean"] += not out
         return out

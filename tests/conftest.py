@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -10,7 +11,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from ragflow_spark.session import get_spark
 
-    s = get_spark("ragflow_spark-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("ragflow_spark-tests", master="local[4]")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     yield s
     s.stop()
 
@@ -26,3 +28,10 @@ def read_reference(path: str) -> str:
         pytest.skip(f"reference file {path} is absent")
     with open(path, encoding="utf-8") as f:
         return f.read()
+
+
+def strip_position_tags(text: str) -> str:
+    """The reference's ``RAGFlowPdfParser.remove_tag``
+    (deepdoc/parser/pdf_parser.py:1142-1144): drop every in-band
+    ``@@pn\tx0\tx1\ttop\tbottom##`` position tag."""
+    return re.sub(r"@@[\t0-9.-]+?##", "", text)

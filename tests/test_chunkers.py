@@ -62,40 +62,26 @@ class TestGreedyMerge:
         assert len(cks) > 2
         assert all("。" not in c for c in cks)  # separators dropped
 
-    def test_overlap(self):
-        secs = [(f"w{i} " * 30, "") for i in range(6)]
-        plain = nonempty_chunks(greedy_merge(secs, budget=32))
-        ovl = nonempty_chunks(greedy_merge(secs, budget=32, overlap_pct=20))
-        assert len(ovl) >= len(plain)
-        # overlapped chunks carry the tail of their predecessor
-        assert any(ovl[i - 1][-8:].strip()[:4] in ovl[i] for i in range(1, len(ovl)))
-
     def test_deterministic(self):
         secs = [(f"row {i} of prose, with commas." , "") for i in range(50)]
         assert greedy_merge(secs, 24) == greedy_merge(secs, 24)
 
 
-def _greedy_merge_twice_counted(sections, budget, delimiters, overlap_pct):
+def _greedy_merge_twice_counted(sections, budget, delimiters):
     """greedy_merge as it was when it counted every section twice (once
     to choose the split, once in push): the output oracle."""
     import re
 
-    from ragflow_spark.chunk.merge import strip_position_tags
-
     if not sections:
         return []
     chunks, counts = [""], [0]
-    open_threshold = budget * (100 - overlap_pct) / 100.0
-    keep_fraction = (100 - overlap_pct) / 100.0
 
     def push(fragment, tag):
         n = count_tokens(fragment)
         tag = tag or ""
         if n < 8:
             tag = ""
-        if chunks[-1] == "" or counts[-1] > open_threshold:
-            carried = strip_position_tags(chunks[-1])
-            fragment = carried[int(len(carried) * keep_fraction):] + fragment
+        if chunks[-1] == "" or counts[-1] > budget:
             if fragment.find(tag) < 0:
                 fragment += tag
             chunks.append(fragment)
@@ -135,7 +121,7 @@ class TestGreedyMergeCountsOnce:
     of a section it splits), with output equal to the twice-counting
     form over a seeded fuzz corpus."""
 
-    CASES = [(8, "\n!?。；！？", 0), (16, "。", 20), (32, "", 0), (128, "\n!?。；！？", 50)]
+    CASES = [(8, "\n!?。；！？"), (16, "。"), (32, ""), (128, "\n!?。；！？")]
 
     def test_output_equals_the_twice_counting_form(self):
         import random
@@ -143,10 +129,10 @@ class TestGreedyMergeCountsOnce:
         rng = random.Random(1)
         for trial in range(300):
             secs = _fuzz_sections(rng, rng.randrange(0, 30))
-            for budget, delims, overlap in self.CASES:
-                got = greedy_merge(secs, budget, delims, overlap)
-                want = _greedy_merge_twice_counted(secs, budget, delims, overlap)
-                assert got == want, (trial, budget, delims, overlap)
+            for budget, delims in self.CASES:
+                got = greedy_merge(secs, budget, delims)
+                want = _greedy_merge_twice_counted(secs, budget, delims)
+                assert got == want, (trial, budget, delims)
 
     def test_one_count_per_section_or_piece(self, monkeypatch):
         import random
@@ -157,7 +143,7 @@ class TestGreedyMergeCountsOnce:
         rng = random.Random(2)
         for trial in range(100):
             secs = _fuzz_sections(rng, rng.randrange(1, 30))
-            for budget, delims, overlap in self.CASES:
+            for budget, delims in self.CASES:
                 pattern = delimiter_pattern(delims)
                 want = 0
                 for text, _ in secs:
@@ -167,7 +153,7 @@ class TestGreedyMergeCountsOnce:
                         want += sum(not re.match(f"^{pattern}$", p) for p in pieces)
                 calls = []
                 monkeypatch.setattr(merge, "count_tokens", lambda t: calls.append(t) or count_tokens(t))
-                greedy_merge(secs, budget, delims, overlap)
+                greedy_merge(secs, budget, delims)
                 monkeypatch.undo()
                 assert len(calls) == want, (trial, budget, delims)
 

@@ -191,7 +191,7 @@ import json, sys
 sys.path.insert(0, sys.argv[1])
 from ragflow_spark.session import get_spark
 
-spark = get_spark("bad-cache", master="local[1]", shuffle_partitions=1)
+spark = get_spark("bad-cache", master="local[1]")
 
 def probe(batches):
     import pandas as pd
@@ -220,3 +220,38 @@ def test_session_runs_on_the_zip_when_the_cache_is_untrusted(tmp_path):
     files = json.loads(proc.stdout.strip().splitlines()[-1])
     assert files and all("/python/lib/pyspark.zip/" in f for f in files), files
     assert os.listdir(root) == []
+
+
+_CWD_JOB = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from ragflow_spark.session import get_spark
+
+spark = get_spark("any-cwd", master="local[1]")
+
+def probe(batches):
+    import pandas as pd
+    import ragflow_spark
+    for _batch in batches:
+        pass
+    yield pd.DataFrame({"file": [ragflow_spark.__file__]})
+
+rows = spark.range(0, 1, numPartitions=1).mapInPandas(probe, schema="file string").collect()
+print(json.dumps([r.file for r in rows]))
+spark.stop()
+"""
+
+
+def test_workers_import_the_engine_from_any_working_directory(tmp_path):
+    """The repo is only on the driver's sys.path and the working
+    directory is elsewhere: the workers (daemon first) still import
+    the engine from the directory that holds it."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PYSPARK_PYTHON=sys.executable, SPARK_GRAFT_CPUS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", _CWD_JOB, ROOT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    files = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert files == [os.path.join(ROOT, "ragflow_spark", "__init__.py")]

@@ -19,7 +19,7 @@ The per-glyph rewrite of the PDF text path is pinned against the code
 it replaced (the ``_oracle_*`` functions): ``dedupe_chars``'s
 clean-page check against the full grid (pairs exactly a tolerance
 apart across every cell edge in play, huge and non-finite
-coordinates, degenerate tolerances, fake-bold pages),
+coordinates, fake-bold pages),
 ``_raw_string``'s escape-free shortcut, ``chars_to_lines`` and
 ``insert_word_gaps`` over random glyph streams, the lexer's
 group-index classification, and ``show()``'s inlined advance against
@@ -31,9 +31,11 @@ from __future__ import annotations
 
 import random
 import re
+from unittest import mock
 
 import pytest
 
+from ragflow_spark.parsers import pdf_chars
 from ragflow_spark.parsers.pdf_chars import (
     _apply,
     _mat_mul,
@@ -46,19 +48,20 @@ from ragflow_spark.pdf.assemble import _GAP_FIRST
 _ALNUM_PAIR = re.compile(r"[0-9a-zA-Z,.:;!%]+")
 
 
+def _dedupe_at(chars, tolerance):
+    """``dedupe_chars`` with ``DEDUPE_TOLERANCE`` set to ``tolerance``:
+    the grid's cells scale with it, so other values probe other cell
+    edges of the same code."""
+    with mock.patch.object(pdf_chars, "DEDUPE_TOLERANCE", tolerance):
+        return dedupe_chars(chars)
+
+
 def _naive_dedupe(chars, tolerance):
-    if tolerance < 0:
-        return list(chars)
     out = []
     for c in chars:
         x, t, txt = c["x0"], c["top"], c["text"]
         if x != x or t != t or abs(x) == float("inf") or abs(t) == float("inf"):
-            if tolerance == 0:
-                # exact-match branch keys directly; NaN/inf keys are
-                # legal set members there
-                pass
-            else:
-                continue
+            continue
         dup = False
         for p in out:
             if (
@@ -76,18 +79,6 @@ def _naive_dedupe(chars, tolerance):
 def _oracle_dedupe(chars, tolerance=1.0):
     """``dedupe_chars`` before the clean-page check: the packed-int
     grid over every glyph, copied verbatim."""
-    if tolerance < 0:
-        return list(chars)
-    if tolerance == 0:
-        seen0 = set()
-        out0 = []
-        for c in chars:
-            key = (c["text"], c["x0"], c["top"])
-            if key in seen0:
-                continue
-            seen0.add(key)
-            out0.append(c)
-        return out0
     seen = {}
     out = []
     for c in chars:
@@ -151,7 +142,7 @@ def test_dedupe_grid_matches_naive_scan(tolerance, spread):
     for texts in ("eaton", "e"):
         for n in (0, 1, 2, 7, 600):
             chars = _mk(rng, n, spread, texts)
-            got = dedupe_chars(chars, tolerance)
+            got = _dedupe_at(chars, tolerance)
             assert got == _naive_dedupe(chars, tolerance)
             assert got == _oracle_dedupe(chars, tolerance)
 
@@ -165,7 +156,7 @@ def test_dedupe_boundary_cells_exactly_at_tolerance():
         {"text": "a", "x0": 1.999999, "top": 6.0, **base},  # dx=dy=1.0
         {"text": "a", "x0": 3.000001, "top": 7.000001, **base},  # > tol
     ]
-    out = dedupe_chars(chars, tolerance=1.0)
+    out = dedupe_chars(chars)
     assert [c["x0"] for c in out] == [0.999999, 3.000001]
     assert out == _naive_dedupe(chars, 1.0)
 
@@ -177,7 +168,7 @@ def test_dedupe_nan_inf_coordinates_dropped():
         {"text": "a", "x0": float("inf"), "top": 1.0, **base},
         {"text": "a", "x0": 1.0, "top": 1.0, **base},
     ]
-    out = dedupe_chars(chars, tolerance=1.0)
+    out = dedupe_chars(chars)
     assert len(out) == 1 and out[0]["x0"] == 1.0
     # beyond the clean-page check's span the page goes to the grid whole
     nan, inf = float("nan"), float("inf")
@@ -191,7 +182,7 @@ def test_dedupe_nan_inf_coordinates_dropped():
     ):
         chars = [{"text": "a", "x0": x, "top": t, **base} for x, t in coords]
         for tol in (1.0, 0.25, 1e-300):
-            assert dedupe_chars(chars, tol) == _oracle_dedupe(chars, tol)
+            assert _dedupe_at(chars, tol) == _oracle_dedupe(chars, tol)
 
 
 def test_gap_first_set_equals_pair_regex():
@@ -375,7 +366,7 @@ def test_clean_page_check_edges_match_full_grid(tolerance):
         # the check never misses a near pair ...
         assert _near_pairs(chars, tolerance) <= set(_dedupe_candidates(chars, tolerance))
         # ... so the verdicts are the full grid's
-        assert dedupe_chars(chars, tolerance) == _oracle_dedupe(chars, tolerance)
+        assert _dedupe_at(chars, tolerance) == _oracle_dedupe(chars, tolerance)
 
 
 def test_clean_page_check_clean_pages_take_no_grid():
@@ -409,14 +400,6 @@ def test_clean_page_check_fake_bold_pages():
         if offsets[0] <= 1.0:
             assert len(_dedupe_candidates(chars, 1.0)) == len(chars)
             assert len(got) == 150
-
-
-def test_clean_page_check_degenerate_tolerances():
-    rng = random.Random(9)
-    chars = _mk(rng, 200, 3.0)
-    chars += [dict(c) for c in chars[:50]]  # exact repeats
-    for tol in (0, 0.0, -1.0, -1e-9):
-        assert dedupe_chars(chars, tol) == _oracle_dedupe(chars, tol)
 
 
 _ORACLE_ESCAPES = {

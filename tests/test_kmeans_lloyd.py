@@ -27,16 +27,8 @@ import pytest
 from ragflow_spark.ops.cluster import kmeans_lloyd
 
 
-def _lloyd_oracle_sql(
-    k: int, iters: int, dim: int, sample_mod: int | None = None
-) -> str:
+def _lloyd_oracle_sql(k: int, iters: int, dim: int) -> str:
     """The training-CTE generator, mirroring oracle_sql()'s unroll."""
-    sample = (
-        f"\n         AND ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT"
-        f" < {(1 << 32) // sample_mod}"
-        if sample_mod
-        else ""
-    )
     parts = [
         f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
@@ -45,7 +37,7 @@ vf AS (SELECT vec_id, ev FROM (
                 list_transform(ev, x -> coalesce(x, 'NaN'::DOUBLE)) AS ev
          FROM v)
        WHERE sqrt(list_dot_product(ev, ev)) > 0
-         AND NOT isnan(sqrt(list_dot_product(ev, ev))){sample}),
+         AND NOT isnan(sqrt(list_dot_product(ev, ev)))),
 dims AS (SELECT unnest(generate_series(0, {dim - 1})) AS d),
 c0 AS (SELECT (row_number() OVER (ORDER BY md5(vec_id::VARCHAR)))::INT - 1
                 AS centroid_id,
@@ -77,26 +69,20 @@ c{i} AS (
     return "".join(parts)
 
 
-def _duck_centroids(
-    rows, k: int, iters: int, dim: int, sample_mod: int | None = None
-) -> dict[int, list]:
+def _duck_centroids(rows, k: int, iters: int, dim: int) -> dict[int, list]:
     con = duckdb.connect()
     con.register(
         "embeddings",
         pd.DataFrame(rows, columns=["vec_id", "embedding"]),
     )
-    got = con.sql(_lloyd_oracle_sql(k, iters, dim, sample_mod)).fetchall()
+    got = con.sql(_lloyd_oracle_sql(k, iters, dim)).fetchall()
     con.close()
     return {int(r[0]): list(r[1]) for r in got}
 
 
-def _spark_centroids(
-    spark, rows, k: int, iters: int, sample_mod: int | None = None
-) -> dict[int, list]:
+def _spark_centroids(spark, rows, k: int, iters: int) -> dict[int, list]:
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = kmeans_lloyd(
-        emb, k=k, iters=iters, train_sample_mod=sample_mod
-    ).collect()
+    out = kmeans_lloyd(emb, k=k, iters=iters).collect()
     return {int(r["centroid_id"]): list(r["embedding"]) for r in out}
 
 
@@ -148,50 +134,6 @@ def test_lloyd_twin_exact_with_all_zero_rounded_centroid(spark):
     duck_c = _duck_centroids(rows, k, iters, dim)
     assert spark_c == duck_c
     assert spark_c[0] == [0.0] * dim  # never won a member, kept its init
-
-
-def test_lloyd_sample_trained_twin_and_recall(spark):
-    """The 100-TB training shape: fit on a deterministic ~1/m md5
-    sample, assign/search everything.  Pins (a) exact Spark == DuckDB
-    centroids under the sample predicate, (b) that the sample really
-    shrank the training set, and (c) that sample-trained cells still
-    give near-exact recall on clustered vectors at cheap probes."""
-    rng = np.random.default_rng(9)
-    dim, k, iters, mod = 8, 6, 3, 4
-    centers = rng.normal(size=(6, dim))
-    rows = [
-        (i, [float(x) for x in centers[i % 6] + 0.2 * rng.normal(size=dim)])
-        for i in range(240)
-    ]
-    spark_c = _spark_centroids(spark, rows, k, iters, sample_mod=mod)
-    duck_c = _duck_centroids(rows, k, iters, dim, sample_mod=mod)
-    assert spark_c == duck_c and len(spark_c) == k
-    # the predicate keeps ~1/4 of ids (binomial, wide tolerance)
-    kept = [
-        i for i in range(240)
-        if int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
-        < (1 << 32) // mod
-    ]
-    assert 0 < len(kept) < 120
-
-    from ragflow_spark.ops.cluster import knn_ivf_trained
-    from ragflow_spark.ops.simsearch import knn_bruteforce
-
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = emb.where("vec_id % 40 = 0").selectExpr(
-        "vec_id as query_id", "embedding"
-    )
-    truth = knn_bruteforce(emb, q, k=5).select("query_id", "neighbor_id")
-    n = truth.count()
-    ann = knn_ivf_trained(
-        emb, q, k=5, n_cells=6, n_probe=2, train_sample_mod=mod
-    )
-    hits = (
-        ann.select("query_id", "neighbor_id")
-        .join(truth, ["query_id", "neighbor_id"])
-        .count()
-    )
-    assert hits / n >= 0.9
 
 
 def test_trained_ivf_matches_registered_oracle_sf0001(spark):

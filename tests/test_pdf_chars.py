@@ -28,7 +28,6 @@ from ragflow_spark.pdf.assemble import (
     pdf_tagged_boxes,
 )
 from ragflow_spark.pdf.tablefig import extract_table_figure
-from ragflow_spark.pdf.tsr import construct_table
 
 WORDS = (
     "spark engine partition strategy broadcast shuffle join table data "
@@ -171,31 +170,6 @@ def test_dedupe_chars_drops_double_rendering():
     assert "".join(c["text"] for c in chars) == "HiHi"
 
 
-def test_dedupe_chars_degenerate_tolerances():
-    """tolerance=0 dedupes EXACT-position repeats only; a negative
-    tolerance dedupes nothing (ADVICE r4: the old <=0 -> 1e-9 remap
-    silently turned both into near-exact dedupe)."""
-    from ragflow_spark.parsers.pdf_chars import dedupe_chars
-
-    def ch(text, x, top):
-        return {"text": text, "x0": x, "x1": x + 5.0, "top": top,
-                "bottom": top + 10.0}
-
-    chars = [
-        ch("e", 10.0, 100.0),
-        ch("e", 10.0, 100.0),          # exact repeat -> dropped at tol 0
-        ch("e", 10.0 + 1e-12, 100.0),  # near-exact -> KEPT at tol 0
-        ch("e", 11.0, 100.0),
-    ]
-    at0 = dedupe_chars(chars, tolerance=0)
-    assert [c["x0"] for c in at0] == [10.0, 10.0 + 1e-12, 11.0]
-    neg = dedupe_chars(chars, tolerance=-1.0)
-    assert neg == chars and neg is not chars  # copy, nothing dropped
-    # default tolerance still collapses the near-exact shadow pair
-    at1 = dedupe_chars(chars, tolerance=1.0)
-    assert [c["x0"] for c in at1] == [10.0]
-
-
 def test_white_on_white_text_filtered():
     """1 g + 1 G DeviceGray glyphs matching the letter class drop
     (reference _has_color, pdf_parser.py:197-203); positions of later
@@ -323,10 +297,10 @@ def test_grid_detection_tags_table_runs_only(doc_pdf):
 
 def test_e2e_table_recovery_from_real_bytes(doc_pdf):
     boxes, mh, _cum, is_en = pdf_tagged_boxes(doc_pdf)
-    rem, tables, figures = extract_table_figure(
+    rem, tables = extract_table_figure(
         boxes, mh, is_english=is_en, page_cum_height=None
     )
-    assert len(tables) == 1 and not figures
+    assert len(tables) == 1
     rows = tables[0]["content"]
     assert rows[0].startswith("name; count; price")
     # attached caption flows into every row (reference desc_table)
@@ -339,19 +313,11 @@ def test_e2e_table_recovery_from_real_bytes(doc_pdf):
     assert tables[0]["positions"][0][0] == 1
 
 
-def test_e2e_construct_table_html_variant(doc_pdf):
-    boxes, mh, _cum, is_en = pdf_tagged_boxes(doc_pdf)
-    cells = [b for b in boxes if b.get("layout_type") == "table"]
-    html = construct_table(cells, is_english=is_en, html=True)
-    joined = html if isinstance(html, str) else "\n".join(html)
-    assert "<table>" in joined and "price" in joined
-
-
 def test_e2e_manual_chunks_outline_pivot(doc_pdf):
     from ragflow_spark.chunk.manual_template import manual_pdf_chunks
 
     boxes, mh, _cum, is_en = pdf_tagged_boxes(doc_pdf)
-    rem, tables, _figs = extract_table_figure(
+    rem, tables = extract_table_figure(
         boxes, mh, is_english=is_en, page_cum_height=None
     )
     outlines = extract_pdf_outline(doc_pdf)

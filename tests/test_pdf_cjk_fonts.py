@@ -122,12 +122,10 @@ def test_identity_without_tounicode_counted_not_garbage():
             b" >> endobj",
         ]
     )
-    diag: dict = {}
-    pages = pdf_pages_chars(pdf, diag)
+    pages = pdf_pages_chars(pdf)
     got = "".join(c["text"] for c in pages[0]["chars"])
     assert got == "visible ascii line"  # no mojibake from the CID codes
     assert pages[0]["n_inexact_glyphs"] == 2
-    assert diag["identity_no_tounicode"] == 1
     t, mode = extract_pdf_text_mode(pdf)
     assert t == "visible ascii line" and mode == "interp-partial"
 
@@ -137,10 +135,9 @@ def test_unknown_predefined_cmap_counted():
     must be flagged, not silently guessed."""
     stream = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm <2121> Tj ET"
     pdf = _doc(stream, _type0(b"/H"))
-    diag: dict = {}
-    pages = pdf_pages_chars(pdf, diag)
-    assert diag.get("predef_cmap_unknown") == 1
-    assert pages[0]["n_inexact_glyphs"] >= 1
+    pages = pdf_pages_chars(pdf)
+    # both guessed glyphs are counted
+    assert pages[0]["n_inexact_glyphs"] == len(pages[0]["chars"]) == 2
 
 
 def test_deploy_cmap_resolves_w_advances(tmp_path, monkeypatch):
@@ -204,8 +201,5 @@ def test_type3_without_differences_counted():
         b" /FontMatrix [0.001 0 0 0.001 0 0] /CharProcs << >>"
         b" /FirstChar 65 /LastChar 66 /Widths [500 500] >> endobj",
     ]
-    diag: dict = {}
-    pages = pdf_pages_chars(_doc(stream, font), diag)
-    assert diag.get("type3") == 1
-    assert diag.get("type3_no_differences") == 1
+    pages = pdf_pages_chars(_doc(stream, font))
     assert pages[0]["n_inexact_glyphs"] == 2

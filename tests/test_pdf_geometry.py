@@ -2,17 +2,15 @@
 
 from __future__ import annotations
 
-from ragflow_spark.chunk.merge import strip_position_tags
 from ragflow_spark.pdf.geometry import (
     concat_downward,
-    drop_toc_boxes,
     line_tag,
     merge_horizontal,
-    merge_vertical,
     sort_x_first,
     sort_y_first,
 )
 from ragflow_spark.pdf.tsr import block_type, construct_table
+from tests.conftest import strip_position_tags
 
 
 def box(x0, top, x1, bottom, text="", page=1, **kw):
@@ -50,40 +48,10 @@ def test_merge_horizontal_same_layout():
     assert len(merge_horizontal([dict(a), c], [6.0])) == 2
 
 
-def test_merge_vertical_concats_on_comma_and_stops_on_period():
-    a = box(0, 0, 90, 10, "first line,", layoutno="t0")
-    b = box(0, 12, 90, 22, "continues here.", layoutno="t0")
-    c = box(0, 24, 90, 34, "New paragraph", layoutno="t0")
-    out = merge_vertical([a, b, c], [10.0], [5.0], is_english=True)
-    assert [o["text"] for o in out] == ["first line,continues here.", "New paragraph"]
-
-
 def test_concat_downward_is_y_sort_parity():
     # parity: dead xgboost path (pdf_parser.py:482-483) is NOT resurrected
     a, b = box(0, 50, 10, 60, "second"), box(0, 0, 10, 10, "first")
     assert [x["text"] for x in concat_downward([a, b])] == ["first", "second"]
-
-
-# -- TOC -------------------------------------------------------------------
-
-
-def test_drop_toc_boxes_removes_entries_until_body_repeat():
-    bxs = [
-        box(0, 0, 90, 10, "Contents"),
-        box(0, 12, 90, 22, "Chapter One .... 3"),
-        box(0, 24, 90, 34, "Chapter Two .... 9"),
-        box(0, 36, 90, 46, "Chapter One"),
-        box(0, 48, 90, 58, "Body text here"),
-    ]
-    out = drop_toc_boxes(bxs, n_pages=1)
-    assert [b["text"] for b in out] == ["Chapter One", "Body text here"]
-
-
-def test_drop_toc_boxes_dirty_pages():
-    dirty = [box(0, i * 10, 90, i * 10 + 8, f"entry {i} ······ {i}", page=1) for i in range(5)]
-    clean = [box(0, 0, 90, 8, "real body", page=2)]
-    out = drop_toc_boxes(dirty + clean, n_pages=2)
-    assert [b["text"] for b in out] == ["real body"]
 
 
 # -- position tags ---------------------------------------------------------
@@ -145,12 +113,6 @@ def test_construct_table_desc_rows():
         "name：apple; count：10; price：1.5",
         "name：pear; count：20; price：2.5",
     ]
-
-
-def test_construct_table_html():
-    html = construct_table(_tagged_table(), is_english=True, html=True)
-    assert html.startswith("<table>")
-    assert "<th  >name</th>" in html and "<td  >apple</td>" in html
 
 
 def test_construct_table_caption_pull():

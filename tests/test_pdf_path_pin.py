@@ -6,7 +6,7 @@ hostile-font, CJK-font, rotated and encrypted fixture documents is
 hashed against a digest taken before the per-glyph rewrite of
 ``parsers/pdf_chars.py``, ``parsers/pdf.py`` and ``pdf/assemble.py``.
 The fixture documents additionally pin every glyph box and every
-``diag`` counter of ``pdf_pages_chars``.  A drift anywhere on the path
+page's ``n_inexact_glyphs`` count of ``pdf_pages_chars``.  A drift anywhere on the path
 fails here, in the unit suite, not only in the benchmark's gate.
 
 The fixtures are rebuilt in this file (not imported from the tests
@@ -28,7 +28,7 @@ MEDIA = b"/MediaBox [0 0 612 792]"
 
 GENERATOR_DIGEST = "00bf8bbf95dd84c2b7ecfbcb3cbc304eeaf67103dd862ca3851e3f306e58657a"
 FIXTURE_TEXT_DIGEST = "51aed661b6916249465b308b472be58d25f11e3e05933cf0ea02f27d0d99eff6"
-FIXTURE_CHARS_DIGEST = "6fb3d0fd7899fb03df33b88f5ca1612013746c8a5a1084d2b5fba90b6550e1bc"
+FIXTURE_CHARS_DIGEST = "302426785cc0fe51e406ca6f325885eb1797f3eee733f4d14278a11a09c28017"
 
 
 def _pdf(objs: list[bytes]) -> bytes:
@@ -188,9 +188,7 @@ def text_digest(docs: list[tuple[str, bytes]]) -> str:
 def chars_digest(docs: list[tuple[str, bytes]]) -> str:
     h = hashlib.sha256()
     for name, pdf in docs:
-        diag: dict = {}
-        pages = pdf_pages_chars(pdf, diag)
-        h.update(repr((name, pages, sorted(diag.items()))).encode("utf-8", "surrogatepass"))
+        h.update(repr((name, pdf_pages_chars(pdf))).encode("utf-8", "surrogatepass"))
     return h.hexdigest()
 
 

@@ -111,8 +111,8 @@ def test_scrambled_stream_table_still_recovered(seed):
             boxes, mh, is_english=is_en, page_cum_height=None
         )
 
-    rem_a, tables_a, _ = run()
-    rem_b, tables_b, _ = run(scramble_seed=seed + 3)
+    rem_a, tables_a = run()
+    rem_b, tables_b = run(scramble_seed=seed + 3)
     assert len(tables_a) == len(tables_b) == 1
     assert tables_a[0]["content"] == tables_b[0]["content"]
     assert tables_a[0]["positions"] == tables_b[0]["positions"]

@@ -11,13 +11,13 @@ import re
 
 import pytest
 
-from ragflow_spark.chunk.merge import strip_position_tags
 from ragflow_spark.chunk.templates import chunk_sections
 from ragflow_spark.data.pdfgen import make_doc_pdf
 from ragflow_spark.parsers.pdf_chars import pdf_pages_chars
 from ragflow_spark.pdf.assemble import page_stats, pdf_tagged_boxes
 from ragflow_spark.pdf.geometry import line_tag
 from ragflow_spark.pdf.tablefig import extract_table_figure
+from tests.conftest import strip_position_tags
 
 WORDS = (
     "spark engine partition strategy broadcast shuffle join table data "
@@ -33,7 +33,7 @@ def tagged_sections():
     (the shape every PDF-branch chunker consumes)."""
     pdf = make_doc_pdf(WORDS, doc_id=5)
     boxes, mh, cum_h, is_en = pdf_tagged_boxes(pdf)
-    rem, tables, _figs = extract_table_figure(
+    rem, tables = extract_table_figure(
         boxes, mh, is_english=is_en, page_cum_height=None
     )
     pages = pdf_pages_chars(pdf)
@@ -99,7 +99,7 @@ def test_cross_page_table_merge_from_real_bytes():
     table_cells = [b for b in boxes if b.get("layout_type") == "table"]
     # the tagger sees two separate grid groups (one per page)
     assert len({b["layoutno"] for b in table_cells}) == 2
-    rem, tables, _figs, _mh2, _cum2, _en2 = pdf_layout_document(pdf)
+    rem, tables, _mh2, _cum2, _en2 = pdf_layout_document(pdf)
     assert len(tables) == 1  # merged across the break
     rows = tables[0]["content"]
     joined = "\n".join(rows)
@@ -108,90 +108,6 @@ def test_cross_page_table_merge_from_real_bytes():
     # positions list covers both pages (0-based page indices)
     pages = sorted({p[0] for p in tables[0]["positions"]})
     assert pages == [0, 1]
-
-
-def test_vertical_merge_joins_wrapped_lines():
-    """vertical_merge=True applies the reference's punctuation-gated
-    paragraph joining (naive/manual _naive_vertical_merge) to the
-    remaining text boxes: wrapped lines without terminal punctuation
-    merge, sentence-final lines stay separate."""
-    from ragflow_spark.data.pdfgen import _PageBuilder, PAGE_W, PAGE_H
-    from ragflow_spark.pdf.assemble import pdf_layout_document
-
-    p = _PageBuilder()
-    p.text_line("The quick brown")
-    p.text_line("fox jumps over")
-    p.text_line("the lazy dog.")
-    p.blank()
-    p.text_line("A second paragraph here.")
-    s1 = p.stream()
-    pdf = (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
-        + (
-            f"3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 {PAGE_W} {PAGE_H}] "
-            "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >> endobj\n"
-        ).encode()
-        + b"4 0 obj << /Length " + str(len(s1)).encode() + b" >> stream\n"
-        + s1 + b"\nendstream endobj\n"
-        b"5 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Courier >> endobj\n"
-        b"trailer << /Root 1 0 R >>\n%%EOF"
-    )
-    rem_plain, _t, _f, _mh, _cum, _en = pdf_layout_document(pdf)
-    assert len(rem_plain) == 4  # line-level without the merge
-    rem, _t, _f, _mh, _cum, _en = pdf_layout_document(pdf, vertical_merge=True)
-    texts = [b["text"] for b in rem]
-    assert texts == [
-        "The quick brownfox jumps overthe lazy dog.",
-        "A second paragraph here.",
-    ] or texts == [
-        "The quick brown fox jumps over the lazy dog.",
-        "A second paragraph here.",
-    ]
-
-
-def test_toc_page_dropped_from_real_bytes():
-    """drop_toc=True removes the contents run: heading + entries go,
-    the body (whose first line repeats the first entry's two-word
-    prefix) stays (_filter_forpages, pdf_parser.py; ported in
-    pdf/geometry.drop_toc_boxes)."""
-    from ragflow_spark.data.pdfgen import _PageBuilder, PAGE_W, PAGE_H
-    from ragflow_spark.pdf.assemble import pdf_layout_document
-
-    p1 = _PageBuilder()
-    p1.text_line("Contents")
-    p1.text_line("Chapter One Introduction 3")
-    p1.text_line("Chapter Two Methods 5")
-    p2 = _PageBuilder()
-    p2.text_line("Chapter One Introduction")
-    p2.text_line("Real body prose starts here.")
-    s1, s2 = p1.stream(), p2.stream()
-    page_dict = (
-        "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {w} {h}] "
-        "/Resources << /Font << /F1 7 0 R >> >> /Contents {c} 0 R >>"
-    )
-    pdf = (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Kids [3 0 R 4 0 R] /Count 2 >> endobj\n"
-        + f"3 0 obj {page_dict.format(w=PAGE_W, h=PAGE_H, c=5)} endobj\n".encode()
-        + f"4 0 obj {page_dict.format(w=PAGE_W, h=PAGE_H, c=6)} endobj\n".encode()
-        + b"5 0 obj << /Length " + str(len(s1)).encode() + b" >> stream\n"
-        + s1 + b"\nendstream endobj\n"
-        + b"6 0 obj << /Length " + str(len(s2)).encode() + b" >> stream\n"
-        + s2 + b"\nendstream endobj\n"
-        b"7 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Courier >> endobj\n"
-        b"trailer << /Root 1 0 R >>\n%%EOF"
-    )
-    rem_keep, _t, _f, _mh, _cum, _en = pdf_layout_document(pdf)
-    assert any(b["text"] == "Contents" for b in rem_keep)
-    rem, _t, _f, _mh, _cum, _en = pdf_layout_document(pdf, drop_toc=True)
-    texts = [b["text"] for b in rem]
-    assert "Contents" not in texts
-    assert not any(t.startswith("Chapter One Introduction 3") for t in texts)
-    assert "Chapter One Introduction" in texts
-    assert "Real body prose starts here." in texts
 
 
 def test_paper_template_with_outline_titles_from_real_bytes():
@@ -207,7 +123,7 @@ def test_paper_template_with_outline_titles_from_real_bytes():
     )
 
     pdf = make_doc_pdf(WORDS, doc_id=9)
-    rem, _tables, _figs, _mh, _cum, _en = pdf_layout_document(pdf)
+    rem, _tables, _mh, _cum, _en = pdf_layout_document(pdf)
     outlines = extract_pdf_outline(pdf)
     rem = tag_titles_from_outline(rem, outlines)
     titled = [b["text"] for b in rem if b.get("layout_type") == "title"]
@@ -228,7 +144,7 @@ def test_naive_template_pdf_branch_from_real_bytes():
     from ragflow_spark.pdf.assemble import pdf_layout_document
 
     pdf = make_doc_pdf(WORDS, doc_id=11)
-    rem, tables, _f, _mh, cum, _en = pdf_layout_document(pdf)
+    rem, tables, _mh, cum, _en = pdf_layout_document(pdf)
     pages = pdf_pages_chars(pdf)
     heights = [p["height"] for p in pages]
     secs = [
@@ -249,9 +165,9 @@ def test_naive_template_pdf_branch_from_real_bytes():
 
 
 def test_figure_region_and_caption_from_real_bytes():
-    """A drawn image XObject yields a figure region; the adjacent
-    'Figure 1:' caption attaches to it through extract_table_figure
-    (rag/app/naive.py separate_tables_figures path)."""
+    """A drawn image XObject yields a figure box over the drawn region,
+    which stays with the text boxes; extract_table_figure drops the
+    adjacent 'Figure 1:' caption from the text."""
     from ragflow_spark.data.pdfgen import _PageBuilder, PAGE_W, PAGE_H
     from ragflow_spark.pdf.assemble import pdf_layout_document
 
@@ -278,15 +194,13 @@ def test_figure_region_and_caption_from_real_bytes():
         b"6 0 obj << /Type /Font /BaseFont /Courier >> endobj\n"
         b"trailer << /Root 1 0 R >>\n%%EOF"
     )
-    rem, tables, figures, _mh, _cum, _en = pdf_layout_document(
-        pdf, need_figures=True
-    )
+    rem, tables, _mh, _cum, _en = pdf_layout_document(pdf)
     assert not tables
+    figures = [b for b in rem if b.get("layout_type") == "figure"]
     assert len(figures) == 1
-    assert "Figure 1: spark dataflow" in figures[0]["content"][0]
-    # figure bbox covers the drawn image region (x 72..272)
-    pos = figures[0]["positions"][0]
-    assert pos[1] == pytest.approx(72.0) and pos[2] == pytest.approx(272.0)
+    # figure box covers the drawn image region (x 72..272)
+    assert figures[0]["x0"] == pytest.approx(72.0)
+    assert figures[0]["x1"] == pytest.approx(272.0)
     texts = [b["text"] for b in rem]
     assert "Prose before the figure." in texts
     assert "Prose after the figure." in texts

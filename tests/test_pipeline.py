@@ -601,7 +601,7 @@ class TestDriverManifest:
         assert manifest_problems(out, 2) == []
 
 
-def test_catalog_iceberg_identifiers(spark):
+def test_catalog_iceberg_identifiers():
     """In Iceberg mode, filesystem paths handed to the catalog map to
     valid table identifiers (no '/' survives), deterministically and
     INJECTIVELY for distinct paths — '_'-folding alone collapses
@@ -610,18 +610,17 @@ def test_catalog_iceberg_identifiers(spark):
     the original path disambiguates."""
     import re
 
-    from ragflow_spark.catalog import Catalog
+    from ragflow_spark.catalog import iceberg_ident
 
-    cat = Catalog(spark, fmt="iceberg")
-    ident = cat._ident("/tmp/out/chunks")
+    ident = iceberg_ident("/tmp/out/chunks")
     assert re.fullmatch(r"lake\.tmp_out_chunks_[0-9a-f]{8}", ident)
-    assert ident == cat._ident("/tmp/out/chunks")  # deterministic
+    assert ident == iceberg_ident("/tmp/out/chunks")  # deterministic
     # plain table names stay human-readable, no hash suffix
-    assert cat._ident("pages") == "lake.pages"
-    assert cat._ident("ns.pages") == "lake.ns.pages"
+    assert iceberg_ident("pages") == "lake.pages"
+    assert iceberg_ident("ns.pages") == "lake.ns.pages"
     # the cases '_'-folding collapses must stay distinct
     idents = {
-        cat._ident(p)
+        iceberg_ident(p)
         for p in (
             "/tmp/out/chunks",
             "/tmp/other/chunks",

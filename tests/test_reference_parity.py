@@ -24,9 +24,9 @@ import pytest
 
 from ragflow_spark.chunk.delimiters import delimiter_pattern
 from ragflow_spark.chunk.hierarchy import bullet_group_of, outline_merge
-from ragflow_spark.chunk.merge import greedy_merge, strip_position_tags
+from ragflow_spark.chunk.merge import greedy_merge
 from ragflow_spark.text.tokens import count_tokens
-from tests.conftest import REFERENCE_ROOT, read_reference
+from tests.conftest import REFERENCE_ROOT, read_reference, strip_position_tags
 
 REF = "/root/reference/rag/nlp/__init__.py"
 
@@ -148,31 +148,27 @@ def test_get_delimiters_parity(ref, delims):
 
 
 @pytest.mark.parametrize(
-    "sections,budget,delims,overlap",
+    "sections,budget,delims",
     [
-        (EN_SECTIONS, 16, "\n!?。；！？", 0),
-        (EN_SECTIONS, 64, "\n!?。；！？", 0),
-        (EN_SECTIONS, 128, "\n!?。；！？", 0),
-        (EN_SECTIONS, 32, "\n!?。；！？", 20),
-        (ZH_SECTIONS, 16, "\n!?。；！？", 0),
-        (ZH_SECTIONS, 48, "\n。；！？", 30),
-        ([" ".join(EN_SECTIONS)], 24, "\n!?。；！？", 0),  # forces splitting
-        ([], 64, "\n!?。；！？", 0),
-        ([""], 64, "\n!?。；！？", 0),
+        (EN_SECTIONS, 16, "\n!?。；！？"),
+        (EN_SECTIONS, 64, "\n!?。；！？"),
+        (EN_SECTIONS, 128, "\n!?。；！？"),
+        (ZH_SECTIONS, 16, "\n!?。；！？"),
+        (ZH_SECTIONS, 48, "\n。；！？"),
+        ([" ".join(EN_SECTIONS)], 24, "\n!?。；！？"),  # forces splitting
+        ([], 64, "\n!?。；！？"),
+        ([""], 64, "\n!?。；！？"),
     ],
 )
-def test_naive_merge_parity(ref, sections, budget, delims, overlap):
-    theirs = ref["naive_merge"](
-        list(sections), chunk_token_num=budget, delimiter=delims,
-        overlapped_percent=overlap,
-    )
-    ours = greedy_merge(list(sections), budget, delims, overlap)
+def test_naive_merge_parity(ref, sections, budget, delims):
+    theirs = ref["naive_merge"](list(sections), chunk_token_num=budget, delimiter=delims)
+    ours = greedy_merge(list(sections), budget, delims)
     assert ours == theirs
 
 
 def test_naive_merge_parity_tagged(ref):
     theirs = ref["naive_merge"](list(TAGGED_SECTIONS), 16, "\n!?。；！？", 0)
-    ours = greedy_merge(list(TAGGED_SECTIONS), 16, "\n!?。；！？", 0)
+    ours = greedy_merge(list(TAGGED_SECTIONS), 16, "\n!?。；！？")
     assert ours == theirs
 
 
@@ -216,20 +212,19 @@ def ref_txt():
 
 
 @pytest.mark.parametrize(
-    "txt,budget,delims",
+    "txt,budget",
     [
-        ("one. two! three? " * 40, 32, "\n!?;。；！？"),
-        ("line\nline two\nline three! " * 20, 16, "\n!?;。；！？"),
-        ("a`SEP`b`SEP`c " * 30, 8, "`SEP`\n"),
-        ("", 128, "\n!?;。；！？"),
-        ("短句。另一句！第三句？" * 25, 16, "\n!?;。；！？"),
+        ("one. two! three? " * 40, 32),
+        ("line\nline two\nline three! " * 20, 16),
+        ("", 128),
+        ("短句。另一句！第三句？" * 25, 16),
     ],
 )
-def test_txt_parser_parity(ref_txt, txt, budget, delims):
+def test_txt_parser_parity(ref_txt, txt, budget):
     from ragflow_spark.parsers.txt import split_txt
 
-    ours = [tuple(p) for p in split_txt(txt, budget, delims)]
-    theirs = [tuple(p) for p in ref_txt.parser_txt(txt, budget, delims)]
+    ours = [tuple(p) for p in split_txt(txt, budget)]
+    theirs = [tuple(p) for p in ref_txt.parser_txt(txt, budget, "\n!?;。；！？")]
     assert ours == theirs
 
 
@@ -249,14 +244,10 @@ _ALPHABET = "ab cd. ef! gh? 。；！？\n一二三数据 123\t@#"
 @given(
     sections=st.lists(st.text(alphabet=_ALPHABET, max_size=120), max_size=15),
     budget=st.sampled_from([4, 16, 64, 256]),
-    overlap=st.sampled_from([0, 20, 50]),
 )
-def test_naive_merge_parity_fuzz(ref, sections, budget, overlap):
-    theirs = ref["naive_merge"](
-        list(sections), chunk_token_num=budget,
-        delimiter="\n!?。；！？", overlapped_percent=overlap,
-    )
-    assert greedy_merge(list(sections), budget, "\n!?。；！？", overlap) == theirs
+def test_naive_merge_parity_fuzz(ref, sections, budget):
+    theirs = ref["naive_merge"](list(sections), chunk_token_num=budget, delimiter="\n!?。；！？")
+    assert greedy_merge(list(sections), budget, "\n!?。；！？") == theirs
 
 
 @settings(
@@ -268,7 +259,7 @@ def test_naive_merge_parity_fuzz(ref, sections, budget, overlap):
 def test_txt_parser_parity_fuzz(ref_txt, txt, budget):
     from ragflow_spark.parsers.txt import split_txt
 
-    ours = [tuple(p) for p in split_txt(txt, budget, "\n!?;。；！？")]
+    ours = [tuple(p) for p in split_txt(txt, budget)]
     theirs = [tuple(p) for p in ref_txt.parser_txt(txt, budget, "\n!?;。；！？")]
     assert ours == theirs
 
@@ -386,11 +377,10 @@ _JSON_DOCS = [
 
 
 @pytest.mark.parametrize("doc", _JSON_DOCS)
-@pytest.mark.parametrize("max_size", [200, 2000])
-def test_json_parser_parity(ref_json, doc, max_size):
+def test_json_parser_parity(ref_json, doc):
     from ragflow_spark.parsers.jsonp import split_json_text
 
-    theirs = ref_json(max_chunk_size=max_size)(doc.encode("utf-8"))
-    ours = split_json_text(doc.encode("utf-8"), max_chunk_size=max_size)
+    theirs = ref_json(max_chunk_size=2000)(doc.encode("utf-8"))
+    ours = split_json_text(doc.encode("utf-8"))
     assert ours == theirs
 

@@ -64,9 +64,9 @@ def test_minhash_signature_empty_grams_keeps_null_api(spark):
 
 
 def test_cosine_null_on_zero_norm_vectors(spark):
-    """cosine() must return NULL (not DIVIDE_BY_ZERO under ANSI) for
-    empty / all-zero / null vectors, and real pairs are unaffected."""
-    from ragflow_spark.ops.simsearch import as_double, cosine
+    """cosine_pre() must return NULL (not DIVIDE_BY_ZERO under ANSI)
+    for empty / all-zero / null vectors, and real pairs are unaffected."""
+    from ragflow_spark.ops.simsearch import as_double, cosine_pre, norm
 
     df = spark.createDataFrame(
         [
@@ -77,11 +77,12 @@ def test_cosine_null_on_zero_norm_vectors(spark):
         ],
         "id long, a array<double>, b array<double>",
     )
+    a, b = as_double(F.col("a")), as_double(F.col("b"))
     rows = {
         r["id"]: r["sim"]
         for r in df.select(
             "id",
-            cosine(as_double(F.col("a")), as_double(F.col("b"))).alias("sim"),
+            cosine_pre(a, b, norm(a), norm(b)).alias("sim"),
         ).collect()
     }
     assert rows[1] == 1.0

@@ -63,24 +63,6 @@ def test_zero_radius_exact_dups(spark):
     assert got == {(1, 2)}
 
 
-@pytest.mark.parametrize("max_hamming,n_blocks", [(8, 10), (3, 6), (8, 12)])
-def test_combination_banding_exact_recall(spark, corpus, max_hamming, n_blocks):
-    """Manku-style combination banding (n_blocks > d+1) must keep
-    recall exact: any (k-d)-subset of intact blocks produces a match."""
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(
-            corpus, max_hamming=max_hamming, n_blocks=n_blocks
-        ).collect()
-    }
-    assert got == _true_pairs(spark, corpus, max_hamming)
-
-
-def test_n_blocks_validation(spark, corpus):
-    with pytest.raises(ValueError):
-        simhash_pairs(corpus, max_hamming=8, n_blocks=4)
-
-
 def test_null_and_empty_texts_never_pair(spark):
     """r4 deliberate semantics change: null texts are excluded at the
     scan (pre-r4 they hashed to signature 0 and paired with each other

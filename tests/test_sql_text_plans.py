@@ -63,7 +63,7 @@ def pages(spark, pages_path):
 
 def test_transform_plans_equal_the_column_api(pages):
     cfg = P.PipelineConfig(out_dir="")
-    chunk_fn = make_chunk_batches(cfg.template, cfg.budget, cfg.delimiters)
+    chunk_fn = make_chunk_batches(cfg.template, cfg.budget)
     chunks = _chunk_id_oracle(_prune_oracle(pages).mapInPandas(chunk_fn, schema=CHUNKS_SCHEMA))
     assert _plan(P.transform_chunks(pages, cfg)) == _plan(chunks)
     extracted = _prune_oracle(pages).mapInPandas(extract_batches, schema=EXTRACTED_SCHEMA)

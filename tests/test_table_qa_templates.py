@@ -50,7 +50,7 @@ def test_table_rows_and_field_map():
 
 def test_table_chunks_batching():
     rows = [[f"r{i}", str(i)] for i in range(25)]
-    chunks = table_chunks(["name", "n"], rows, batch_size=10)
+    chunks = table_chunks(["name", "n"], rows)
     assert len(chunks) == 3
     assert chunks[0].count("name:") == 10
 
@@ -95,7 +95,7 @@ def test_table_rows_duplicate_field_slugs():
 def test_rm_prefix_and_chunk_format():
     assert rm_prefix("Question: What?") == "What?"
     assert rm_prefix("答：因为") == "因为"
-    assert qa_chunk("Q: a?", "A: b", eng=True) == "Question: a?\tAnswer: b"
+    assert qa_chunk("Q: a?", "A: b") == "Question: a?\tAnswer: b"
 
 
 def test_qa_from_delimited_state_machine():

@@ -1,10 +1,12 @@
-"""Black-box parity of table/figure extraction (pdf/tablefig.py) vs
+"""Black-box parity of table extraction (pdf/tablefig.py) vs
 the reference's own ``_extract_table_figure``
 (deepdoc/parser/pdf_parser.py:668-879), AST-extracted and executed
 with numpy real, PIL replaced by a geometry-only fake, the layout list
 empty (so the reference falls back to member-box extents — the same
 text-only positions this engine produces), and construct_table shared
 from OUR tsr module so differences isolate the pop/merge/attach logic.
+The fixtures carry no figure-layout boxes: the reference pops those
+into figure output, this engine keeps them as text.
 """
 
 from __future__ import annotations
@@ -99,7 +101,7 @@ def _ref_run(ref_method, boxes, mean_height, n_pages, is_english=True):
         is_english=is_english,
         tbl_det=types.SimpleNamespace(
             construct_table=lambda bxs, html=False, is_english=False: construct_table(
-                bxs, is_english=is_english, html=html
+                bxs, is_english=is_english
             )
         ),
     )
@@ -141,9 +143,14 @@ def _cum(pn, y):
 
 def _fixture_boxes():
     boxes = []
-    # page 1: prose, a table (t0) ending near the page bottom with a
-    # caption box, a source line, and a figure (f0) with its own caption
+    # page 1: prose, a figure caption, a table (t0) ending near the page
+    # bottom with a caption box, and a source line
     boxes.append(_text(1, "Opening paragraph about engines.", _cum(1, 20), lout="p0"))
+    # a caption right after a table would block that table's merge
+    # (``nomerge``), so this one comes first
+    boxes.append(
+        _text(1, "figure of the shuffle", _cum(1, 330), lout="c1", layout="figure caption")
+    )
     boxes.append(
         _text(1, "overview of quarterly results", _cum(1, 675),
               lout="c0", layout="table caption")
@@ -155,12 +162,6 @@ def _fixture_boxes():
             boxes.append(_cell(1, "t0", r, c, f"v{r}{c}", _cum(1, 700)))
     boxes.append(
         _text(1, "数据来源: internal ledger", _cum(1, 770), lout="t0", layout="table")
-    )
-    boxes.append(
-        _text(1, "A diagram of the shuffle path", _cum(1, 300), lout="f0", layout="figure")
-    )
-    boxes.append(
-        _text(1, "figure of the shuffle", _cum(1, 330), lout="c1", layout="figure caption")
     )
     boxes.append(_text(1, "Closing prose on page one.", _cum(1, 400), lout="p1"))
     # page 2: table t1 right at the top -> continuation of t0
@@ -185,26 +186,20 @@ CUM_H = [0.0, PAGE_H, 2 * PAGE_H, 3 * PAGE_H]
 def test_table_figure_parity(ref_method):
     boxes = _fixture_boxes()
     ref_remaining, ref_out = _ref_run(ref_method, boxes, MEAN_H, 3)
-    remaining, tables, figures = extract_table_figure(
+    remaining, tables = extract_table_figure(
         boxes, MEAN_H, is_english=True, page_cum_height=[0.0] * 4
     )
     # remaining prose identical
     assert [b["text"] for b in remaining] == [b["text"] for b in ref_remaining]
-    # reference emits figures first, then tables
-    ref_figs = ref_out[: len(figures)]
-    ref_tbls = ref_out[len(figures):]
-    assert len(ref_tbls) == len(tables)
-    for ours, ((_img, content), poss) in zip(figures, ref_figs):
-        assert ours["content"] == content
-        assert ours["positions"] == poss
-    for ours, ((_img, content), poss) in zip(tables, ref_tbls):
+    assert len(ref_out) == len(tables)
+    for ours, ((_img, content), poss) in zip(tables, ref_out):
         assert ours["content"] == content
         assert ours["positions"] == poss
 
 
 def test_cross_page_merge_behavior():
     boxes = _fixture_boxes()
-    _rem, tables, _figs = extract_table_figure(
+    _rem, tables = extract_table_figure(
         boxes, MEAN_H, is_english=True, page_cum_height=CUM_H
     )
     # t1 (page 2, small cumulative y-gap) merged into t0; t2 isolated
@@ -216,12 +211,13 @@ def test_cross_page_merge_behavior():
 
 def test_source_line_dropped_and_caption_attached():
     boxes = _fixture_boxes()
-    _rem, tables, figures = extract_table_figure(
+    rem, tables = extract_table_figure(
         boxes, MEAN_H, is_english=True, page_cum_height=CUM_H
     )
     all_tbl_text = "\n".join("\n".join(t["content"]) for t in tables)
     assert "数据来源" not in all_tbl_text
-    assert any("shuffle" in f["content"][0] for f in figures)
+    assert "overview of quarterly results" in all_tbl_text
+    assert not [b for b in rem if "caption" in b.get("layout_type", "")]
 
 
 def test_random_fuzz_parity(ref_method):
@@ -247,27 +243,16 @@ def test_random_fuzz_parity(ref_method):
                               layout=rng.choice(["table caption", "figure caption"]))
                     )
                     y += 30
-                elif kind < 0.65:
-                    boxes.append(
-                        _text(pn, f"fig content {pn}-{k}", y, lout=f"f{pn}{k}",
-                              layout="figure")
-                    )
-                    y += 60
                 else:
                     boxes.append(_text(pn, f"prose {pn}-{k}", y, lout=f"p{pn}{k}"))
                     y += rng.choice([20, 300])
         mh = [14.0] * n_pages
         ref_remaining, ref_out = _ref_run(ref_method, boxes, mh, n_pages)
-        remaining, tables, figures = extract_table_figure(
+        remaining, tables = extract_table_figure(
             boxes, mh, is_english=True, page_cum_height=[0.0] * (n_pages + 1)
         )
         assert [b["text"] for b in remaining] == [b["text"] for b in ref_remaining], trial
-        ref_figs = ref_out[: len(figures)]
-        ref_tbls = ref_out[len(figures):]
-        assert len(ref_tbls) == len(tables), trial
-        for ours, ((_i, content), poss) in zip(figures, ref_figs):
-            assert ours["content"] == content, trial
-            assert ours["positions"] == poss, trial
-        for ours, ((_i, content), poss) in zip(tables, ref_tbls):
+        assert len(ref_out) == len(tables), trial
+        for ours, ((_i, content), poss) in zip(tables, ref_out):
             assert ours["content"] == content, trial
             assert ours["positions"] == poss, trial

@@ -127,7 +127,7 @@ def test_manual_oracle_structural_shape():
 
     words = "customer query merge value the a table stream".split()
     pdf = make_doc_pdf(words, doc_id=3)
-    rem, tables, _figs, _mh, _cum, _en = pdf_layout_document(pdf)
+    rem, tables, _mh, _cum, _en = pdf_layout_document(pdf)
     outlines = extract_pdf_outline(pdf)
     assert [lvl for _, lvl in outlines] == [0, 0]
     secs = [

@@ -42,7 +42,7 @@ def test_deterministic_given_seed():
 def test_ab_fit_matches_published_defaults():
     # umap-learn's curve fit for min_dist=0.1, spread=1.0 gives
     # a~1.577, b~0.895; the grid fit must land nearby
-    a, b = _fit_ab(0.1, 1.0)
+    a, b = _fit_ab()
     assert abs(a - 1.577) < 0.15
     assert abs(b - 0.895) < 0.08
 

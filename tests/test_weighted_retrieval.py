@@ -107,8 +107,6 @@ def test_retrieval_pipeline_end_to_end(docs):
         [("spark", 0.5, False), ("table", 0.3, False), ("merge", 0.125, True)],
         page=1,
         page_size=3,
-        rerank_limit=4,
-        similarity_threshold=0.0,
     )
     rows = out.collect()
     assert 0 < len(rows) <= 3
@@ -132,23 +130,22 @@ def test_retrieval_pipeline_candidate_stage_take_ordered(docs):
     from ragflow_spark.ops.retrieval import retrieval_pipeline
 
     p = plan_str(
-        retrieval_pipeline(
-            docs, "spark", [("spark", 1.0, False)], rerank_limit=4
-        ),
+        retrieval_pipeline(docs, "spark", [("spark", 1.0, False)]),
         mode="simple",
     )
     # the corpus-wide stage must end in a k-row heap, not a global sort
     assert "TakeOrderedAndProject" in p, p
 
 
-def test_retrieval_pipeline_pagination(docs):
+def test_retrieval_pipeline_pagination(docs, monkeypatch):
+    from ragflow_spark.ops import retrieval
     from ragflow_spark.ops.retrieval import retrieval_pipeline
 
+    monkeypatch.setattr(retrieval, "RERANK_LIMIT", 4)
+    monkeypatch.setattr(retrieval, "SIMILARITY_THRESHOLD", 0.0)
     kw = dict(
         query_text="spark table",
         term_weights=[("spark", 0.5, False), ("table", 0.5, False)],
-        rerank_limit=4,
-        similarity_threshold=0.0,
         page_size=2,
     )
     p1 = retrieval_pipeline(docs, page=1, **kw).collect()
@@ -159,13 +156,17 @@ def test_retrieval_pipeline_pagination(docs):
     assert [r["rank"] for r in p2] == [3, 4][: len(p2)]
 
 
-def test_rank_feature_boost_reaches_candidate_cut(spark):
+def test_rank_feature_boost_reaches_candidate_cut(spark, monkeypatch):
     """A heavily boosted doc outside the fused top-k still surfaces:
     the stage-1 cut orders by ``fused + rank_fea``, mirroring the
     store-side rank_feature should-clauses (rag/utils/es_conn.py:
-    215-219) that boost recall before the rerank."""
+    215-219) that boost recall before the rerank.  The cut is shrunk
+    to two rows so four docs exercise it."""
+    from ragflow_spark.ops import retrieval
     from ragflow_spark.ops.retrieval import retrieval_pipeline
 
+    monkeypatch.setattr(retrieval, "RERANK_LIMIT", 2)
+    monkeypatch.setattr(retrieval, "SIMILARITY_THRESHOLD", 0.0)
     rows = [
         (1, "spark joins the small table", None, 0.0),
         (2, "spark merge the rows of data", None, 0.0),
@@ -178,8 +179,6 @@ def test_rank_feature_boost_reaches_candidate_cut(spark):
     kw = dict(
         query_text="spark table",
         term_weights=[("spark", 0.5, False), ("table", 0.5, False)],
-        rerank_limit=2,
-        similarity_threshold=0.0,
         page_size=4,
     )
     plain = retrieval_pipeline(docs, **kw)
