@@ -132,11 +132,11 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _affine_params(num_hashes: int, seed: int = 1) -> list[tuple[int, int]]:
+def _affine_params(num_hashes: int) -> list[tuple[int, int]]:
     return [
         (
-            (seed * 0x9E3779B1 + i * 0x85EBCA77) % _M31 | 1,
-            (seed * 0xC2B2AE3D + i * 0x27D4EB2F) % _M31,
+            (1 * 0x9E3779B1 + i * 0x85EBCA77) % _M31 | 1,
+            (1 * 0xC2B2AE3D + i * 0x27D4EB2F) % _M31,
         )
         for i in range(num_hashes)
     ]
@@ -151,7 +151,7 @@ def _affine_min_signature(hashes: Column, num_hashes: int) -> Column:
     measured 2.7x cold / 1.4x warm at sf0.1 for K=32).  All arithmetic
     stays under 2^56 (31-bit modulus x 25-bit-safe literals... a,b <
     2^31, h < 2^31 -> h*a < 2^62) so ANSI mode never sees overflow."""
-    params = _affine_params(num_hashes, 1)
+    params = _affine_params(num_hashes)
     arr_a = F.array(*[F.lit(a).cast("long") for a, _ in params])
     arr_b = F.array(*[F.lit(b).cast("long") for _, b in params])
     idx = F.sequence(F.lit(1), F.lit(num_hashes))
@@ -236,11 +236,6 @@ def _window_hash_stage(
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 4,
-    shingle_n: int = 3,
     shingle: str = "char",
 ) -> DataFrame:
     """Candidate near-dup pairs from banded minhash (id_a < id_b).
@@ -260,12 +255,12 @@ def minhash_lsh_candidates(
     only shuffles in the operator are the band-bucket self-join and
     the final distinct.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = 32 // 4
     # the signature array materializes in its own projection: the band
     # keys below reference it num_hashes times (cheap element_at once
     # it's a bound column; an inlined aggregate would re-run per band)
-    sig = _window_hash_stage(_spread(df), id_col, text_col, shingle, shingle_n).select(
-        "id", _affine_min_signature(F.col("_h0"), num_hashes).alias("sig")
+    sig = _window_hash_stage(_spread(df), "doc_id", "text", shingle, 3).select(
+        "id", _affine_min_signature(F.col("_h0"), 32).alias("sig")
     )
     banded = sig.select(
         "id",
@@ -284,7 +279,7 @@ def minhash_lsh_candidates(
                             )
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(4)
                 ]
             )
         ).alias("bb"),
@@ -314,9 +309,7 @@ def minhash_dedup_pairs(
     array intersections are CPU-bound, so a byte-small candidate set
     would otherwise verify on one core."""
     spark = df.sparkSession
-    cand = minhash_lsh_candidates(
-        df, "doc_id", "text", 32, 4, 3, shingle
-    ).repartition(spark.sparkContext.defaultParallelism, "id_a")
+    cand = minhash_lsh_candidates(df, shingle=shingle).repartition(spark.sparkContext.defaultParallelism, "id_a")
     grams = shingle_stage(df, "doc_id", "text", shingle, 3).withColumnRenamed(
         "_grams", "grams"
     )
@@ -527,8 +520,7 @@ def minhash_lsh_candidates_md5(
     )
 
 
-def simhash_md5_signatures(
-    df: DataFrame) -> DataFrame:
+def simhash_md5_signatures(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document from md5-derived token hashes.
 
     Explode (token x bit) then two groupBys — all JVM-side expressions;
@@ -625,6 +617,8 @@ def embedding_near_dup_lsh(
     rounded cosine confirms.  Recall < 1 by construction; at 100 TB this
     is the only shape that avoids the quadratic shuffle."""
     from .simsearch import (
+        LSH_BANDS,
+        LSH_BITS,
         as_double,
         banded_keys,
         cosine_pre,
@@ -633,13 +627,13 @@ def embedding_near_dup_lsh(
         norm,
     )
 
-    bands = banded_keys(F.col("_sig"), 12, 3)
+    bands = banded_keys(F.col("_sig"), LSH_BITS, LSH_BANDS)
 
     keyed = (
         emb.select(F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_n", norm(F.col("_v")))
         .where(finite_norm(F.col("_n")))  # degenerates (incl. NaN) exit before signature work
-        .select("id", "_v", "_n", lsh_signature_from(F.col("_v"), 12).alias("_sig"))
+        .select("id", "_v", "_n", lsh_signature_from(F.col("_v"), LSH_BITS).alias("_sig"))
         .select("id", "_v", "_n", bands.alias("bb"))
         .select(
             "id", "_v", "_n", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")

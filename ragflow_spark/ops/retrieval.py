@@ -33,10 +33,6 @@ K1, B = 1.2, 0.75
 def bm25_raw_scores(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Unranked BM25 scores (id, score) for every matching doc.
 
@@ -56,12 +52,12 @@ def bm25_raw_scores(
     (docs with ≥1 token, matching the postings-derived definition).
     """
     toks = F.filter(
-        F.split(norm_text(text_col), " "), lambda t: t != ""
+        F.split(norm_text("text"), " "), lambda t: t != ""
     )
     # (id, dl, term) exploded rows, pre-filtered to query terms by a
     # broadcast hash join — dl is per-doc state carried from the scan.
     exploded = df.select(
-        F.col(id_col).alias("id"), toks.alias("_toks")
+        F.col("doc_id").alias("id"), toks.alias("_toks")
     ).select(
         "id",
         F.size("_toks").alias("dl"),
@@ -93,10 +89,10 @@ def bm25_raw_scores(
         .withColumn(
             "partial",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (K1 + 1))
             / (
                 F.col("tf")
-                + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+                + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
             ),
         )
     )
@@ -119,7 +115,7 @@ def bm25_scores(
     then ranks attach via a window over just those k rows.  Never a
     global unpartitioned row_number over the full corpus.
     """
-    agg = bm25_raw_scores(df, query_terms, "doc_id", "text", K1, B)
+    agg = bm25_raw_scores(df, query_terms)
     topk = agg.orderBy(F.desc("score"), F.asc("id")).limit(top_k)
     w = Window.orderBy(F.desc("score"), F.asc("id"))
     return (
@@ -144,7 +140,7 @@ def hybrid_rerank(
     from .simsearch import as_double, cosine_pre, norm
 
     terms = [t for t in query_text.lower().split() if t]
-    bm = bm25_raw_scores(df, terms, "doc_id", "text")
+    bm = bm25_raw_scores(df, terms)
     bm_max = bm.agg(F.coalesce(F.max("score"), F.lit(1.0)).alias("m"))
 
     chunks = df.select(

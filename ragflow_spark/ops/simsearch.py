@@ -162,15 +162,12 @@ def knn_bruteforce(
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """Assign every vector to its max-cosine centroid (broadcast join;
     ties -> lowest centroid id on the rounded similarity)."""
     c = (
         centroids.select(
-            F.col(centroid_id_col), as_double(F.col(vec_col)).alias("_mv")
+            F.col("centroid_id"), as_double(F.col("embedding")).alias("_mv")
         )
         .withColumn("_mn", norm(F.col("_mv")))
         # a NaN centroid (e.g. KMeans trained on a NaN-element vector)
@@ -180,7 +177,7 @@ def ivf_assign(
         .where(finite_norm(F.col("_mn")))
     )
     v = corpus.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_vv")
+        F.col("vec_id"), as_double(F.col("embedding")).alias("_vv")
     ).withColumn("_vn", norm(F.col("_vv")))
     # nanvl (single evaluation — no when() re-materialization) turns a
     # NaN sim into NULL: assignment keeps COMPLETE partitioning (every
@@ -195,13 +192,13 @@ def ivf_assign(
         ),
         F.lit(None).cast("double"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc(centroid_id_col))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
     return (
         v.crossJoin(F.broadcast(c))
         .withColumn("sim", sim)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select(id_col, centroid_id_col, F.col("sim").alias("centroid_sim"))
+        .select("vec_id", "centroid_id", F.col("sim").alias("centroid_sim"))
     )
 
 
@@ -210,7 +207,7 @@ def ivf_build_stats(
     centroids: DataFrame,
 ) -> DataFrame:
     """Cell sizes + mean member similarity — the IVF 'index build'."""
-    assigned = ivf_assign(corpus, centroids, "vec_id", "embedding", "centroid_id")
+    assigned = ivf_assign(corpus, centroids)
     return (
         assigned.groupBy("centroid_id")
         .agg(
@@ -234,7 +231,7 @@ def knn_ivf(
     a co-partitioned join on centroid_id between probed cells and cell
     members — the cross join is bounded by cell size, never corpus size.
     """
-    assigned = ivf_assign(corpus, centroids, "vec_id", "embedding", "centroid_id")
+    assigned = ivf_assign(corpus, centroids)
     # degenerate vectors filtered per side BELOW the join; dimension
     # mismatch guarded by the size check — so sim is provably non-NULL
     # and no where(sim.isNotNull()) re-materializes the dot product
@@ -252,9 +249,7 @@ def knn_ivf(
     # _qn rides out of ivf_probe_cells (materialized there once per
     # query row, below its crossJoin) — recomputing it here cost one
     # redundant full-array traversal per probe row (ADVICE r4)
-    probes = ivf_probe_cells(
-        queries, centroids, n_probe, "embedding", "query_id"
-    ).where(finite_norm(F.col("_qn")))
+    probes = ivf_probe_cells(queries, centroids, n_probe).where(finite_norm(F.col("_qn")))
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")), 6
     )
@@ -276,46 +271,51 @@ def ivf_probe_cells(
     queries: DataFrame,
     centroids: DataFrame,
     n_probe: int,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     c = (
         centroids.select(
-            F.col("centroid_id"), as_double(F.col(vec_col)).alias("_mv")
+            F.col("centroid_id"), as_double(F.col("embedding")).alias("_mv")
         )
         .withColumn("_mn", norm(F.col("_mv")))
         .where(finite_norm(F.col("_mn")))  # NaN centroid: see ivf_assign
     )
     q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv")
+        F.col("query_id"), as_double(F.col("embedding")).alias("_qv")
     ).withColumn("_qn", norm(F.col("_qv")))
     sim = F.round(
         cosine_pre(F.col("_qv"), F.col("_mv"), F.col("_qn"), F.col("_mn")), 6
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_psim"), F.asc("centroid_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("_psim"), F.asc("centroid_id"))
     return (
         q.crossJoin(F.broadcast(c))
         .withColumn("_psim", sim)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= n_probe)
-        .select(query_id_col, "centroid_id", "_qv", "_qn")
+        .select("query_id", "centroid_id", "_qv", "_qn")
     )
 
 
 # -- hyperplane LSH ---------------------------------------------------------
 
 
-def _plane_component(bit: int | Column, dim_idx: Column, seed: int) -> Column:
+# the hyperplanes' hash seed, shared by both plane families, and the
+# sign-sketch width and banding every LSH path runs; the md5 twins'
+# oracles replay them
+PLANE_SEED = 7
+LSH_BITS = 12
+LSH_BANDS = 3
+
+
+def _plane_component(bit: int | Column, dim_idx: Column) -> Column:
     """Deterministic pseudo-random hyperplane component in [-1, 1):
     hash of (bit, dim) -> uniform double.  No RNG state, so every
     executor derives the identical planes.  ``bit`` may be a lambda
     variable (F.lit passes Columns through)."""
-    h = F.xxhash64(F.lit(seed), F.lit(bit), dim_idx)
+    h = F.xxhash64(F.lit(PLANE_SEED), F.lit(bit), dim_idx)
     return (h.cast("double") / F.lit(float(1 << 63)))
 
 
-def lsh_signature_from(
-    v: Column, n_bits: int = 16) -> Column:
+def lsh_signature_from(v: Column, n_bits: int = 16) -> Column:
     """Sign sketch from a MATERIALIZED double-array column: bit b =
     [<v, plane_b> >= 0], packed into a long.  Materialize ``v`` (and
     feed the signature through its own projection) on hot paths.
@@ -339,7 +339,7 @@ def lsh_signature_from(
         lambda acc, i: F.zip_with(
             acc,
             F.transform(
-                bidx, lambda b: F.element_at(v, i + 1) * _plane_component(b, i, 7)
+                bidx, lambda b: F.element_at(v, i + 1) * _plane_component(b, i)
             ),
             lambda s, x: s + x,
         ),
@@ -384,9 +384,9 @@ def knn_lsh(
             .where(finite_norm(F.col("_n")))
         )
         step_s = step_v.select(
-            idc, "_v", "_n", lsh_signature_from(F.col("_v"), 12).alias("_sig")
+            idc, "_v", "_n", lsh_signature_from(F.col("_v"), LSH_BITS).alias("_sig")
         )
-        bands = banded_keys(F.col("_sig"), 12, 3)
+        bands = banded_keys(F.col("_sig"), LSH_BITS, LSH_BANDS)
         return step_s.select(idc, "_v", "_n", bands.alias("bb")).select(
             idc,
             "_v",
@@ -430,7 +430,7 @@ def knn_lsh(
 # -- md5-derived hyperplanes (oracle-parity twins) ---------------------------
 
 
-def lsh_signature_md5_from(v: Column, n_bits: int = 12) -> Column:
+def lsh_signature_md5_from(v: Column) -> Column:
     """Sign sketch with md5-derived plane components — the cross-engine
     twin of :func:`lsh_signature_from` (xxhash64 has no DuckDB equivalent;
     md5 hex prefixes do).  Component c(bit, dim) =
@@ -445,7 +445,7 @@ def lsh_signature_md5_from(v: Column, n_bits: int = 12) -> Column:
                 F.substring(
                     F.md5(
                         F.concat_ws(
-                            "|", F.lit("7"), F.lit(str(bit)), i.cast("string")
+                            "|", F.lit(str(PLANE_SEED)), F.lit(str(bit)), i.cast("string")
                         ).cast("binary")
                     ),
                     1,
@@ -461,7 +461,7 @@ def lsh_signature_md5_from(v: Column, n_bits: int = 12) -> Column:
         )
 
     sig = F.lit(0).cast("long")
-    for b in range(n_bits):
+    for b in range(LSH_BITS):
         proj = dot(v, F.transform(idx, plane(b)))
         sig = sig + F.when(proj >= 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
@@ -507,10 +507,10 @@ def knn_lsh_md5(
             .where(finite_norm(F.col("_n")))
         )
         step_s = step_v.select(
-            idc, "_v", "_n", lsh_signature_md5_from(F.col("_v"), 12).alias("_sig")
+            idc, "_v", "_n", lsh_signature_md5_from(F.col("_v")).alias("_sig")
         )
         return step_s.select(
-            idc, "_v", "_n", banded_keys(F.col("_sig"), 12, 3).alias("bb")
+            idc, "_v", "_n", banded_keys(F.col("_sig"), LSH_BITS, LSH_BANDS).alias("bb")
         ).select(
             idc,
             "_v",
@@ -559,8 +559,8 @@ def embedding_near_dup_lsh_md5(
         emb.select(F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_n", norm(F.col("_v")))
         .where(finite_norm(F.col("_n")))  # degenerates exit before signature work
-        .select("id", "_v", "_n", lsh_signature_md5_from(F.col("_v"), 12).alias("_sig"))
-        .select("id", "_v", "_n", banded_keys(F.col("_sig"), 12, 3).alias("bb"))
+        .select("id", "_v", "_n", lsh_signature_md5_from(F.col("_v")).alias("_sig"))
+        .select("id", "_v", "_n", banded_keys(F.col("_sig"), LSH_BITS, LSH_BANDS).alias("bb"))
         .select(
             "id", "_v", "_n", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
         )

@@ -33,8 +33,7 @@ def host_of(url_col: Column) -> Column:
     return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)", 1)
 
 
-def hot_keys(
-    df: DataFrame, key_col: str, threshold: float = 0.01) -> list[str]:
+def hot_keys(df: DataFrame, key_col: str, threshold: float = 0.01) -> list[str]:
     """Keys carrying more than ``threshold`` fraction of rows."""
     total = df.count()
     if total == 0:
@@ -55,11 +54,10 @@ def with_salt(
     key_col: str,
     hot: list[str],
     salt_source: str = "url",
-    fanout: int = 16,
 ) -> DataFrame:
     """Add ``salted_key``: hot keys fan out over ``fanout`` stable
     subkeys, cold keys pass through unchanged."""
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(fanout)).cast("string")
+    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(16)).cast("string")
     is_hot = F.col(key_col).isin(hot) if hot else F.lit(False)
     return df.withColumn(
         "salted_key",
@@ -83,7 +81,7 @@ def salted_agg(
     | "max:<col>".
     """
     hot = hot_keys(df, key_col, threshold)
-    salted = with_salt(df, key_col, hot, salt_source, 16)
+    salted = with_salt(df, key_col, hot, salt_source)
 
     partial_exprs, final_exprs = [], []
     for out, spec in aggs.items():

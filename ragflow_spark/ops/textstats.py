@@ -25,8 +25,8 @@ def norm_text(col: str = "text") -> Column:
     return F.lower(F.regexp_replace(F.trim(F.col(col)), r"\s+", " "))
 
 
-def word_count(col: str = "text") -> Column:
-    t = F.trim(F.col(col))
+def word_count() -> Column:
+    t = F.trim(F.col("text"))
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
     )
@@ -55,7 +55,7 @@ def add_quality(df: DataFrame) -> DataFrame:
     (Gopher/C4-style heuristics, expressed as native columns)."""
     t = F.trim(F.col("text"))
     n_chars = F.length(t)
-    n_words = word_count("text")
+    n_words = word_count()
     n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?。；！？，]", ""))
     words = F.split(F.lower(t), r"\s+")
     n_stop = F.size(F.filter(words, lambda w: w.isin(_STOPWORDS)))

@@ -33,7 +33,7 @@ def test_hot_keys_finds_viral_host(spark):
 def test_salting_balances_partitions(spark):
     pages = _pages(spark)
     hot = hot_keys(pages, "host", threshold=0.1)
-    salted = with_salt(pages, "host", hot, salt_source="url", fanout=16)
+    salted = with_salt(pages, "host", hot, salt_source="url")
     # key-level (deterministic): the viral host's 900 rows must fan out
     # so no single shuffle KEY dominates
     key_before = [r["n"] for r in pages.groupBy("host").agg(F.count("*").alias("n")).collect()]
